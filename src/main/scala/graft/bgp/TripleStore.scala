@@ -801,46 +801,119 @@ object TripleStore {
     * Encoded stores write the same shape with BIGINT s/o; partition
     * directories always carry the STRING predicate name (dispatch is
     * by name on every store form).
+    *
+    * Bucket count: `buckets` when given, else
+    * `max(defaultParallelism, ⌈bytes / spark.sql.files.maxPartitionBytes⌉)`
+    * — one bucket per core, and more only when a bucket would outgrow
+    * one scan split (a bucketed scan reads a bucket as one task and
+    * never splits its files). The bytes are measured from the rows
+    * being written (one aggregate: UTF-8 bytes of string s/o, 8 per
+    * id), an upper bound on the parquet they become — not Catalyst's
+    * `sizeInBytes`, which multiplies children across joins. Bucketing
+    * is catalog state, so the count is recorded in the layout's
+    * [[BucketCountFile]], and [[registerPartitionedBucketed]] reads it
+    * back.
     */
   def writePartitionedBucketed(store: TripleStore, path: String,
-      table: String, buckets: Int = DefaultBuckets,
+      table: String, buckets: Option[Int] = None,
       bucketCol: String = "s"): Unit = {
     val spark = store.slices.values.head.sparkSession
     spark.sql(s"DROP TABLE IF EXISTS $table")
-    store.slices.map { case (p, df) =>
+    // persisted: the sizing pass and the write read the same rows
+    val rows = store.slices.map { case (p, df) =>
       df.select(col("s"), col("o"), lit(p).as("p"))
     }.reduce(_ unionByName _)
-      .repartition(buckets, col(bucketCol))
-      .write.mode("overwrite")
-      .partitionBy("p")
-      .bucketBy(buckets, bucketCol).sortBy(bucketCol)
-      .option("path", path)
-      .format("parquet")
-      .saveAsTable(table)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val n = buckets.getOrElse(sizeBuckets(rows))
+      rows.repartition(n, col(bucketCol))
+        .write.mode("overwrite")
+        .partitionBy("p")
+        .bucketBy(n, bucketCol).sortBy(bucketCol)
+        .option("path", path)
+        .format("parquet")
+        .saveAsTable(table)
+      val (fs, _) = fsPath(spark, path)
+      val out = fs.create(new org.apache.hadoop.fs.Path(path, BucketCountFile))
+      try out.write(n.toString.getBytes("UTF-8")) finally out.close()
+    } finally rows.unpersist()
   }
 
-  /** Default bucket count for the primary layout — matches the local
-    * harness's cores/shuffle partitions; on a real cluster size it to
-    * the target parallelism (buckets are the join parallelism for the
-    * exchange-free path).
-    */
-  val DefaultBuckets = 32
+  /** The sized bucket count of [[writePartitionedBucketed]]. */
+  private def sizeBuckets(rows: DataFrame): Int = {
+    val spark = rows.sparkSession
+    def bytes(c: String): Column = rows.schema(c).dataType match {
+      case org.apache.spark.sql.types.StringType =>
+        coalesce(octet_length(col(c)).cast("long"), lit(0L))
+      case dt => lit(dt.defaultSize.toLong)
+    }
+    val total = rows.select(coalesce(sum(bytes("s") + bytes("o")), lit(0L)))
+      .head.getLong(0)
+    val split = spark.sessionState.conf.filesMaxPartitionBytes
+    math.max(spark.sparkContext.defaultParallelism,
+      ((total + split - 1) / split).toInt)
+  }
 
-  /** Re-register a persisted partitioned+bucketed primary layout in
-    * this session's catalog (bucket + partition metadata is catalog
-    * state, not file state; `MSCK REPAIR` re-discovers the partition
-    * directories) and return the bucket-aware table.
+  /** The file inside a bucketed layout that records its bucket count
+    * (the leading underscore hides it from Spark's file listing). It is
+    * written after the table is saved, so its presence also marks a
+    * complete layout.
+    */
+  val BucketCountFile = "_bucket_count"
+
+  /** The bucket count recorded in the layout at `path`. */
+  private[graft] def recordedBuckets(spark: SparkSession, path: String): Int = {
+    val (fs, _) = fsPath(spark, path)
+    val f = new org.apache.hadoop.fs.Path(path, BucketCountFile)
+    require(fs.exists(f), s"$path has no $BucketCountFile record: not a " +
+      "finished writePartitionedBucketed layout — rewrite it")
+    val in = fs.open(f)
+    val text = try new String(in.readAllBytes(), "UTF-8").trim finally in.close()
+    text.toIntOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(s"$f holds '$text', not a bucket count"))
+  }
+
+  /** Re-register a persisted partitioned+bucketed layout in this
+    * session's catalog and return the bucket-aware table. Bucket and
+    * partition metadata are catalog state, not file state: a new JVM
+    * re-creates the table by DDL with the RECORDED count (`MSCK REPAIR`
+    * re-discovers the partition directories). A wrong count prunes
+    * constant-key lookups to the wrong bucket and returns wrong rows
+    * with no error, so this fails instead when the record is missing,
+    * when an existing catalog entry disagrees with it, or when the
+    * largest bucket file's rows do not hash to its bucket under it.
     */
   def registerPartitionedBucketed(spark: SparkSession, path: String,
-      table: String, buckets: Int = DefaultBuckets,
-      idType: String = "STRING", bucketCol: String = "s"): DataFrame = {
-    if (!spark.catalog.tableExists(table)) {
+      table: String, idType: String = "STRING",
+      bucketCol: String = "s"): DataFrame = {
+    val n = recordedBuckets(spark, path)
+    if (spark.catalog.tableExists(table)) {
+      val spec = spark.sessionState.catalog.getTableMetadata(
+        spark.sessionState.sqlParser.parseTableIdentifier(table)).bucketSpec
+      require(spec.exists(b =>
+          b.numBuckets == n && b.bucketColumnNames == Seq(bucketCol)),
+        s"catalog table $table is bucketed as $spec, but $path records " +
+          s"$n buckets by $bucketCol — drop the table or rewrite the layout")
+    } else {
+      val (fs, _) = fsPath(spark, path)
+      fs.globStatus(new org.apache.hadoop.fs.Path(path, "p=*/part-*"))
+        .maxByOption(_.getLen).foreach { f =>
+          val id = org.apache.spark.sql.execution.datasources.BucketingUtils
+            .getBucketId(f.getPath.getName).getOrElse(-1)
+          val misplaced = spark.read.schema(s"$bucketCol $idType")
+            .parquet(f.getPath.toString)
+            .filter(pmod(hash(col(bucketCol)), lit(n)) =!= id)
+            .limit(1).count()
+          require(id >= 0 && id < n && misplaced == 0,
+            s"${f.getPath} (bucket $id) does not hash into $n buckets by " +
+              s"$bucketCol: $path/$BucketCountFile disagrees with the files")
+        }
       spark.sql(
         s"""CREATE TABLE $table (s $idType, o $idType, p STRING)
            |USING parquet
            |PARTITIONED BY (p)
            |CLUSTERED BY ($bucketCol) SORTED BY ($bucketCol)
-           |INTO $buckets BUCKETS
+           |INTO $n BUCKETS
            |LOCATION '$path'""".stripMargin)
       spark.sql(s"MSCK REPAIR TABLE $table")
     }
@@ -861,9 +934,9 @@ object TripleStore {
     *    constant-subject probes keep `SelectedBucketsCount: 1`.
     */
   def fromBucketedTable(spark: SparkSession, path: String, table: String,
-      buckets: Int = DefaultBuckets, idType: String = "STRING"): TripleStore = {
+      idType: String = "STRING"): TripleStore = {
     val preds = listPredicatePartitions(spark, path)
-    val t = registerPartitionedBucketed(spark, path, table, buckets, idType)
+    val t = registerPartitionedBucketed(spark, path, table, idType)
     val slices = preds.map { p =>
       p -> t.filter(col("p") === p).select(col("s"), col("o"))
     }.toMap

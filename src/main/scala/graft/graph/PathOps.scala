@@ -39,8 +39,8 @@ object PathOps {
   }
 
   /** All (src, dst) pairs connected by ≥1 hop. `edges` must have
-    * columns (src, dst). maxIter bounds runaway growth; the loop exits
-    * at fixpoint.
+    * columns (src, dst). The loop exits at fixpoint; reaching maxIter
+    * rounds without one throws rather than return a partial closure.
     *
     * Path doubling (closure ⋈ closure each round) reaches paths of
     * length 2^k after k rounds, so a diameter-d graph needs ⌈log₂ d⌉
@@ -65,6 +65,7 @@ object PathOps {
       if (newSize == size) done = true
       else { closure = doubled; size = newSize; iter += 1 }
     }
+    requireFixpoint("transitiveClosure", done, maxIter)
     closure
   }
 
@@ -77,7 +78,8 @@ object PathOps {
     * compares (pair count, total distance) so a round that only
     * SHORTENS known pairs still registers as change. The snapshot
     * aggregate is the checkpoint-materializing action (one job per
-    * round — see the object scaladoc).
+    * round — see the object scaladoc). Reaching maxIter rounds without
+    * a fixpoint throws rather than return partial distances.
     */
   def shortestHops(edges: DataFrame, maxIter: Int = 20): DataFrame = {
     def snapCp(df: DataFrame): (DataFrame, (Long, Long)) = {
@@ -101,6 +103,7 @@ object PathOps {
       if (ns == state) done = true
       else { dist = doubled; state = ns; iter += 1 }
     }
+    requireFixpoint("shortestHops", done, maxIter)
     dist
   }
 
@@ -134,7 +137,9 @@ object PathOps {
     * removes a data-sized set — never an OOM. Fixpoint, round count
     * and the returned vertex set are identical to the bulk peel (the
     * same vertices fall below k in the same rounds; both implement
-    * the unique k-core fixpoint).
+    * the unique k-core fixpoint). Reaching maxIter rounds with
+    * vertices still under degree k throws rather than return a
+    * partial core.
     */
   def kCore(edges: DataFrame, k: Int, maxIter: Int = 30): DataFrame = {
     val ed = edges.select(col("src"), col("dst")).distinct()
@@ -165,13 +170,22 @@ object PathOps {
         .select(col("src"),
           (col("d") - coalesce(col("_lost"), lit(0L))).as("d"))
         .localCheckpoint(eager = false)
-      // one job per round: the fixpoint probe (how many alive
-      // vertices fell below k) is the action that materializes the
-      // round's vertex-grain checkpoint.
+      // two jobs per round: the guard's measuring job over the
+      // removed set, then the fixpoint probe (how many alive vertices
+      // fell below k), which materializes the round's vertex-grain
+      // checkpoint.
       pending = next.filter(col("d") < k).count()
       deg = next
       iter += 1
     }
+    requireFixpoint("kCore", pending == 0, maxIter)
     deg.select(col("src").as("v"))
   }
+
+  /** A capped fixpoint loop that stopped short has a partial answer:
+    * fail instead of returning it.
+    */
+  private def requireFixpoint(op: String, done: Boolean, maxIter: Int): Unit =
+    if (!done) throw new IllegalStateException(
+      s"$op: no fixpoint after maxIter = $maxIter rounds")
 }

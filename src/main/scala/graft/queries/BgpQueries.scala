@@ -49,8 +49,9 @@ object BgpQueries {
   // v2: added the nextorder slice; v3: dict carries dt/lang metadata;
   // v4: primary layout is p-partitioned + s-bucketed/sorted (subject
   // joins exchange-free), replacing the plain p-partitioned parquet +
-  // separate s-bucketed secondary
-  private val StoreFormatVersion = 4
+  // separate s-bucketed secondary; v5: bucket count sized from
+  // parallelism and bytes and recorded in the layout, not a fixed 32
+  private val StoreFormatVersion = 5
 
   private[graft] def invalidateStale(s: SparkSession, tag: String,
       tables: Seq[String], root0: String = pstoreRoot): Unit = {
@@ -121,7 +122,7 @@ object BgpQueries {
         invalidateStale(s, tag,
           Seq(table, s"graft_spo_enc_$tag", s"graft_dict_$tag",
             s"graft_ops_$tag", s"graft_ops_enc_$tag"))
-        if (!new java.io.File(pdir, "_SUCCESS").exists())
+        if (!new java.io.File(pdir, TripleStore.BucketCountFile).exists())
           TripleStore.writePartitionedBucketed(
             TripleStore.fromStarSchema(s, dir), pdir, table)
         val base = TripleStore.fromBucketedTable(s, pdir, table)
@@ -130,7 +131,7 @@ object BgpQueries {
         // time, the trade every object-first index pays
         def opsFor(src: TripleStore, odir: String, otable: String,
             idType: String): org.apache.spark.sql.DataFrame = {
-          if (!new java.io.File(odir, "_SUCCESS").exists())
+          if (!new java.io.File(odir, TripleStore.BucketCountFile).exists())
             TripleStore.writePartitionedBucketed(
               src, odir, otable, bucketCol = "o")
           TripleStore.registerPartitionedBucketed(
@@ -147,7 +148,7 @@ object BgpQueries {
           val ddir = s"$pstoreRoot/${tag}_dict"
           val etable = s"graft_spo_enc_$tag"
           val dtable = s"graft_dict_$tag"
-          if (!new java.io.File(edir, "_SUCCESS").exists() ||
+          if (!new java.io.File(edir, TripleStore.BucketCountFile).exists() ||
               !new java.io.File(ddir, "_SUCCESS").exists()) {
             val enc = TripleStore.encode(base)
             TripleStore.writePartitionedBucketed(enc, edir, etable)

@@ -3,6 +3,7 @@ package graft
 import graft.bgp.TripleStore
 import graft.graph.RdfGraph
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.max
 import org.scalatest.funsuite.AnyFunSuite
 
 class GraphSpec extends AnyFunSuite {
@@ -74,6 +75,28 @@ class GraphSpec extends AnyFunSuite {
     val cyc = Seq(("a", "b"), ("b", "a")).toDF("src", "dst")
     val ch = PathOps.shortestHops(cyc).as[(String, String, Long)].collect().toSet
     assert(ch == Set(("a", "b", 1L), ("b", "a", 1L), ("a", "a", 2L), ("b", "b", 2L)))
+  }
+
+  test("capped fixpoint loops throw instead of returning a partial answer") {
+    import spark.implicits._
+    import graft.graph.PathOps
+    // a 16-edge chain needs 4 doubling rounds and 8 peel rounds
+    val chain = (0 until 16).map(i => s"v$i" -> s"v${i + 1}")
+      .toDF("src", "dst")
+    val und = chain.unionByName(chain.select($"dst".as("src"), $"src".as("dst")))
+    val e1 = intercept[IllegalStateException](
+      PathOps.transitiveClosure(chain, maxIter = 2))
+    assert(e1.getMessage.contains("transitiveClosure"))
+    val e2 = intercept[IllegalStateException](
+      PathOps.shortestHops(chain, maxIter = 2))
+    assert(e2.getMessage.contains("shortestHops"))
+    val e3 = intercept[IllegalStateException](PathOps.kCore(und, 2, maxIter = 3))
+    assert(e3.getMessage.contains("kCore"))
+    // uncapped, the same loops reach their fixpoints
+    assert(PathOps.transitiveClosure(chain).count() == 16 * 17 / 2)
+    assert(PathOps.shortestHops(chain).filter($"src" === "v0")
+      .agg(max($"d")).as[Long].head() == 16L)
+    assert(PathOps.kCore(und, 2).count() == 0)
   }
 
   test("corpus degree query matches a relational recount") {

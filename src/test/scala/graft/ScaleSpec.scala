@@ -252,7 +252,8 @@ class ScaleSpec extends AnyFunSuite {
     val wh = java.nio.file.Files.createTempDirectory("graft-sb").toString
     TripleStore.writeSBucketed(st, s"$wh/spo_s", "graft_spo_spec_s", buckets = 8)
 
-    // a fresh session proves re-registration from files + DDL alone
+    // a new session shares the catalog, so this reuses the entry the
+    // write made; the DDL re-registration path is not exercised here
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
     val bucketed = TripleStore.registerSBucketed(s2, s"$wh/spo_s", "graft_spo_spec_s", buckets = 8)
@@ -280,16 +281,18 @@ class ScaleSpec extends AnyFunSuite {
     val st = TripleStore.fromStarSchema(spark, "/root/testdata/sf0.001")
     val wh = java.nio.file.Files.createTempDirectory("graft-v4").toString
     TripleStore.writePartitionedBucketed(
-      st, s"$wh/spo", "graft_spo_spec_v4", buckets = 8)
+      st, s"$wh/spo", "graft_spo_spec_v4", buckets = Some(8))
 
-    // a fresh session proves the layout re-registers from files + DDL;
+    // a new session shares the catalog, so this reuses the entry the
+    // write made (checked against the recorded count; the DDL path a
+    // new JVM takes is the "re-registers through DDL" test below);
     // broadcast off forces the merge path the layout is built for
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
     s2.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
     s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     val onDisk = TripleStore.fromBucketedTable(
-      s2, s"$wh/spo", "graft_spo_spec_v4", buckets = 8)
+      s2, s"$wh/spo", "graft_spo_spec_v4")
 
     // subject–subject join of two constant-predicate slices: both
     // sides are HashPartitioning(s, 8) from the bucket spec and
@@ -327,18 +330,20 @@ class ScaleSpec extends AnyFunSuite {
     val st = TripleStore.fromStarSchema(spark, "/root/testdata/sf0.001")
     val wh = java.nio.file.Files.createTempDirectory("graft-ops").toString
     TripleStore.writePartitionedBucketed(
-      st, s"$wh/spo", "graft_spo_spec_ops_p", buckets = 8)
+      st, s"$wh/spo", "graft_spo_spec_ops_p", buckets = Some(8))
     TripleStore.writePartitionedBucketed(
-      st, s"$wh/ops", "graft_spo_spec_ops_o", buckets = 8, bucketCol = "o")
+      st, s"$wh/ops", "graft_spo_spec_ops_o", buckets = Some(8),
+      bucketCol = "o")
+    // a new session shares the catalog: both tables re-register from
+    // the entries the writes made, checked against the recorded counts
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
     s2.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
     s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     val onDisk = TripleStore.fromBucketedTable(
-      s2, s"$wh/spo", "graft_spo_spec_ops_p", buckets = 8)
+      s2, s"$wh/spo", "graft_spo_spec_ops_p")
       .copy(oBucketed = Some(TripleStore.registerPartitionedBucketed(
-        s2, s"$wh/ops", "graft_spo_spec_ops_o", buckets = 8,
-        bucketCol = "o")))
+        s2, s"$wh/ops", "graft_spo_spec_ops_o", bucketCol = "o")))
 
     // lone o-constant pattern: subject joins nothing -> OPS table,
     // bucket-pruned on the OBJECT filter
@@ -378,6 +383,68 @@ class ScaleSpec extends AnyFunSuite {
     assert(opt.count() > 0)
   }
 
+  test("a sized layout re-registers through DDL as in a new JVM; a " +
+      "missing or edited bucket-count record throws") {
+    import graft.bgp.{BgpPlanner, TripleStore}
+    import java.nio.file.{Files, Paths}
+    // a scan split far below the layout's bytes engages the volume arm
+    // of the sizing rule: more buckets than cores
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.files.maxPartitionBytes", "16384")
+    val st = TripleStore.fromStarSchema(s2, "/root/testdata/sf0.001")
+    val wh = Files.createTempDirectory("graft-ddl").toString
+    val (spo, ops) = (s"$wh/spo", s"$wh/ops")
+    val (spoT, opsT) = ("graft_spo_spec_ddl", "graft_ops_spec_ddl")
+    TripleStore.writePartitionedBucketed(st, spo, spoT)
+    TripleStore.writePartitionedBucketed(st, ops, opsT, bucketCol = "o")
+    val n = TripleStore.recordedBuckets(s2, spo)
+    assert(n > s2.sparkContext.defaultParallelism,
+      s"expected the byte arm to size past the core count, got $n")
+    assert(TripleStore.recordedBuckets(s2, ops) == n)
+
+    // a new JVM has no catalog entry: drop the tables (external — the
+    // files stay) so registration runs the DDL with the recorded count
+    def reload(): TripleStore = {
+      Seq(spoT, opsT).foreach(t => s2.sql(s"DROP TABLE IF EXISTS $t"))
+      TripleStore.fromBucketedTable(s2, spo, spoT).copy(oBucketed = Some(
+        TripleStore.registerPartitionedBucketed(s2, ops, opsT, bucketCol = "o")))
+    }
+    val onDisk = reload()
+    def check(q: String, table: String): Unit = {
+      val df = BgpPlanner.query(onDisk, q)
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains(table) &&
+        plan.contains(s"SelectedBucketsCount: 1 out of $n"),
+        s"expected a one-bucket scan of $table for $q, got:\n$plan")
+      val expected = BgpPlanner.query(st, q).collect().map(_.toSeq).toSet
+      assert(df.collect().map(_.toSeq).toSet == expected && expected.nonEmpty, q)
+    }
+    Seq("<customer:17>", "<order:5>", "<nation:7>", "<supplier:3>")
+      .foreach(c => check(s"select ?p ?o where { $c ?p ?o }", spoT))
+    Seq("nationkey <nation:7>", "custkey <customer:17>",
+        "regionkey <region:1>")
+      .foreach(po => check(s"select ?s where { ?s $po }", opsT))
+
+    val record = Paths.get(spo, TripleStore.BucketCountFile)
+    Files.delete(record)
+    intercept[IllegalArgumentException](reload())
+    // the edits below rewrite the bare file; drop the local filesystem's
+    // checksum sidecar so the read reaches the count instead of failing
+    // on the checksum
+    Files.deleteIfExists(Paths.get(spo, s".${TripleStore.BucketCountFile}.crc"))
+    // an edited count: the files' rows no longer hash into it
+    Files.writeString(record, (n + 1).toString)
+    intercept[IllegalArgumentException](reload())
+    Files.writeString(record, (n - 1).toString)
+    intercept[IllegalArgumentException](reload())
+    // an existing catalog entry that disagrees with the record
+    Files.writeString(record, n.toString)
+    reload()
+    Files.writeString(record, (n + 1).toString)
+    intercept[IllegalArgumentException](
+      TripleStore.fromBucketedTable(s2, spo, spoT))
+  }
+
   test("v4 encoded store: the variable view keeps bucket pruning — " +
       "xxhash64 over the partition column, not a slice union") {
     import graft.bgp.{BgpPlanner, TripleStore}
@@ -385,9 +452,9 @@ class ScaleSpec extends AnyFunSuite {
     val enc = TripleStore.encode(st)
     val wh = java.nio.file.Files.createTempDirectory("graft-v4e").toString
     TripleStore.writePartitionedBucketed(
-      enc, s"$wh/spo", "graft_spo_spec_v4e", buckets = 8)
+      enc, s"$wh/spo", "graft_spo_spec_v4e", buckets = Some(8))
     val onDisk = TripleStore.fromBucketedTable(
-      spark, s"$wh/spo", "graft_spo_spec_v4e", buckets = 8,
+      spark, s"$wh/spo", "graft_spo_spec_v4e",
       idType = "BIGINT").copy(dict = enc.dict)
 
     val q = "select ?p ?o where { <customer:17> ?p ?o }"

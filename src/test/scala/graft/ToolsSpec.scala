@@ -71,6 +71,16 @@ class ToolsSpec extends AnyFunSuite {
     assert(Files.exists(Paths.get(root, "data_sf1")))
   }
 
+  test("PlanCapture reports every failed capture (main exits non-zero on them)") {
+    val spark = GraftSession.local("2")
+    val out = java.nio.file.Files.createTempDirectory("plans_test")
+    val failed = graft.tools.PlanCapture.capture(spark,
+      "/root/testdata/sf0.001", out.toString, "t",
+      Seq("no_such_query", "q01_pricing_summary"))
+    assert(failed == Seq("no_such_query"))
+    assert(java.nio.file.Files.exists(out.resolve("q01_pricing_summary_t.txt")))
+  }
+
   test("BoundedMemo eviction swallows NonFatal but not fatal errors") {
     val memo = new BoundedMemo[Int, String](1,
       v => if (v == "boom") throw new RuntimeException("nonfatal")
