@@ -60,6 +60,18 @@ object Bench {
     case c => c.toString
   } + "\""
 
+  /** The artifact's `cache.flag`: the operator's
+    * `SPARK_GRAFT_BENCH_CACHE` when set, else derived from the measured
+    * corpus age — `fresh` under an hour (files this recent are likely
+    * still page-cache warm), `aged` otherwise, `unspecified` when the
+    * age could not be measured (−1).
+    */
+  private[graft] def cacheFlag(env: Option[String], corpusAgeSec: Long): String =
+    env.getOrElse(
+      if (corpusAgeSec < 0) "unspecified"
+      else if (corpusAgeSec < 3600) "fresh"
+      else "aged")
+
   /** 1-minute load average, or -1 where /proc is unavailable. */
   private def loadavg1: Double = scala.util.Try {
     scala.io.Source.fromFile("/proc/loadavg").mkString.split(" ")(0).toDouble
@@ -155,7 +167,8 @@ object Bench {
     // cross-round ratios via page-cache warmth): the artifact records
     // how long ago the corpus files were last written — a freshly
     // regenerated corpus shows an age of seconds and flags its own
-    // warmth — plus an optional operator-asserted cold/warm flag.
+    // warmth — plus a flag: operator-asserted when set, else derived
+    // from that age.
     val corpusAge = scala.util.Try {
       def newest(f: java.io.File, depth: Int): Long =
         if (f.isFile) f.lastModified()
@@ -164,9 +177,9 @@ object Bench {
           .map(newest(_, depth - 1)) :+ f.lastModified()).max
       (System.currentTimeMillis() - newest(new java.io.File(sfDir), 3)) / 1000
     }.getOrElse(-1L)
-    val cacheFlag = sys.env.getOrElse("SPARK_GRAFT_BENCH_CACHE", "unspecified")
+    val flag = cacheFlag(sys.env.get("SPARK_GRAFT_BENCH_CACHE"), corpusAge)
     val cache =
-      s"""{"corpus_age_sec":$corpusAge,"flag":${jstr(cacheFlag)}}"""
+      s"""{"corpus_age_sec":$corpusAge,"flag":${jstr(flag)}}"""
     val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
       s""""queries_spread":$spread,"errors":$errs,"reps":$reps,"load":$load,""" +
       s""""cache":$cache,""" +

@@ -146,6 +146,53 @@ object BgpPlanner {
       })
       if (opsWins) store.oSlice(p).getOrElse(slice(p)) else slice(p)
     }
+    // ---- shared path-operator pieces over (s, o) edge relations
+    def vertices(df: DataFrame): DataFrame =
+      graft.graph.PathOps.identity(df.toDF("src", "dst")).toDF("s", "o")
+    def compose(a: DataFrame, b: DataFrame): DataFrame =
+      a.select(col("s"), col("o").as("__m"))
+        .join(b.select(col("s").as("__m"), col("o")), "__m")
+        .select(col("s"), col("o"))
+    // k-hop compositions for k in [lo, hi]; each intermediate is
+    // deduped: the result is set-valued anyway, and on cyclic/dense
+    // relations bag multiplicities would otherwise grow exponentially
+    // with k while the distinct row count stays bounded by |V|²
+    def repeat(edges: DataFrame, lo: Int, hi: Int): DataFrame = {
+      def kHops(k: Int): DataFrame =
+        if (k == 0) vertices(edges)
+        else (1 until k).foldLeft(edges)((acc, _) =>
+          compose(acc, edges).distinct())
+      (lo to hi).map(kHops).reduce(_ unionByName _).distinct()
+    }
+    def negSet(ps: Seq[String], inv: Seq[String]): DataFrame = Seq(
+      if (ps.nonEmpty) Some(store.variableView
+        .filter(ps.map(p => col("p") =!= encode(p)).reduce(_ && _))
+        .select(col("s"), col("o")))
+      else None,
+      if (inv.nonEmpty) Some(store.variableView
+        .filter(inv.map(p => col("p") =!= encode(p)).reduce(_ && _))
+        .select(col("o").as("s"), col("s").as("o")))
+      else None).flatten.reduce(_ unionByName _)
+    // closure of an (s, o) edge relation: `p+`, or `p*` with
+    // `reflexive`. When `bound` and the pattern has a constant endpoint,
+    // only what that constant reaches is computed (PathOps.reachFrom):
+    // forward from a constant subject (a second constant, the object,
+    // filters below), backward from a constant object over `back`, the
+    // OPS layout when materialized. Two variable endpoints close the
+    // whole relation.
+    def closure(edges: DataFrame, reflexive: Boolean,
+        back: Option[DataFrame] = None, bound: Boolean = true): DataFrame = {
+      import graft.graph.PathOps
+      val closed = (pat.s, pat.o) match {
+        case (Const(c), _) if bound =>
+          PathOps.reachFrom(edges.toDF("src", "dst"), encode(c), reflexive)
+        case (_, Const(c)) if bound =>
+          PathOps.reachFrom(back.getOrElse(edges).toDF("dst", "src"),
+            encode(c), reflexive).select(col("dst"), col("src"))
+        case _ => PathOps.closure(edges.toDF("src", "dst"), reflexive)
+      }
+      closed.toDF("s", "o")
+    }
     val knownEmpty = measured.get(patternKey(pat)).contains(-1L)
     val (base, pos) = pat.p match {
       case _ if knownEmpty && !pat.p.isInstanceOf[Var] =>
@@ -156,31 +203,16 @@ object BgpPlanner {
       case Const(p) =>
         (constSlice(p), Seq("s" -> pat.s, "o" -> pat.o))
       case PathPlus(p) =>
-        // property path p+ = transitive closure of the predicate slice
-        val closed = graft.graph.PathOps
-          .transitiveClosure(slice(p).toDF("src", "dst"))
-          .toDF("s", "o")
-        (closed, Seq("s" -> pat.s, "o" -> pat.o))
+        (closure(slice(p), reflexive = false, back = store.oSlice(p)),
+          Seq("s" -> pat.s, "o" -> pat.o))
       case PathStar(p) =>
-        // p* = p+ ∪ identity over the slice's vertex set (SPARQL 1.1
-        // zero-or-more, scoped to the predicate's vertices)
-        val sl = slice(p)
-        val closed = graft.graph.PathOps
-          .transitiveClosure(sl.toDF("src", "dst"))
-          .toDF("s", "o")
-        val identity = sl.select(col("s"))
-          .unionByName(sl.select(col("o").as("s")))
-          .distinct()
-          .select(col("s"), col("s").as("o"))
-        (closed.unionByName(identity).distinct(), Seq("s" -> pat.s, "o" -> pat.o))
+        (closure(slice(p), reflexive = true, back = store.oSlice(p)),
+          Seq("s" -> pat.s, "o" -> pat.o))
       case PathOpt(p) =>
         // p? = one step ∪ identity over the slice's vertex set (SPARQL
         // 1.1 zero-or-one; path results are set-based)
         val sl = slice(p)
-        val identity = sl.select(col("s"))
-          .unionByName(sl.select(col("o").as("s")))
-          .select(col("s"), col("s").as("o"))
-        (sl.unionByName(identity).distinct(), Seq("s" -> pat.s, "o" -> pat.o))
+        (sl.unionByName(vertices(sl)).distinct(), Seq("s" -> pat.s, "o" -> pat.o))
       case PathInverse(p) =>
         // inverse path ^p: the slice with subject/object swapped
         (slice(p).select(col("o").as("s"), col("s").as("o")),
@@ -195,49 +227,15 @@ object BgpPlanner {
         // this is a bounded chain of self-joins, each a hash join on
         // the slice's join key — never an unbounded iteration). k = 0
         // is identity over the slice's vertex set, as for p*.
-        val sl = slice(p)
-        def kHops(k: Int): DataFrame =
-          if (k == 0)
-            sl.select(col("s")).unionByName(sl.select(col("o").as("s")))
-              .distinct().select(col("s"), col("s").as("o"))
-          // dedup each intermediate composition: the result is
-          // set-valued anyway, and on cyclic/dense slices bag
-          // multiplicities would otherwise grow exponentially with k
-          // while the distinct row count stays bounded by |V|²
-          else (1 until k).foldLeft(sl) { (acc, _) =>
-            acc.select(col("s"), col("o").as("__m"))
-              .join(sl.select(col("s").as("__m"), col("o")), "__m")
-              .select(col("s"), col("o")).distinct()
-          }
-        ((lo to hi).map(kHops).reduce(_ unionByName _).distinct(),
-          Seq("s" -> pat.s, "o" -> pat.o))
+        (repeat(slice(p), lo, hi), Seq("s" -> pat.s, "o" -> pat.o))
       case PathGroupRepeat(ps, star) =>
         // grouped path (p1/p2)+: the sequence composes into ONE derived
         // edge relation (s —p1→ m —p2→ o collapses to s→o), which then
-        // reuses the same distributed closure as p+ — the group is just
-        // an edge relation the store doesn't materialize. Each
-        // composition step is a hash join on the mid vertex; dedup
-        // keeps the relation set-valued before the closure iterates.
-        val edges = ps.map(slice).reduce { (a, b) =>
-          a.select(col("s"), col("o").as("__m"))
-            .join(b.select(col("s").as("__m"), col("o")), "__m")
-            .select(col("s"), col("o"))
-        }.distinct()
-        val closed = graft.graph.PathOps
-          .transitiveClosure(edges.toDF("src", "dst"))
-          .toDF("s", "o")
-        val out =
-          if (!star) closed
-          else {
-            // zero-length arm scoped to the derived relation's vertex
-            // set, mirroring PathStar
-            val identity = edges.select(col("s"))
-              .unionByName(edges.select(col("o").as("s")))
-              .distinct()
-              .select(col("s"), col("s").as("o"))
-            closed.unionByName(identity).distinct()
-          }
-        (out, Seq("s" -> pat.s, "o" -> pat.o))
+        // reuses the same closure as p+ — the group is just an edge
+        // relation the store doesn't materialize. Each composition
+        // step is a hash join on the mid vertex.
+        (closure(ps.map(slice).reduce(compose), reflexive = star),
+          Seq("s" -> pat.s, "o" -> pat.o))
       case PathNeg(ps, inv) =>
         // negated property set !(p1|^p2|…): per arm, one scan of the
         // variable view with the exclusion pushed into it — a filter
@@ -247,78 +245,36 @@ object BgpPlanner {
         // with subject/object swapped, and a mixed set is the BAG
         // union of its arms (§9.1) — an arm exists only when it has
         // members
-        val arms = Seq(
-          if (ps.nonEmpty) Some(store.variableView
-            .filter(ps.map(p => col("p") =!= encode(p)).reduce(_ && _))
-            .select(col("s"), col("o")))
-          else None,
-          if (inv.nonEmpty) Some(store.variableView
-            .filter(inv.map(p => col("p") =!= encode(p)).reduce(_ && _))
-            .select(col("o").as("s"), col("s").as("o")))
-          else None).flatten
-        (arms.reduce(_ unionByName _), Seq("s" -> pat.s, "o" -> pat.o))
+        (negSet(ps, inv), Seq("s" -> pat.s, "o" -> pat.o))
       case PathTree(expr) =>
         // NESTED property path — compositional evaluation to ONE
         // derived edge relation: links are slice scans (partition
         // pruning), inverse swaps columns, sequence composes via
         // mid-vertex hash joins (bag semantics, like the PathSeq
         // desugar), alternation is bag union, and the closure
-        // operators (+ * ? {n,m}) dedup their operand and reuse the
-        // SAME distributed PathOps iteration as the flat forms — log₂
-        // rounds of self-joins, set semantics per SPARQL §18.4. At
-        // 100 TB each piece keeps its flat-form scale shape; nesting
-        // only changes which edge relation feeds which operator.
-        val out = {
-          import Sparql.PExpr
-          def vertices(df: DataFrame): DataFrame =
-            df.select(col("s")).unionByName(df.select(col("o").as("s")))
-              .distinct().select(col("s"), col("s").as("o"))
-          def compose(a: DataFrame, b: DataFrame): DataFrame =
-            a.select(col("s"), col("o").as("__m"))
-              .join(b.select(col("s").as("__m"), col("o")), "__m")
-              .select(col("s"), col("o"))
-          def eval(e: PExpr): DataFrame = e match {
-            case PExpr.Link(p) => slice(p)
-            case PExpr.Inv(x) =>
-              eval(x).select(col("o").as("s"), col("s").as("o"))
-            case PExpr.Alt(es) => es.map(eval).reduce(_ unionByName _)
-            case PExpr.PSeq(es) => es.map(eval).reduce(compose)
-            case PExpr.Plus(x) =>
-              graft.graph.PathOps
-                .transitiveClosure(eval(x).distinct().toDF("src", "dst"))
-                .toDF("s", "o")
-            case PExpr.Star(x) =>
-              val edges = eval(x).distinct()
-              graft.graph.PathOps
-                .transitiveClosure(edges.toDF("src", "dst")).toDF("s", "o")
-                .unionByName(vertices(edges)).distinct()
-            case PExpr.ZeroOne(x) =>
-              val edges = eval(x)
-              edges.unionByName(vertices(edges)).distinct()
-            case PExpr.Repeat(x, lo, hi) =>
-              val edges = eval(x).distinct()
-              def kHops(k: Int): DataFrame =
-                if (k == 0) vertices(edges)
-                else (1 until k).foldLeft(edges)((acc, _) =>
-                  compose(acc, edges).distinct())
-              (lo to hi).map(kHops).reduce(_ unionByName _).distinct()
-            case PExpr.NegSet(ps, inv) =>
-              val arms = Seq(
-                if (ps.nonEmpty) Some(store.variableView
-                  .filter(ps.map(p => col("p") =!= encode(p))
-                    .reduce(_ && _))
-                  .select(col("s"), col("o")))
-                else None,
-                if (inv.nonEmpty) Some(store.variableView
-                  .filter(inv.map(p => col("p") =!= encode(p))
-                    .reduce(_ && _))
-                  .select(col("o").as("s"), col("s").as("o")))
-                else None).flatten
-              arms.reduce(_ unionByName _)
-          }
-          eval(expr)
+        // operators (+ * ? {n,m}) are set-valued per SPARQL §18.4 and
+        // share the flat forms' helpers (PathOps loops for + and *).
+        // At 100 TB each piece keeps its flat-form scale shape; nesting
+        // only changes which edge relation feeds which operator. Only
+        // a top-level + / * sees the pattern's endpoints, so only it
+        // may walk from a constant one; a closure nested inside the
+        // tree closes its whole operand.
+        import Sparql.PExpr
+        def eval(e: PExpr, top: Boolean = false): DataFrame = e match {
+          case PExpr.Link(p) => slice(p)
+          case PExpr.Inv(x) =>
+            eval(x).select(col("o").as("s"), col("s").as("o"))
+          case PExpr.Alt(es) => es.map(eval(_)).reduce(_ unionByName _)
+          case PExpr.PSeq(es) => es.map(eval(_)).reduce(compose)
+          case PExpr.Plus(x) => closure(eval(x), reflexive = false, bound = top)
+          case PExpr.Star(x) => closure(eval(x), reflexive = true, bound = top)
+          case PExpr.ZeroOne(x) =>
+            val edges = eval(x)
+            edges.unionByName(vertices(edges)).distinct()
+          case PExpr.Repeat(x, lo, hi) => repeat(eval(x).distinct(), lo, hi)
+          case PExpr.NegSet(ps, inv) => negSet(ps, inv)
         }
-        (out, Seq("s" -> pat.s, "o" -> pat.o))
+        (eval(expr, top = true), Seq("s" -> pat.s, "o" -> pat.o))
       case PathSeq(_) => throw new IllegalStateException(
         "sequence paths are desugared at parse time and never planned")
       case Var(_) =>

@@ -1,27 +1,42 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import graft.scale.GuardedBroadcast
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** Recursive path evaluation over an edge DataFrame — the capability
   * behind SPARQL 1.1 property paths (`p+`), which the reference's BGP
   * subset lacks and Spark has no native operator for.
   *
-  * Semi-naive evaluation (the datalog fixpoint algorithm): each
-  * iteration extends only the NEW pairs of the previous round (the
-  * delta) by one edge hop, anti-joins out already-known pairs, and
-  * stops when the delta is empty. Joining the delta instead of the
-  * whole closure keeps per-iteration work proportional to new facts —
-  * on a cluster each iteration is one shuffle of the delta, and the
-  * closure accumulates in cached partitions.
+  * Two loops evaluate a closure, and which one runs depends on the
+  * endpoints:
+  *  - [[transitiveClosure]] closes the WHOLE edge relation by path
+  *    doubling: each round joins the closure with itself, so paths of
+  *    length 2^k exist after k rounds and a diameter-d graph needs
+  *    ⌈log₂ d⌉ rounds, each a data-sized self-join with a shuffle. It
+  *    runs when both endpoints are variables (every pair is wanted).
+  *  - [[reachFrom]] is semi-naive reachability from ONE seed: each
+  *    round extends only the frontier (the values first reached in the
+  *    previous round) by one hop, with a narrow scan of the edges
+  *    filtered on the frontier, collected to the driver, where
+  *    already-visited values drop out; it stops when the frontier is
+  *    empty. It runs when a path pattern has a constant endpoint, and
+  *    costs (seed eccentricity + 1) shuffle-free jobs instead of
+  *    closing the whole relation for a handful of result rows. Two
+  *    guards hand it over to [[transitiveClosure]] filtered on the seed
+  *    (same answer): the visited set outgrowing the session's
+  *    broadcast threshold, and [[MaxSeededRounds]].
   *
-  * Action discipline (r16, guide §1.2): every round used to pay TWO
-  * driver actions — an EAGER localCheckpoint (one job materializing
-  * the round's blocks) and then the fixpoint-test count/aggregate (a
-  * second job over the just-cached blocks, re-executing every
-  * broadcast exchange in the plan a second time). The checkpoint is
-  * now LAZY and the fixpoint aggregate is the action that
-  * materializes it: one job per round does both, and the lineage
+  * Action discipline (r16, guide §1.2): every doubling round used to
+  * pay TWO driver actions — an EAGER localCheckpoint (one job
+  * materializing the round's blocks) and then the fixpoint-test
+  * count/aggregate (a second job over the just-cached blocks,
+  * re-executing every broadcast exchange in the plan a second time).
+  * The checkpoint is now LAZY and the fixpoint aggregate is the action
+  * that materializes it: one job per round does both, and the lineage
   * truncation (the reason the checkpoint exists — without it each
   * round's plan embeds all previous rounds' and optimizer time grows
   * exponentially) is unchanged, because truncation is a plan-shape
@@ -69,6 +84,128 @@ object PathOps {
     closure
   }
 
+  /** [[transitiveClosure]], plus with `reflexive` the zero-length
+    * pairs (v, v) for every vertex v of `edges` — SPARQL's `p*`, whose
+    * zero-length arm is scoped to the edge relation's vertex set.
+    */
+  def closure(edges: DataFrame, reflexive: Boolean): DataFrame = {
+    val closed = transitiveClosure(edges)
+    if (reflexive) closed.unionByName(identity(edges)).distinct() else closed
+  }
+
+  /** (v, v) for every distinct vertex v of the (src, dst) relation. */
+  def identity(edges: DataFrame): DataFrame =
+    edges.select(col("src").as("v"))
+      .unionByName(edges.select(col("dst").as("v")))
+      .distinct()
+      .select(col("v").as("src"), col("v").as("dst"))
+
+  /** Round cap of [[reachFrom]]'s seeded walk. A seeded round is one
+    * narrow scan job; a doubling round of [[transitiveClosure]] is a
+    * whole-relation self-join with a shuffle. On the sf0.01 `nextorder`
+    * slice (4 cores, longest chain 26 hops) a seeded round took
+    * 70–90 ms and the whole doubling closure 3.6 s over about six
+    * rounds, so one doubling round costs about seven seeded ones. A
+    * walk d rounds deep then costs d seeded rounds against
+    * ~7·⌈log₂ d⌉ for doubling, which wins past d ≈ 40; handing over at
+    * 32 rounds bounds what a deep walk wastes before doubling takes it.
+    */
+  val MaxSeededRounds = 32
+
+  /** The pairs (seed, v) for every v reachable from `seed` in ≥ 1 hop
+    * over `edges` (src, dst) — exactly `transitiveClosure(edges)`
+    * filtered on src = seed — plus, with `reflexive`, (seed, seed) when
+    * the seed is a vertex of `edges` (the `p*` arm of [[closure]]).
+    * `seed` is in the edges' own encoding.
+    *
+    * Round 1 filters the edges on the seed; every later round scans
+    * `edges.filter(src isin frontier)` and collects the distinct
+    * targets to the driver, where already-visited values drop out; the
+    * walk ends when a round finds nothing new. No shuffle, and seed
+    * eccentricity + 1 jobs. The result is a driver-local relation.
+    *
+    * The walk hands over to `closure(edges, reflexive)` filtered on the
+    * seed — the same answer at today's whole-relation cost plus the
+    * rounds already run — when the visited set, measured as it is
+    * collected by [[GuardedBroadcast]]'s row-width rule, passes
+    * `spark.sql.autoBroadcastJoinThreshold` (immediately when
+    * broadcasting is disabled), or when the frontier is still
+    * non-empty after [[MaxSeededRounds]] rounds.
+    */
+  def reachFrom(edges: DataFrame, seed: Column,
+      reflexive: Boolean = false): DataFrame = {
+    val e = edges.select(col("src"), col("dst"))
+    val spark = e.sparkSession
+    def handOver: DataFrame =
+      closure(e, reflexive).filter(col("src") === seed)
+    val budget = GuardedBroadcast.threshold(spark)
+    val width = GuardedBroadcast.rowBytes(
+      StructType(Seq(e.schema("dst").copy(name = "v"))))
+    if (budget <= 0 || width.isEmpty) return handOver
+    // round 1 reads the seed's out-edges; a reflexive walk also reads
+    // its in-edges, which arrive as one null per task: any row at all
+    // means the seed is a vertex and earns its (seed, seed) pair
+    var step =
+      if (!reflexive) e.filter(col("src") === seed).select(col("dst").as("v"))
+      else e.filter(col("src") === seed || col("dst") === seed)
+        .select(when(col("src") === seed, col("dst")).as("v"))
+    val visited = mutable.HashSet.empty[Any]
+    var bytes = 0L
+    var isVertex = false
+    var rounds = 0
+    var frontier = Seq.empty[Any]
+    do {
+      if (rounds == MaxSeededRounds) return handOver
+      val got = collectDistinct(step, width.get, budget - bytes) match {
+        case Some(g) => g
+        case None => return handOver
+      }
+      if (rounds == 0) isVertex = got.nonEmpty
+      rounds += 1
+      val fresh = mutable.ArrayBuffer.empty[Any]
+      for ((v, w) <- got if v != null && visited.add(v)) {
+        fresh += v
+        bytes += w
+      }
+      frontier = fresh.toSeq
+      if (bytes > budget) return handOver
+      step = e.filter(col("src").isin(frontier: _*)).select(col("dst").as("v"))
+    } while (frontier.nonEmpty)
+    // a null row stands for the zero-length pair; the seed's own
+    // ≥ 1-hop row (a cycle back to it) is dropped so it is not doubled
+    val marker = if (reflexive && isVertex) Seq(Row(null)) else Nil
+    val reached = spark.createDataFrame(
+      (visited.toSeq.map(Row(_)) ++ marker).asJava,
+      StructType(Seq(e.schema("dst").copy(name = "v", nullable = true))))
+    val deduped =
+      if (marker.isEmpty) reached
+      else reached.filter(col("v").isNull || col("v") =!= seed)
+    deduped.select(seed.as("src"), coalesce(col("v"), seed).as("dst"))
+  }
+
+  /** The distinct values of `df`'s one column `v` with their widths
+    * (`width`), in one job — or None when the values pass `budget`
+    * bytes. Each task stops reading once its own distinct values pass
+    * the budget and reports that it stopped, so no task returns more
+    * than `budget` bytes plus one row.
+    */
+  private def collectDistinct(df: DataFrame, width: Column,
+      budget: Long): Option[Seq[(Any, Long)]] = {
+    val parts = df.select(col("v"), width).rdd.mapPartitions { rows =>
+      val seen = mutable.LinkedHashMap.empty[Any, Long]
+      var bytes = 0L
+      while (bytes <= budget && rows.hasNext) {
+        val r = rows.next()
+        if (!seen.contains(r.get(0))) {
+          seen(r.get(0)) = r.getLong(1)
+          bytes += r.getLong(1)
+        }
+      }
+      Iterator.single((seen.toSeq, bytes > budget))
+    }.collect()
+    if (parts.exists(_._2)) None else Some(parts.toSeq.flatMap(_._1))
+  }
+
   /** Min-hop distance for every connected (src, dst) pair (BFS depth,
     * all sources at once) — min-plus path doubling: each round joins
     * the distance relation with itself, adds the two legs, and keeps
@@ -108,9 +245,10 @@ object PathOps {
   }
 
   /** Vertices of the k-core (maximal subgraph where every vertex keeps
-    * degree ≥ k) — iterative peeling to the fixpoint. `edges` must be
-    * the SYMMETRIZED distinct edge set (both directions present), so
-    * degree = count of rows per src.
+    * degree ≥ k) — iterative peeling to the fixpoint, over the
+    * UNDIRECTED graph: `edges` is symmetrized here (each edge unioned
+    * with its swap before the distinct), so degree = count of rows per
+    * src whether the caller passes one direction or both.
     *
     * The k-core is order-independent (the fixpoint is unique no matter
     * which low-degree vertex peels first), which is what makes a
@@ -142,7 +280,9 @@ object PathOps {
     * partial core.
     */
   def kCore(edges: DataFrame, k: Int, maxIter: Int = 30): DataFrame = {
-    val ed = edges.select(col("src"), col("dst")).distinct()
+    val ed = edges.select(col("src"), col("dst"))
+      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
+      .distinct()
       .localCheckpoint(eager = false)
     // vertex-grain state: current residual degree per still-alive
     // vertex (vertices with no edges have no row — they are never in

@@ -56,7 +56,7 @@ object GuardedBroadcast {
     * when any field can't be measured conservatively — the caller
     * then skips the hint entirely.
     */
-  private def rowBytes(schema: StructType): Option[Column] = {
+  private[graft] def rowBytes(schema: StructType): Option[Column] = {
     val widths = schema.fields.map { f =>
       f.dataType match {
         case StringType =>
@@ -74,16 +74,21 @@ object GuardedBroadcast {
     else Some(widths.flatten.foldLeft(lit(16L): Column)(_ + _))
   }
 
+  /** The session's autoBroadcastJoinThreshold in bytes; −1 when
+    * broadcasting is disabled or the setting does not parse.
+    */
+  private[graft] def threshold(spark: SparkSession): Long = {
+    val thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
+    try JavaUtils.byteStringAsBytes(thr) catch { case _: Exception => -1L }
+  }
+
   /** `broadcast(df)` when the measured size fits under the session's
     * autoBroadcastJoinThreshold, `df` (persisted) otherwise; `df`
     * untouched when broadcasting is disabled (threshold −1) or the
     * schema is unmeasurable.
     */
   def maybe(df: DataFrame): DataFrame = {
-    val thr = df.sparkSession.conf
-      .get("spark.sql.autoBroadcastJoinThreshold", "10MB")
-    val thresholdBytes =
-      try JavaUtils.byteStringAsBytes(thr) catch { case _: Exception => -1L }
+    val thresholdBytes = threshold(df.sparkSession)
     if (thresholdBytes <= 0) return df
     rowBytes(df.schema) match {
       case None => df

@@ -36,6 +36,14 @@ class BenchSpec extends AnyFunSuite {
       "the failure must still be recorded")
   }
 
+  test("cache.flag derives from the corpus age unless the operator sets it") {
+    assert(Bench.cacheFlag(None, 0L) == "fresh")
+    assert(Bench.cacheFlag(None, 3599L) == "fresh")
+    assert(Bench.cacheFlag(None, 3600L) == "aged")
+    assert(Bench.cacheFlag(None, -1L) == "unspecified")
+    assert(Bench.cacheFlag(Some("cold"), 10L) == "cold")
+  }
+
   test("jstr escapes quotes and control characters for the JSON artifact") {
     assert(Bench.jstr("a\"b\\c\nd") == "\"a\\\"b\\\\c\\u000ad\"")
   }

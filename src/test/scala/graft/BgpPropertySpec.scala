@@ -511,6 +511,17 @@ class BgpPropertySpec extends AnyFunSuite {
     }
   }
 
+  /** Solutions of the two-constant pattern `c1 path c2` (ASK and
+    * SELECT both need a variable): the pattern of the one-variable form
+    * with its object bound to `c2`, planned with nothing projected.
+    */
+  private def solutions(st: TripleStore, c1: String, path: String,
+      c2: String): Long = {
+    val q = Sparql.parse(s"select ?Y where { $c1 $path ?Y }")
+    BgpPlanner.plan(st, q.copy(select = Nil,
+      patterns = q.patterns.map(_.copy(o = Const(c2))))).count()
+  }
+
   test("property paths equal a naive closure (30 random graphs)") {
     import spark.implicits._
     val rnd = new Random(1280912L)
@@ -549,6 +560,68 @@ class BgpPropertySpec extends AnyFunSuite {
           .map(r => (r.getAs[String]("X"), r.getAs[String]("Y"))).toSet
         assert(got == want,
           s"round $round: $q over $triples\ngot ${got.size}, want ${want.size}")
+      }
+    }
+
+    // constant endpoints — the walk from the constant, and (every third
+    // round, under a tiny broadcast threshold) its hand-over to the
+    // doubling closure — for p+, p* and (p1/p2)+, with a constant
+    // subject, a constant object or both, on all three encodings.
+    // Round 0 pins a seed on a cycle (p+ returns the seed itself),
+    // round 1 an absent constant; later rounds draw both at random.
+    val crnd = new Random(5512091L)
+    def compose(a: Set[(String, String)], b: Set[(String, String)]) =
+      for ((x, m) <- a; (m2, y) <- b if m == m2) yield (x, y)
+    for (round <- 0 until 24) {
+      val drawn = Seq.fill(4 + crnd.nextInt(12))(
+        (ents(crnd.nextInt(ents.size)), preds(crnd.nextInt(preds.size)),
+          ents(crnd.nextInt(ents.size))))
+      val triples = (drawn ++ (if (round == 0)
+        Seq(("e0", "p0", "e1"), ("e1", "p0", "e0")) else Nil)).distinct
+      def edges(p: String) = triples.collect { case (s, `p`, o) => (s, o) }.toSet
+      def ent(): String =
+        if (crnd.nextInt(6) == 0) "ghost" else ents(crnd.nextInt(ents.size))
+      val (path, rel, reflexive) =
+        if (round == 0) ("p0+", edges("p0"), false)
+        else crnd.nextInt(3) match {
+          case 0 => val p = preds(crnd.nextInt(2)); (s"$p+", edges(p), false)
+          case 1 => val p = preds(crnd.nextInt(2)); (s"$p*", edges(p), true)
+          case 2 =>
+            val (a, b) = (preds(crnd.nextInt(2)), preds(crnd.nextInt(2)))
+            (s"($a/$b)+", compose(edges(a), edges(b)), false)
+        }
+      val closed = (if (reflexive) 0 else 1).to(ents.size)
+        .flatMap(hops(rel, _)).toSet
+      val (mode, c1, c2) =
+        if (round == 0) (0, "e0", "")
+        else if (round == 1) (crnd.nextInt(3), "ghost", "e0")
+        else (crnd.nextInt(3), ent(), ent())
+      val (q, want) = mode match {
+        case 0 => (s"select ?Y where { $c1 $path ?Y }",
+          closed.collect { case (`c1`, y) => y })
+        case 1 => (s"select ?X where { ?X $path $c1 }",
+          closed.collect { case (x, `c1`) => x })
+        case 2 => (path, Set(if (closed.contains((c1, c2))) "1" else "0"))
+      }
+      if (round == 0) assert(want.contains("e0"))
+      val str = TripleStore.fromTriples(triples.toDF("s", "p", "o"))
+      val key = "spark.sql.autoBroadcastJoinThreshold"
+      val prev = spark.conf.getOption(key)
+      if (round % 3 == 2) spark.conf.set(key, "1")
+      try {
+        for ((st, tag) <- Seq((str, "string"),
+            (TripleStore.encode(str), "hash"),
+            (TripleStore.encodeSequential(str, bands = 4), "sequential"))) {
+          val got =
+            if (mode == 2) Seq(solutions(st, c1, path, c2).toString)
+            else BgpPlanner.query(st, q).collect().map(_.getString(0))
+              .sorted.toSeq
+          assert(got == want.toSeq.sorted,
+            s"constant round $round [$tag]: $q over $triples\ngot $got, want $want")
+        }
+      } finally prev match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
       }
     }
   }
@@ -626,6 +699,41 @@ class BgpPropertySpec extends AnyFunSuite {
         .map(r => (r.getAs[String]("X"), r.getAs[String]("Y"))).toSet
       assert(got == want,
         s"round $round: $q over $triples\ngot $got\nwant $want")
+    }
+
+    // the constant-endpoint forms under a top-level + / * — the one
+    // closure of a tree that walks from its constant; closures nested
+    // deeper close their whole operand — on the string and hash stores
+    for (round <- 0 until 20) {
+      val triples = Seq.fill(5 + rnd.nextInt(12))(
+        (ents(rnd.nextInt(ents.size)), preds(rnd.nextInt(preds.size)),
+          ents(rnd.nextInt(ents.size)))).distinct
+      val ed: Map[String, R] = triples.groupBy(_._2)
+        .map { case (p, ts) => p -> ts.map(t => (t._1, t._3)).toSet }
+      val inner = gen(rnd.nextInt(2))
+      val tree = if (rnd.nextBoolean()) P(inner) else St(inner)
+      val closed = evalT(tree, ed)
+      def ent(): String =
+        if (rnd.nextInt(6) == 0) "ghost" else ents(rnd.nextInt(ents.size))
+      val (c1, c2) = (ent(), ent())
+      val (q, want) = rnd.nextInt(3) match {
+        case 0 => (s"select ?Y where { $c1 ${render(tree)} ?Y }",
+          closed.collect { case (`c1`, y) => y })
+        case 1 => (s"select ?X where { ?X ${render(tree)} $c1 }",
+          closed.collect { case (x, `c1`) => x })
+        case 2 => (render(tree),
+          Set(if (closed.contains((c1, c2))) "1" else "0"))
+      }
+      val str = TripleStore.fromTriples(triples.toDF("s", "p", "o"))
+      for (st <- Seq(str, TripleStore.encode(str))) {
+        val got =
+          if (!q.startsWith("select")) Seq(solutions(st, c1, q, c2).toString)
+          else BgpPlanner.query(st, q).collect().map(_.getString(0))
+            .sorted.toSeq
+        assert(got == want.toSeq.sorted,
+          s"constant round $round enc=${st.encoded}: $q over $triples\n" +
+            s"got $got\nwant $want")
+      }
     }
   }
 

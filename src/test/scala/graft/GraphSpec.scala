@@ -2,8 +2,9 @@ package graft
 
 import graft.bgp.TripleStore
 import graft.graph.RdfGraph
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.max
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.functions.{lit, max}
 import org.scalatest.funsuite.AnyFunSuite
 
 class GraphSpec extends AnyFunSuite {
@@ -99,6 +100,111 @@ class GraphSpec extends AnyFunSuite {
     assert(PathOps.kCore(und, 2).count() == 0)
   }
 
+  /** A seeded walk's result is a driver-local relation; a handed-over
+    * one reads the edges through the doubling closure.
+    */
+  private def walked(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.collectLeaves()
+      .forall(_.isInstanceOf[LocalRelation])
+
+  test("reachFrom: self-loop, cycle, sink and absent seed") {
+    import spark.implicits._
+    import graft.graph.PathOps
+    def reach(edges: Seq[(String, String)], seed: String,
+        reflexive: Boolean = false): Seq[(String, String)] = {
+      val df = PathOps.reachFrom(edges.toDF("src", "dst"), lit(seed), reflexive)
+      assert(walked(df))
+      df.as[(String, String)].collect().toSeq
+    }
+    // a self-loop reaches its own vertex in one hop
+    assert(reach(Seq("a" -> "a", "a" -> "b"), "a").toSet ==
+      Set(("a", "a"), ("a", "b")))
+    // on a cycle p+ returns the seed itself, and p* returns it once
+    val cyc = Seq("a" -> "b", "b" -> "c", "c" -> "a", "c" -> "d")
+    assert(reach(cyc, "a").toSet ==
+      Set(("a", "a"), ("a", "b"), ("a", "c"), ("a", "d")))
+    val star = reach(cyc, "a", reflexive = true)
+    assert(star.size == 4 && star.toSet == reach(cyc, "a").toSet)
+    // a sink: nothing in ≥ 1 hop, but it IS a vertex, so p* pairs it
+    // with itself
+    assert(reach(cyc, "d").isEmpty)
+    assert(reach(cyc, "d", reflexive = true) == Seq(("d", "d")))
+    // an absent seed reaches nothing and is no vertex
+    assert(reach(cyc, "zz").isEmpty && reach(cyc, "zz", reflexive = true).isEmpty)
+  }
+
+  test("reachFrom hands over to the doubling closure past its round cap and byte budget") {
+    import spark.implicits._
+    import graft.graph.PathOps
+    def check(edges: DataFrame, seed: String, handOver: Boolean): Unit =
+      for (reflexive <- Seq(false, true)) {
+        val got = PathOps.reachFrom(edges, lit(seed), reflexive)
+        val want = PathOps.closure(edges, reflexive).filter($"src" === seed)
+        assert(walked(got) == !handOver, s"reflexive=$reflexive")
+        assert(got.as[(String, String)].collect().sorted.toSeq ==
+          want.as[(String, String)].collect().sorted.toSeq,
+          s"reflexive=$reflexive")
+      }
+    // a chain longer than the round cap: the frontier is still
+    // non-empty after MaxSeededRounds rounds
+    val n = PathOps.MaxSeededRounds + 4
+    val long = (0 until n).map(i => s"v$i" -> s"v${i + 1}").toDF("src", "dst")
+    check(long, "v0", handOver = true)
+    // the deepest walk the cap allows finishes seeded: MaxSeededRounds
+    // − 1 hops, then the round that finds nothing new
+    check(long, s"v${n - PathOps.MaxSeededRounds + 1}", handOver = false)
+    // a visited set past the broadcast threshold, and broadcasting
+    // disabled: both hand over; the setting is restored after
+    val short = (0 until 8).map(i => s"v$i" -> s"v${i + 1}").toDF("src", "dst")
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    try {
+      for (thr <- Seq("200", "-1")) {
+        spark.conf.set(key, thr)
+        check(short, "v0", handOver = true)
+      }
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+    check(short, "v0", handOver = false)
+  }
+
+  test("a seeded walk over an L-hop chain runs L + 1 jobs and no shuffle") {
+    import spark.implicits._
+    import graft.graph.PathOps
+    import org.apache.spark.scheduler._
+    val hops = 6
+    val chain = (0 until hops).map(i => s"v$i" -> s"v${i + 1}")
+      .toDF("src", "dst").localCheckpoint()
+    val jobs = new java.util.concurrent.atomic.AtomicLong(0)
+    val stages = new java.util.concurrent.atomic.AtomicLong(0)
+    val shuffled = new java.util.concurrent.atomic.AtomicLong(0)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet()
+        stages.addAndGet(j.stageInfos.size)
+      }
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+        shuffled.addAndGet(
+          s.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
+    }
+    org.apache.spark.sql.graftshim.GraftShim.waitListeners(spark)
+    spark.sparkContext.addSparkListener(listener)
+    val got = try {
+      val r = PathOps.reachFrom(chain, lit("v0")).as[(String, String)]
+        .collect().toSet
+      org.apache.spark.sql.graftshim.GraftShim.waitListeners(spark)
+      r
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(got == (1 to hops).map(i => ("v0", s"v$i")).toSet)
+    // one job per round: the seed's hop, one per further hop, and the
+    // round that finds nothing new
+    assert(jobs.get() == hops + 1, s"jobs ${jobs.get()}")
+    assert(stages.get() == jobs.get() && shuffled.get() == 0L,
+      s"stages ${stages.get()}, shuffle bytes ${shuffled.get()}")
+  }
+
   test("corpus degree query matches a relational recount") {
     val q = SparkEntry.queries("q53_entity_degrees")(spark, "/root/testdata/sf0.001")
     import spark.implicits._
@@ -138,5 +244,21 @@ class GraphSpec extends AnyFunSuite {
     val rep = SparkEntry.queries("q234_kcore")(spark, "/root/testdata/sf0.001")
       .as[(String, Long)].collect().toMap
     assert(rep.values.forall(_ > 0) && rep.keySet.contains("order"))
+  }
+
+  test("kCore symmetrizes directed input itself") {
+    import spark.implicits._
+    import graft.graph.PathOps
+    // the K4 + tail graph of the peel test, each edge given ONE way
+    // (and one edge both ways): the core is the undirected graph's
+    val one = Seq("a" -> "b", "c" -> "a", "a" -> "d", "b" -> "c",
+      "d" -> "b", "c" -> "d", "d" -> "c", "e" -> "d", "e" -> "f")
+    val und = one.toDF("src", "dst")
+      .unionByName(one.map(_.swap).toDF("src", "dst"))
+    for (k <- 1 to 4)
+      assert(PathOps.kCore(one.toDF("src", "dst"), k).as[String].collect().toSet ==
+        PathOps.kCore(und, k).as[String].collect().toSet, s"k=$k")
+    assert(PathOps.kCore(one.toDF("src", "dst"), 2).as[String].collect().toSet ==
+      Set("a", "b", "c", "d"))
   }
 }
