@@ -2,6 +2,7 @@ package graft.graph
 
 import graft.scale.GuardedBroadcast
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LeafNode, Project, Union}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType}
 import scala.collection.mutable
@@ -24,11 +25,11 @@ import scala.jdk.CollectionConverters._
   *    filtered on the frontier, collected to the driver, where
   *    already-visited values drop out; it stops when the frontier is
   *    empty. It runs when a path pattern has a constant endpoint, and
-  *    costs (seed eccentricity + 1) shuffle-free jobs instead of
-  *    closing the whole relation for a handful of result rows. Two
-  *    guards hand it over to [[transitiveClosure]] filtered on the seed
-  *    (same answer): the visited set outgrowing the session's
-  *    broadcast threshold, and [[MaxSeededRounds]].
+  *    costs (seed eccentricity + 1) jobs, shuffle-free over a scanned
+  *    slice, instead of closing the whole relation for a handful of
+  *    result rows. Two guards hand it over to [[transitiveClosure]]
+  *    filtered on the seed (same answer): the visited set outgrowing
+  *    the session's broadcast threshold, and [[MaxSeededRounds]].
   *
   * Action discipline (r16, guide §1.2): every doubling round used to
   * pay TWO driver actions — an EAGER localCheckpoint (one job
@@ -121,8 +122,11 @@ object PathOps {
     * Round 1 filters the edges on the seed; every later round scans
     * `edges.filter(src isin frontier)` and collects the distinct
     * targets to the driver, where already-visited values drop out; the
-    * walk ends when a round finds nothing new. No shuffle, and seed
-    * eccentricity + 1 jobs. The result is a driver-local relation.
+    * walk ends when a round finds nothing new. Seed eccentricity + 1
+    * jobs, and no shuffle when `edges` is a plain scan. Edges that are
+    * more than a scan (a distinct, a delta merge's joins) are
+    * checkpointed and materialized by round 1, so their shuffles run
+    * once, not once per round. The result is a driver-local relation.
     *
     * The walk hands over to `closure(edges, reflexive)` filtered on the
     * seed — the same answer at today's whole-relation cost plus the
@@ -134,24 +138,25 @@ object PathOps {
     */
   def reachFrom(edges: DataFrame, seed: Column,
       reflexive: Boolean = false): DataFrame = {
-    val e = edges.select(col("src"), col("dst"))
-    val spark = e.sparkSession
+    val raw = edges.select(col("src"), col("dst"))
+    val spark = raw.sparkSession
+    val e = if (scanOnly(raw)) raw else raw.localCheckpoint(eager = false)
     def handOver: DataFrame =
       closure(e, reflexive).filter(col("src") === seed)
     val budget = GuardedBroadcast.threshold(spark)
     val width = GuardedBroadcast.rowBytes(
       StructType(Seq(e.schema("dst").copy(name = "v"))))
     if (budget <= 0 || width.isEmpty) return handOver
-    // round 1 reads the seed's out-edges; a reflexive walk also reads
-    // its in-edges, which arrive as one null per task: any row at all
-    // means the seed is a vertex and earns its (seed, seed) pair
+    // round 1 reads the seed's out-edges; a reflexive walk also visits
+    // the seed itself for every edge touching it, so the seed is
+    // visited exactly when it is a vertex, which is when p* pairs it
+    // with itself (an in-edge's dst is the seed too)
     var step =
       if (!reflexive) e.filter(col("src") === seed).select(col("dst").as("v"))
       else e.filter(col("src") === seed || col("dst") === seed)
-        .select(when(col("src") === seed, col("dst")).as("v"))
+        .select(explode(array(col("dst"), seed)).as("v"))
     val visited = mutable.HashSet.empty[Any]
     var bytes = 0L
-    var isVertex = false
     var rounds = 0
     var frontier = Seq.empty[Any]
     do {
@@ -160,10 +165,9 @@ object PathOps {
         case Some(g) => g
         case None => return handOver
       }
-      if (rounds == 0) isVertex = got.nonEmpty
       rounds += 1
       val fresh = mutable.ArrayBuffer.empty[Any]
-      for ((v, w) <- got if v != null && visited.add(v)) {
+      for ((v, w) <- got if visited.add(v)) {
         fresh += v
         bytes += w
       }
@@ -171,37 +175,43 @@ object PathOps {
       if (bytes > budget) return handOver
       step = e.filter(col("src").isin(frontier: _*)).select(col("dst").as("v"))
     } while (frontier.nonEmpty)
-    // a null row stands for the zero-length pair; the seed's own
-    // ≥ 1-hop row (a cycle back to it) is dropped so it is not doubled
-    val marker = if (reflexive && isVertex) Seq(Row(null)) else Nil
-    val reached = spark.createDataFrame(
-      (visited.toSeq.map(Row(_)) ++ marker).asJava,
-      StructType(Seq(e.schema("dst").copy(name = "v", nullable = true))))
-    val deduped =
-      if (marker.isEmpty) reached
-      else reached.filter(col("v").isNull || col("v") =!= seed)
-    deduped.select(seed.as("src"), coalesce(col("v"), seed).as("dst"))
+    spark.createDataFrame(visited.toSeq.map(Row(_)).asJava,
+        StructType(Seq(e.schema("dst").copy(name = "v"))))
+      .select(seed.as("src"), col("v").as("dst"))
   }
 
+  /** True when `df` reads its rows through narrow operators only, so
+    * re-running it per round costs one scan and no exchange.
+    */
+  private def scanOnly(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.find {
+      case _: Project | _: Filter | _: Union | _: LeafNode => false
+      case _ => true
+    }.isEmpty
+
   /** The distinct values of `df`'s one column `v` with their widths
-    * (`width`), in one job — or None when the values pass `budget`
-    * bytes. Each task stops reading once its own distinct values pass
-    * the budget and reports that it stopped, so no task returns more
-    * than `budget` bytes plus one row.
+    * (`width`), in one job — or None when they may pass `budget` bytes.
+    * The budget is split evenly over the tasks, and each task stops
+    * reading once its own distinct values pass its share and reports
+    * that it stopped, so the job ships at most `budget` bytes plus one
+    * row per task. A skewed round therefore hands over early, which
+    * costs time but not correctness.
     */
   private def collectDistinct(df: DataFrame, width: Column,
       budget: Long): Option[Seq[(Any, Long)]] = {
-    val parts = df.select(col("v"), width).rdd.mapPartitions { rows =>
+    val rows = df.select(col("v"), width).rdd
+    val share = budget / math.max(1, rows.getNumPartitions)
+    val parts = rows.mapPartitions { it =>
       val seen = mutable.LinkedHashMap.empty[Any, Long]
       var bytes = 0L
-      while (bytes <= budget && rows.hasNext) {
-        val r = rows.next()
+      while (bytes <= share && it.hasNext) {
+        val r = it.next()
         if (!seen.contains(r.get(0))) {
           seen(r.get(0)) = r.getLong(1)
           bytes += r.getLong(1)
         }
       }
-      Iterator.single((seen.toSeq, bytes > budget))
+      Iterator.single((seen.toSeq, bytes > share))
     }.collect()
     if (parts.exists(_._2)) None else Some(parts.toSeq.flatMap(_._1))
   }
@@ -246,9 +256,10 @@ object PathOps {
 
   /** Vertices of the k-core (maximal subgraph where every vertex keeps
     * degree ≥ k) — iterative peeling to the fixpoint, over the
-    * UNDIRECTED graph: `edges` is symmetrized here (each edge unioned
-    * with its swap before the distinct), so degree = count of rows per
-    * src whether the caller passes one direction or both.
+    * UNDIRECTED graph: `edges` is symmetrized here (each edge taken
+    * both ways after one distinct over its unordered pair), so degree
+    * = count of rows per src whether the caller passes one direction
+    * or both.
     *
     * The k-core is order-independent (the fixpoint is unique no matter
     * which low-degree vertex peels first), which is what makes a
@@ -280,9 +291,14 @@ object PathOps {
     * partial core.
     */
   def kCore(edges: DataFrame, k: Int, maxIter: Int = 30): DataFrame = {
-    val ed = edges.select(col("src"), col("dst"))
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
+    // each undirected edge once, as (least, greatest) — the distinct
+    // shuffles no more rows than the caller passed — then both ways
+    val und = edges.select(least(col("src"), col("dst")).as("a"),
+      greatest(col("src"), col("dst")).as("b")).distinct()
+    val ed = und.select(explode(array_distinct(array(
+        struct(col("a").as("src"), col("b").as("dst")),
+        struct(col("b").as("src"), col("a").as("dst"))))).as("e"))
+      .select(col("e.src"), col("e.dst"))
       .localCheckpoint(eager = false)
     // vertex-grain state: current residual degree per still-alive
     // vertex (vertices with no edges have no row — they are never in

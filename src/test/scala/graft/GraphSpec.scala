@@ -2,10 +2,13 @@ package graft
 
 import graft.bgp.TripleStore
 import graft.graph.RdfGraph
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, StageInfo}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions.{lit, max}
+import org.apache.spark.sql.graftshim.GraftShim
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 class GraphSpec extends AnyFunSuite {
 
@@ -170,39 +173,98 @@ class GraphSpec extends AnyFunSuite {
     check(short, "v0", handOver = false)
   }
 
-  test("a seeded walk over an L-hop chain runs L + 1 jobs and no shuffle") {
-    import spark.implicits._
-    import graft.graph.PathOps
-    import org.apache.spark.scheduler._
-    val hops = 6
-    val chain = (0 until hops).map(i => s"v$i" -> s"v${i + 1}")
-      .toDF("src", "dst").localCheckpoint()
+  /** `body`'s result, the jobs it ran, the stages those jobs listed
+    * when they started, and the stages that ran to completion.
+    */
+  private def traced[T](body: => T): (T, Long, Long, Seq[StageInfo]) = {
     val jobs = new java.util.concurrent.atomic.AtomicLong(0)
-    val stages = new java.util.concurrent.atomic.AtomicLong(0)
-    val shuffled = new java.util.concurrent.atomic.AtomicLong(0)
+    val listed = new java.util.concurrent.atomic.AtomicLong(0)
+    val done = new java.util.concurrent.ConcurrentLinkedQueue[StageInfo]()
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = {
         jobs.incrementAndGet()
-        stages.addAndGet(j.stageInfos.size)
+        listed.addAndGet(j.stageInfos.size)
       }
       override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
-        shuffled.addAndGet(
-          s.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
+        done.add(s.stageInfo)
     }
-    org.apache.spark.sql.graftshim.GraftShim.waitListeners(spark)
+    GraftShim.waitListeners(spark)
     spark.sparkContext.addSparkListener(listener)
-    val got = try {
-      val r = PathOps.reachFrom(chain, lit("v0")).as[(String, String)]
-        .collect().toSet
-      org.apache.spark.sql.graftshim.GraftShim.waitListeners(spark)
-      r
+    try {
+      val r = body
+      GraftShim.waitListeners(spark)
+      (r, jobs.get(), listed.get(), done.asScala.toSeq)
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  private def shuffleBytes(stages: Seq[StageInfo]): Long =
+    stages.map(_.taskMetrics.shuffleWriteMetrics.bytesWritten).sum
+
+  test("a seeded walk over an L-hop chain runs L + 1 jobs and no shuffle") {
+    import spark.implicits._
+    import graft.graph.PathOps
+    val hops = 6
+    val chain = (0 until hops).map(i => s"v$i" -> s"v${i + 1}")
+      .toDF("src", "dst").localCheckpoint()
+    val (got, jobs, stages, done) = traced(
+      PathOps.reachFrom(chain, lit("v0")).as[(String, String)].collect().toSet)
     assert(got == (1 to hops).map(i => ("v0", s"v$i")).toSet)
     // one job per round: the seed's hop, one per further hop, and the
     // round that finds nothing new
-    assert(jobs.get() == hops + 1, s"jobs ${jobs.get()}")
-    assert(stages.get() == jobs.get() && shuffled.get() == 0L,
-      s"stages ${stages.get()}, shuffle bytes ${shuffled.get()}")
+    assert(jobs == hops + 1, s"jobs $jobs")
+    assert(stages == jobs && shuffleBytes(done) == 0L,
+      s"stages $stages, shuffle bytes ${shuffleBytes(done)}")
+  }
+
+  test("a seeded walk over a store slice with a distinct runs its shuffle once") {
+    import spark.implicits._
+    import graft.graph.PathOps
+    // a fromTriples slice is filter + distinct over the persisted
+    // source: one exchange, which a walk must not repeat every round
+    val hops = 6
+    val st = TripleStore.fromTriples((0 until hops)
+      .map(i => (s"v$i", "next", s"v${i + 1}")).toDF("s", "p", "o"))
+    val slice = st.slices("next").toDF("src", "dst")
+    val (got, jobs, _, done) = traced(
+      PathOps.reachFrom(slice, lit("v0")).as[(String, String)].collect().toSet)
+    assert(got == (1 to hops).map(i => ("v0", s"v$i")).toSet)
+    val shuffling = done.count(_.taskMetrics.shuffleWriteMetrics.bytesWritten > 0)
+    assert(shuffling == 1, s"shuffle stages $shuffling")
+    // one job per round, plus the exchange's map stage, which adaptive
+    // execution runs as its own job when the checkpoint is planned
+    assert(jobs == hops + 2, s"jobs $jobs")
+  }
+
+  test("a seeded round ships at most the byte budget, however many tasks it has") {
+    import spark.implicits._
+    import graft.graph.PathOps
+    // 8 partitions of 32 distinct ~2 KB targets: each partition
+    // (~64 KB) is under the 100 KB threshold, their union (~512 KB) is
+    // over it, so the walk must hand over without collecting the union
+    val rows = for (part <- 0 until 8; i <- 0 until 32)
+      yield ("s", s"$part-$i-" + "x" * 2000)
+    val edges = spark.sparkContext.parallelize(rows, 8).toDF("src", "dst")
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key, "100000")
+      for (reflexive <- Seq(false, true)) {
+        val (got, _, _, done) = traced(PathOps.reachFrom(edges, lit("s"), reflexive))
+        assert(!walked(got), s"reflexive=$reflexive")
+        assert(got.as[(String, String)].collect().sorted.toSeq ==
+          PathOps.closure(edges, reflexive).filter($"src" === "s")
+            .as[(String, String)].collect().sorted.toSeq, s"reflexive=$reflexive")
+        // what the walk's collects brought to the driver: the budget,
+        // one row per task and the task results' own overhead
+        val shipped = done.filter(_.name.startsWith("collect at PathOps"))
+          .map(_.taskMetrics.resultSize).sum
+        assert(shipped > 0 && shipped < 200000,
+          s"reflexive=$reflexive shipped $shipped")
+      }
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 
   test("corpus degree query matches a relational recount") {
