@@ -57,7 +57,8 @@ object SparqlServer {
     */
   final class Handle private[SparqlServer] (
       server: HttpServer, advertised: String,
-      ref: java.util.concurrent.atomic.AtomicReference[TripleStore]) {
+      ref: java.util.concurrent.atomic.AtomicReference[TripleStore],
+      lastLine: java.util.concurrent.atomic.AtomicReference[String]) {
     def port: Int = server.getAddress.getPort
     /** The dereferenceable endpoint IRI — derived from the actual bind
       * address (or the deployer's `externalUrl`), never a hardcoded
@@ -66,6 +67,8 @@ object SparqlServer {
       */
     def endpoint: String = advertised
     def store: TripleStore = ref.get()
+    /** The [[updateLine]] of the latest update, if any. */
+    def lastUpdate: Option[String] = Option(lastLine.get())
     def stop(): Unit = server.stop(0)
   }
 
@@ -421,16 +424,40 @@ object SparqlServer {
     }
   }
 
-  /** Start serving `store` at `http://localhost:<port><path>`; port 0
-    * picks an ephemeral port. The handler evaluates each request on
-    * the store's own SparkSession (protocol requests are the
-    * coordinator loop, not executor work).
-    */
   /** How many updates a persistence-less endpoint absorbs before its
     * store's plan lineage is truncated ([[TripleStore.truncateLineage]]).
     */
   val DefaultCheckpointEvery = 64
 
+  /** The structured line the endpoint logs for one update request:
+    * its op count, then — with a persist directory — the insert and
+    * tombstone rows its delta batches appended (`?` when a batch was
+    * written without being collected), the delta slots it claimed, the
+    * dataset version then current, how the served store was made
+    * (`advanced`, `loaded` or `flipped`, see [[TripleStore.WriteBack]];
+    * `memory` without a persist directory), and the apply, write and
+    * advance times in ms.
+    */
+  private[graft] def updateLine(ops: Int, applyMs: Long,
+      wb: Option[TripleStore.WriteBack]): String = wb match {
+    case None => s"[sparql] update ops=$ops store=memory apply_ms=$applyMs"
+    case Some(w) =>
+      s"[sparql] update ops=$ops delta_rows=${w.rows.fold("?")(_.toString)} " +
+        s"seqs=${if (w.seqs.isEmpty) "-" else w.seqs.mkString(",")} " +
+        s"version=${w.version.fold("-")(_.toString)} store=${w.outcome} " +
+        s"apply_ms=$applyMs write_ms=${w.writeMs} advance_ms=${w.advanceMs}"
+  }
+
+  /** Start serving `store` at `http://localhost:<port><path>`; port 0
+    * picks an ephemeral port. The handler evaluates each request on
+    * the store's own SparkSession (protocol requests are the
+    * coordinator loop, not executor work). With `persistDir` every
+    * update is written back to the versioned dataset there
+    * ([[TripleStore.writeBackDelta]]) and the dataset survives
+    * restarts: `serve(fromDatasetParquet(dir), persistDir = Some(dir))`
+    * resumes from the `VERSION` pointer. Each update logs one
+    * [[updateLine]] to stderr; [[Handle.lastUpdate]] holds the latest.
+    */
   def serve(store: TripleStore, port: Int = 0, path: String = "/sparql",
       maxRows: Int = MaxResponseRows,
       bindAddress: InetAddress = InetAddress.getLoopbackAddress,
@@ -459,6 +486,7 @@ object SparqlServer {
       s"http://$host:${server.getAddress.getPort}$path"
     }
     val ref = new java.util.concurrent.atomic.AtomicReference(store)
+    val lastLine = new java.util.concurrent.atomic.AtomicReference[String]()
     // updates serialize: SPARQL Update request semantics are
     // one-at-a-time against the then-current dataset (stores are
     // immutable; each update swaps the reference queries read)
@@ -467,15 +495,26 @@ object SparqlServer {
     // successful op chain. With a persistDir each op's ROW-GRAIN delta
     // appends into the versioned dataset layout (insert/tombstone
     // batches, compacted into a fresh version past
-    // TripleStore.CompactDeltaBatches) and the served store reloads
-    // from disk — lineage is depth-1 ALWAYS and the dataset survives
-    // restarts (SparqlServer.serve(fromDatasetParquet(dir),
-    // persistDir=dir) resumes from the VERSION pointer). Without one,
-    // every checkpointEvery ops the plan lineage truncates in memory.
+    // TripleStore.CompactDeltaBatches) and the served store is the one
+    // writeBackDelta returns: between version flips it is the current
+    // store ADVANCED by the batches just written (only the touched
+    // slices re-merge, from the delta log held on the driver), and it
+    // is LOADED from disk only at a flip (bootstrap, structural op,
+    // compaction), after another writer's batch, or when the log
+    // outgrows the broadcast threshold — lineage stays bounded either
+    // way. Without one, every checkpointEvery ops the plan lineage
+    // truncates in memory.
     var opsSinceCheckpoint = 0
     def boundedOps(spark: org.apache.spark.sql.SparkSession,
         prev: TripleStore,
-        ops: Seq[SparqlUpdate.UpdateOp]): TripleStore =
+        ops: Seq[SparqlUpdate.UpdateOp]): TripleStore = {
+      val t0 = System.nanoTime()
+      def sinceStart: Long = (System.nanoTime() - t0) / 1000000
+      def logged(applyMs: Long, wb: Option[TripleStore.WriteBack]): Unit = {
+        val line = updateLine(ops.size, applyMs, wb)
+        lastLine.set(line)
+        System.err.println(line)
+      }
       persistDir match {
         case Some(dir) =>
           // op-introspected deltas: a 1-triple INSERT writes a 1-row
@@ -487,16 +526,19 @@ object SparqlServer {
               val (n, d) = SparqlUpdate.applyWithDelta(spark, st, op)
               (n, acc :+ d)
           }
-          TripleStore.writeBackDelta(prev, next, dir, deltas)
-          TripleStore.fromDatasetParquet(spark, dir)
+          val applyMs = sinceStart
+          TripleStore.writeBackDelta(prev, next, dir, deltas,
+            wb => logged(applyMs, Some(wb)))
         case None =>
           val next = ops.foldLeft(prev)(SparqlUpdate.apply(spark, _, _))
+          logged(sinceStart, None)
           opsSinceCheckpoint += 1
           if (opsSinceCheckpoint >= checkpointEvery) {
             opsSinceCheckpoint = 0
             TripleStore.truncateLineage(next)
           } else next
       }
+    }
     server.createContext(path, new HttpHandler {
       def handle(ex: HttpExchange): Unit = {
         val (code, body, ctype) =
@@ -652,7 +694,7 @@ object SparqlServer {
       }
     })
     server.start()
-    new Handle(server, advertised, ref)
+    new Handle(server, advertised, ref, lastLine)
   }
 
   private final class PayloadTooLarge(msg: String)

@@ -1,8 +1,11 @@
 package graft.bgp
 
 import graft.scale.GuardedBroadcast
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** RDF triple store over Spark, vertically partitioned by predicate.
   *
@@ -52,7 +55,12 @@ final case class TripleStore(
     // bound. The planner then resolves each query constant with one
     // dict probe instead of hashing it (RDF-3X's discipline,
     // Proxy.c:211-224).
-    sequential: Boolean = false) {
+    sequential: Boolean = false,
+    // where this store stands in a versioned dataset on disk, when
+    // fromDatasetParquet loaded it or writeBackDelta advanced it: lets
+    // the next write-back advance it by the batch it appends instead of
+    // reloading the dataset
+    private[bgp] val standing: Option[TripleStore.Standing] = None) {
 
   /** Plan-time resolution cache for SEQUENTIAL-encoding query
     * constants, shared across every planner pass over THIS store
@@ -66,6 +74,14 @@ final case class TripleStore(
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
   def encoded: Boolean = dict.isDefined
+
+  /** [[standing]] while it still describes this store: a store derived
+    * in memory from a loaded one (an applied op not yet written back)
+    * carries the field over through `copy`, but not the relations it
+    * was built with.
+    */
+  private[bgp] def stands: Option[TripleStore.Standing] =
+    standing.filter(_.describes(this))
 
   /** Union view `(s, p, o)` for variable-predicate patterns only —
     * never materialized unless such a pattern exists.
@@ -423,19 +439,25 @@ object TripleStore {
     try { fs.create(p, false).close(); true }
     catch { case _: java.io.IOException => false }
 
-  private def nextDeltaSeq(fs: org.apache.hadoop.fs.FileSystem,
-      root: String): Int = {
-    def maxIn(dir: String): Int = {
+  /** The delta slots of a version root: per log, the `seq` of every
+    * committed batch (its `seq=<k>` directories), and the `seq` of
+    * every claimed slot (the `delta/seq=<k>.lock` files). One listing
+    * per log directory; no data read.
+    */
+  private def deltaSlots(fs: org.apache.hadoop.fs.FileSystem,
+      root: String): (Map[String, Set[Int]], Set[Int]) = {
+    def seqs(dir: String, suffix: String): Set[Int] = {
       val p = new org.apache.hadoop.fs.Path(dir)
-      if (!fs.exists(p)) -1
-      else fs.listStatus(p).flatMap { st =>
+      if (!fs.exists(p)) Set.empty
+      else fs.listStatus(p).iterator.flatMap { st =>
         val n = st.getPath.getName
-        if (n.startsWith("seq=")) scala.util.Try(n.drop(4).toInt).toOption
+        if (n.startsWith("seq=") && n.endsWith(suffix))
+          n.stripPrefix("seq=").stripSuffix(suffix).toIntOption
         else None
-      }.foldLeft(-1)(math.max)
+      }.toSet
     }
-    Seq(s"$root/delta/default", s"$root/delta/quads", s"$root/delta/dict")
-      .map(maxIn).max + 1
+    (LogParts.map(part => part.name -> seqs(s"$root/delta/${part.name}", "")).toMap,
+      seqs(s"$root/delta", ".lock"))
   }
 
   private def writeDeltaBatch(rows: DataFrame, dir: String, seq: Int,
@@ -450,55 +472,215 @@ object TripleStore {
     require(fs.rename(tmp, target), s"delta batch commit $target failed")
   }
 
+  /** The weight of a delta row of batch `seq`: `seq * 2`, plus 1 for an
+    * insert. A key's largest weight is odd exactly when the last batch
+    * touching it leaves it present, and within one batch an insert
+    * beats a tombstone of the same row (SPARQL §3.1.3
+    * delete-then-insert). Every load and every advance weighs rows with
+    * this one expression.
+    */
+  private def deltaWeight(seq: Column, del: Column): Column =
+    seq.cast("long") * 2 + when(!del, 1).otherwise(0)
+
+  /** One of a version's three delta logs: its directory under `delta/`
+    * and the columns of its batches. Default and quad rows end in the
+    * tombstone flag `del` and are weighed ([[deltaWeight]]); dict rows
+    * only ever append. [[LogParts]] lists them in write order: an op's
+    * dict rows land first, so a torn write can only leave extra
+    * vocabulary, never dangling ids.
+    */
+  private[bgp] final case class LogPart(name: String, cols: Seq[String]) {
+    def weighed: Boolean = cols.last == "del"
+    def keys: Seq[String] = if (weighed) cols.init else cols
+    /** `rows` as the log holds them: the batch columns, then the weight
+      * `__w` of batch `seq` when weighed.
+      */
+    def held(rows: DataFrame, seq: Column): DataFrame =
+      rows.select(cols.map(col) ++
+        (if (weighed) Seq(deltaWeight(seq, col("del")).as("__w")) else Nil): _*)
+  }
+  private val DictLog = LogPart("dict", Seq("id", "value", "dt", "lang"))
+  private val DefaultLog = LogPart("default", Seq("p", "s", "o", "del"))
+  private val QuadLog = LogPart("quads", Seq("g", "p", "s", "o", "del"))
+  private val LogParts = Seq(DictLog, DefaultLog, QuadLog)
+
+  /** A version's delta log held on the driver: for each weighed log,
+    * the latest weight of every key it touches (default keys `(p, s,
+    * o)`, quad keys `(g, p, s, o)`); the dict rows it appended; each
+    * log's batch schema; and its size in bytes, the
+    * [[GuardedBroadcast.rowBytes]] of every row as collected.
+    */
+  private[bgp] final case class DeltaLog(
+      weights: Map[String, Map[Row, Long]] = Map.empty,
+      dictRows: Vector[Row] = Vector.empty,
+      schemas: Map[String, StructType] = Map.empty,
+      bytes: Long = 0L) {
+    /** This log plus `rows` of `part`: [[LogPart.held]] rows with their
+      * byte widths, as [[collectHeld]] returns them.
+      */
+    def absorb(part: LogPart, schema: StructType,
+        rows: Seq[(Row, Long)]): DeltaLog = {
+      val k = part.keys.length
+      copy(
+        weights = if (!part.weighed) weights else weights.updated(part.name,
+          rows.foldLeft(weights.getOrElse(part.name, Map.empty[Row, Long])) {
+            case (m, (r, _)) =>
+              val key = Row.fromSeq(r.toSeq.take(k))
+              val w = r.getLong(k + 1)
+              m.updated(key, m.get(key).fold(w)(math.max(_, w)))
+          }),
+        dictRows = if (part.weighed) dictRows else dictRows ++ rows.map(_._1),
+        schemas = schemas.updated(part.name, schema),
+        bytes = bytes + rows.iterator.map(_._2).sum)
+    }
+
+    /** Everything this log touches, as one [[Touched]]. */
+    def touched: Touched = Touched(
+      weights.getOrElse(DefaultLog.name, Map.empty).keySet.map(_.getString(0)),
+      weights.contains(QuadLog.name), dictRows)
+  }
+
+  /** What a batch changed: the predicates whose slices it touched,
+    * whether it touched the quads, and the dict rows it appended.
+    */
+  private[bgp] final case class Touched(preds: Set[String] = Set.empty,
+      quads: Boolean = false, dictRows: Vector[Row] = Vector.empty) {
+    def isEmpty: Boolean = preds.isEmpty && !quads && dictRows.isEmpty
+    def add(part: LogPart, rows: Seq[Row]): Touched = part match {
+      case DefaultLog => copy(preds = preds ++ rows.map(_.getString(0)))
+      case QuadLog => copy(quads = true)
+      case _ => copy(dictRows = dictRows ++ rows)
+    }
+  }
+
+  /** Where a store stands in its versioned dataset: the version root it
+    * was read from, the delta slot after the last batch merged into it,
+    * the version's base relations (bare scans), the version's delta log
+    * held on the driver, and the relations the store was built with
+    * (see [[TripleStore.stands]]).
+    */
+  private[bgp] final class Standing(val root: String, val nextSeq: Int,
+      val base: TripleStore, val log: DeltaLog,
+      slices: Map[String, DataFrame], quads: Option[DataFrame],
+      dict: Option[DataFrame]) {
+    def describes(st: TripleStore): Boolean = {
+      def same(a: Option[DataFrame], b: Option[DataFrame]): Boolean =
+        a.size == b.size && a.zip(b).forall { case (x, y) => x eq y }
+      (st.slices eq slices) && same(st.quads, quads) && same(st.dict, dict)
+    }
+  }
+
+  private def standOn(st: TripleStore, root: String, nextSeq: Int,
+      base: TripleStore, log: DeltaLog): TripleStore =
+    st.copy(standing = Some(
+      new Standing(root, nextSeq, base, log, st.slices, st.quads, st.dict)))
+
+  /** The held rows of one batch or log with their widths, collected
+    * within `budget` bytes ([[GuardedBroadcast.collectBounded]]), or
+    * None when they may pass it.
+    */
+  private def collectHeld(held: DataFrame,
+      budget: Long): Option[Seq[(Row, Long)]] =
+    GuardedBroadcast.rowBytes(StructType(held.schema.filterNot(_.name == "__w")))
+      .flatMap(GuardedBroadcast.collectBounded(held, _, budget))
+
+  /** What one [[writeBackDelta]] did: how the store it returned was
+    * made — `advanced` by the batches it appended, `loaded` from disk,
+    * or `flipped` to a freshly written version (bootstrap, structural
+    * op, compaction) — the delta slots it claimed, the insert and
+    * tombstone rows it appended (None when a batch was written without
+    * being collected; dict rows are not counted), the
+    * dataset version then current, and the milliseconds spent writing
+    * and then making the store.
+    */
+  final case class WriteBack(outcome: String, seqs: Seq[Int],
+      rows: Option[Long], version: Option[Int], writeMs: Long,
+      advanceMs: Long)
+
   /** DELTA-GRAIN write-back of one update chain into the dataset at
-    * `path`: each row-grain op APPENDS its insert/tombstone rows as a
-    * parquet delta batch under the current version root
-    * (`delta/default/seq=<k>`, `delta/quads/seq=<k>`) — bytes written
-    * scale with the op's DELTA rows, never with the size of a touched
-    * slice. At 100 TB this is the difference that keeps a served
-    * endpoint alive: one inserted `rdf:type` triple writes one
-    * kilobyte-scale delta file instead of rewriting the corpus's
-    * hottest predicate slice. [[fromDatasetParquet]] merges the delta
-    * log back at read time (latest op wins per row); past
-    * [[CompactDeltaBatches]] batches the write-back compacts the
-    * merged store into a fresh full version
-    * ([[writeDatasetVersioned]]) and the log resets.
+    * `path`, returning the store that now stands on disk. Each row-grain
+    * op APPENDS its insert/tombstone rows as a parquet delta batch
+    * under the current version root (`delta/default/seq=<k>`,
+    * `delta/quads/seq=<k>`) — bytes written scale with the op's DELTA
+    * rows, never with the size of a touched slice. At 100 TB this is
+    * the difference that keeps a served endpoint alive: one inserted
+    * `rdf:type` triple writes one kilobyte-scale delta file instead of
+    * rewriting the corpus's hottest predicate slice. Past
+    * [[CompactDeltaBatches]] batches the write-back compacts `next`
+    * into a fresh full version ([[writeDatasetVersioned]]) and the log
+    * resets.
+    *
+    * The returned store is `prev` ADVANCED by the appended batches when
+    * `prev` is what stood on disk before them (it carries the
+    * [[Standing]] that [[fromDatasetParquet]] or an earlier advance
+    * gave it): the version's base stays loaded, its delta log is held
+    * on the driver as per-key latest weights, and only the slices,
+    * quads and dict rows the batches touched are re-merged from
+    * driver-local relations — no listing, schema inference or log
+    * aggregation, and no job. Each batch is collected once (bounded,
+    * [[collectHeld]]) and written from the collected rows, so an op's
+    * delta is computed once. The dataset is loaded instead
+    * ([[fromDatasetParquet]]) when the advance cannot be made: `prev`
+    * stands elsewhere or not at all, another writer claimed a slot
+    * since (the slot claimed is not the one after `prev`'s last merged
+    * batch), or the log would pass `spark.sql.autoBroadcastJoinThreshold`
+    * bytes (always, when broadcasting is disabled).
     *
     * Structural ops (CLEAR/DROP/LOAD/graph management — not row-grain)
     * checkpoint a full new version immediately. Version flips never
     * touch the previous version's files ([[KeepVersions]]), so
-    * readers loaded before the flip keep a consistent snapshot.
+    * readers loaded before the flip keep a consistent snapshot. A
+    * flip's store is loaded from the new version, which has no log.
     *
     * `next` must be `prev` with exactly `deltas`' ops applied —
     * [[graft.bgp.SparqlUpdate.applyAllWithDelta]] produces the pair.
     * ENCODED stores persist id-space delta rows under the encoded
     * [[writeDataset]] layout, with each op's dictionary growth
     * appended as `delta/dict/seq=` batches (audited, batch-scoped —
-    * [[hashDictDelta]]/[[sequentialDictDelta]]); dict rows land FIRST
-    * within an op so a torn write can only leave extra vocabulary,
-    * never dangling ids.
+    * [[hashDictDelta]]/[[sequentialDictDelta]]). `report` receives what
+    * was done.
     */
   def writeBackDelta(prev: TripleStore, next: TripleStore, path: String,
-      deltas: Seq[OpDelta]): Unit = {
+      deltas: Seq[OpDelta],
+      report: WriteBack => Unit = _ => ()): TripleStore = {
     val spark =
       try sparkOf(next) catch { case _: IllegalArgumentException => sparkOf(prev) }
     val (fs, _) = fsPath(spark, path)
+    val t0 = System.nanoTime()
+    def ms(from: Long): Long = (System.nanoTime() - from) / 1000000
+    def flipped(seqs: Seq[Int], rows: Option[Long]): TripleStore = {
+      writeDatasetVersioned(next, path)
+      val t1 = System.nanoTime()
+      val st = fromDatasetParquet(spark, path)
+      report(WriteBack("flipped", seqs, rows, currentVersion(spark, path),
+        (t1 - t0) / 1000000, ms(t1)))
+      st
+    }
     val hasLayout = currentVersion(spark, path).isDefined ||
       fs.exists(new org.apache.hadoop.fs.Path(s"$path/default"))
-    if (!hasLayout || deltas.exists(_.structural)) {
-      // bootstrap, or a structural op: checkpoint a full new version
-      writeDatasetVersioned(next, path)
-      return
-    }
+    // bootstrap, or a structural op: checkpoint a full new version
+    if (!hasLayout || deltas.exists(_.structural)) return flipped(Nil, None)
     val root = datasetRoot(spark, path)
-    var seq = nextDeltaSeq(fs, root)
+    val thr = GuardedBroadcast.threshold(spark)
+    var seq = deltaSlots(fs, root)._1.values.flatten.maxOption.fold(0)(_ + 1)
+    // the log to advance: prev's own, when prev stands on this version
+    // root with no batch appended since its last merged one
+    var log = prev.stands
+      .filter(s => thr > 0 && s.root == root && s.nextSeq == seq).map(_.log)
+    var touched = Touched()
+    val claimed = mutable.ArrayBuffer.empty[Int]
+    var rows: Option[Long] = Some(0L)
     deltas.foreach { d =>
-      if (d.default.nonEmpty || d.quads.nonEmpty || d.dictRows.nonEmpty) {
+      val parts = LogParts.zip(Seq(d.dictRows, d.default, d.quads))
+        .collect { case (part, Some(r)) => part -> r }
+      if (parts.nonEmpty) {
         // CAS-shaped sequence reservation: claim `seq=<k>.lock`
         // create-exclusively, walking forward past slots another
         // writer claimed — two JVMs appending to one dataset can
         // interleave batches but never clobber one (the read-then-
-        // write hole the bare counter had)
+        // write hole the bare counter had); a walk means the log on
+        // disk is no longer the one held, so the store is loaded
+        val expected = seq
         var tries = 0
         while (!claimExclusive(fs, new org.apache.hadoop.fs.Path(
             s"$root/delta/seq=$seq.lock"))) {
@@ -507,19 +689,43 @@ object TripleStore {
           require(tries < 10000,
             s"could not reserve a delta sequence slot under $root")
         }
-        d.dictRows.foreach(rows => writeDeltaBatch(
-          rows.select(col("id"), col("value"), col("dt"), col("lang")),
-          s"$root/delta/dict", seq, fs))
-        d.default.foreach(rows => writeDeltaBatch(
-          rows.select(col("p"), col("s"), col("o"), col("del")),
-          s"$root/delta/default", seq, fs))
-        d.quads.foreach(rows => writeDeltaBatch(
-          rows.select(col("g"), col("p"), col("s"), col("o"), col("del")),
-          s"$root/delta/quads", seq, fs))
+        if (seq != expected) log = None
+        claimed += seq
+        parts.foreach { case (part, r) =>
+          val held = part.held(r, lit(seq))
+          val schema = StructType(held.schema.filterNot(_.name == "__w"))
+          val dir = s"$root/delta/${part.name}"
+          // collected within what the held log leaves of the budget, so
+          // the batch is computed once and written from its rows
+          (if (thr <= 0) None
+           else collectHeld(held, thr - log.fold(0L)(_.bytes))) match {
+            case Some(got) =>
+              writeDeltaBatch(spark.createDataFrame(got.map(g =>
+                Row.fromSeq(g._1.toSeq.take(schema.length))).asJava, schema),
+                dir, seq, fs)
+              log = log.map(_.absorb(part, schema, got))
+              touched = touched.add(part, got.map(_._1))
+              if (part.weighed) rows = rows.map(_ + got.size)
+            case None =>
+              writeDeltaBatch(r.select(part.cols.map(col): _*), dir, seq, fs)
+              log = None
+              rows = None
+          }
+        }
         seq += 1
       }
     }
-    if (seq >= CompactDeltaBatches) writeDatasetVersioned(next, path)
+    if (seq >= CompactDeltaBatches) return flipped(claimed.toSeq, rows)
+    val t1 = System.nanoTime()
+    val (st, outcome) = (log, prev.stands) match {
+      case (Some(l), Some(s)) =>
+        (standOn(merged(s.base, prev, l, touched), root, seq, s.base, l),
+          "advanced")
+      case _ => (fromDatasetParquet(spark, path), "loaded")
+    }
+    report(WriteBack(outcome, claimed.toSeq, rows, currentVersion(spark, path),
+      (t1 - t0) / 1000000, ms(t1)))
+    st
   }
 
   /** Diff-derived write-back for callers without op introspection:
@@ -530,10 +736,11 @@ object TripleStore {
     * WRITTEN scale with the delta; compute scales with the touched
     * slices (two anti-joins each). The op-introspected overload
     * ([[graft.bgp.SparqlUpdate.applyAllWithDelta]]) avoids even that
-    * scan for data ops — prefer it on served endpoints.
+    * scan for data ops — prefer it on served endpoints. Returns the
+    * store that now stands on disk, as the op-introspected overload.
     */
   def writeBackDelta(prev: TripleStore, next: TripleStore,
-      path: String): Unit = {
+      path: String): TripleStore = {
     def withP(p: String, df: DataFrame, del: Boolean): DataFrame =
       df.select(lit(p).as("p"), col("s"), col("o"), lit(del).as("del"))
     val changed = next.slices.filter { case (p, df) =>
@@ -598,35 +805,94 @@ object TripleStore {
       dict = st.dict.map(_.localCheckpoint(eager = false)),
       quads = st.quads.map(_.localCheckpoint(eager = false)))
 
-  /** Latest-op-wins row verdicts over a delta log directory: weight
-    * `seq * 2 + (insert ? 1 : 0)` — a key's max weight is odd iff the
-    * LAST batch touching it leaves it present (within one batch an
-    * insert beats a tombstone of the same row, §3.1.3
-    * delete-then-insert). Delta logs are op-sized and bounded by
-    * [[CompactDeltaBatches]]; the lineage is truncated
-    * (localCheckpoint, ContextCleaner-reclaimed) so the per-slice
-    * merge joins reuse one materialization instead of re-aggregating
-    * the log per action.
+  /** `base ANTI touched ∪ alive`: one relation of a version's base
+    * layout with a delta verdict merged in — the read-time merge of
+    * every load and every advance. `verdict` holds the touched keys
+    * with their latest weight `__w` ([[deltaWeight]]: odd leaves the
+    * key present); `small` readies the touched keys for a broadcast
+    * join — a distributed verdict goes through the guard, while a
+    * verdict held on the driver is a `LocalRelation` that Catalyst
+    * sizes from its rows and broadcasts on its own — so the base scan
+    * keeps its pruning and the merge never shuffles the base.
     */
-  private def deltaVerdict(spark: SparkSession, deltaPath: String,
-      keys: Seq[String], maxOps: Option[Int] = None): Option[DataFrame] = {
-    val (fs, p) = fsPath(spark, deltaPath)
-    if (!fs.exists(p) ||
-        !fs.listStatus(p).exists(st =>
-          st.isDirectory && st.getPath.getName.startsWith("seq=")) ||
-        maxOps.exists(_ <= 0))
-      None
+  private def mergeVerdict(base: Option[DataFrame], verdict: DataFrame,
+      keys: Seq[String], small: DataFrame => DataFrame): DataFrame = {
+    val alive = verdict.filter(col("__w") % 2 === 1).select(keys.map(col): _*)
+    base.map(_.join(small(verdict.select(keys.map(col): _*)), keys, "left_anti")
+      .unionByName(alive)).getOrElse(alive)
+  }
+
+  /** `cur` with what `t` names re-merged from `base` and the held
+    * `log`: each touched slice and the quads by [[mergeVerdict]] over a
+    * driver-local verdict, the dict as `cur`'s plus the touched dict
+    * rows; everything else is `cur`'s own relation. A load passes the
+    * bare base as `cur` and everything the log touches; an advance
+    * passes the served store and what its batches touched.
+    */
+  private def merged(base: TripleStore, cur: TripleStore, log: DeltaLog,
+      t: Touched): TripleStore =
+    if (t.isEmpty) cur
     else {
-      // seq is the partition-discovered batch directory — a maxOps
-      // bound is partition PRUNING, later batches' files never open
-      val log = spark.read.parquet(deltaPath)
-      val bounded = maxOps.map(k => log.filter(col("seq") < k)).getOrElse(log)
-      Some(bounded
-        .groupBy(keys.map(col): _*)
-        .agg(max(col("seq").cast("long") * 2 +
-          when(!col("del"), 1).otherwise(0)).as("__w"))
-        .localCheckpoint(eager = false))
+      val spark = sparkOf(base)
+      def verdict(part: LogPart, keys: Seq[String],
+          weights: Iterable[(Row, Long)]): DataFrame = {
+        val at = keys.map(part.keys.indexOf)
+        val schema = log.schemas(part.name)
+        spark.createDataFrame(
+          weights.map { case (k, w) => Row.fromSeq(at.map(k.get) :+ w) }
+            .toSeq.asJava,
+          StructType(keys.map(schema(_)) :+
+            StructField("__w", LongType, nullable = false)))
+      }
+      val byPred = log.weights.getOrElse(DefaultLog.name, Map.empty)
+        .groupBy(_._1.getString(0))
+      val slices = t.preds.map { p =>
+        p -> mergeVerdict(base.slices.get(p),
+          verdict(DefaultLog, Seq("s", "o"), byPred.getOrElse(p, Map.empty)),
+          Seq("s", "o"), identity)
+      }
+      val quads =
+        if (!t.quads) cur.quads
+        else Some(mergeVerdict(base.quads,
+          verdict(QuadLog, Seq("g", "s", "p", "o"), log.weights(QuadLog.name)),
+          Seq("g", "s", "p", "o"), identity))
+      val dict =
+        if (t.dictRows.isEmpty) cur.dict
+        else cur.dict.map(_.unionByName(spark.createDataFrame(
+          t.dictRows.asJava, log.schemas(DictLog.name))))
+      cur.copy(slices = cur.slices ++ slices, quads = quads, dict = dict)
     }
+
+  /** [[merged]]'s distributed twin, for a log too large to hold on the
+    * driver: each weighed log aggregates to its latest-weight verdict
+    * (one op-sized aggregate, lineage truncated so the per-slice merges
+    * reuse one materialization), merged through the broadcast guard;
+    * the dict log unions onto the base dict.
+    */
+  private def mergedDistributed(base: TripleStore,
+      logs: Seq[(LogPart, DataFrame)]): TripleStore = {
+    def verdict(part: LogPart): Option[DataFrame] =
+      logs.collectFirst { case (`part`, rows) =>
+        rows.groupBy(part.keys.map(col): _*)
+          .agg(max(deltaWeight(col("seq"), col("del"))).as("__w"))
+          .localCheckpoint(eager = false)
+      }
+    val slices = verdict(DefaultLog).fold(base.slices) { v =>
+      val preds = v.select(col("p")).distinct()
+        .limit(MaxPredicates + 1).collect().map(_.getString(0))
+      require(preds.length <= MaxPredicates,
+        s"delta log touches more than $MaxPredicates predicates")
+      // merge ONLY the predicates the log touches: an untouched slice
+      // keeps its bare pruned scan — no anti-join, no broadcast job
+      base.slices ++ preds.map(p => p -> mergeVerdict(base.slices.get(p),
+        v.filter(col("p") === p), Seq("s", "o"), GuardedBroadcast.maybe))
+    }
+    val quads = verdict(QuadLog).fold(base.quads)(v => Some(mergeVerdict(
+      base.quads, v, Seq("g", "s", "p", "o"), GuardedBroadcast.maybe)))
+    val dict = logs.collectFirst { case (DictLog, rows) => rows }
+      .fold(base.dict)(rows => base.dict.map(
+        _.unionByName(rows.select(DictLog.cols.map(col): _*))))
+    base.copy(slices = slices, quads = quads, dict = dict)
   }
 
   /** Load a dataset at `path`: resolves the current version root
@@ -634,10 +900,13 @@ object TripleStore {
     * slices dispatch by partition pruning, and GRAPH blocks filter the
     * quads relation on its `(g, p)` partition columns, Catalyst turns
     * both into `PartitionFilters` (ScaleSpec asserts the pruned scan) —
-    * and merges any pending delta log on top: per slice,
-    * `base ANTI touched ∪ alive` with the touched set
-    * guarded-broadcast (delta-sized by construction), so the base scan
-    * keeps its pruning and the merge never shuffles the base.
+    * and merges any pending delta log on top: per touched slice (and
+    * the quads), `base ANTI touched ∪ alive` ([[mergeVerdict]]);
+    * untouched slices stay bare scans. A log that fits under
+    * `spark.sql.autoBroadcastJoinThreshold` is collected to the driver
+    * in one bounded job per log directory and held there, which lets a
+    * later [[writeBackDelta]] advance the loaded store instead of
+    * loading again; a larger one is merged distributed.
     */
   def fromDatasetParquet(spark: SparkSession, path: String): TripleStore =
     loadVersionRoot(spark, datasetRoot(spark, path), None)
@@ -664,82 +933,53 @@ object TripleStore {
 
   private def loadVersionRoot(spark: SparkSession, root: String,
       maxOps: Option[Int]): TripleStore = {
-    val st0 = fromPartitionedParquet(spark, s"$root/default")
-    val st = deltaVerdict(spark, s"$root/delta/default",
-        Seq("p", "s", "o"), maxOps) match {
-      case None => st0
-      case Some(v) =>
-        val deltaPreds = v.select(col("p")).distinct()
-          .limit(MaxPredicates + 1).collect().map(_.getString(0))
-        require(deltaPreds.length <= MaxPredicates,
-          s"delta log touches more than $MaxPredicates predicates")
-        // merge ONLY the predicates the log touches: an untouched
-        // slice keeps its bare pruned scan — no anti-join, no
-        // broadcast job — so a 1-predicate delta adds merge cost to
-        // exactly one slice, not to every plan that reads the store
-        val merged = deltaPreds.toSeq.map { p =>
-          val touched = v.filter(col("p") === p)
-          val alive = touched.filter(col("__w") % 2 === 1)
-            .select(col("s"), col("o"))
-          val base = st0.slices.get(p).map(_.join(
-            GuardedBroadcast.maybe(touched.select(col("s"), col("o"))),
-            Seq("s", "o"), "left_anti"))
-          p -> base.map(_.unionByName(alive)).getOrElse(alive)
-        }.toMap
-        st0.copy(slices = st0.slices ++ merged)
-    }
-    // encoded datasets carry their dictionary beside the slices: base
-    // dict ∪ appended delta/dict batches (dict rows are append-only,
-    // so the merge is a union, never a verdict); the id regime is
-    // re-detected from the loaded rows
-    val (dfs, dictPath) = fsPath(spark, s"$root/dict")
-    val dict: Option[DataFrame] =
-      if (dfs.exists(dictPath)) {
-        val cols = Seq("id", "value", "dt", "lang")
-        val base = spark.read.parquet(s"$root/dict")
-          .select(cols.map(col): _*)
-        val dd = new org.apache.hadoop.fs.Path(s"$root/delta/dict")
-        val merged =
-          if (dfs.exists(dd) && dfs.listStatus(dd).exists(s0 =>
-              s0.isDirectory && s0.getPath.getName.startsWith("seq=")) &&
-              !maxOps.exists(_ <= 0)) {
-            // the op-grain pin bounds the DICT too (partition pruning
-            // on the discovered seq= column, like the triple deltas):
-            // a version pinned at maxOps=k must not carry vocabulary
-            // appended by later ops — the loaded dict always agrees
-            // with the triples it describes
-            val log = spark.read.parquet(s"$root/delta/dict")
-            val bounded =
-              maxOps.map(k => log.filter(col("seq") < k)).getOrElse(log)
-            base.unionByName(bounded.select(cols.map(col): _*))
-          } else base
-        Some(merged.localCheckpoint(eager = false))
-      } else None
-    val (fs, quadPath) = fsPath(spark, s"$root/quads")
-    val quadBase =
-      if (fs.exists(quadPath) &&
-          fs.listStatus(quadPath).exists(_.isDirectory))
+    val (fs, _) = fsPath(spark, root)
+    def exists(d: String) = fs.exists(new org.apache.hadoop.fs.Path(s"$root/$d"))
+    // the slots are listed before the log is read and the read stops at
+    // them, so a batch committed during the load is never half-merged
+    // nor mistaken for merged
+    val (batches, locks) = deltaSlots(fs, root)
+    val nextSeq = (batches.values.flatten ++ locks).maxOption.fold(0)(_ + 1)
+    val upTo = maxOps.fold(nextSeq)(math.min(_, nextSeq))
+    // encoded datasets carry their dictionary beside the slices; the id
+    // regime is re-detected from the loaded rows
+    val dict0 =
+      if (exists("dict")) Some(spark.read.parquet(s"$root/dict")
+        .select(DictLog.cols.map(col): _*))
+      else None
+    val quads0 =
+      if (exists("quads") && fs.listStatus(
+          new org.apache.hadoop.fs.Path(s"$root/quads")).exists(_.isDirectory))
         Some(spark.read.parquet(s"$root/quads")
           // partition-column type inference reads an id-space graph
           // label as int where every value happens to fit — normalize
           // to the encoded store's BIGINT id type
-          .select((if (dict.isDefined) col("g").cast("long") else col("g"))
+          .select((if (dict0.isDefined) col("g").cast("long") else col("g"))
             .as("g"), col("s"), col("p"), col("o")))
       else None
-    val qCols = Seq("g", "p", "s", "o")
-    val quads = deltaVerdict(spark, s"$root/delta/quads", qCols,
-        maxOps) match {
-      case None => quadBase
-      case Some(v) =>
-        val alive = v.filter(col("__w") % 2 === 1)
-          .select(col("g"), col("s"), col("p"), col("o"))
-        val base = quadBase.map(_.join(
-          GuardedBroadcast.maybe(v.select(qCols.map(col): _*)),
-          qCols, "left_anti"))
-        Some(base.map(_.unionByName(alive)).getOrElse(alive))
+    val base = fromPartitionedParquet(spark, s"$root/default")
+      .copy(quads = quads0, dict = dict0)
+    // each log's batches below `upTo`: `seq` is the partition-discovered
+    // batch directory, so the bound is partition pruning
+    val logs = LogParts.filter(part => batches(part.name).exists(_ < upTo))
+      .map(part => part -> spark.read.parquet(s"$root/delta/${part.name}")
+        .filter(col("seq") < upTo))
+    val thr = GuardedBroadcast.threshold(spark)
+    val held = logs.foldLeft(Option.when(thr > 0)(DeltaLog())) {
+      case (Some(log), (part, rows)) =>
+        val h = part.held(rows, col("seq"))
+        collectHeld(h, thr - log.bytes).map(got => log.absorb(part,
+          StructType(h.schema.filterNot(_.name == "__w")), got))
+      case (None, _) => None
     }
-    st.copy(quads = quads, dict = dict,
-      sequential = dict.exists(isSequentialDict))
+    val st = held.fold(mergedDistributed(base, logs))(log =>
+      merged(base, base, log, log.touched))
+    val dict = st.dict.map(_.localCheckpoint(eager = false))
+    val loaded = st.copy(dict = dict, sequential = dict.exists(isSequentialDict))
+    // only the head of the log can be advanced, and only once every
+    // claimed slot has committed its batch
+    held.filter(_ => maxOps.isEmpty && locks.subsetOf(batches.values.flatten.toSet))
+      .fold(loaded)(standOn(loaded, root, nextSeq, base, _))
   }
 
   /** Load a store from the partitioned layout. The predicate inventory

@@ -121,9 +121,11 @@ object PathOps {
     *
     * Round 1 filters the edges on the seed; every later round scans
     * `edges.filter(src isin frontier)` and collects the distinct
-    * targets to the driver, where already-visited values drop out; the
-    * walk ends when a round finds nothing new. Seed eccentricity + 1
-    * jobs, and no shuffle when `edges` is a plain scan. Edges that are
+    * targets to the driver ([[GuardedBroadcast.collectBounded]], within
+    * what is left of the byte budget), where already-visited values
+    * drop out; the walk ends when a round finds nothing new. Seed
+    * eccentricity + 1 jobs (none over driver-local edges), and no
+    * shuffle when `edges` is a plain scan. Edges that are
     * more than a scan (a distinct, a delta merge's joins) are
     * checkpointed and materialized by round 1, so their shuffles run
     * once, not once per round. The result is a driver-local relation.
@@ -161,8 +163,9 @@ object PathOps {
     var frontier = Seq.empty[Any]
     do {
       if (rounds == MaxSeededRounds) return handOver
-      val got = collectDistinct(step, width.get, budget - bytes) match {
-        case Some(g) => g
+      val got = GuardedBroadcast.collectBounded(step, width.get,
+          budget - bytes) match {
+        case Some(g) => g.map { case (r, w) => (r.get(0), w) }
         case None => return handOver
       }
       rounds += 1
@@ -188,33 +191,6 @@ object PathOps {
       case _: Project | _: Filter | _: Union | _: LeafNode => false
       case _ => true
     }.isEmpty
-
-  /** The distinct values of `df`'s one column `v` with their widths
-    * (`width`), in one job — or None when they may pass `budget` bytes.
-    * The budget is split evenly over the tasks, and each task stops
-    * reading once its own distinct values pass its share and reports
-    * that it stopped, so the job ships at most `budget` bytes plus one
-    * row per task. A skewed round therefore hands over early, which
-    * costs time but not correctness.
-    */
-  private def collectDistinct(df: DataFrame, width: Column,
-      budget: Long): Option[Seq[(Any, Long)]] = {
-    val rows = df.select(col("v"), width).rdd
-    val share = budget / math.max(1, rows.getNumPartitions)
-    val parts = rows.mapPartitions { it =>
-      val seen = mutable.LinkedHashMap.empty[Any, Long]
-      var bytes = 0L
-      while (bytes <= share && it.hasNext) {
-        val r = it.next()
-        if (!seen.contains(r.get(0))) {
-          seen(r.get(0)) = r.getLong(1)
-          bytes += r.getLong(1)
-        }
-      }
-      Iterator.single((seen.toSeq, bytes > share))
-    }.collect()
-    if (parts.exists(_._2)) None else Some(parts.toSeq.flatMap(_._1))
-  }
 
   /** Min-hop distance for every connected (src, dst) pair (BFS depth,
     * all sources at once) — min-plus path doubling: each round joins

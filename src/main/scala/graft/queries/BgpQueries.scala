@@ -2793,9 +2793,9 @@ object BgpQueries {
     // update WRITE-BACK into the dataset layout (round 12): the served
     // endpoint's persistence loop, exercised op-by-op — each functional
     // update writes ONLY its touched slices back into the persisted
-    // (g, p) layout (reference-diff delta, writeBackDelta) and the
-    // store reloads from disk, so plan lineage is depth-1 after every
-    // op and the dataset survives restarts. The script mixes the op
+    // (g, p) layout (reference-diff delta, writeBackDelta) and the next
+    // op runs on the store writeBackDelta returns (advanced by the
+    // batch, or loaded from disk), and the dataset survives restarts. The script mixes the op
     // shapes: default-graph insert, GRAPH-scoped insert, ground delete,
     // DROP GRAPH; the final query runs against a COLD load of the
     // layout — what a restarted endpoint would serve.
@@ -2821,9 +2821,9 @@ object BgpQueries {
         cur = TripleStore.fromDatasetParquet(s, tmp)
         ops.foreach { op =>
           val next = graft.bgp.SparqlUpdate.applyAll(s, cur, op)
-          TripleStore.writeBackDelta(cur, next, tmp)
-          cur = TripleStore.fromDatasetParquet(s, tmp)
+          cur = TripleStore.writeBackDelta(cur, next, tmp)
         }
+        cur = TripleStore.fromDatasetParquet(s, tmp)
         BgpPlanner.query(cur,
           """select ?n ?nm ?st where {
             | ?n <name> ?nm . ?n <status> ?st }""".stripMargin)
@@ -3005,8 +3005,7 @@ object BgpQueries {
             .mkString("INSERT DATA { ", ". ", "}"))
         ops.foreach { op =>
           val (next, d) = graft.bgp.SparqlUpdate.applyAllWithDelta(s, cur, op)
-          TripleStore.writeBackDelta(cur, next, tmp, d)
-          cur = TripleStore.fromDatasetParquet(s, tmp)
+          cur = TripleStore.writeBackDelta(cur, next, tmp, d)
         }
         // structural flip: v0 (with its 3-batch log) becomes history
         val (n2, d2) = graft.bgp.SparqlUpdate.applyAllWithDelta(s, cur,
@@ -3095,7 +3094,7 @@ object BgpQueries {
     // full rewrites are fatal. Each op appends ID-SPACE delta batches
     // plus its dictionary growth (delta/dict/seq=) under the versioned
     // root via the op-introspected path (applyAllWithDelta: a 1-triple
-    // INSERT writes a 1-row batch, never a slice scan); every reload
+    // INSERT writes a 1-row batch, never a slice scan); the final load
     // is a COLD fromDatasetParquet that re-detects the id regime and
     // merges base dict ∪ dict deltas, so the final query's result edge
     // decodes terms that exist ONLY in delta batches ("active"/
@@ -3124,9 +3123,9 @@ object BgpQueries {
         ops.foreach { op =>
           val (next, deltas) =
             graft.bgp.SparqlUpdate.applyAllWithDelta(s, cur, op)
-          TripleStore.writeBackDelta(cur, next, tmp, deltas)
-          cur = TripleStore.fromDatasetParquet(s, tmp)
+          cur = TripleStore.writeBackDelta(cur, next, tmp, deltas)
         }
+        cur = TripleStore.fromDatasetParquet(s, tmp)
         BgpPlanner.query(cur,
           """select ?n ?nm ?st where {
             | ?n <name> ?nm . ?n <status> ?st }""".stripMargin)

@@ -2,11 +2,12 @@ package graft.scale
 
 import graft.tools.BoundedMemo
 import org.apache.spark.network.util.JavaUtils
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
+import scala.collection.mutable
 
 /** Runtime guard for "this relation is small enough to broadcast"
   * arguments. A threshold-bounded or burst-sized relation usually IS
@@ -80,6 +81,55 @@ object GuardedBroadcast {
   private[graft] def threshold(spark: SparkSession): Long = {
     val thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
     try JavaUtils.byteStringAsBytes(thr) catch { case _: Exception => -1L }
+  }
+
+  /** The distinct rows of `df`, each with its `width` in bytes (a
+    * [[rowBytes]] expression), collected to the driver — or None when
+    * together they may pass `budget` bytes.
+    *
+    * A driver-local relation (a `LocalRelation` plan, such as the rows
+    * of an INSERT DATA) is read and measured on the driver with no
+    * job. Anything else is read in one job whose budget is split evenly
+    * over its tasks: each task stops reading once its own distinct rows
+    * pass its share and reports that it stopped, so the job ships at
+    * most `budget` bytes plus one row per task. A skewed relation
+    * therefore reads as over budget early, which callers treat as "too
+    * large to hold on the driver" — never as a partial answer.
+    */
+  private[graft] def collectBounded(df: DataFrame, width: Column,
+      budget: Long): Option[Seq[(Row, Long)]] = {
+    val n = df.columns.length
+    val measured = df.select(df.columns.map(col).toIndexedSeq :+ width: _*)
+    val key: Row => Row = r => Row.fromSeq((0 until n).map(r.get))
+    measured.queryExecution.optimizedPlan match {
+      case _: LocalRelation =>
+        val seen = mutable.LinkedHashMap.empty[Row, Long]
+        measured.collect().foreach(r => seen.getOrElseUpdate(key(r), r.getLong(n)))
+        if (seen.valuesIterator.sum > budget) None else Some(seen.toSeq)
+      case _ =>
+        val rows = measured.rdd
+        val share = budget / math.max(1, rows.getNumPartitions)
+        val parts = rows.mapPartitions { it =>
+          val seen = mutable.LinkedHashMap.empty[Row, Long]
+          var bytes = 0L
+          while (bytes <= share && it.hasNext) {
+            val r = it.next()
+            val k = key(r)
+            if (!seen.contains(k)) {
+              seen(k) = r.getLong(n)
+              bytes += r.getLong(n)
+            }
+          }
+          Iterator.single((seen.toSeq, bytes > share))
+        }.collect()
+        if (parts.exists(_._2)) None
+        else {
+          // tasks dedupe only their own rows
+          val all = mutable.LinkedHashMap.empty[Row, Long]
+          parts.foreach(_._1.foreach { case (k, w) => all.getOrElseUpdate(k, w) })
+          Some(all.toSeq)
+        }
+    }
   }
 
   /** `broadcast(df)` when the measured size fits under the session's

@@ -3202,6 +3202,224 @@ class BgpSpec extends AnyFunSuite {
     assert(got == Set(("t:1", "one"), ("t:3", "three")))
   }
 
+  /** Spark jobs started while `body` runs. */
+  private def jobsOf[T](body: => T): (T, Long) = {
+    val jobs = new java.util.concurrent.atomic.AtomicLong(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.sql.graftshim.GraftShim.waitListeners(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val r = body
+      org.apache.spark.sql.graftshim.GraftShim.waitListeners(spark)
+      (r, jobs.get())
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("a batch another writer appends between two endpoint updates shows up after the next one") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-foreign").toString
+    TripleStore.writeDatasetVersioned(TripleStore.fromTriples(Seq(
+      ("t:1", "name", "one")).toDF("s", "p", "o")), dir)
+    val h = SparqlServer.serve(TripleStore.fromDatasetParquet(spark, dir),
+      persistDir = Some(dir))
+    def names: Set[(String, String)] = BgpPlanner.query(h.store,
+      "select ?s ?v where { ?s name ?v }").collect()
+      .map(r => (r.getString(0), r.getString(1))).toSet
+    def update(text: String): String = {
+      val (c, body) = http("POST", h.endpoint, "application/sparql-update", text)
+      assert(c == 204, body)
+      h.lastUpdate.get
+    }
+    try {
+      assert(update("""INSERT DATA { <t:2> <name> "two" }""")
+        .contains("seqs=0 version=0 store=advanced"))
+      // a second writer appends seq=1 behind the endpoint's back
+      val other = TripleStore.fromDatasetParquet(spark, dir)
+      val (n, d) = graft.bgp.SparqlUpdate.applyAllWithDelta(spark, other,
+        """INSERT DATA { <t:9> <name> "nine" }""")
+      TripleStore.writeBackDelta(other, n, dir, d)
+      assert(names == Set(("t:1", "one"), ("t:2", "two")))
+      // the endpoint's next slot is not the one after its last merged
+      // batch: it loads, and sees the other writer's row
+      assert(update("""INSERT DATA { <t:3> <name> "three" }""")
+        .contains("seqs=2 version=0 store=loaded"))
+      assert(names == Set(("t:1", "one"), ("t:2", "two"), ("t:3", "three"),
+        ("t:9", "nine")))
+      // the load held the log again: the next update advances
+      assert(update("""DELETE DATA { <t:1> <name> "one" }""")
+        .contains("seqs=3 version=0 store=advanced"))
+      // a slot claimed but not yet committed (a writer mid-batch): the
+      // endpoint walks past it and loads, and keeps loading while the
+      // claim is open, so the batch cannot be skipped once it lands
+      assert(new java.io.File(s"$dir/v0/delta/seq=4.lock").createNewFile())
+      assert(update("""INSERT DATA { <t:4> <name> "four" }""")
+        .contains("seqs=5 version=0 store=loaded"))
+      assert(update("""INSERT DATA { <t:5> <name> "five" }""")
+        .contains("seqs=6 version=0 store=loaded"))
+      assert(names == Set(("t:2", "two"), ("t:3", "three"), ("t:9", "nine"),
+        ("t:4", "four"), ("t:5", "five")))
+    } finally h.stop()
+  }
+
+  test("the update log line names every field, with or without a persist directory") {
+    assert(SparqlServer.updateLine(2, 5, None) ==
+      "[sparql] update ops=2 store=memory apply_ms=5")
+    assert(SparqlServer.updateLine(1, 3, Some(TripleStore.WriteBack(
+        "flipped", Nil, None, Some(4), 10, 20))) ==
+      "[sparql] update ops=1 delta_rows=? seqs=- version=4 store=flipped " +
+        "apply_ms=3 write_ms=10 advance_ms=20")
+    assert(SparqlServer.updateLine(2, 1, Some(TripleStore.WriteBack(
+        "advanced", Seq(6, 7), Some(3), None, 8, 2))) ==
+      "[sparql] update ops=2 delta_rows=3 seqs=6,7 version=- store=advanced " +
+        "apply_ms=1 write_ms=8 advance_ms=2")
+  }
+
+  test("a 1-triple INSERT DATA between version flips runs one Spark job, the batch write") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-wb-jobs").toString
+    TripleStore.writeDatasetVersioned(TripleStore.fromTriples(Seq(
+      ("t:1", "name", "one"), ("t:1", "size", "s1")).toDF("s", "p", "o")), dir)
+    val h = SparqlServer.serve(TripleStore.fromDatasetParquet(spark, dir),
+      persistDir = Some(dir))
+    try {
+      for (i <- 2 to 4) {
+        val ((c, body), jobs) = jobsOf(http("POST", h.endpoint,
+          "application/sparql-update", s"""INSERT DATA { <t:$i> <name> "n$i" }"""))
+        assert(c == 204, body)
+        assert(jobs == 1, s"update $i ran $jobs jobs")
+        assert(h.lastUpdate.get.contains(
+          s"ops=1 delta_rows=1 seqs=${i - 2} version=0 store=advanced"),
+          h.lastUpdate)
+      }
+      assert(BgpPlanner.query(h.store, "select ?s ?v where { ?s name ?v }")
+        .count() == 4)
+      // the touched slice merges its driver-held verdict by broadcast:
+      // the base scan is never shuffled
+      val touched = h.store.slices("name")
+      assert(touched.count() == 4)
+      val plan = touched.queryExecution.executedPlan.toString
+      assert(plan.contains("BroadcastHashJoin") && !plan.contains("SortMergeJoin"),
+        plan)
+    } finally h.stop()
+  }
+
+  test("a persistDir endpoint's store equals a cold load after every op") {
+    // random op sequences on the string, hash and sequential stores:
+    // after every op the served store must equal a cold load of the
+    // dataset (every slice, the quads) and both must answer like a
+    // naive model of the ops. Ops 5-7 run under a 1-byte broadcast
+    // threshold, where the log cannot be held and every update loads;
+    // the string store's 16th batch is a compaction flip.
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.getOption(key)
+    def restore(): Unit = saved match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+    val rnd = new scala.util.Random(1018)
+    val subjects = (0 until 6).map(i => s"e:$i")
+    val preds = Seq("a", "b", "c")
+    val objects = Seq("v0", "v1", "v2", "e:1", "e:4")
+    def term(v: String) = if (v.startsWith("e:")) s"<$v>" else "\"" + v + "\""
+    def triple(): (String, String, String) = (subjects(rnd.nextInt(6)),
+      preds(rnd.nextInt(3)), objects(rnd.nextInt(5)))
+    def text(ts: Seq[(String, String, String)]): String =
+      ts.map { case (s, p, o) => s"<$s> <$p> ${term(o)} ." }.mkString(" ")
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.mkString("|")).sorted.toSeq
+    def answers(st: TripleStore, q: String): Seq[String] =
+      rows(BgpPlanner.query(st, q).select("s", "p", "o"))
+    import org.apache.spark.sql.functions.{col, lit}
+    val stores = Seq[(String, TripleStore => TripleStore, Int)](
+      ("string", st => st, 18),
+      ("hash", TripleStore.encode(_), 9),
+      ("sequential", TripleStore.encodeSequential(_, bands = 8), 9))
+    try for ((kind, make, nOps) <- stores) {
+      val dir = java.nio.file.Files.createTempDirectory(s"graft-adv-$kind").toString
+      val seed = (("e:0", "a", "v1") +: Seq.fill(8)(triple())).distinct
+      var model = seed.toSet
+      var quadModel = Set.empty[(String, String, String, String)]
+      TripleStore.writeDatasetVersioned(
+        make(TripleStore.fromTriples(seed.toDF("s", "p", "o"))), dir)
+      val h = SparqlServer.serve(TripleStore.fromDatasetParquet(spark, dir),
+        persistDir = Some(dir))
+      try for (i <- 0 until nOps) {
+        val op = i match {
+          // a sentinel graph no op touches keeps the quads non-empty
+          case 0 =>
+            quadModel += (("g:base", "e:0", "a", "v0"))
+            """INSERT DATA { GRAPH <g:base> { <e:0> <a> "v0" } }"""
+          // same predicate deleted and inserted: within one op the
+          // insert beats the tombstone, so nothing changes
+          case 1 =>
+            """DELETE { ?s <a> ?o } INSERT { ?s <a> ?o } WHERE { ?s <a> ?o }"""
+          case _ => rnd.nextInt(6) match {
+            case 0 | 1 =>
+              val ts = Seq.fill(1 + rnd.nextInt(3))(triple())
+              model ++= ts
+              s"INSERT DATA { ${text(ts)} }"
+            case 2 =>
+              val ts = Seq.fill(1 + rnd.nextInt(2))(
+                if (model.nonEmpty && rnd.nextBoolean())
+                  model.toSeq(rnd.nextInt(model.size))
+                else triple())
+              model --= ts
+              s"DELETE DATA { ${text(ts)} }"
+            case 3 =>
+              val (p1, p2) = (preds(rnd.nextInt(3)), preds(rnd.nextInt(3)))
+              val hit = model.filter(_._2 == p1)
+              model = model -- hit ++ hit.map { case (s, _, o) => (s, p2, o) }
+              s"DELETE { ?s <$p1> ?o } INSERT { ?s <$p2> ?o } WHERE { ?s <$p1> ?o }"
+            case 4 =>
+              val g = if (rnd.nextBoolean()) "g:x" else "g:y"
+              val ts = Seq.fill(1 + rnd.nextInt(2))(triple())
+              quadModel ++= ts.map { case (s, p, o) => (g, s, p, o) }
+              s"INSERT DATA { GRAPH <$g> { ${text(ts)} } }"
+            case _ =>
+              val g = if (rnd.nextBoolean()) "g:x" else "g:y"
+              val inG = quadModel.filter(_._1 == g).toSeq
+              val ts = Seq.fill(1 + rnd.nextInt(2))(
+                if (inG.nonEmpty && rnd.nextBoolean()) {
+                  val q = inG(rnd.nextInt(inG.size)); (q._2, q._3, q._4)
+                } else triple())
+              quadModel --= ts.map { case (s, p, o) => (g, s, p, o) }
+              s"DELETE DATA { GRAPH <$g> { ${text(ts)} } }"
+          }
+        }
+        if (i == 5) spark.conf.set(key, "1")
+        val (c, body) = http("POST", h.endpoint, "application/sparql-update", op)
+        assert(c == 204, s"$kind op $i: $body")
+        val want =
+          if (i == TripleStore.CompactDeltaBatches - 1) "flipped"
+          else if (i >= 5 && i <= 8) "loaded" else "advanced"
+        assert(h.lastUpdate.exists(_.contains(s"store=$want")),
+          s"$kind op $i ($op): ${h.lastUpdate}")
+        val live = h.store
+        val cold = TripleStore.fromDatasetParquet(spark, dir)
+        val ctx = s"$kind op $i ($op)"
+        // every slice, tagged with its predicate, in one collect
+        def slices(st: TripleStore): Seq[String] = rows(st.slices.map {
+          case (p, df) => df.select(lit(p).as("p"), col("s"), col("o"))
+        }.reduce(_ unionByName _))
+        assert(live.slices.keySet == cold.slices.keySet, ctx)
+        assert(slices(live) == slices(cold), s"$ctx: slices")
+        assert(live.quads.map(rows) == cold.quads.map(rows), s"$ctx: quads")
+        val all = "select ?s ?p ?o where { ?s ?p ?o }"
+        val wantAll = model.toSeq.map { case (s, p, o) => s"$s|$p|$o" }.sorted
+        assert(answers(live, all) == wantAll, ctx)
+        assert(answers(cold, all) == wantAll, ctx)
+        val named = "select ?g ?s ?p ?o where { graph ?g { ?s ?p ?o } }"
+        val wantNamed = quadModel.toSeq
+          .map { case (g, s, p, o) => s"$g|$s|$p|$o" }.sorted
+        for (st <- Seq(live, cold)) assert(rows(BgpPlanner.query(st, named)
+          .select("g", "s", "p", "o")) == wantNamed, s"$ctx: named graphs")
+        if (i == 7) restore()
+      } finally h.stop()
+    } finally restore()
+  }
+
   test("delta merge wraps ONLY touched slices; untouched slices stay bare scans") {
     // read-side amplification guard: a 1-predicate delta must not put
     // an anti-join (and its broadcast job) into EVERY slice's plan —

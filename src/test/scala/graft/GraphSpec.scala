@@ -256,7 +256,7 @@ class GraphSpec extends AnyFunSuite {
             .as[(String, String)].collect().sorted.toSeq, s"reflexive=$reflexive")
         // what the walk's collects brought to the driver: the budget,
         // one row per task and the task results' own overhead
-        val shipped = done.filter(_.name.startsWith("collect at PathOps"))
+        val shipped = done.filter(_.name.startsWith("collect at GuardedBroadcast"))
           .map(_.taskMetrics.resultSize).sum
         assert(shipped > 0 && shipped < 200000,
           s"reflexive=$reflexive shipped $shipped")
