@@ -58,7 +58,8 @@ object SparqlServer {
   final class Handle private[SparqlServer] (
       server: HttpServer, advertised: String,
       ref: java.util.concurrent.atomic.AtomicReference[TripleStore],
-      lastLine: java.util.concurrent.atomic.AtomicReference[String]) {
+      lastLine: java.util.concurrent.atomic.AtomicReference[String],
+      lastRead: java.util.concurrent.atomic.AtomicReference[String]) {
     def port: Int = server.getAddress.getPort
     /** The dereferenceable endpoint IRI — derived from the actual bind
       * address (or the deployer's `externalUrl`), never a hardcoded
@@ -69,6 +70,8 @@ object SparqlServer {
     def store: TripleStore = ref.get()
     /** The [[updateLine]] of the latest update, if any. */
     def lastUpdate: Option[String] = Option(lastLine.get())
+    /** The [[queryLine]] of the latest query, if any. */
+    def lastQuery: Option[String] = Option(lastRead.get())
     def stop(): Unit = server.stop(0)
   }
 
@@ -105,6 +108,11 @@ object SparqlServer {
   private[graft] def answer(store: TripleStore, query: String,
       maxRows: Int): String = {
     val (vars, rows) = solutions(store, query, maxRows)
+    resultsJson(vars, rows)
+  }
+
+  private def resultsJson(vars: Seq[String],
+      rows: Array[org.apache.spark.sql.Row]): String = {
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
     val root = om.createObjectNode()
     val head = root.putObject("head")
@@ -138,8 +146,8 @@ object SparqlServer {
   /** SPARQL 1.1 Query Results CSV (§3): bare lexical values — IRIs
     * unbracketed, literals undecorated — RFC 4180-escaped.
     */
-  private[graft] def answerCsv(store: TripleStore, query: String,
-      maxRows: Int): String = {
+  private def resultsCsv(vars: Seq[String],
+      rows: Array[org.apache.spark.sql.Row]): String = {
     def bare(v: String): String = v match {
       case typedRe(lex, _) => lex
       case langRe(lex, _) => lex
@@ -149,7 +157,6 @@ object SparqlServer {
       if (s.exists(c => c == ',' || c == '"' || c == '\n' || c == '\r'))
         "\"" + s.replace("\"", "\"\"") + "\""
       else s
-    val (vars, rows) = solutions(store, query, maxRows)
     (vars.mkString(",") +: rows.toSeq.map(r =>
       vars.indices.map(i =>
         if (r.isNullAt(i)) "" else esc(bare(String.valueOf(r.get(i)))))
@@ -159,14 +166,12 @@ object SparqlServer {
   /** SPARQL 1.1 Query Results TSV (§4): terms in SPARQL surface syntax
     * (`<iri>`, `"lex"^^<dt>`, `"lex"@tag`, `_:b`), vars `?`-prefixed.
     */
-  private[graft] def answerTsv(store: TripleStore, query: String,
-      maxRows: Int): String = {
-    val (vars, rows) = solutions(store, query, maxRows)
+  private def resultsTsv(vars: Seq[String],
+      rows: Array[org.apache.spark.sql.Row]): String =
     (vars.map("?" + _).mkString("\t") +: rows.toSeq.map(r =>
       vars.indices.map(i =>
         if (r.isNullAt(i)) "" else ttlTerm(String.valueOf(r.get(i))))
         .mkString("\t"))).mkString("", "\n", "\n")
-  }
 
   /** A stored-form value in SPARQL/N-Triples surface syntax — the
     * shared renderer re-escapes decorated literals' lexical forms
@@ -209,9 +214,8 @@ object SparqlServer {
     * the oldest results format and still many clients' default
     * `Accept`; negotiated alongside JSON/CSV/TSV.
     */
-  private[graft] def answerXml(store: TripleStore, query: String,
-      maxRows: Int): String = {
-    val (vars, rows) = solutions(store, query, maxRows)
+  private def resultsXml(vars: Seq[String],
+      rows: Array[org.apache.spark.sql.Row]): String = {
     val sb = new StringBuilder
     sb ++= "<?xml version=\"1.0\"?>\n"
     sb ++= "<sparql xmlns=\"http://www.w3.org/2005/sparql-results#\">\n"
@@ -265,13 +269,23 @@ object SparqlServer {
     */
   private[graft] def answerGraph(df: org.apache.spark.sql.DataFrame,
       maxRows: Int,
-      format: String = "application/n-triples"): String = {
-    import graft.sources.RdfIO.{ntRes, ntTerm}
+      format: String = "application/n-triples"): String =
+    renderGraph(graphRows(df, maxRows), format)
+
+  /** The row-capped (s, p, o) triples of a graph answer; loud past the
+    * cap.
+    */
+  private def graphRows(df: org.apache.spark.sql.DataFrame,
+      maxRows: Int): Array[(String, String, String)] = {
     val rows = df.limit(maxRows + 1).collect()
     if (rows.length > maxRows) throw new IllegalStateException(
       s"graph exceeds the $maxRows-row response cap")
-    val triples = rows.map(r =>
-      (r.getString(0), r.getString(1), r.getString(2)))
+    rows.map(r => (r.getString(0), r.getString(1), r.getString(2)))
+  }
+
+  private def renderGraph(triples: Array[(String, String, String)],
+      format: String): String = {
+    import graft.sources.RdfIO.{ntRes, ntTerm}
     def ntLines = triples.map { case (s, p, o) =>
       s"${ntRes(s)} ${ntRes(p)} ${ntTerm(o)} ." }
     format match {
@@ -324,29 +338,33 @@ object SparqlServer {
 
   /** Dispatch one query to its form's evaluator + serialization, with
     * Accept-header content negotiation on SELECT results (results-JSON
-    * default; CSV/TSV per the SPARQL 1.1 results formats).
+    * default; CSV/TSV per the SPARQL 1.1 results formats). Returns the
+    * body, its content type and the rows answered (1 for ASK).
     */
   private def answerNegotiated(store: TripleStore, query: String,
-      maxRows: Int, accept: String): (String, String) = query match {
-    case q if constructFormRe.pattern.matcher(q).matches() =>
+      maxRows: Int, accept: String): (String, String, Int) = query match {
+    case q if constructFormRe.pattern.matcher(q).matches() ||
+        describeFormRe.pattern.matcher(q).matches() =>
       val gf = negotiatedGraph(accept)
-      (answerGraph(BgpPlanner.construct(store, q), maxRows, gf), gf)
-    case q if describeFormRe.pattern.matcher(q).matches() =>
-      val gf = negotiatedGraph(accept)
-      (answerGraph(BgpPlanner.describe(store, q), maxRows, gf), gf)
+      val triples = graphRows(
+        if (constructFormRe.pattern.matcher(q).matches())
+          BgpPlanner.construct(store, q)
+        else BgpPlanner.describe(store, q), maxRows)
+      (renderGraph(triples, gf), gf, triples.length)
     case q if askFormRe.pattern.matcher(q).matches() =>
       if (negotiated(accept) == "application/sparql-results+xml")
-        (answerAskXml(store, q), "application/sparql-results+xml")
-      else (answerAsk(store, q), "application/sparql-results+json")
-    case q => negotiated(accept) match {
-      case ct @ "application/sparql-results+xml" =>
-        (answerXml(store, q, maxRows), ct)
-      case ct @ "text/csv" => (answerCsv(store, q, maxRows), ct)
-      case ct @ "text/tab-separated-values" =>
-        (answerTsv(store, q, maxRows), ct)
-      case _ =>
-        (answer(store, q, maxRows), "application/sparql-results+json")
-    }
+        (answerAskXml(store, q), "application/sparql-results+xml", 1)
+      else (answerAsk(store, q), "application/sparql-results+json", 1)
+    case q =>
+      val (vars, rows) = solutions(store, q, maxRows)
+      val ct = negotiated(accept)
+      val body = ct match {
+        case "application/sparql-results+xml" => resultsXml(vars, rows)
+        case "text/csv" => resultsCsv(vars, rows)
+        case "text/tab-separated-values" => resultsTsv(vars, rows)
+        case _ => resultsJson(vars, rows)
+      }
+      (body, ct, rows.length)
   }
 
   /** Pick the FIRST-listed supported results format from the Accept
@@ -448,6 +466,19 @@ object SparqlServer {
         s"apply_ms=$applyMs write_ms=${w.writeMs} advance_ms=${w.advanceMs}"
   }
 
+  /** The structured line the endpoint logs for one query request: a
+    * hash of its text, the rows it answered (1 for ASK), the
+    * milliseconds spent evaluating and rendering it, and where the store
+    * it read stands — the dataset version and the delta slot after the
+    * last batch merged into it (`-` for a store that stands on no
+    * versioned dataset; a version-pinned read names its version and
+    * its `maxOps` bound).
+    */
+  private[graft] def queryLine(hash: String, rows: Int, evalMs: Long,
+      version: Option[Int], slot: Option[Int]): String =
+    s"[sparql] query hash=$hash rows=$rows eval_ms=$evalMs " +
+      s"version=${version.fold("-")(_.toString)} slot=${slot.fold("-")(_.toString)}"
+
   /** Start serving `store` at `http://localhost:<port><path>`; port 0
     * picks an ephemeral port. The handler evaluates each request on
     * the store's own SparkSession (protocol requests are the
@@ -456,7 +487,8 @@ object SparqlServer {
     * ([[TripleStore.writeBackDelta]]) and the dataset survives
     * restarts: `serve(fromDatasetParquet(dir), persistDir = Some(dir))`
     * resumes from the `VERSION` pointer. Each update logs one
-    * [[updateLine]] to stderr; [[Handle.lastUpdate]] holds the latest.
+    * [[updateLine]] to stderr and each query one [[queryLine]];
+    * [[Handle.lastUpdate]] and [[Handle.lastQuery]] hold the latest.
     */
   def serve(store: TripleStore, port: Int = 0, path: String = "/sparql",
       maxRows: Int = MaxResponseRows,
@@ -487,6 +519,7 @@ object SparqlServer {
     }
     val ref = new java.util.concurrent.atomic.AtomicReference(store)
     val lastLine = new java.util.concurrent.atomic.AtomicReference[String]()
+    val lastRead = new java.util.concurrent.atomic.AtomicReference[String]()
     // updates serialize: SPARQL Update request semantics are
     // one-at-a-time against the then-current dataset (stores are
     // immutable; each update swaps the reference queries read)
@@ -560,6 +593,7 @@ object SparqlServer {
                 // fromDatasetParquet's loud require, never a partial
                 // answer. The pinned load is metadata + lazy scans;
                 // the evaluation itself is the normal query arm.
+                val t0 = System.nanoTime()
                 val st = version match {
                   case None => ref.get()
                   case Some(v) =>
@@ -570,7 +604,17 @@ object SparqlServer {
                     val spark = ref.get().slices.values.head.sparkSession
                     TripleStore.fromDatasetParquet(spark, dir, v, maxOps)
                 }
-                val (b, ct) = answerNegotiated(st, text, maxRows, accept)
+                val (b, ct, rows) = answerNegotiated(st, text, maxRows, accept)
+                val at: Option[(Option[Int], Option[Int])] =
+                  version.fold(st.stands.map(s =>
+                    (TripleStore.versionOf(s.root), Option(s.nextSeq))))(v =>
+                    Some((Some(v), maxOps)))
+                val line = queryLine(
+                  f"${scala.util.hashing.MurmurHash3.stringHash(text)}%08x", rows,
+                  (System.nanoTime() - t0) / 1000000, at.flatMap(_._1),
+                  at.flatMap(_._2))
+                lastRead.set(line)
+                System.err.println(line)
                 (200, b, ct)
               case DescribeService =>
                 // SPARQL 1.1 Service Description: a bare GET answers
@@ -694,7 +738,7 @@ object SparqlServer {
       }
     })
     server.start()
-    new Handle(server, advertised, ref, lastLine)
+    new Handle(server, advertised, ref, lastLine, lastRead)
   }
 
   private final class PayloadTooLarge(msg: String)

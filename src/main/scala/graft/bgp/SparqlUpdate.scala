@@ -1,7 +1,7 @@
 package graft.bgp
 
 import graft.scale.GuardedBroadcast
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** SPARQL 1.1 Update — the graph-mutation slice (`INSERT DATA`,
@@ -705,6 +705,17 @@ object SparqlUpdate {
     * shortcut constants use; insert-template CONSTANTS may be new
     * vocabulary and grow the dict (audited), while var bindings came
     * from the store and are already in it.
+    *
+    * One decision picks where the templates are built. A solution that
+    * fits `spark.sql.autoBroadcastJoinThreshold` is collected once
+    * ([[GuardedBroadcast.collectBounded]]) and the delete rows, insert
+    * rows and the op's delta are instantiated on the driver, each a
+    * deduplicated `LocalRelation` — so the guard, the write-back's
+    * collect and its batch write run no job, and a served DELETE/INSERT
+    * WHERE runs only its WHERE's jobs. A larger solution, broadcasting
+    * disabled, or a sequential store (its encoding joins the dict) is
+    * instantiated distributed from one lazy `localCheckpoint` of the
+    * solution. The slice and quad rewrites are the same for both.
     */
   private def applyModify(
       spark: SparkSession,
@@ -732,19 +743,38 @@ object SparqlUpdate {
       case Some(g) => scopedStore(store, Seq(g)).copy(quads = store.quads)
       case None => store
     }
-    // r15: the WHERE solution feeds the vocab growth (one aggregate),
-    // the delete templates, the insert templates, AND every rewritten
-    // slice — each a separate downstream action that would otherwise
-    // re-run the whole pattern-join plan. One op-sized localCheckpoint
-    // computes it once (lazy: a DELETE-only op with no dict probe
-    // materializes it on the first slice action, not eagerly).
-    val bind = BgpPlanner.plan(whereStore, where).localCheckpoint(eager = false)
-    // a solution leaving any of a template triple's vars UNBOUND (an
-    // OPTIONAL miss) instantiates nothing for that triple (§3.1.3) —
-    // filtered per triple, so other templates still instantiate
-    def ground(tp: Sparql.TriplePattern): DataFrame =
-      Seq(tp.s, tp.o).collect { case Sparql.Var(n) => n }
-        .foldLeft(bind)((d, n) => d.filter(col(n).isNotNull))
+    // ——— the one decision point: where the template relations are built ———
+    // A WHERE solution within the broadcast budget is collected ONCE, in
+    // lexical form (GuardedBroadcast.collectBounded — its jobs are the
+    // WHERE's own), and the delete-template rows, the insert-template
+    // rows and the op's delta are instantiated from it on the driver,
+    // each deduplicated there and each one LocalRelation: the guard
+    // measures them and the write-back collects and writes them with no
+    // job. A solution over the budget, broadcasting disabled, or a
+    // sequential store (whose encoding is a join against the dict) takes
+    // the distributed path instead: the solution feeds the vocab growth,
+    // both templates and every rewritten slice, so one op-sized
+    // localCheckpoint (lazy) computes it once rather than each of them
+    // re-running the pattern-join plan. The rewrites below the decision
+    // are one code path.
+    val planned = BgpPlanner.plan(whereStore, where)
+    val cols = planned.columns.toIndexedSeq
+    val held: Option[Seq[Row]] = {
+      val thr = GuardedBroadcast.threshold(spark)
+      val lexical = planned.select(cols.map(c => col(c).cast("string").as(c)): _*)
+      if (store.sequential || thr <= 0) None
+      else GuardedBroadcast.rowBytes(lexical.schema)
+        .flatMap(GuardedBroadcast.collectBounded(lexical, _, thr))
+        .map(_.map(_._1))
+    }
+    lazy val bind = planned.localCheckpoint(eager = false)
+    // a template term: Left(var name) or Right(constant)
+    def plain(t: Sparql.Term): Either[String, String] = t match {
+      case Sparql.Var(n) => Left(n)
+      case Sparql.Const(v) => Right(v)
+      case other => throw new IllegalArgumentException(
+        s"update templates are plain triples; got $other")
+    }
     // ——— dict growth happens BEFORE instantiation so the sequential
     // store's dense ids exist to encode the insert templates with ———
     // Insert-template CONSTANTS may be new vocabulary; insert-template
@@ -766,15 +796,19 @@ object SparqlUpdate {
     val grown0 =
       if (insVarCols.isEmpty) None
       else store.dict.map { d =>
-        val vocab = insVarCols.map(v => bind.select(col(v).as("value")))
-          .reduce(_ unionByName _).na.drop().distinct()
+        val vocab = held match {
+          case Some(rows) => insVarCols.map(cols.indexOf)
+            .flatMap(i => rows.map(_.getString(i))).filter(_ != null)
+            .distinct.toDF("value")
+          case None => insVarCols.map(v => bind.select(col(v).as("value")))
+            .reduce(_ unionByName _).na.drop().distinct()
+        }
         growDictDfCounted(spark, store, d, vocab)
       }
     val dict0 = grown0.map(_._1).orElse(store.dict)
     val grown1 =
       if (newVocab.isEmpty) None
       else dict0.map { d =>
-        import spark.implicits._
         growDictDfCounted(spark, store, d, newVocab.distinct.toDF("value"))
       }
     val dict = grown1.map(_._1).orElse(dict0)
@@ -790,22 +824,80 @@ object SparqlUpdate {
     // expression on hash-id stores, a value→id join on sequential
     // stores — inserts against the GROWN dict (every term resolves),
     // deletes against the STANDING dict (a never-seen term drops from
-    // the batch: deleting it is the spec's no-op anyway)
-    def instantiate(tmpl: Seq[Sparql.TriplePattern],
-        encDict: Option[DataFrame]): Option[DataFrame] =
-      if (tmpl.isEmpty) None
-      else Some(encodeCols(store, encDict, tmpl.map { tp =>
-        def c(t: Sparql.Term) = t match {
-          case Sparql.Var(n) => col(n)
-          case Sparql.Const(v) => lit(v)
-          case other => throw new IllegalArgumentException(
-            s"update templates are plain triples; got $other")
-        }
-        ground(tp).select(c(tp.s).as("s"), lit(constOf(tp.p)).as("p"),
-          c(tp.o).as("o"))
-      }.reduce(_ unionByName _), Seq("s", "o")).distinct())
-    val delRows = instantiate(delTmpl, store.dict)
-    val insRows = instantiate(insTmpl, dict)
+    // the batch: deleting it is the spec's no-op anyway). The op's
+    // row-grain delta is the SAME instantiated template rows with
+    // tombstone flags — no extra store scan (TripleStore.writeBackDelta
+    // persistence). GRAPH-scoped templates instantiate (g, s, p, o)
+    // rows for the quads relation.
+    def dflt(tmpl: Seq[Sparql.TriplePattern]) = tmpl.map("" -> _)
+    val (delRows, insRows, quadDel, quadIns, deltaDefault, deltaQuads) =
+      held match {
+        case Some(rows) =>
+          // the distinct lexical (g, s, p, o) rows `tmpl` instantiates; a
+          // solution leaving a var of a template triple UNBOUND (an
+          // OPTIONAL miss) instantiates nothing for that triple (§3.1.3)
+          def instantiated(tmpl: Seq[(String, Sparql.TriplePattern)])
+              : Seq[(String, String, String, String)] =
+            tmpl.flatMap { case (g, tp) =>
+              rows.flatMap { r =>
+                def term(t: Sparql.Term): Option[String] =
+                  plain(t).fold(n => Option(r.getString(cols.indexOf(n))), Some(_))
+                for (s <- term(tp.s); o <- term(tp.o)) yield (g, s, constOf(tp.p), o)
+              }
+            }.distinct
+          // the store is string or hash-id: encoding is a projection,
+          // which keeps each relation a LocalRelation
+          val del = instantiated(dflt(delTmpl)).map(t => (t._2, t._3, t._4))
+          val ins = instantiated(dflt(insTmpl)).map(t => (t._2, t._3, t._4))
+          val qDel = instantiated(delQuadTmpl)
+          val qIns = instantiated(insQuadTmpl)
+          def enc(df: DataFrame, encCols: String*) =
+            encodeCols(store, dict, df, encCols)
+          (Option.when(delTmpl.nonEmpty)(enc(del.toDF("s", "p", "o"), "s", "o")),
+            Option.when(insTmpl.nonEmpty)(enc(ins.toDF("s", "p", "o"), "s", "o")),
+            Option.when(delQuadTmpl.nonEmpty)(
+              enc(qDel.toDF("g", "s", "p", "o"), "g", "s", "o")),
+            Option.when(insQuadTmpl.nonEmpty)(
+              enc(qIns.toDF("g", "s", "p", "o"), "g", "s", "o")),
+            Option.when(delTmpl.nonEmpty || insTmpl.nonEmpty)(enc(
+              (del.map { case (s, p, o) => (p, s, o, true) } ++
+                ins.map { case (s, p, o) => (p, s, o, false) })
+                .toDF("p", "s", "o", "del"), "s", "o")),
+            Option.when(delQuadTmpl.nonEmpty || insQuadTmpl.nonEmpty)(enc(
+              (qDel.map { case (g, s, p, o) => (g, p, s, o, true) } ++
+                qIns.map { case (g, s, p, o) => (g, p, s, o, false) })
+                .toDF("g", "p", "s", "o", "del"), "g", "s", "o")))
+        case None =>
+          // the same unbound-var rule, filtered per template triple
+          def ground(tp: Sparql.TriplePattern): DataFrame =
+            Seq(tp.s, tp.o).collect { case Sparql.Var(n) => n }
+              .foldLeft(bind)((d, n) => d.filter(col(n).isNotNull))
+          def c(t: Sparql.Term): Column = plain(t).fold(col, lit)
+          def instantiate(tmpl: Seq[Sparql.TriplePattern],
+              encDict: Option[DataFrame]): Option[DataFrame] =
+            Option.when(tmpl.nonEmpty)(encodeCols(store, encDict,
+              tmpl.map(tp => ground(tp).select(c(tp.s).as("s"),
+                lit(constOf(tp.p)).as("p"), c(tp.o).as("o")))
+                .reduce(_ unionByName _), Seq("s", "o")).distinct())
+          def instantiateQuads(tmpl: Seq[(String, Sparql.TriplePattern)],
+              encDict: Option[DataFrame]): Option[DataFrame] =
+            Option.when(tmpl.nonEmpty)(tmpl.map { case (g, tp) =>
+              encodeCols(store, encDict,
+                ground(tp).select(c(tp.s).as("s"),
+                  lit(constOf(tp.p)).as("p"), c(tp.o).as("o")), Seq("s", "o"))
+                .select(gid(store, encDict, g).as("g"), $"s", $"p", $"o")
+            }.reduce(_ unionByName _).distinct())
+          def flagged(del: Option[DataFrame], ins: Option[DataFrame],
+              keys: Seq[String]): Option[DataFrame] =
+            (del.map(_.select(keys.map(col) :+ lit(true).as("del"): _*)).toSeq ++
+              ins.map(_.select(keys.map(col) :+ lit(false).as("del"): _*)).toSeq)
+              .reduceOption(_ unionByName _)
+          val (d, i) = (instantiate(delTmpl, store.dict), instantiate(insTmpl, dict))
+          val (qd, qi) = (instantiateQuads(delQuadTmpl, store.dict),
+            instantiateQuads(insQuadTmpl, dict))
+          (d, i, qd, qi, flagged(d, i, Seq("p", "s", "o")),
+            flagged(qd, qi, Seq("g", "p", "s", "o")))
+      }
     var slices = store.slices
     delRows.foreach { del =>
       val touched = delTmpl.map(tp => constOf(tp.p)).toSet
@@ -824,26 +916,8 @@ object SparqlUpdate {
           slices.get(p).map(_.unionByName(add)).getOrElse(add).distinct())
       }
     }
-    // GRAPH-scoped templates instantiate into the quads relation:
-    // deletes anti-join on the full (g, s, p, o), inserts union with
-    // set semantics — same apply shapes as the slice path, quad-grain
-    def instantiateQuads(tmpl: Seq[(String, Sparql.TriplePattern)],
-        encDict: Option[DataFrame]): Option[DataFrame] =
-      if (tmpl.isEmpty) None
-      else Some(tmpl.map { case (g, tp) =>
-        def c(t: Sparql.Term) = t match {
-          case Sparql.Var(n) => col(n)
-          case Sparql.Const(v) => lit(v)
-          case other => throw new IllegalArgumentException(
-            s"update templates are plain triples; got $other")
-        }
-        encodeCols(store, encDict,
-          ground(tp).select(c(tp.s).as("s"),
-            lit(constOf(tp.p)).as("p"), c(tp.o).as("o")), Seq("s", "o"))
-          .select(gid(store, encDict, g).as("g"), $"s", $"p", $"o")
-      }.reduce(_ unionByName _).distinct())
-    val quadDel = instantiateQuads(delQuadTmpl, store.dict)
-    val quadIns = instantiateQuads(insQuadTmpl, dict)
+    // quad-grain: deletes anti-join on the full (g, s, p, o), inserts
+    // union with set semantics — same apply shapes as the slice path
     var quads = store.quads
     quadDel.foreach { del =>
       quads = quads.map(_.join(GuardedBroadcast.maybe(del),
@@ -855,19 +929,6 @@ object SparqlUpdate {
         case None => ins
       })
     }
-    // the op's row-grain delta: the SAME instantiated template
-    // relations the apply consumed, decorated with tombstone flags —
-    // no extra store scan (TripleStore.writeBackDelta persistence)
-    val deltaDefault = (delRows.map(_.select($"p", $"s", $"o",
-        lit(true).as("del"))).toSeq ++
-      insRows.map(_.select($"p", $"s", $"o",
-        lit(false).as("del"))).toSeq)
-      .reduceOption(_ unionByName _)
-    val deltaQuads = (quadDel.map(_.select($"g", $"p", $"s", $"o",
-        lit(true).as("del"))).toSeq ++
-      quadIns.map(_.select($"g", $"p", $"s", $"o",
-        lit(false).as("del"))).toSeq)
-      .reduceOption(_ unionByName _)
     (store.copy(slices = slices, dict = dict, quads = quads,
       // the s-bucketed secondary derives from the default graph only —
       // keep them when this op touched nothing but named graphs

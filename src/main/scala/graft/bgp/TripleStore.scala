@@ -385,6 +385,13 @@ object TripleStore {
   def datasetRoot(spark: SparkSession, path: String): String =
     currentVersion(spark, path).map(n => s"$path/v$n").getOrElse(path)
 
+  /** The version a version root names (`<path>/v<n>`), or None for a
+    * legacy unversioned root.
+    */
+  private[bgp] def versionOf(root: String): Option[Int] =
+    Some(new org.apache.hadoop.fs.Path(root).getName)
+      .filter(_.startsWith("v")).flatMap(_.drop(1).toIntOption)
+
   /** Write `store` as the NEXT full version of the dataset at `path`
     * and flip the `VERSION` pointer: `<path>/v<n>/{default,quads}` in
     * the [[writeDataset]] layout, pointer updated via tmp-file +
@@ -460,16 +467,63 @@ object TripleStore {
       seqs(s"$root/delta", ".lock"))
   }
 
-  private def writeDeltaBatch(rows: DataFrame, dir: String, seq: Int,
+  /** Write one delta batch of a log as `<dir>/seq=<seq>`: the batch is
+    * written into `.tmp-<seq>` (invisible to the loader) and committed
+    * by renaming it. Either way the batch is ONE parquet file — deltas
+    * are op-grain (a protocol update's rows), so a multi-task fan-out
+    * would only pad the log with empty part files.
+    *
+    *  - `Left((rows, schema))`: a batch already collected to the driver
+    *    ([[collectHeld]]) is written by the driver itself through
+    *    Spark's own parquet write support ([[writeParquetOnDriver]]),
+    *    so its footer matches a file a Spark job writes — and no job
+    *    runs.
+    *  - `Right(df)`: a batch too large to hold on the driver is written
+    *    by a Spark job (`coalesce(1)`).
+    */
+  private def writeDeltaBatch(spark: SparkSession,
+      batch: Either[(Seq[Row], StructType), DataFrame], dir: String, seq: Int,
       fs: org.apache.hadoop.fs.FileSystem): Unit = {
     val tmp = new org.apache.hadoop.fs.Path(s"$dir/.tmp-$seq")
-    // one file per batch: deltas are op-grain (a protocol update's
-    // rows), so a multi-MB-task fan-out only pads the log with empty
-    // part files; corpus-scale rewrites belong to LOAD/structural ops
-    rows.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    batch match {
+      case Left((rows, schema)) =>
+        fs.delete(tmp, true)
+        writeParquetOnDriver(spark, rows, schema, tmp)
+      case Right(df) =>
+        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    }
     val target = new org.apache.hadoop.fs.Path(s"$dir/seq=$seq")
     fs.delete(target, true)
     require(fs.rename(tmp, target), s"delta batch commit $target failed")
+  }
+
+  /** Write `rows` (external `Row`s of `schema`) as one parquet file
+    * under the directory `dir`, on the driver: the output writer Spark's
+    * parquet source prepares for its tasks (`ParquetUtils.prepareWrite`
+    * with the session's SQL conf — schema conversion, codec, footer
+    * metadata), driven here for a single task. Columns are written
+    * nullable, as a Spark job writes them.
+    */
+  private def writeParquetOnDriver(spark: SparkSession, rows: Seq[Row],
+      schema: StructType, dir: org.apache.hadoop.fs.Path): Unit = {
+    import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetUtils}
+    val conf = spark.sessionState.conf
+    val written = StructType(schema.map(_.copy(nullable = true)))
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    val factory = ParquetUtils.prepareWrite(conf, job, written,
+      new ParquetOptions(Map.empty[String, String], conf))
+    val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
+      job.getConfiguration,
+      new TaskAttemptID(new TaskID(new JobID("graft", 0), TaskType.MAP, 0), 0))
+    val file = new org.apache.hadoop.fs.Path(dir,
+      s"part-00000-${java.util.UUID.randomUUID()}-c000${factory.getFileExtension(ctx)}")
+    val toCatalyst = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToCatalystConverter(written)
+    val writer = factory.newInstance(file.toString, written, ctx)
+    try rows.foreach(r => writer.write(
+      toCatalyst(r).asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]))
+    finally writer.close()
   }
 
   /** The weight of a delta row of batch `seq`: `seq * 2`, plus 1 for an
@@ -618,8 +672,11 @@ object TripleStore {
     * quads and dict rows the batches touched are re-merged from
     * driver-local relations — no listing, schema inference or log
     * aggregation, and no job. Each batch is collected once (bounded,
-    * [[collectHeld]]) and written from the collected rows, so an op's
-    * delta is computed once. The dataset is loaded instead
+    * [[collectHeld]]) and written by the driver from the collected rows
+    * ([[writeDeltaBatch]]), so an op's delta is computed once and a
+    * driver-local delta (a DATA op's rows, an instantiated template)
+    * is written with no job; only a batch over the budget is written
+    * by a Spark job. The dataset is loaded instead
     * ([[fromDatasetParquet]]) when the advance cannot be made: `prev`
     * stands elsewhere or not at all, another writer claimed a slot
     * since (the slot claimed is not the one after `prev`'s last merged
@@ -700,14 +757,15 @@ object TripleStore {
           (if (thr <= 0) None
            else collectHeld(held, thr - log.fold(0L)(_.bytes))) match {
             case Some(got) =>
-              writeDeltaBatch(spark.createDataFrame(got.map(g =>
-                Row.fromSeq(g._1.toSeq.take(schema.length))).asJava, schema),
+              writeDeltaBatch(spark, Left((got.map(g =>
+                Row.fromSeq(g._1.toSeq.take(schema.length))), schema)),
                 dir, seq, fs)
               log = log.map(_.absorb(part, schema, got))
               touched = touched.add(part, got.map(_._1))
               if (part.weighed) rows = rows.map(_ + got.size)
             case None =>
-              writeDeltaBatch(r.select(part.cols.map(col): _*), dir, seq, fs)
+              writeDeltaBatch(spark, Right(r.select(part.cols.map(col): _*)),
+                dir, seq, fs)
               log = None
               rows = None
           }

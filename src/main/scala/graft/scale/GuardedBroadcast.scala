@@ -24,7 +24,8 @@ import scala.collection.mutable
   *
   * The measurement job is one scan of a relation the caller already
   * computes (and that stays persisted for the actual join), so the
-  * guard costs one cheap job — and only once per distinct plan: the
+  * guard costs one cheap job — none for a driver-local relation, which
+  * is measured on the driver — and only once per distinct plan: the
   * persisted handle and its measured size live in a [[BoundedMemo]]
   * keyed by the canonicalized logical plan, so re-registering the same
   * query (a bench rerun, a long-lived service) reuses the cached copy,
@@ -136,12 +137,21 @@ object GuardedBroadcast {
     * autoBroadcastJoinThreshold, `df` (persisted) otherwise; `df`
     * untouched when broadcasting is disabled (threshold −1) or the
     * schema is unmeasurable.
+    *
+    * A driver-local relation (its optimized plan is a `LocalRelation`:
+    * the rows of an INSERT/DELETE DATA, an update's instantiated
+    * templates) is measured where it lives, as [[collectBounded]] reads
+    * one: the hint at or under the threshold, none above it, and no
+    * persist, no memo entry and no job.
     */
   def maybe(df: DataFrame): DataFrame = {
     val thresholdBytes = threshold(df.sparkSession)
     if (thresholdBytes <= 0) return df
     rowBytes(df.schema) match {
       case None => df
+      case Some(bytesExpr) if driverLocal(df) =>
+        val measured = df.select(bytesExpr).collect().iterator.map(_.getLong(0)).sum
+        if (measured <= thresholdBytes) broadcast(df) else df
       case Some(bytesExpr) =>
         val key = (df.sparkSession, df.schema.fieldNames.toSeq,
           df.queryExecution.analyzed.canonicalized)
@@ -157,6 +167,14 @@ object GuardedBroadcast {
         if (measured <= thresholdBytes) broadcast(cached) else cached
     }
   }
+
+  /** Whether `df`'s optimized plan is a `LocalRelation`. Only a plan
+    * whose leaves are all local relations is optimized to find out, so
+    * the check costs a guarded distributed relation no planning.
+    */
+  private def driverLocal(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation]) &&
+      df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
 
   /** Persist-and-memoize WITHOUT the broadcast hint: the caching half
     * of [[maybe]] for a relation a multi-pass operator re-reads

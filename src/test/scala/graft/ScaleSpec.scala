@@ -621,6 +621,54 @@ class ScaleSpec extends AnyFunSuite {
     assert(a == b && a.size == 500)
   }
 
+  test("guarded broadcast measures a driver-local relation on the driver") {
+    import graft.scale.GuardedBroadcast
+    import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, ResolvedHint}
+    val s2 = spark.newSession()
+    import s2.implicits._
+    // a LocalRelation: the rows of an INSERT/DELETE DATA take this shape
+    val dim = (0L until 500L).map(i => (i, s"v$i")).toDF("k", "v")
+    val fact = s2.range(5000).select(($"id" % 500).as("k"))
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    def hinted(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.queryExecution.analyzed.collectFirst {
+        case h: ResolvedHint => h.hints.strategy
+      }.contains(Some(BROADCAST))
+    def jobsOf[T](body: => T): (T, Long) = {
+      val jobs = new java.util.concurrent.atomic.AtomicLong(0)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      org.apache.spark.sql.graftshim.GraftShim.waitListeners(s2)
+      s2.sparkContext.addSparkListener(listener)
+      try {
+        val r = body
+        org.apache.spark.sql.graftshim.GraftShim.waitListeners(s2)
+        (r, jobs.get())
+      } finally s2.sparkContext.removeSparkListener(listener)
+    }
+    s2.conf.set(key, "10MB")
+    val memo = GuardedBroadcast.memoSize
+    val (guarded, jobs) = jobsOf(GuardedBroadcast.maybe(dim))
+    assert(hinted(guarded), "expected the broadcast hint under 10MB")
+    assert(jobs == 0, s"measuring a LocalRelation ran $jobs jobs")
+    assert(GuardedBroadcast.memoSize == memo, "a LocalRelation took a memo entry")
+    val wide = fact.join(guarded, Seq("k"))
+    // 1-byte threshold: the same relation measures over it, no hint
+    s2.conf.set(key, "1")
+    val unguarded = GuardedBroadcast.maybe(dim)
+    assert(!hinted(unguarded), "expected no hint under a 1-byte threshold")
+    assert(GuardedBroadcast.memoSize == memo)
+    val narrow = fact.join(unguarded, Seq("k"))
+    def counts(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+      df.groupBy($"k").count().collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val (a, b) = (counts(wide), counts(narrow))
+    assert(a == b && a.size == 500)
+  }
+
   test("funnel stages run through the native RangeJoin, no candidate-pair join") {
     val df = SparkEntry.queries("q122_event_funnel")(
       spark, "/root/testdata/sf0.001")
