@@ -1,6 +1,6 @@
 package graft.bgp
 
-import graft.scale.GuardedBroadcast
+import graft.scale.{DeltaLog, GuardedBroadcast, VersionedRoot}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -333,11 +333,6 @@ object TripleStore {
     */
   val KeepVersions = 2
 
-  private def fsPath(spark: SparkSession, path: String) = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
-  }
-
   private def sparkOf(st: TripleStore): SparkSession =
     st.slices.values.headOption.orElse(st.quads).orElse(st.dict)
       .map(_.sparkSession)
@@ -346,16 +341,8 @@ object TripleStore {
   /** The dataset's current version number, if `path` is a versioned
     * root (has a `VERSION` pointer file).
     */
-  def currentVersion(spark: SparkSession, path: String): Option[Int] = {
-    val (fs, _) = fsPath(spark, path)
-    val vp = new org.apache.hadoop.fs.Path(s"$path/VERSION")
-    if (!fs.exists(vp)) None
-    else {
-      val in = fs.open(vp)
-      try Some(new String(in.readAllBytes(), "UTF-8").trim.toInt)
-      finally in.close()
-    }
-  }
+  def currentVersion(spark: SparkSession, path: String): Option[Int] =
+    VersionedRoot.currentVersion(spark, path)
 
   /** Versions of the dataset at `path` still on disk, ascending —
     * the current version plus up to [[KeepVersions]]-1 retained
@@ -363,16 +350,8 @@ object TripleStore {
     * [[fromDatasetParquet]] until [[writeDatasetVersioned]]
     * garbage-collects it. One filesystem listing; no data read.
     */
-  def listVersions(spark: SparkSession, path: String): Seq[Int] = {
-    val (fs, p) = fsPath(spark, path)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.flatMap { st =>
-      val n = st.getPath.getName
-      if (st.isDirectory && n.startsWith("v"))
-        scala.util.Try(n.drop(1).toInt).toOption
-      else None
-    }.sorted
-  }
+  def listVersions(spark: SparkSession, path: String): Seq[Int] =
+    VersionedRoot.listVersions(spark, path)
 
   /** Resolve the CURRENT version root of the dataset at `path`: the
     * `v<n>` subdirectory the `VERSION` pointer names, or `path` itself
@@ -394,8 +373,9 @@ object TripleStore {
 
   /** Write `store` as the NEXT full version of the dataset at `path`
     * and flip the `VERSION` pointer: `<path>/v<n>/{default,quads}` in
-    * the [[writeDataset]] layout, pointer updated via tmp-file +
-    * rename, versions older than [[KeepVersions]] garbage-collected.
+    * the [[writeDataset]] layout, claimed, flipped and
+    * garbage-collected past [[KeepVersions]] by
+    * [[graft.scale.VersionedRoot]].
     * Readers pinned to the previous version finish undisturbed; a
     * legacy unversioned layout at `path` is retired (its dirs deleted)
     * once the SECOND version lands — until then it plays the role of
@@ -403,75 +383,26 @@ object TripleStore {
     */
   def writeDatasetVersioned(store: TripleStore, path: String): Unit = {
     val spark = sparkOf(store)
-    val (fs, _) = fsPath(spark, path)
     val n = currentVersion(spark, path).map(_ + 1).getOrElse(0)
     // multi-writer guard (a batch job beside a served endpoint is the
-    // normal lakehouse shape): the v<n> directory is CLAIMED with a
-    // create-exclusive file before anything writes — the losing JVM
-    // fails loudly here instead of interleaving files with the winner
-    fs.mkdirs(new org.apache.hadoop.fs.Path(path))
-    require(claimExclusive(fs,
-        new org.apache.hadoop.fs.Path(s"$path/v$n.claim")),
-      s"version v$n of $path is already claimed by a concurrent " +
-        "writer — reload the dataset and retry this write")
+    // normal lakehouse shape): the losing JVM fails loudly at the claim
+    // instead of interleaving files with the winner, and at the flip
+    // instead of orphaning the winner's version
+    VersionedRoot.claimVersion(spark, path, n)
     writeDataset(store, s"$path/v$n")
-    // conditional flip: by claim order the pointer must still read
-    // n-1 (or be absent for the bootstrap) — a moved pointer means a
-    // lost race, and clobbering it would orphan the winner's version
-    val cur = currentVersion(spark, path)
-    require(cur.forall(_ == n - 1),
-      s"VERSION pointer at $path moved to $cur while writing v$n — " +
-        "a concurrent writer won the race; this write is aborted")
-    val tmp = new org.apache.hadoop.fs.Path(s"$path/.VERSION.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(n.toString.getBytes("UTF-8")) finally out.close()
-    val vp = new org.apache.hadoop.fs.Path(s"$path/VERSION")
-    fs.delete(vp, false)
-    require(fs.rename(tmp, vp), s"VERSION pointer flip to $n failed")
-    (0 to n - KeepVersions).foreach { m =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/v$m"), true)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/v$m.claim"), false)
-    }
-    if (n >= KeepVersions - 1 && n >= 1)
+    VersionedRoot.flipPointer(spark, path, n, KeepVersions)
+    if (n >= KeepVersions - 1 && n >= 1) {
+      val (fs, _) = VersionedRoot.fsOf(spark, path)
       Seq("default", "quads", "delta", "dict").foreach(d =>
         fs.delete(new org.apache.hadoop.fs.Path(s"$path/$d"), true))
-  }
-
-  /** Create-exclusive claim: atomically wins or returns false. HDFS
-    * and the local FS both fail `create(path, overwrite=false)` when
-    * the file exists, so two JVMs can never both win one slot.
-    */
-  private def claimExclusive(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Boolean =
-    try { fs.create(p, false).close(); true }
-    catch { case _: java.io.IOException => false }
-
-  /** The delta slots of a version root: per log, the `seq` of every
-    * committed batch (its `seq=<k>` directories), and the `seq` of
-    * every claimed slot (the `delta/seq=<k>.lock` files). One listing
-    * per log directory; no data read.
-    */
-  private def deltaSlots(fs: org.apache.hadoop.fs.FileSystem,
-      root: String): (Map[String, Set[Int]], Set[Int]) = {
-    def seqs(dir: String, suffix: String): Set[Int] = {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      if (!fs.exists(p)) Set.empty
-      else fs.listStatus(p).iterator.flatMap { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("seq=") && n.endsWith(suffix))
-          n.stripPrefix("seq=").stripSuffix(suffix).toIntOption
-        else None
-      }.toSet
     }
-    (LogParts.map(part => part.name -> seqs(s"$root/delta/${part.name}", "")).toMap,
-      seqs(s"$root/delta", ".lock"))
   }
 
-  /** Write one delta batch of a log as `<dir>/seq=<seq>`: the batch is
-    * written into `.tmp-<seq>` (invisible to the loader) and committed
-    * by renaming it. Either way the batch is ONE parquet file — deltas
-    * are op-grain (a protocol update's rows), so a multi-task fan-out
-    * would only pad the log with empty part files.
+  /** Write one delta batch of log `part` as `delta/<part>/seq=<seq>`
+    * under version root `root`, committed by [[graft.scale.DeltaLog.commit]].
+    * Either way the batch is ONE parquet file — deltas are op-grain (a
+    * protocol update's rows), so a multi-task fan-out would only pad
+    * the log with empty part files.
     *
     *  - `Left((rows, schema))`: a batch already collected to the driver
     *    ([[collectHeld]]) is written by the driver itself through
@@ -482,20 +413,14 @@ object TripleStore {
     *    by a Spark job (`coalesce(1)`).
     */
   private def writeDeltaBatch(spark: SparkSession,
-      batch: Either[(Seq[Row], StructType), DataFrame], dir: String, seq: Int,
-      fs: org.apache.hadoop.fs.FileSystem): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(s"$dir/.tmp-$seq")
-    batch match {
-      case Left((rows, schema)) =>
-        fs.delete(tmp, true)
-        writeParquetOnDriver(spark, rows, schema, tmp)
-      case Right(df) =>
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      batch: Either[(Seq[Row], StructType), DataFrame], root: String,
+      part: LogPart, seq: Int, fs: org.apache.hadoop.fs.FileSystem): Unit =
+    DeltaLog.commit(fs, root, part.name, seq) { tmp =>
+      batch match {
+        case Left((rows, schema)) => writeParquetOnDriver(spark, rows, schema, tmp)
+        case Right(df) => df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      }
     }
-    val target = new org.apache.hadoop.fs.Path(s"$dir/seq=$seq")
-    fs.delete(target, true)
-    require(fs.rename(tmp, target), s"delta batch commit $target failed")
-  }
 
   /** Write `rows` (external `Row`s of `schema`) as one parquet file
     * under the directory `dir`, on the driver: the output writer Spark's
@@ -564,7 +489,7 @@ object TripleStore {
     * log's batch schema; and its size in bytes, the
     * [[GuardedBroadcast.rowBytes]] of every row as collected.
     */
-  private[bgp] final case class DeltaLog(
+  private[bgp] final case class HeldLog(
       weights: Map[String, Map[Row, Long]] = Map.empty,
       dictRows: Vector[Row] = Vector.empty,
       schemas: Map[String, StructType] = Map.empty,
@@ -573,7 +498,7 @@ object TripleStore {
       * byte widths, as [[collectHeld]] returns them.
       */
     def absorb(part: LogPart, schema: StructType,
-        rows: Seq[(Row, Long)]): DeltaLog = {
+        rows: Seq[(Row, Long)]): HeldLog = {
       val k = part.keys.length
       copy(
         weights = if (!part.weighed) weights else weights.updated(part.name,
@@ -614,7 +539,7 @@ object TripleStore {
     * (see [[TripleStore.stands]]).
     */
   private[bgp] final class Standing(val root: String, val nextSeq: Int,
-      val base: TripleStore, val log: DeltaLog,
+      val base: TripleStore, val log: HeldLog,
       slices: Map[String, DataFrame], quads: Option[DataFrame],
       dict: Option[DataFrame]) {
     def describes(st: TripleStore): Boolean = {
@@ -625,7 +550,7 @@ object TripleStore {
   }
 
   private def standOn(st: TripleStore, root: String, nextSeq: Int,
-      base: TripleStore, log: DeltaLog): TripleStore =
+      base: TripleStore, log: HeldLog): TripleStore =
     st.copy(standing = Some(
       new Standing(root, nextSeq, base, log, st.slices, st.quads, st.dict)))
 
@@ -702,7 +627,7 @@ object TripleStore {
       report: WriteBack => Unit = _ => ()): TripleStore = {
     val spark =
       try sparkOf(next) catch { case _: IllegalArgumentException => sparkOf(prev) }
-    val (fs, _) = fsPath(spark, path)
+    val (fs, _) = VersionedRoot.fsOf(spark, path)
     val t0 = System.nanoTime()
     def ms(from: Long): Long = (System.nanoTime() - from) / 1000000
     def flipped(seqs: Seq[Int], rows: Option[Long]): TripleStore = {
@@ -719,7 +644,7 @@ object TripleStore {
     if (!hasLayout || deltas.exists(_.structural)) return flipped(Nil, None)
     val root = datasetRoot(spark, path)
     val thr = GuardedBroadcast.threshold(spark)
-    var seq = deltaSlots(fs, root)._1.values.flatten.maxOption.fold(0)(_ + 1)
+    var seq = DeltaLog.slots(fs, root).next
     // the log to advance: prev's own, when prev stands on this version
     // root with no batch appended since its last merged one
     var log = prev.stands
@@ -731,27 +656,17 @@ object TripleStore {
       val parts = LogParts.zip(Seq(d.dictRows, d.default, d.quads))
         .collect { case (part, Some(r)) => part -> r }
       if (parts.nonEmpty) {
-        // CAS-shaped sequence reservation: claim `seq=<k>.lock`
-        // create-exclusively, walking forward past slots another
-        // writer claimed — two JVMs appending to one dataset can
-        // interleave batches but never clobber one (the read-then-
-        // write hole the bare counter had); a walk means the log on
-        // disk is no longer the one held, so the store is loaded
+        // CAS-shaped sequence reservation: two JVMs appending to one
+        // dataset can interleave batches but never clobber one; a walk
+        // past a slot another writer claimed means the log on disk is
+        // no longer the one held, so the store is loaded
         val expected = seq
-        var tries = 0
-        while (!claimExclusive(fs, new org.apache.hadoop.fs.Path(
-            s"$root/delta/seq=$seq.lock"))) {
-          seq += 1
-          tries += 1
-          require(tries < 10000,
-            s"could not reserve a delta sequence slot under $root")
-        }
+        seq = DeltaLog.claimSlot(fs, root, seq, None)
         if (seq != expected) log = None
         claimed += seq
         parts.foreach { case (part, r) =>
           val held = part.held(r, lit(seq))
           val schema = StructType(held.schema.filterNot(_.name == "__w"))
-          val dir = s"$root/delta/${part.name}"
           // collected within what the held log leaves of the budget, so
           // the batch is computed once and written from its rows
           (if (thr <= 0) None
@@ -759,13 +674,13 @@ object TripleStore {
             case Some(got) =>
               writeDeltaBatch(spark, Left((got.map(g =>
                 Row.fromSeq(g._1.toSeq.take(schema.length))), schema)),
-                dir, seq, fs)
+                root, part, seq, fs)
               log = log.map(_.absorb(part, schema, got))
               touched = touched.add(part, got.map(_._1))
               if (part.weighed) rows = rows.map(_ + got.size)
             case None =>
               writeDeltaBatch(spark, Right(r.select(part.cols.map(col): _*)),
-                dir, seq, fs)
+                root, part, seq, fs)
               log = None
               rows = None
           }
@@ -887,7 +802,7 @@ object TripleStore {
     * bare base as `cur` and everything the log touches; an advance
     * passes the served store and what its batches touched.
     */
-  private def merged(base: TripleStore, cur: TripleStore, log: DeltaLog,
+  private def merged(base: TripleStore, cur: TripleStore, log: HeldLog,
       t: Touched): TripleStore =
     if (t.isEmpty) cur
     else {
@@ -991,13 +906,13 @@ object TripleStore {
 
   private def loadVersionRoot(spark: SparkSession, root: String,
       maxOps: Option[Int]): TripleStore = {
-    val (fs, _) = fsPath(spark, root)
+    val (fs, _) = VersionedRoot.fsOf(spark, root)
     def exists(d: String) = fs.exists(new org.apache.hadoop.fs.Path(s"$root/$d"))
     // the slots are listed before the log is read and the read stops at
     // them, so a batch committed during the load is never half-merged
     // nor mistaken for merged
-    val (batches, locks) = deltaSlots(fs, root)
-    val nextSeq = (batches.values.flatten ++ locks).maxOption.fold(0)(_ + 1)
+    val slots = DeltaLog.slots(fs, root)
+    val nextSeq = slots.next
     val upTo = maxOps.fold(nextSeq)(math.min(_, nextSeq))
     // encoded datasets carry their dictionary beside the slices; the id
     // regime is re-detected from the loaded rows
@@ -1019,11 +934,12 @@ object TripleStore {
       .copy(quads = quads0, dict = dict0)
     // each log's batches below `upTo`: `seq` is the partition-discovered
     // batch directory, so the bound is partition pruning
-    val logs = LogParts.filter(part => batches(part.name).exists(_ < upTo))
+    val logs = LogParts.filter(part =>
+        slots.committed.getOrElse(part.name, Set.empty[Int]).exists(_ < upTo))
       .map(part => part -> spark.read.parquet(s"$root/delta/${part.name}")
         .filter(col("seq") < upTo))
     val thr = GuardedBroadcast.threshold(spark)
-    val held = logs.foldLeft(Option.when(thr > 0)(DeltaLog())) {
+    val held = logs.foldLeft(Option.when(thr > 0)(HeldLog())) {
       case (Some(log), (part, rows)) =>
         val h = part.held(rows, col("seq"))
         collectHeld(h, thr - log.bytes).map(got => log.absorb(part,
@@ -1036,7 +952,7 @@ object TripleStore {
     val loaded = st.copy(dict = dict, sequential = dict.exists(isSequentialDict))
     // only the head of the log can be advanced, and only once every
     // claimed slot has committed its batch
-    held.filter(_ => maxOps.isEmpty && locks.subsetOf(batches.values.flatten.toSet))
+    held.filter(_ => maxOps.isEmpty && slots.locks.subsetOf(slots.anyCommitted))
       .fold(loaded)(standOn(loaded, root, nextSeq, base, _))
   }
 
@@ -1131,7 +1047,7 @@ object TripleStore {
         .option("path", path)
         .format("parquet")
         .saveAsTable(table)
-      val (fs, _) = fsPath(spark, path)
+      val (fs, _) = VersionedRoot.fsOf(spark, path)
       val out = fs.create(new org.apache.hadoop.fs.Path(path, BucketCountFile))
       try out.write(n.toString.getBytes("UTF-8")) finally out.close()
     } finally rows.unpersist()
@@ -1161,7 +1077,7 @@ object TripleStore {
 
   /** The bucket count recorded in the layout at `path`. */
   private[graft] def recordedBuckets(spark: SparkSession, path: String): Int = {
-    val (fs, _) = fsPath(spark, path)
+    val (fs, _) = VersionedRoot.fsOf(spark, path)
     val f = new org.apache.hadoop.fs.Path(path, BucketCountFile)
     require(fs.exists(f), s"$path has no $BucketCountFile record: not a " +
       "finished writePartitionedBucketed layout — rewrite it")
@@ -1193,7 +1109,7 @@ object TripleStore {
         s"catalog table $table is bucketed as $spec, but $path records " +
           s"$n buckets by $bucketCol — drop the table or rewrite the layout")
     } else {
-      val (fs, _) = fsPath(spark, path)
+      val (fs, _) = VersionedRoot.fsOf(spark, path)
       fs.globStatus(new org.apache.hadoop.fs.Path(path, "p=*/part-*"))
         .maxByOption(_.getLen).foreach { f =>
           val id = org.apache.spark.sql.execution.datasources.BucketingUtils

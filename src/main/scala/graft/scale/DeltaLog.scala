@@ -2,14 +2,23 @@ package graft.scale
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared delta-log machinery for the versioned `scale/` artifacts
-  * ([[SignatureStore]], [[VectorIndex]]): `seq=<k>` append batches
-  * under a version root, create-exclusive `seq=<k>.lock` slot claims
-  * carrying an idempotency token, completeness checks (`_SUCCESS` in
-  * every family), and the compaction manifest (`COMPACTED`) that makes
+/** Shared delta-log machinery for every versioned root — TripleStore
+  * datasets and the `scale/` artifacts ([[SignatureStore]],
+  * [[VectorIndex]]): `seq=<k>` append batches per family under a
+  * version root, create-exclusive `seq=<k>.lock` slot claims carrying
+  * an idempotency token, the one commit rule, the one slot listing,
+  * and the compaction manifest (`COMPACTED`) that makes
   * append-vs-compaction races lost-update-safe — an appender that
   * finds the pointer moved consults the manifest and carries its batch
   * forward iff the compaction missed it.
+  *
+  * The commit rule: a family's batch is written into
+  * `delta/<fam>/.tmp-<k>` (hidden from Spark's file listing) and
+  * committed by renaming it to `seq=<k>`, so a batch is COMMITTED
+  * exactly when its `seq=<k>` directory exists. Whether a reader needs
+  * the batch committed in every family is the artifact's rule: the
+  * scale stores read a seq only once all their families committed it
+  * ([[Slots.complete]]); a dataset reads each log on its own.
   *
   * (The reference's only persisted incremental artifact is the
   * append-grain stats cache — `PlanCostEstimator.cpp:1053-1085`
@@ -18,39 +27,84 @@ import org.apache.spark.sql.SparkSession
   */
 private[graft] object DeltaLog {
 
-  /** `seq=` numbers whose batch is COMPLETE under `root`: every family
-    * directory present with its `_SUCCESS` marker, so a mid-write or
-    * crashed append is excluded from compaction snapshots, loads, and
-    * the compaction trigger.
+  /** One listing of a version root's `delta/`: per family (each
+    * subdirectory), the seqs of its committed batches (`seq=<k>`) and
+    * of its uncommitted leftovers (`.tmp-<k>`), and the seqs of the
+    * claimed slots (`seq=<k>.lock` files).
+    */
+  final case class Slots(committed: Map[String, Set[Int]],
+      uncommitted: Map[String, Set[Int]], locks: Set[Int]) {
+    /** Seqs committed in at least one family. */
+    def anyCommitted: Set[Int] = committed.values.flatten.toSet
+
+    /** Seqs committed in every one of `families`, ascending. */
+    def complete(families: Seq[String]): Seq[Int] =
+      families.map(committed.getOrElse(_, Set.empty[Int]))
+        .reduce(_ intersect _).toSeq.sorted
+
+    /** One past every committed batch and claimed slot — where the
+      * next append starts looking ([[claimSlot]] arbitrates).
+      */
+    def next: Int = (anyCommitted ++ locks).maxOption.fold(0)(_ + 1)
+  }
+
+  /** The [[Slots]] of version root `root`: one listing of `delta/` and
+    * one per family directory; no data read.
+    */
+  def slots(fs: org.apache.hadoop.fs.FileSystem, root: String): Slots = {
+    val dp = new org.apache.hadoop.fs.Path(s"$root/delta")
+    if (!fs.exists(dp)) return Slots(Map.empty, Map.empty, Set.empty)
+    def seqOf(name: String, pre: String, post: String): Option[Int] =
+      if (name.startsWith(pre) && name.endsWith(post))
+        name.stripPrefix(pre).stripSuffix(post).toIntOption
+      else None
+    val (dirs, files) = fs.listStatus(dp).toSeq.partition(_.isDirectory)
+    val fams = dirs.map { st =>
+      st.getPath.getName ->
+        fs.listStatus(st.getPath).toSeq.filter(_.isDirectory).map(_.getPath.getName)
+    }
+    Slots(
+      fams.map { case (f, ns) => f -> ns.flatMap(seqOf(_, "seq=", "")).toSet }.toMap,
+      fams.map { case (f, ns) => f -> ns.flatMap(seqOf(_, ".tmp-", "")).toSet }
+        .filter(_._2.nonEmpty).toMap,
+      files.flatMap(st => seqOf(st.getPath.getName, "seq=", ".lock")).toSet)
+  }
+
+  /** The directory of family `fam`'s batch `k` under `root`. */
+  def batchDir(root: String, fam: String, k: Int): String =
+    s"$root/delta/$fam/seq=$k"
+
+  /** The claim file of slot `k` under `root`. */
+  def lockPath(root: String, k: Int): org.apache.hadoop.fs.Path =
+    new org.apache.hadoop.fs.Path(s"$root/delta/seq=$k.lock")
+
+  /** Commit family `fam`'s batch `k` under `root`: `write` fills the
+    * hidden `.tmp-<k>` directory, which is then renamed to `seq=<k>`
+    * (a replayed slot replaces its own earlier batch).
+    */
+  def commit(fs: org.apache.hadoop.fs.FileSystem, root: String, fam: String,
+      k: Int)(write: org.apache.hadoop.fs.Path => Unit): Unit = {
+    val tmp = new org.apache.hadoop.fs.Path(s"$root/delta/$fam/.tmp-$k")
+    fs.delete(tmp, true)
+    write(tmp)
+    val target = new org.apache.hadoop.fs.Path(batchDir(root, fam, k))
+    fs.delete(target, true)
+    require(fs.rename(tmp, target), s"delta batch commit $target failed")
+  }
+
+  /** Seqs whose batch is COMPLETE under `root` — committed in every one
+    * of `families` — so a mid-write or crashed append is excluded from
+    * compaction snapshots, loads, and the compaction trigger.
     */
   def completeSeqs(fs: org.apache.hadoop.fs.FileSystem, root: String,
-      families: Seq[String]): Seq[Int] = {
-    def seqsOf(fam: String): Set[Int] = {
-      val p = new org.apache.hadoop.fs.Path(s"$root/delta/$fam")
-      if (!fs.exists(p)) Set.empty
-      else fs.listStatus(p).flatMap { st =>
-        val n = st.getPath.getName
-        if (st.isDirectory && n.startsWith("seq=") &&
-            fs.exists(new org.apache.hadoop.fs.Path(
-              s"$root/delta/$fam/$n/_SUCCESS")))
-          scala.util.Try(n.drop(4).toInt).toOption
-        else None
-      }.toSet
-    }
-    families.map(seqsOf).reduce(_ intersect _).toSeq.sorted
-  }
+      families: Seq[String]): Seq[Int] =
+    slots(fs, root).complete(families)
 
   /** The seq slot whose lock file carries token `t` under `root`. */
   def tokenLockIn(fs: org.apache.hadoop.fs.FileSystem, r: String,
-      t: String): Option[Int] = {
-    val dp = new org.apache.hadoop.fs.Path(s"$r/delta")
-    if (!fs.exists(dp)) None
-    else fs.listStatus(dp).toSeq
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".lock"))
-      .find(st => VersionedRoot.readSmall(fs, st.getPath).contains(t))
-      .flatMap(st => scala.util.Try(st.getPath.getName
-        .stripPrefix("seq=").stripSuffix(".lock").toInt).toOption)
-  }
+      t: String): Option[Int] =
+    slots(fs, r).locks.find(k =>
+      VersionedRoot.readSmall(fs, lockPath(r, k)).contains(t))
 
   /** Whether `token` was already claimed under a RETAINED version root
     * other than `root` — the crash-after-compaction replay: the
@@ -76,37 +130,13 @@ private[graft] object DeltaLog {
     reclaimed.getOrElse {
       var k = next
       var tries = 0
-      while (!VersionedRoot.claim(fs,
-          new org.apache.hadoop.fs.Path(s"$root/delta/seq=$k.lock"),
-          token.getOrElse(""))) {
+      while (!VersionedRoot.claim(fs, lockPath(root, k), token.getOrElse(""))) {
         k += 1
         tries += 1
         require(tries < 10000, s"could not claim an append slot under $root")
       }
       k
     }
-  }
-
-  /** First unclaimed-looking seq number: one past the max over lock
-    * files and `keyFamily` batch dirs (the create-exclusive lock in
-    * [[claimSlot]] is what actually arbitrates).
-    */
-  def nextSeq(fs: org.apache.hadoop.fs.FileSystem, root: String,
-      keyFamily: String): Int = {
-    def maxIn(p: org.apache.hadoop.fs.Path, pre: String, post: String): Int =
-      if (!fs.exists(p)) -1
-      else fs.listStatus(p).flatMap { st =>
-        val n = st.getPath.getName
-        if (n.startsWith(pre) && n.endsWith(post))
-          scala.util.Try(
-            n.stripPrefix(pre).stripSuffix(post).toInt).toOption
-        else None
-      }.foldLeft(-1)(math.max)
-    math.max(
-      maxIn(new org.apache.hadoop.fs.Path(s"$root/delta/$keyFamily"),
-        "seq=", ""),
-      maxIn(new org.apache.hadoop.fs.Path(s"$root/delta"),
-        "seq=", ".lock")) + 1
   }
 
   /** Record the exact batches a compaction merged, in the NEW version

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * signatures from raw text per run (SURVEY.md §7.1.8; the reference
   * has no dedup surface — this is pipeline-extension territory).
   *
-  * Layout (the [[graft.bgp.TripleStore]] versioned-root discipline):
+  * Layout (the [[VersionedRoot]] + [[DeltaLog]] protocol):
   * {{{
   *   <path>/VERSION            — current version pointer (int)
   *   <path>/v<n>/minhash       — (doc_id, j, h)   16 rows/doc
@@ -62,10 +62,14 @@ object SignatureStore {
   /** Retained versions (snapshot isolation for concurrent readers). */
   val KeepVersions = 2
 
-  /** Bump when any signature spelling changes — [[ensure]] rebuilds a
-    * mismatched index instead of serving stale signatures.
+  /** Bump when any signature spelling or the on-disk layout changes —
+    * [[ensure]] rebuilds a mismatched index instead of serving stale
+    * signatures. 2: delta batches commit by rename
+    * ([[DeltaLog.commit]]), so a `seq=` directory counts as committed
+    * without a `_SUCCESS` marker — a version-1 root may hold a crashed
+    * append's `seq=` directory, so it is rebuilt, not read.
     */
-  val FormatVersion = 1
+  val FormatVersion = 2
 
   private val SigFamilies = Seq("minhash", "simhash", "bands", "fps")
   private val CountFamilies = Seq("counts_mh", "counts_sh", "counts_band")
@@ -140,19 +144,11 @@ object SignatureStore {
 
   // ---- versioned-root plumbing (shared: [[VersionedRoot]]) ----
 
-  private def fsOf(spark: SparkSession, path: String) =
-    VersionedRoot.fsOf(spark, path)
-  private def readSmall(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Option[String] =
-    VersionedRoot.readSmall(fs, p)
   def currentVersion(spark: SparkSession, path: String): Option[Int] =
     VersionedRoot.currentVersion(spark, path)
 
   def listVersions(spark: SparkSession, path: String): Seq[Int] =
     VersionedRoot.listVersions(spark, path)
-
-  private def versionRoot(spark: SparkSession, path: String): String =
-    VersionedRoot.root(spark, path, "signature index")
 
   // ---- write / append / load ----
 
@@ -163,7 +159,7 @@ object SignatureStore {
     */
   def write(docs: DataFrame, path: String): Unit = {
     val spark = docs.sparkSession
-    val (fs, _) = fsOf(spark, path)
+    val (fs, _) = VersionedRoot.fsOf(spark, path)
     val n = currentVersion(spark, path).map(_ + 1).getOrElse(0)
     VersionedRoot.claimVersion(spark, path, n)
     val (sh, mh, sim, bands, fps) = signatures(docs)
@@ -241,25 +237,24 @@ object SignatureStore {
     */
   private def appendSigs(spark: SparkSession, path: String,
       fams: Seq[(String, DataFrame)], token: Option[String]): Unit = {
-    val root = versionRoot(spark, path)
-    val (fs, _) = fsOf(spark, path)
+    val root = VersionedRoot.root(spark, path, "signature index")
+    val (fs, _) = VersionedRoot.fsOf(spark, path)
     // a token already absorbed into a RETAINED OLDER version (the
     // crash-after-compaction replay): the batch's rows live in the
     // compacted base — appending again would duplicate them; no-op
     if (token.exists(t =>
         DeltaLog.tokenAbsorbedElsewhere(spark, path, root, t)))
       return
-    val k = DeltaLog.claimSlot(fs, root,
-      DeltaLog.nextSeq(fs, root, "minhash"), token)
+    val k = DeltaLog.claimSlot(fs, root, DeltaLog.slots(fs, root).next, token)
     fams.foreach { case (fam, df) =>
       // op-sized batches: one file per family per append — a wide
       // fan-out would only pad the log with empty part files
-      df.coalesce(1).write.mode("overwrite")
-        .parquet(s"$root/delta/$fam/seq=$k")
+      DeltaLog.commit(fs, root, fam, k)(tmp =>
+        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString))
     }
     // pointer re-check: a compaction may have flipped while this
     // batch was writing; if its manifest misses seq k, carry forward
-    val newRoot = versionRoot(spark, path)
+    val newRoot = VersionedRoot.root(spark, path, "signature index")
     if (newRoot != root) {
       val oldVer = DeltaLog.verOf(root)
       DeltaLog.absorbedByCompaction(spark, path, oldVer, k) match {
@@ -280,7 +275,7 @@ object SignatureStore {
   private def carryBatch(spark: SparkSession, path: String,
       oldRoot: String, oldVer: Int, k: Int): Unit = {
     def fam(name: String, cols: Seq[String]): DataFrame =
-      spark.read.parquet(s"$oldRoot/delta/$name/seq=$k")
+      spark.read.parquet(DeltaLog.batchDir(oldRoot, name, k))
         .select(cols.map(col): _*)
     appendSigs(spark, path, Seq(
       "minhash" -> fam("minhash", Seq("doc_id", "j", "h")),
@@ -306,7 +301,7 @@ object SignatureStore {
     * shared `carry-` token keeps the two paths idempotent).
     */
   def compact(spark: SparkSession, path: String): Unit = {
-    val (fs, _) = fsOf(spark, path)
+    val (fs, _) = VersionedRoot.fsOf(spark, path)
     val oldVer = currentVersion(spark, path).getOrElse(
       throw new IllegalArgumentException(s"no signature index at $path"))
     val oldRoot = s"$path/v$oldVer"
@@ -330,8 +325,8 @@ object SignatureStore {
     * batch partials (`groupBy` — map-side combined, count-grain).
     */
   def load(spark: SparkSession, path: String): Sigs = {
-    val root = versionRoot(spark, path)
-    val (fs, _) = fsOf(spark, path)
+    val root = VersionedRoot.root(spark, path, "signature index")
+    val (fs, _) = VersionedRoot.fsOf(spark, path)
     loadFrom(spark, root, DeltaLog.completeSeqs(fs, root, allFamilies))
   }
 
@@ -348,7 +343,7 @@ object SignatureStore {
       if (seqs.isEmpty) base
       else base.unionByName(
         spark.read.parquet(
-            seqs.map(k => s"$root/delta/$name/seq=$k"): _*)
+            seqs.map(DeltaLog.batchDir(root, name, _)): _*)
           .select(cols.map(col): _*))
     }
     Sigs(
@@ -376,8 +371,8 @@ object SignatureStore {
     */
   def ensure(docs: => DataFrame, path: String,
       spark: SparkSession): Unit = {
-    val (fs, _) = fsOf(spark, path)
-    val marker = readSmall(fs, new org.apache.hadoop.fs.Path(s"$path/FORMAT"))
+    val (fs, _) = VersionedRoot.fsOf(spark, path)
+    val marker = VersionedRoot.readSmall(fs, new org.apache.hadoop.fs.Path(s"$path/FORMAT"))
     val cur = currentVersion(spark, path)
     val fresh = cur.isDefined && marker.contains(FormatVersion.toString)
     if (!fresh) {

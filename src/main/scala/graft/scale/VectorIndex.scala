@@ -64,10 +64,12 @@ import org.apache.spark.sql.functions._
   */
 object VectorIndex {
 
-  /** Bump when the quantization/centroid spelling changes — [[ensure]]
-    * rebuilds a mismatched index.
+  /** Bump when the quantization/centroid spelling or the on-disk layout
+    * changes — [[ensure]] rebuilds a mismatched index. 2: delta batches
+    * commit by rename ([[DeltaLog.commit]]); a version-1 root may hold a
+    * crashed append's `seq=` directory, so it is rebuilt, not read.
     */
-  val FormatVersion = 1
+  val FormatVersion = 2
 
   /** Retained versions (readers pinned to the old version finish). */
   val KeepVersions = 2
@@ -193,11 +195,11 @@ object VectorIndex {
     if (token.exists(t =>
         DeltaLog.tokenAbsorbedElsewhere(spark, path, root, t)))
       return
-    val k = DeltaLog.claimSlot(fs, root,
-      DeltaLog.nextSeq(fs, root, "centroids"), token)
-    writeAssignments(fs, q, s"$root/delta/assignments/seq=$k")
-    cs.coalesce(1).write.mode("overwrite")
-      .parquet(s"$root/delta/centroids/seq=$k")
+    val k = DeltaLog.claimSlot(fs, root, DeltaLog.slots(fs, root).next, token)
+    DeltaLog.commit(fs, root, "assignments", k)(tmp =>
+      writeAssignments(fs, q, tmp.toString))
+    DeltaLog.commit(fs, root, "centroids", k)(tmp =>
+      cs.coalesce(1).write.mode("overwrite").parquet(tmp.toString))
     val newRoot = VersionedRoot.root(spark, path, "vector index")
     if (newRoot != root) {
       val oldVer = DeltaLog.verOf(root)
@@ -213,9 +215,9 @@ object VectorIndex {
   private def carryBatch(spark: SparkSession, path: String,
       oldRoot: String, oldVer: Int, k: Int): Unit =
     appendBatch(spark, path,
-      spark.read.parquet(s"$oldRoot/delta/assignments/seq=$k")
+      spark.read.parquet(DeltaLog.batchDir(oldRoot, "assignments", k))
         .select(col("vec_id"), col("v"), col("nrm"), col("label")),
-      spark.read.parquet(s"$oldRoot/delta/centroids/seq=$k")
+      spark.read.parquet(DeltaLog.batchDir(oldRoot, "centroids", k))
         .select(col("label"), col("i"), col("cx")),
       Some(s"carry-v$oldVer-$k"))
 
@@ -249,7 +251,7 @@ object VectorIndex {
     val base = spark.read.parquet(s"$root/assignments").select(cols: _*)
     if (seqs.isEmpty) base
     else base.unionByName(spark.read.parquet(
-        seqs.map(k => s"$root/delta/assignments/seq=$k"): _*)
+        seqs.map(DeltaLog.batchDir(root, "assignments", _)): _*)
       .select(cols: _*))
   }
 
@@ -262,7 +264,7 @@ object VectorIndex {
     val base = spark.read.parquet(s"$root/centroids").select(cols: _*)
     if (seqs.isEmpty) base
     else base.unionByName(spark.read.parquet(
-        seqs.map(k => s"$root/delta/centroids/seq=$k"): _*)
+        seqs.map(DeltaLog.batchDir(root, "centroids", _)): _*)
       .select(cols: _*))
       .groupBy(col("label"), col("i")).agg(sum(col("cx")).as("cx"))
   }

@@ -2,16 +2,16 @@ package graft.scale
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared versioned-root plumbing for the `scale/` persisted
-  * artifacts ([[SignatureStore]], [[VectorIndex]]): a `VERSION`
-  * pointer file selects the current `v<n>` directory, new versions
-  * are CLAIMED create-exclusively before anything writes (two JVMs
-  * can never interleave files in one version), the pointer flip
+/** The one versioned-root protocol, for every versioned artifact —
+  * TripleStore datasets ([[graft.bgp.TripleStore.writeDatasetVersioned]])
+  * and the `scale/` indexes ([[SignatureStore]], [[VectorIndex]]): a
+  * `VERSION` pointer file selects the current `v<n>` directory, new
+  * versions are CLAIMED create-exclusively before anything writes (two
+  * JVMs can never interleave files in one version), the pointer flip
   * re-checks its precondition and aborts loudly on a lost race, and
   * old versions garbage-collect past a retention bound so pinned
-  * readers finish on intact files. The same discipline
-  * [[graft.bgp.TripleStore]] uses for dataset roots, factored for the
-  * scale-layer artifacts.
+  * readers finish on intact files. The delta batches under a version
+  * root are [[DeltaLog]]'s.
   */
 private[graft] object VersionedRoot {
 

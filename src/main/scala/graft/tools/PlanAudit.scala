@@ -5,30 +5,36 @@ package graft.tools
   * broadcast in query code must route through GuardedBroadcast.maybe
   * so a broken "this is small" assumption degrades to a shuffle join
   * instead of an executor OOM. [[rawBroadcastHints]] returns the
-  * offending file:line list (empty = clean); ToolsSpec pins it empty.
+  * offending file:line list (empty = clean); ToolsSpec pins it, and
+  * the other source audits here, empty.
   */
 object PlanAudit {
+
+  /** `file:line` for every line `hit` flags in the main sources under
+    * `root`, outside the files named in `exempt` and this auditor (its
+    * docs name every pattern).
+    */
+  private def scan(root: String, exempt: String*)(
+      hit: String => Boolean): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val skip = exempt.toSet + "PlanAudit.scala"
+    java.nio.file.Files.walk(java.nio.file.Paths.get(root)).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        !skip(p.getFileName.toString))
+      .flatMap { p =>
+        java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if hit(line) => s"$p:${i + 1}"
+        }
+      }.toSeq
+  }
 
   /** `file:line` for every raw broadcast( hint in main sources outside
     * the guard itself.
     */
-  def rawBroadcastHints(root: String = "src/main/scala/graft"): Seq[String] = {
-    import scala.jdk.CollectionConverters._
-    val base = java.nio.file.Paths.get(root)
-    java.nio.file.Files.walk(base).iterator().asScala
-      .filter(p => p.toString.endsWith(".scala") &&
-        !p.toString.endsWith("GuardedBroadcast.scala") &&
-        !p.toString.endsWith("PlanAudit.scala")) // the auditor's own docs
-      .flatMap { p =>
-        java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
-          // strip the guard's own qualified calls before matching
-          case (line, i)
-              if line.replace("GuardedBroadcast.maybe(", "")
-                .matches(".*\\bbroadcast\\(.*") =>
-            s"$p:${i + 1}"
-        }
-      }.toSeq
-  }
+  def rawBroadcastHints(root: String = "src/main/scala/graft"): Seq[String] =
+    // strip the guard's own qualified calls before matching
+    scan(root, "GuardedBroadcast.scala")(_.replace("GuardedBroadcast.maybe(", "")
+      .matches(".*\\bbroadcast\\(.*"))
 
   /** `file:line` for every raw `Window.orderBy(` (the accidental
     * partition-less window form — Spark plans it as a single-task
@@ -37,20 +43,20 @@ object PlanAudit {
     * ToolsSpec pins this empty and EntrySpec plan-walks the registry
     * for any empty-spec window that slips through another spelling.
     */
-  def rawGlobalWindows(root: String = "src/main/scala/graft"): Seq[String] = {
-    import scala.jdk.CollectionConverters._
-    val base = java.nio.file.Paths.get(root)
-    java.nio.file.Files.walk(base).iterator().asScala
-      .filter(p => p.toString.endsWith(".scala") &&
-        !p.toString.endsWith("BoundedWindow.scala") && // the idiom's docs
-        !p.toString.endsWith("PlanAudit.scala")) // the auditor's own docs
-      .flatMap { p =>
-        java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
-          case (line, i) if line.contains("Window.orderBy(") =>
-            s"$p:${i + 1}"
-        }
-      }.toSeq
-  }
+  def rawGlobalWindows(root: String = "src/main/scala/graft"): Seq[String] =
+    scan(root, "BoundedWindow.scala")(_.contains("Window.orderBy("))
+
+  /** `file:line` for every versioned-root protocol step taken outside
+    * `scale/VersionedRoot` and `scale/DeltaLog` — building a `VERSION`
+    * pointer path, or a create-exclusive `create(…, false)` — in main
+    * sources. Every versioned artifact claims, flips and commits
+    * through those two, so their rules cannot drift apart again;
+    * ToolsSpec pins this empty.
+    */
+  def rawVersionedRootIo(root: String = "src/main/scala/graft"): Seq[String] =
+    scan(root, "VersionedRoot.scala", "DeltaLog.scala")(line =>
+      line.matches(".*[/\"]VERSION\".*") ||
+        line.matches(".*\\bcreate\\(.*,\\s*false\\s*\\).*"))
 
   /** Build-artifact / scratch directories sitting inside the SOURCE
     * tree (an sbt run with the wrong cwd drops `target/` + a

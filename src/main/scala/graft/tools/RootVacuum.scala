@@ -1,24 +1,31 @@
 package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.scale.VersionedRoot
+import graft.scale.{DeltaLog, VersionedRoot}
 
 /** Vacuum / inspect for the versioned artifact roots (TripleStore
-  * datasets, SignatureStore, VectorIndex — all three share the
-  * `VERSION`-pointer + `v<n>.claim` + `delta/seq=<k>(.lock)`
-  * discipline): lists every version, claim, pending delta batch, and
-  * slot lock with its status and bytes, and REAPS the debris crashed
+  * datasets, SignatureStore, VectorIndex — all three go through one
+  * protocol, [[VersionedRoot]] + [[DeltaLog]]): lists every version,
+  * claim, committed delta batch, uncommitted batch leftover, and slot
+  * lock with its status and bytes, and REAPS the debris crashed
   * writers leak — an orphaned `v<n>.claim` otherwise blocks version
   * `n` forever (claimVersion fails loudly on it), and dangling
-  * `seq=<k>.lock` files / partial batches accumulate without bound.
-  * The lakehouse `VACUUM` the retention story was missing.
+  * `seq=<k>.lock` files and `.tmp-<k>` leftovers accumulate without
+  * bound. The lakehouse `VACUUM` the retention story was missing.
+  *
+  * One commit rule decides what is live ([[DeltaLog.commit]]): a
+  * family's batch is committed when its `seq=<k>` directory exists,
+  * and a seq committed in ANY family is live data — a dataset writes
+  * only the logs an op touched, so a rule that needs every family
+  * would call a dataset's batches partial and reap them.
   *
   * Reaping is conservative by construction:
   *  - only versions AHEAD of the pointer (crashed before their flip)
   *    are candidates — retained versions behind the pointer belong to
   *    pinned readers and are flipPointer's GC to collect;
-  *  - only locks with NO complete batch (some family missing its
-  *    `_SUCCESS`) are candidates — a complete batch is live data;
+  *  - in the current version's delta log, only locks that no family
+  *    committed (`dangling`) and uncommitted `.tmp-<k>` leftovers are
+  *    candidates — a committed batch is never touched;
   *  - everything reaped must be older than `olderThanMs` (file mtime),
   *    so a writer mid-flight is never swept out from under its claim.
   */
@@ -27,65 +34,20 @@ object RootVacuum {
   final case class Entry(kind: String, name: String, status: String,
       bytes: Long)
 
-  private def fsOf(spark: SparkSession, path: String) =
-    VersionedRoot.fsOf(spark, path)
-
   private def sizeOf(fs: org.apache.hadoop.fs.FileSystem,
       p: org.apache.hadoop.fs.Path): Long =
     if (!fs.exists(p)) 0L
     else fs.getContentSummary(p).getLength
 
-  /** Delta families present under a version root (subdirectories of
-    * `delta/` — artifact-agnostic; locks are files, not families).
-    */
-  private def familiesOf(fs: org.apache.hadoop.fs.FileSystem,
-      root: String): Seq[String] = {
-    val dp = new org.apache.hadoop.fs.Path(s"$root/delta")
-    if (!fs.exists(dp)) Nil
-    else fs.listStatus(dp).toSeq.filter(_.isDirectory)
-      .map(_.getPath.getName).sorted
-  }
-
-  private def seqsOf(fs: org.apache.hadoop.fs.FileSystem, root: String,
-      fam: String): Seq[Int] = {
-    val p = new org.apache.hadoop.fs.Path(s"$root/delta/$fam")
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).toSeq.flatMap { st =>
-      val n = st.getPath.getName
-      if (st.isDirectory && n.startsWith("seq="))
-        scala.util.Try(n.drop(4).toInt).toOption
-      else None
-    }.sorted
-  }
-
-  private def lockSeqs(fs: org.apache.hadoop.fs.FileSystem,
-      root: String): Seq[Int] = {
-    val dp = new org.apache.hadoop.fs.Path(s"$root/delta")
-    if (!fs.exists(dp)) Nil
-    else fs.listStatus(dp).toSeq
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".lock"))
-      .flatMap(st => scala.util.Try(st.getPath.getName
-        .stripPrefix("seq=").stripSuffix(".lock").toInt).toOption)
-      .sorted
-  }
-
-  /** Whether seq `k` under `root` is COMPLETE: every family has the
-    * batch directory with its `_SUCCESS` marker.
-    */
-  private def complete(fs: org.apache.hadoop.fs.FileSystem, root: String,
-      k: Int): Boolean = {
-    val fams = familiesOf(fs, root)
-    fams.nonEmpty && fams.forall(f => fs.exists(
-      new org.apache.hadoop.fs.Path(s"$root/delta/$f/seq=$k/_SUCCESS")))
-  }
-
   /** Inventory of a versioned root: one [[Entry]] per version
-    * (current / retained / orphaned), per claim (held / orphaned), per
-    * pending delta batch (complete / partial), and per slot lock
-    * (held / dangling). Filesystem-metadata-sized — never reads data.
+    * (current / retained / orphaned), per claim (held / orphaned), and
+    * in the current version's delta log per committed batch
+    * (`delta_batch`, complete), per uncommitted leftover (`delta_tmp`
+    * `<fam>/.tmp-<k>`, uncommitted), and per slot lock (held /
+    * dangling). Filesystem-metadata-sized — never reads data.
     */
   def inspectEntries(spark: SparkSession, path: String): Seq[Entry] = {
-    val (fs, p) = fsOf(spark, path)
+    val (fs, p) = VersionedRoot.fsOf(spark, path)
     if (!fs.exists(p)) return Nil
     val cur = VersionedRoot.currentVersion(spark, path)
     val versions = VersionedRoot.listVersions(spark, path)
@@ -109,23 +71,27 @@ object RootVacuum {
         else "orphaned"
       Entry("claim", s"v$v", status, 0L)
     }
-    val curRoot = cur.map(v => s"$path/v$v")
-    val batchEntries = curRoot.toSeq.flatMap { root =>
-      val fams = familiesOf(fs, root)
-      fams.flatMap(f => seqsOf(fs, root, f)).distinct.sorted.map { k =>
-        Entry("delta_batch", s"seq=$k",
-          if (complete(fs, root, k)) "complete" else "partial",
-          fams.map(f => sizeOf(fs,
-            new org.apache.hadoop.fs.Path(s"$root/delta/$f/seq=$k"))).sum)
+    val deltaEntries = cur.map(v => s"$path/v$v").toSeq.flatMap { root =>
+      val slots = DeltaLog.slots(fs, root)
+      def bytes(rel: String) =
+        sizeOf(fs, new org.apache.hadoop.fs.Path(s"$root/delta/$rel"))
+      val batches = slots.anyCommitted.toSeq.sorted.map { k =>
+        Entry("delta_batch", s"seq=$k", "complete",
+          slots.committed.collect {
+            case (f, ks) if ks(k) => bytes(s"$f/seq=$k")
+          }.sum)
       }
-    }
-    val lockEntries = curRoot.toSeq.flatMap { root =>
-      lockSeqs(fs, root).map { k =>
+      val tmps = slots.uncommitted.toSeq.sortBy(_._1).flatMap { case (f, ks) =>
+        ks.toSeq.sorted.map(k =>
+          Entry("delta_tmp", s"$f/.tmp-$k", "uncommitted", bytes(s"$f/.tmp-$k")))
+      }
+      val locks = slots.locks.toSeq.sorted.map { k =>
         Entry("lock", s"seq=$k",
-          if (complete(fs, root, k)) "held" else "dangling", 0L)
+          if (slots.anyCommitted(k)) "held" else "dangling", 0L)
       }
+      batches ++ tmps ++ locks
     }
-    vEntries ++ cEntries ++ batchEntries ++ lockEntries
+    vEntries ++ cEntries ++ deltaEntries
   }
 
   def inspect(spark: SparkSession, path: String): DataFrame = {
@@ -135,49 +101,38 @@ object RootVacuum {
 
   /** Reap crashed-writer debris older than `olderThanMs`: orphaned
     * ahead-of-pointer versions with their claims, orphaned claims with
-    * no version directory, and dangling slot locks with their partial
-    * family directories. Returns the reaped paths. Current and
-    * retained versions, held claims, and complete batches are never
-    * touched.
+    * no version directory, and in the current version's delta log the
+    * dangling slot locks and uncommitted `.tmp-<k>` leftovers. Returns
+    * the reaped paths. Current and retained versions, held claims,
+    * held locks and committed batches are never touched.
     */
   def reap(spark: SparkSession, path: String,
       olderThanMs: Long = 3600L * 1000): Seq[String] = {
-    val (fs, p) = fsOf(spark, path)
+    val (fs, p) = VersionedRoot.fsOf(spark, path)
     if (!fs.exists(p)) return Nil
     val now = System.currentTimeMillis()
-    def oldEnough(hp: org.apache.hadoop.fs.Path): Boolean =
-      scala.util.Try(
+    val reaped = Seq.newBuilder[String]
+    // delete `rel` under `path` if it is older than the guard
+    def rm(rel: String, recursive: Boolean): Boolean = {
+      val hp = new org.apache.hadoop.fs.Path(s"$path/$rel")
+      val old = scala.util.Try(
         now - fs.getFileStatus(hp).getModificationTime >= olderThanMs)
         .getOrElse(false)
-    val reaped = Seq.newBuilder[String]
-    def rm(hp: org.apache.hadoop.fs.Path, recursive: Boolean): Unit =
-      if (fs.delete(hp, recursive)) reaped += hp.toString
-    val cur = VersionedRoot.currentVersion(spark, path)
+      val gone = old && fs.delete(hp, recursive)
+      if (gone) reaped += hp.toString
+      gone
+    }
+    val delta = VersionedRoot.currentVersion(spark, path).map(v => s"v$v/delta")
     inspectEntries(spark, path).foreach {
       case Entry("version", name, "orphaned", _) =>
-        val vp = new org.apache.hadoop.fs.Path(s"$path/$name")
-        if (oldEnough(vp)) {
-          rm(vp, recursive = true)
-          val cp = new org.apache.hadoop.fs.Path(s"$path/$name.claim")
-          if (fs.exists(cp)) rm(cp, recursive = false)
-        }
+        // its claim is older than the version directory it guards
+        if (rm(name, recursive = true)) rm(s"$name.claim", recursive = false)
       case Entry("claim", name, "orphaned", _) =>
-        val cp = new org.apache.hadoop.fs.Path(s"$path/$name.claim")
-        if (oldEnough(cp)) rm(cp, recursive = false)
+        rm(s"$name.claim", recursive = false)
       case Entry("lock", name, "dangling", _) =>
-        cur.foreach { v =>
-          val root = s"$path/v$v"
-          val lp = new org.apache.hadoop.fs.Path(s"$root/delta/$name.lock")
-          if (oldEnough(lp)) {
-            // partial family dirs of the dead append go with the lock
-            familiesOf(fs, root).foreach { f =>
-              val bp = new org.apache.hadoop.fs.Path(
-                s"$root/delta/$f/$name")
-              if (fs.exists(bp)) rm(bp, recursive = true)
-            }
-            rm(lp, recursive = false)
-          }
-        }
+        delta.foreach(d => rm(s"$d/$name.lock", recursive = false))
+      case Entry("delta_tmp", name, "uncommitted", _) =>
+        delta.foreach(d => rm(s"$d/$name", recursive = true))
       case _ => ()
     }
     reaped.result()

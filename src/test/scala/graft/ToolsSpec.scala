@@ -21,6 +21,21 @@ class ToolsSpec extends AnyFunSuite {
         s"BoundedWindow.ordered or ExactRank: ${hits.mkString(", ")}")
   }
 
+  test("no versioned-root protocol step outside VersionedRoot and DeltaLog (source audit)") {
+    val hits = graft.tools.PlanAudit.rawVersionedRootIo()
+    assert(hits.isEmpty,
+      "claim, flip and commit through scale/VersionedRoot and " +
+        s"scale/DeltaLog: ${hits.mkString(", ")}")
+    // the audit sees both shapes it forbids
+    val dir = java.nio.file.Files.createTempDirectory("audit_test")
+    java.nio.file.Files.write(dir.resolve("Rogue.scala"), Seq(
+      "val vp = new Path(s\"$path/VERSION\")",
+      "fs.create(new Path(s\"$root/v1.claim\"), false).close()",
+      "fs.create(tmp, true)").mkString("\n").getBytes)
+    assert(graft.tools.PlanAudit.rawVersionedRootIo(dir.toString).map(
+      _.split(':').last) == Seq("1", "2"))
+  }
+
   test("no stray build dirs inside the source WORKTREE (hygiene audit)") {
     val stray = graft.tools.PlanAudit.strayBuildDirs()
     assert(stray.isEmpty,
@@ -92,5 +107,76 @@ class ToolsSpec extends AnyFunSuite {
     intercept[OutOfMemoryError] {
       memo.getOrElseUpdate(4, "next") // evicting "oom" must propagate
     }
+  }
+
+  test("RootVacuum keeps a dataset's driver-written delta batches and reaps only debris") {
+    import java.nio.file.{Files, Paths}
+    import graft.bgp.{BgpPlanner, SparqlUpdate, TripleStore}
+    import graft.tools.RootVacuum
+    val spark = GraftSession.local("2")
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-vac-ds").toString
+    TripleStore.writeDatasetVersioned(TripleStore.fromTriples(
+      Seq(("t:1", "name", "one")).toDF("s", "p", "o")), dir)
+    // a served endpoint's write-back: a default-graph batch, then a
+    // quads batch, each written on the driver (no `_SUCCESS` marker)
+    for (op <- Seq("""INSERT DATA { <t:2> <name> "two" }""",
+        """INSERT DATA { GRAPH <g:1> { <t:3> <name> "three" } }""")) {
+      val prev = TripleStore.fromDatasetParquet(spark, dir)
+      val (next, deltas) = SparqlUpdate.applyAllWithDelta(spark, prev, op)
+      TripleStore.writeBackDelta(prev, next, dir, deltas)
+    }
+    val delta = Paths.get(dir, "v0", "delta")
+    assert(Files.exists(delta.resolve("default/seq=0")))
+    assert(Files.exists(delta.resolve("quads/seq=1")))
+    assert(!Files.exists(delta.resolve("default/seq=0/_SUCCESS")))
+    def answers: (Set[String], Set[String]) = {
+      val st = TripleStore.fromDatasetParquet(spark, dir)
+      (BgpPlanner.query(st, "select ?s ?v where { ?s name ?v }")
+        .collect().map(_.mkString("|")).toSet,
+        BgpPlanner.query(st, "select ?g ?s where { GRAPH ?g { ?s name ?v } }")
+          .select("g", "s").collect().map(_.mkString("|")).toSet)
+    }
+    val before = answers
+    assert(before == (Set("t:1|one", "t:2|two"), Set("g:1|t:3")))
+    def entries(kind: String) = RootVacuum.inspectEntries(spark, dir)
+      .filter(_.kind == kind).map(e => (e.name, e.status))
+    assert(entries("delta_batch") == Seq(("seq=0", "complete"), ("seq=1", "complete")))
+    assert(entries("lock") == Seq(("seq=0", "held"), ("seq=1", "held")))
+    assert(RootVacuum.reap(spark, dir, olderThanMs = 0).isEmpty)
+    assert(answers == before)
+    // a slot claimed by a writer that died before committing, and a
+    // batch written but never renamed into place: both are debris
+    assert(delta.resolve("seq=7.lock").toFile.createNewFile())
+    Files.createDirectories(delta.resolve("default/.tmp-2"))
+    Files.write(delta.resolve("default/.tmp-2/part-0.parquet"), Array[Byte](1))
+    assert(entries("lock").contains(("seq=7", "dangling")))
+    assert(entries("delta_tmp") == Seq(("default/.tmp-2", "uncommitted")))
+    assert(RootVacuum.reap(spark, dir, olderThanMs = 0).map(_.split("/delta/").last)
+      .sorted == Seq("default/.tmp-2", "seq=7.lock"))
+    assert(!Files.exists(delta.resolve("seq=7.lock")))
+    assert(!Files.exists(delta.resolve("default/.tmp-2")))
+    assert(answers == before)
+  }
+
+  test("RootVacuum's age guard keeps a young dangling lock and a young orphaned claim") {
+    import java.nio.file.{Files, Paths}
+    import graft.scale.VersionedRoot
+    import graft.tools.RootVacuum
+    val spark = GraftSession.local("2")
+    val dir = Files.createTempDirectory("graft-vac-age").toString
+    VersionedRoot.claimVersion(spark, dir, 0)
+    Files.createDirectories(Paths.get(dir, "v0", "delta"))
+    VersionedRoot.flipPointer(spark, dir, 0, keepVersions = 2)
+    val lock = Paths.get(dir, "v0", "delta", "seq=0.lock")
+    val claim = Paths.get(dir, "v3.claim")
+    assert(lock.toFile.createNewFile() && claim.toFile.createNewFile())
+    assert(RootVacuum.inspectEntries(spark, dir).map(e => (e.kind, e.name, e.status))
+      .toSet == Set(("version", "v0", "current"), ("claim", "v0", "held"),
+        ("claim", "v3", "orphaned"), ("lock", "seq=0", "dangling")))
+    assert(RootVacuum.reap(spark, dir).isEmpty)
+    assert(Files.exists(lock) && Files.exists(claim))
+    assert(RootVacuum.reap(spark, dir, olderThanMs = 0).size == 2)
+    assert(!Files.exists(lock) && !Files.exists(claim))
   }
 }
