@@ -454,7 +454,8 @@ object SparqlServer {
     * dataset version then current, how the served store was made
     * (`advanced`, `loaded` or `flipped`, see [[TripleStore.WriteBack]];
     * `memory` without a persist directory), and the apply, write and
-    * advance times in ms.
+    * advance times in ms; a version flip adds the units it rewrote and
+    * carried ([[TripleStore.Flip]]).
     */
   private[graft] def updateLine(ops: Int, applyMs: Long,
       wb: Option[TripleStore.WriteBack]): String = wb match {
@@ -463,7 +464,8 @@ object SparqlServer {
       s"[sparql] update ops=$ops delta_rows=${w.rows.fold("?")(_.toString)} " +
         s"seqs=${if (w.seqs.isEmpty) "-" else w.seqs.mkString(",")} " +
         s"version=${w.version.fold("-")(_.toString)} store=${w.outcome} " +
-        s"apply_ms=$applyMs write_ms=${w.writeMs} advance_ms=${w.advanceMs}"
+        s"apply_ms=$applyMs write_ms=${w.writeMs} advance_ms=${w.advanceMs}" +
+        w.flip.fold("")(f => s" rewrote=${f.rewrote} carried=${f.carried}")
   }
 
   /** The structured line the endpoint logs for one query request: a

@@ -3,7 +3,7 @@ package graft.bgp
 import graft.scale.{DeltaLog, GuardedBroadcast, VersionedRoot}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
@@ -260,13 +260,18 @@ object TripleStore {
     TripleStore(slices, None)
   }
 
-  /** Persist a string-form store as parquet partitioned by predicate —
-    * the on-disk layout of the vertical partitioning: one directory
-    * per `p=...`, so a constant-predicate pattern scan is answered by
-    * partition pruning (see [[fromPartitionedParquet]]).
+  /** Persist a store as parquet partitioned by predicate — the on-disk
+    * layout of the vertical partitioning: one directory per `p=...`, so
+    * a constant-predicate pattern scan is answered by partition pruning
+    * (see [[fromPartitionedParquet]]). Partition directories keep the
+    * predicate's STRING name (the slice map key) on every store form;
+    * s/o are lexical strings, or ids on an encoded store.
     */
   def writePartitioned(store: TripleStore, path: String): Unit =
-    store.unionView.write.mode("overwrite").partitionBy("p").parquet(path)
+    store.slices.map { case (p, df) =>
+      df.select(col("s"), lit(p).as("p"), col("o"))
+    }.reduce(_ unionByName _)
+      .write.mode("overwrite").partitionBy("p").parquet(path)
 
   /** Persist a store's whole DATASET: the default graph under
     * `<path>/default` (p-partitioned — [[writePartitioned]]) and the
@@ -285,21 +290,31 @@ object TripleStore {
     // beside them under <path>/dict — the >10⁹-term regime's layout,
     // where a full string rewrite per op would be fatal. The id regime
     // (hash vs sequential) is re-detected from the dict on reload
-    // ([[isSequentialDict]]), so no extra marker file is needed.
-    if (store.encoded) {
-      writeEncodedPartitioned(store, s"$path/default")
-      store.dict.foreach(_.select(col("id"), col("value"), col("dt"),
-          col("lang"))
-        .write.mode("overwrite").parquet(s"$path/dict"))
-    } else writePartitioned(store, s"$path/default")
+    // ([[isSequentialDict]]), so no extra marker file is needed. A
+    // store with no slices writes no `default` tree (a version flip
+    // that carries every slice).
+    if (store.slices.nonEmpty) writePartitioned(store, s"$path/default")
+    store.dict.foreach(_.select(DictLog.cols.map(col): _*)
+      .write.mode("overwrite").parquet(s"$path/$DictUnit"))
     // an all-empty quads relation writes NO subtree (a partitioned
     // parquet dir with zero partition dirs has no inferable schema on
     // reload; an empty graph set and an absent one are the same thing)
     store.quads.filter(q => !q.isEmpty).foreach(q =>
       q.select(col("s"), col("o"), col("g"), col("p"))
         .write.mode("overwrite").partitionBy("g", "p")
-        .parquet(s"$path/quads"))
+        .parquet(s"$path/$QuadsUnit"))
   }
+
+  /** A dataset's units, the grain at which a version flip rewrites or
+    * carries: one per `default/p=<pred>` partition (the predicate
+    * Hive-escaped, as the partitioned write names the directory), the
+    * `quads` tree and the `dict` directory.
+    */
+  private val QuadsUnit = "quads"
+  private val DictUnit = "dict"
+  private val SlicePrefix = "default/p="
+  private def sliceUnit(p: String): String = SlicePrefix +
+    org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(p)
 
   /** Row-grain delta of ONE update op against the store it was applied
     * to, in store (string) form. `default` rows are `(p, s, o, del)`,
@@ -320,16 +335,22 @@ object TripleStore {
       dictRows: Option[DataFrame] = None)
 
   /** Delta batches a dataset version absorbs before the write-back
-    * compacts them into a fresh full version (the lakehouse
-    * log-then-compact move; threshold keeps read-time merge cost and
-    * delta-file counts bounded).
+    * compacts them into a fresh version (the lakehouse log-then-compact
+    * move; threshold keeps read-time merge cost and delta-file counts
+    * bounded). The compaction rewrites only the units the log touched
+    * and carries the rest by reference ([[writeDatasetVersioned]]), so
+    * its cost follows the touched slices, not the dataset.
     */
   val CompactDeltaBatches = 16
 
   /** Versions retained after a pointer flip: the NEW version plus one
     * predecessor, so readers that loaded before the flip finish their
     * scans on intact files (one full compaction cycle of slack —
-    * CompactDeltaBatches row-grain ops, or one structural op).
+    * CompactDeltaBatches row-grain ops, or one structural op). An
+    * older version that a retained version's manifest still names is
+    * kept as a holder of just the named units: storage, not a version
+    * ([[listVersions]] leaves it out, and a time-travel read of it
+    * fails).
     */
   val KeepVersions = 2
 
@@ -371,32 +392,75 @@ object TripleStore {
     Some(new org.apache.hadoop.fs.Path(root).getName)
       .filter(_.startsWith("v")).flatMap(_.drop(1).toIntOption)
 
-  /** Write `store` as the NEXT full version of the dataset at `path`
-    * and flip the `VERSION` pointer: `<path>/v<n>/{default,quads}` in
-    * the [[writeDataset]] layout, claimed, flipped and
-    * garbage-collected past [[KeepVersions]] by
-    * [[graft.scale.VersionedRoot]].
+  /** What a version flip wrote: the version, how many units it
+    * rewrote into it and how many its manifest carries.
+    */
+  final case class Flip(version: Int, rewrote: Int, carried: Int)
+
+  /** Write `store` as the NEXT version of the dataset at `path` and flip
+    * the `VERSION` pointer — the one flip of bootstrap, structural ops
+    * and compaction, claimed, flipped and garbage-collected past
+    * [[KeepVersions]] by [[graft.scale.VersionedRoot]].
+    *
+    * Only the units whose relation is no longer the current version's
+    * own base scan are rewritten, into `<path>/v<n>` in the
+    * [[writeDataset]] layout (one `partitionBy("p")` write over the
+    * rewritten slices, plus `quads`/`dict` when touched). Every other
+    * unit is carried by reference: the version's manifest maps it to
+    * the `v<m>` directory that holds it. A store that does not stand
+    * on the current version (bootstrap, a store built in memory, one
+    * loaded from an older version or from the legacy unversioned
+    * layout) has no base, and everything is rewritten.
+    *
     * Readers pinned to the previous version finish undisturbed; a
     * legacy unversioned layout at `path` is retired (its dirs deleted)
     * once the SECOND version lands — until then it plays the role of
     * the previous version.
     */
-  def writeDatasetVersioned(store: TripleStore, path: String): Unit = {
+  def writeDatasetVersioned(store: TripleStore, path: String): Flip = {
     val spark = sparkOf(store)
+    val (fs, _) = VersionedRoot.fsOf(spark, path)
+    require(store.slices.nonEmpty, s"a dataset needs a predicate slice: $path")
     val n = currentVersion(spark, path).map(_ + 1).getOrElse(0)
     // multi-writer guard (a batch job beside a served endpoint is the
     // normal lakehouse shape): the losing JVM fails loudly at the claim
     // instead of interleaving files with the winner, and at the flip
     // instead of orphaning the winner's version
     VersionedRoot.claimVersion(spark, path, n)
-    writeDataset(store, s"$path/v$n")
+    val carried = carriedUnits(store, fs, path, n)
+    val fresh = store.copy(
+      slices = store.slices.filter { case (p, _) => !carried.contains(sliceUnit(p)) },
+      quads = store.quads.filterNot(_ => carried.contains(QuadsUnit)),
+      dict = store.dict.filterNot(_ => carried.contains(DictUnit)))
+    val root = s"$path/v$n"
+    writeDataset(fresh, root)
+    VersionedRoot.writeManifest(fs, root, carried)
     VersionedRoot.flipPointer(spark, path, n, KeepVersions)
-    if (n >= KeepVersions - 1 && n >= 1) {
-      val (fs, _) = VersionedRoot.fsOf(spark, path)
-      Seq("default", "quads", "delta", "dict").foreach(d =>
+    if (n >= KeepVersions - 1 && n >= 1)
+      Seq("default", QuadsUnit, "delta", DictUnit).foreach(d =>
         fs.delete(new org.apache.hadoop.fs.Path(s"$path/$d"), true))
-    }
+    Flip(n, fresh.slices.size + fresh.quads.size + fresh.dict.size, carried.size)
   }
+
+  /** The units of `store` that version `n` of the dataset at `path` can
+    * carry, each mapped to the version holding it: those whose relation
+    * is still the base scan of version `n - 1`, when `store` stands on
+    * it. A unit version `n - 1` itself carries keeps its holder, so
+    * manifests never chain.
+    */
+  private def carriedUnits(store: TripleStore, fs: org.apache.hadoop.fs.FileSystem,
+      path: String, n: Int): Map[String, Int] =
+    store.standing.filter(s => n >= 1 && s.root == s"$path/v${n - 1}")
+      .fold(Map.empty[String, Int]) { s =>
+        def same(a: Option[DataFrame], b: Option[DataFrame]): Boolean =
+          a.exists(x => b.exists(_ eq x))
+        val units = store.slices.collect {
+          case (p, df) if same(Some(df), s.base.slices.get(p)) => sliceUnit(p)
+        } ++ Option.when(same(store.quads, s.base.quads))(QuadsUnit) ++
+          Option.when(same(store.dict, s.base.dict))(DictUnit)
+        val held = VersionedRoot.readManifest(fs, s.root)
+        units.map(u => u -> held.getOrElse(u, n - 1)).toMap
+      }
 
   /** Write one delta batch of log `part` as `delta/<part>/seq=<seq>`
     * under version root `root`, committed by [[graft.scale.DeltaLog.commit]].
@@ -569,12 +633,13 @@ object TripleStore {
     * op, compaction) — the delta slots it claimed, the insert and
     * tombstone rows it appended (None when a batch was written without
     * being collected; dict rows are not counted), the
-    * dataset version then current, and the milliseconds spent writing
-    * and then making the store.
+    * dataset version then current, the milliseconds spent writing
+    * and then making the store, and for a flip the units it rewrote
+    * and carried ([[Flip]]).
     */
   final case class WriteBack(outcome: String, seqs: Seq[Int],
       rows: Option[Long], version: Option[Int], writeMs: Long,
-      advanceMs: Long)
+      advanceMs: Long, flip: Option[Flip] = None)
 
   /** DELTA-GRAIN write-back of one update chain into the dataset at
     * `path`, returning the store that now stands on disk. Each row-grain
@@ -586,8 +651,8 @@ object TripleStore {
     * `rdf:type` triple writes one kilobyte-scale delta file instead of
     * rewriting the corpus's hottest predicate slice. Past
     * [[CompactDeltaBatches]] batches the write-back compacts `next`
-    * into a fresh full version ([[writeDatasetVersioned]]) and the log
-    * resets.
+    * into a fresh version ([[writeDatasetVersioned]]: the slices the
+    * log touched are rewritten, the rest carried) and the log resets.
     *
     * The returned store is `prev` ADVANCED by the appended batches when
     * `prev` is what stood on disk before them (it carries the
@@ -631,11 +696,11 @@ object TripleStore {
     val t0 = System.nanoTime()
     def ms(from: Long): Long = (System.nanoTime() - from) / 1000000
     def flipped(seqs: Seq[Int], rows: Option[Long]): TripleStore = {
-      writeDatasetVersioned(next, path)
+      val flip = writeDatasetVersioned(next, path)
       val t1 = System.nanoTime()
       val st = fromDatasetParquet(spark, path)
-      report(WriteBack("flipped", seqs, rows, currentVersion(spark, path),
-        (t1 - t0) / 1000000, ms(t1)))
+      report(WriteBack("flipped", seqs, rows, Some(flip.version),
+        (t1 - t0) / 1000000, ms(t1), Some(flip)))
       st
     }
     val hasLayout = currentVersion(spark, path).isDefined ||
@@ -768,15 +833,22 @@ object TripleStore {
     * materialized RDD (lazy — no job storm over a wide predicate
     * inventory; each slice materializes on first use). This is the
     * in-memory analog of the [[writeBackDelta]] + [[fromDatasetParquet]]
-    * loop for endpoints serving without a persist directory.
+    * loop for endpoints serving without a persist directory. A relation
+    * that is still the base scan of the version the store was loaded
+    * from has no lineage to cut and is kept as it is, so a version flip
+    * can still carry it by reference ([[writeDatasetVersioned]]).
     */
-  def truncateLineage(st: TripleStore): TripleStore =
+  def truncateLineage(st: TripleStore): TripleStore = {
+    val base = st.standing.map(_.base)
+    def cut(df: DataFrame, scan: Option[DataFrame]): DataFrame =
+      if (scan.exists(_ eq df)) df else df.localCheckpoint(eager = false)
     st.copy(
       slices = st.slices.map { case (p, df) =>
-        p -> df.localCheckpoint(eager = false)
+        p -> cut(df, base.flatMap(_.slices.get(p)))
       },
-      dict = st.dict.map(_.localCheckpoint(eager = false)),
-      quads = st.quads.map(_.localCheckpoint(eager = false)))
+      dict = st.dict.map(cut(_, base.flatMap(_.dict))),
+      quads = st.quads.map(cut(_, base.flatMap(_.quads))))
+  }
 
   /** `base ANTI touched ∪ alive`: one relation of a version's base
     * layout with a delta verdict merged in — the read-time merge of
@@ -873,7 +945,10 @@ object TripleStore {
     * slices dispatch by partition pruning, and GRAPH blocks filter the
     * quads relation on its `(g, p)` partition columns, Catalyst turns
     * both into `PartitionFilters` (ScaleSpec asserts the pruned scan) —
-    * and merges any pending delta log on top: per touched slice (and
+    * taking each unit the version's manifest carries from the directory
+    * the manifest names (each holding directory is read once, and its
+    * slices keep their pruned scans), and merges any pending delta log
+    * on top: per touched slice (and
     * the quads), `base ANTI touched ∪ alive` ([[mergeVerdict]]);
     * untouched slices stay bare scans. A log that fits under
     * `spark.sql.autoBroadcastJoinThreshold` is collected to the driver
@@ -908,6 +983,10 @@ object TripleStore {
       maxOps: Option[Int]): TripleStore = {
     val (fs, _) = VersionedRoot.fsOf(spark, root)
     def exists(d: String) = fs.exists(new org.apache.hadoop.fs.Path(s"$root/$d"))
+    // a carried unit is read from the version directory holding it
+    val carried = VersionedRoot.readManifest(fs, root)
+    def holder(unit: String): String = carried.get(unit)
+      .fold(root)(m => s"${root.substring(0, root.lastIndexOf('/'))}/v$m")
     // the slots are listed before the log is read and the read stops at
     // them, so a batch committed during the load is never half-merged
     // nor mistaken for merged
@@ -917,21 +996,32 @@ object TripleStore {
     // encoded datasets carry their dictionary beside the slices; the id
     // regime is re-detected from the loaded rows
     val dict0 =
-      if (exists("dict")) Some(spark.read.parquet(s"$root/dict")
-        .select(DictLog.cols.map(col): _*))
+      if (carried.contains(DictUnit) || exists(DictUnit))
+        Some(spark.read.parquet(s"${holder(DictUnit)}/$DictUnit")
+          .select(DictLog.cols.map(col): _*).localCheckpoint(eager = false))
       else None
     val quads0 =
-      if (exists("quads") && fs.listStatus(
-          new org.apache.hadoop.fs.Path(s"$root/quads")).exists(_.isDirectory))
-        Some(spark.read.parquet(s"$root/quads")
+      if (carried.contains(QuadsUnit) || exists(QuadsUnit) && fs.listStatus(
+          new org.apache.hadoop.fs.Path(s"$root/$QuadsUnit")).exists(_.isDirectory))
+        Some(spark.read.parquet(s"${holder(QuadsUnit)}/$QuadsUnit")
           // partition-column type inference reads an id-space graph
           // label as int where every value happens to fit — normalize
           // to the encoded store's BIGINT id type
           .select((if (dict0.isDefined) col("g").cast("long") else col("g"))
             .as("g"), col("s"), col("p"), col("o")))
       else None
-    val base = fromPartitionedParquet(spark, s"$root/default")
-      .copy(quads = quads0, dict = dict0)
+    val preds = checkedInventory(predicatePartitions(fs, s"$root/default") ++
+      carried.keys.filter(_.startsWith(SlicePrefix)).map(u =>
+        org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+          .unescapePathName(u.stripPrefix(SlicePrefix))), s"$root/default")
+    // s/o are ids on an encoded dataset and strings otherwise, so no
+    // holder's read infers its schema from a file (a job each)
+    val so = StructType(Seq("s", "o").map(StructField(_,
+      if (dict0.isDefined) LongType else StringType)))
+    val slices = preds.groupBy(p => holder(sliceUnit(p))).flatMap {
+      case (dir, ps) => scanSlices(spark.read.schema(so).parquet(s"$dir/default"), ps)
+    }
+    val base = TripleStore(slices, None).copy(quads = quads0, dict = dict0)
     // each log's batches below `upTo`: `seq` is the partition-discovered
     // batch directory, so the bound is partition pruning
     val logs = LogParts.filter(part =>
@@ -948,7 +1038,10 @@ object TripleStore {
     }
     val st = held.fold(mergedDistributed(base, logs))(log =>
       merged(base, base, log, log.touched))
-    val dict = st.dict.map(_.localCheckpoint(eager = false))
+    // the base dict is already a checkpoint; one the log grew is
+    // checkpointed once more
+    val dict = st.dict.map(d =>
+      if (base.dict.exists(_ eq d)) d else d.localCheckpoint(eager = false))
     val loaded = st.copy(dict = dict, sequential = dict.exists(isSequentialDict))
     // only the head of the log can be advanced, and only once every
     // claimed slot has committed its batch
@@ -964,14 +1057,15 @@ object TripleStore {
     * reads one directory. Predicate names round-trip through Hive-style
     * path escaping (`rdf:type` ↔ `p=rdf%3Atype`).
     */
-  def fromPartitionedParquet(spark: SparkSession, path: String): TripleStore = {
-    val preds = listPredicatePartitions(spark, path)
-    val df = spark.read.parquet(path)
-    val slices = preds.map { p =>
-      p -> df.filter(col("p") === p).select(col("s"), col("o"))
-    }.toMap
-    TripleStore(slices, None)
-  }
+  def fromPartitionedParquet(spark: SparkSession, path: String): TripleStore =
+    TripleStore(scanSlices(spark.read.parquet(path),
+      listPredicatePartitions(spark, path)), None)
+
+  /** The slices `preds` of one read of a p-partitioned layout, each a
+    * filter on its partition column.
+    */
+  private def scanSlices(df: DataFrame, preds: Seq[String]): Map[String, DataFrame] =
+    preds.map(p => p -> df.filter(col("p") === p).select(col("s"), col("o"))).toMap
 
   /** Predicate inventory of a p-partitioned layout: the partition-
     * directory listing — one filesystem metadata read, no parquet data
@@ -980,12 +1074,24 @@ object TripleStore {
     */
   private def listPredicatePartitions(
       spark: SparkSession, path: String): Seq[String] = {
+    val (fs, _) = VersionedRoot.fsOf(spark, path)
+    checkedInventory(predicatePartitions(fs, path), path)
+  }
+
+  /** The predicates of the `p=` directories under `path`; none when
+    * `path` does not exist.
+    */
+  private def predicatePartitions(fs: org.apache.hadoop.fs.FileSystem,
+      path: String): Seq[String] = {
     val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val preds = fs.listStatus(root).toSeq
+    if (!fs.exists(root)) Nil
+    else fs.listStatus(root).toSeq
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("p="))
       .map(st => org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
         .unescapePathName(st.getPath.getName.stripPrefix("p=")))
+  }
+
+  private def checkedInventory(preds: Seq[String], path: String): Seq[String] = {
     require(preds.nonEmpty, s"no p=... partition directories under $path")
     require(preds.length <= MaxPredicates,
       s"more than $MaxPredicates predicate partitions under $path")
@@ -1224,16 +1330,6 @@ object TripleStore {
     spark.table(table)
   }
 
-  /** Persist an encoded store's slices as p-partitioned parquet —
-    * partition directories keep the predicate's STRING name (the slice
-    * map key) while s/o carry xxhash64 ids.
-    */
-  def writeEncodedPartitioned(enc: TripleStore, path: String): Unit =
-    enc.slices.map { case (p, df) =>
-      df.select(col("s"), lit(p).as("p"), col("o"))
-    }.reduce(_ unionByName _)
-      .write.mode("overwrite").partitionBy("p").parquet(path)
-
   /** Dictionary-encode a string-form store: slice values → xxhash64
     * IDs, dict → (id, value, dt, lang) over the union of all s/o
     * positions — one distinct over the data, no driver collect. The
@@ -1445,7 +1541,7 @@ object TripleStore {
     * surfaces stay on the hash-id store and fail loudly here.
     *
     * Persist/reload: the slices and dict write through the same
-    * [[writeEncodedPartitioned]]/[[writeDict]] layouts as the hash
+    * [[writePartitioned]]/[[writeDict]] layouts as the hash
     * store; on reattach, derive the `sequential` flag with
     * [[isSequentialDict]] — it is session state, not file state.
     */

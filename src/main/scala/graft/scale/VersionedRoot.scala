@@ -12,6 +12,16 @@ import org.apache.spark.sql.SparkSession
   * old versions garbage-collect past a retention bound so pinned
   * readers finish on intact files. The delta batches under a version
   * root are [[DeltaLog]]'s.
+  *
+  * A version may carry some of its units (a dataset's `default/p=<pred>`
+  * partitions, its `quads` tree, its `dict` directory) by reference
+  * instead of writing them again: its `MANIFEST` maps each carried unit
+  * to the `v<m>` directory that holds it, flattened (the holder always
+  * holds the files itself). A version with no manifest holds every unit
+  * it has. The garbage collection keeps what a retained version's
+  * manifest names: an expired version so named is stripped down to its
+  * named units and marked a holder (`HOLDER`), which is storage, not a
+  * version ([[listVersions]] leaves it out).
   */
 private[graft] object VersionedRoot {
 
@@ -57,16 +67,66 @@ private[graft] object VersionedRoot {
     }
   }
 
-  def listVersions(spark: SparkSession, path: String): Seq[Int] = {
+  /** The versions under `path`, ascending: every `v<n>` directory but
+    * the stripped holders ([[listHolders]]).
+    */
+  def listVersions(spark: SparkSession, path: String): Seq[Int] =
+    versionDirs(spark, path).collect { case (n, false) => n }
+
+  /** The stripped holders under `path`, ascending: expired versions kept
+    * only for the units a retained version's manifest names.
+    */
+  def listHolders(spark: SparkSession, path: String): Seq[Int] =
+    versionDirs(spark, path).collect { case (n, true) => n }
+
+  /** Every `v<n>` directory under `path`, ascending, with whether it is
+    * a stripped holder.
+    */
+  private def versionDirs(spark: SparkSession,
+      path: String): Seq[(Int, Boolean)] = {
     val (fs, p) = fsOf(spark, path)
     if (!fs.exists(p)) Nil
     else fs.listStatus(p).toSeq.flatMap { st =>
       val n = st.getPath.getName
       if (st.isDirectory && n.startsWith("v"))
-        scala.util.Try(n.drop(1).toInt).toOption
+        n.drop(1).toIntOption.map(_ ->
+          fs.exists(new org.apache.hadoop.fs.Path(st.getPath, HolderMark)))
       else None
     }.sorted
   }
+
+  private val ManifestFile = "MANIFEST"
+  private val HolderMark = "HOLDER"
+
+  /** The units version root `root` carries, each mapped to the version
+    * whose directory holds it; empty when `root` has no manifest.
+    */
+  def readManifest(fs: org.apache.hadoop.fs.FileSystem,
+      root: String): Map[String, Int] = {
+    val mp = new org.apache.hadoop.fs.Path(s"$root/$ManifestFile")
+    if (!fs.exists(mp)) Map.empty
+    else {
+      val in = fs.open(mp)
+      val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+      // one line per unit: `v<m> <unit>` (a unit name may hold spaces)
+      text.linesIterator.filter(_.nonEmpty).map { line =>
+        val at = line.indexOf(' ')
+        line.substring(at + 1) -> line.substring(1, at).toInt
+      }.toMap
+    }
+  }
+
+  /** Write version root `root`'s manifest: every unit it carries, with
+    * the version holding it. Nothing is written when nothing is carried.
+    */
+  def writeManifest(fs: org.apache.hadoop.fs.FileSystem, root: String,
+      carried: Map[String, Int]): Unit =
+    if (carried.nonEmpty) {
+      val out = fs.create(new org.apache.hadoop.fs.Path(s"$root/$ManifestFile"), true)
+      try out.write(carried.toSeq.sortBy(_._1)
+        .map { case (unit, m) => s"v$m $unit\n" }.mkString.getBytes("UTF-8"))
+      finally out.close()
+    }
 
   /** Create-exclusive claim: atomically wins or returns false;
     * `content` (an idempotency token) lands in the claim file so a
@@ -99,7 +159,10 @@ private[graft] object VersionedRoot {
 
   /** Flip the VERSION pointer to `n`, failing LOUDLY on a lost race
     * (the pointer must still read n-1, or be absent for n == 0), and
-    * garbage-collect versions past `keepVersions`.
+    * garbage-collect versions past `keepVersions`: an expired version
+    * that no retained version's manifest names is deleted; one that is
+    * named is marked a holder and stripped of every other file (its
+    * delta log, manifest and unnamed partitions).
     */
   def flipPointer(spark: SparkSession, path: String, n: Int,
       keepVersions: Int): Unit = {
@@ -125,9 +188,40 @@ private[graft] object VersionedRoot {
       fs.delete(vp, false)
       require(fs.rename(tmp, vp), s"VERSION pointer flip to $n failed")
     }
-    (0 to n - keepVersions).foreach { m =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/v$m"), true)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/v$m.claim"), false)
+    val named: Map[Int, Set[String]] = (n - keepVersions + 1 to n)
+      .flatMap(v => readManifest(fs, s"$path/v$v"))
+      .groupMap(_._2)(_._1).map { case (m, units) => m -> units.toSet }
+    fs.listStatus(new org.apache.hadoop.fs.Path(path)).foreach { st =>
+      val name = st.getPath.getName
+      val m = if (!name.startsWith("v")) None
+        else if (st.isDirectory) name.drop(1).toIntOption
+        else name.drop(1).stripSuffix(".claim").toIntOption
+          .filter(_ => name.endsWith(".claim"))
+      m.filter(_ <= n - keepVersions).foreach { m =>
+        named.get(m) match {
+          case Some(units) if st.isDirectory =>
+            // marked first: a crash mid-strip leaves a holder, never a
+            // version missing files
+            fs.create(new org.apache.hadoop.fs.Path(st.getPath, HolderMark), true)
+              .close()
+            strip(fs, st.getPath, "", units)
+          case _ => fs.delete(st.getPath, true)
+        }
+      }
     }
   }
+
+  /** Delete everything under `dir` (at `rel` below its version root)
+    * that is neither one of `units` nor on the way to one, nor the
+    * holder mark.
+    */
+  private def strip(fs: org.apache.hadoop.fs.FileSystem,
+      dir: org.apache.hadoop.fs.Path, rel: String, units: Set[String]): Unit =
+    fs.listStatus(dir).foreach { st =>
+      val r = if (rel.isEmpty) st.getPath.getName else s"$rel/${st.getPath.getName}"
+      if (units(r) || r == HolderMark) ()
+      else if (st.isDirectory && units.exists(_.startsWith(s"$r/")))
+        strip(fs, st.getPath, r, units)
+      else fs.delete(st.getPath, true)
+    }
 }

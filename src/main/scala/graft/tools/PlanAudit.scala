@@ -48,14 +48,14 @@ object PlanAudit {
 
   /** `file:line` for every versioned-root protocol step taken outside
     * `scale/VersionedRoot` and `scale/DeltaLog` — building a `VERSION`
-    * pointer path, or a create-exclusive `create(…, false)` — in main
-    * sources. Every versioned artifact claims, flips and commits
-    * through those two, so their rules cannot drift apart again;
-    * ToolsSpec pins this empty.
+    * pointer path or a `MANIFEST` path, or a create-exclusive
+    * `create(…, false)` — in main sources. Every versioned artifact
+    * claims, flips, commits and carries units through those two, so
+    * their rules cannot drift apart again; ToolsSpec pins this empty.
     */
   def rawVersionedRootIo(root: String = "src/main/scala/graft"): Seq[String] =
     scan(root, "VersionedRoot.scala", "DeltaLog.scala")(line =>
-      line.matches(".*[/\"]VERSION\".*") ||
+      line.matches(".*[/\"](VERSION|MANIFEST)\".*") ||
         line.matches(".*\\bcreate\\(.*,\\s*false\\s*\\).*"))
 
   /** Build-artifact / scratch directories sitting inside the SOURCE

@@ -27,7 +27,10 @@ import graft.scale.{DeltaLog, VersionedRoot}
   *    committed (`dangling`) and uncommitted `.tmp-<k>` leftovers are
   *    candidates — a committed batch is never touched;
   *  - everything reaped must be older than `olderThanMs` (file mtime),
-  *    so a writer mid-flight is never swept out from under its claim.
+  *    so a writer mid-flight is never swept out from under its claim;
+  *  - a holder (an expired version stripped to the units a retained
+  *    version's manifest names) is never touched: flipPointer's GC
+  *    deletes it once no retained manifest names it.
   */
 object RootVacuum {
 
@@ -40,7 +43,8 @@ object RootVacuum {
     else fs.getContentSummary(p).getLength
 
   /** Inventory of a versioned root: one [[Entry]] per version
-    * (current / retained / orphaned), per claim (held / orphaned), and
+    * (current / retained / orphaned), per stripped holder (`holder`,
+    * with the bytes of its named units), per claim (held / orphaned), and
     * in the current version's delta log per committed batch
     * (`delta_batch`, complete), per uncommitted leftover (`delta_tmp`
     * `<fam>/.tmp-<k>`, uncommitted), and per slot lock (held /
@@ -65,6 +69,9 @@ object RootVacuum {
       Entry("version", s"v$v", status,
         sizeOf(fs, new org.apache.hadoop.fs.Path(s"$path/v$v")))
     }
+    val hEntries = VersionedRoot.listHolders(spark, path).map(v =>
+      Entry("holder", s"v$v", "held",
+        sizeOf(fs, new org.apache.hadoop.fs.Path(s"$path/v$v"))))
     val cEntries = claims.map { v =>
       val status =
         if (cur.forall(v <= _) || versions.contains(v)) "held"
@@ -91,7 +98,7 @@ object RootVacuum {
       }
       batches ++ tmps ++ locks
     }
-    vEntries ++ cEntries ++ deltaEntries
+    vEntries ++ hEntries ++ cEntries ++ deltaEntries
   }
 
   def inspect(spark: SparkSession, path: String): DataFrame = {

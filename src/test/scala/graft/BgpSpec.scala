@@ -190,7 +190,7 @@ class BgpSpec extends AnyFunSuite {
     // every query constant to the wrong id
     val seq = TripleStore.encodeSequential(tinyStore, bands = 8)
     val dir = java.nio.file.Files.createTempDirectory("seqstore").toString
-    TripleStore.writeEncodedPartitioned(seq, s"$dir/enc")
+    TripleStore.writePartitioned(seq, s"$dir/enc")
     TripleStore.writeDict(seq.dict.get, s"$dir/dict", "graft_test_seqdict")
     val dict = TripleStore.registerDict(spark, s"$dir/dict", "graft_test_seqdict")
     assert(TripleStore.isSequentialDict(dict))
@@ -3275,6 +3275,12 @@ class BgpSpec extends AnyFunSuite {
         "advanced", Seq(6, 7), Some(3), None, 8, 2))) ==
       "[sparql] update ops=2 delta_rows=3 seqs=6,7 version=- store=advanced " +
         "apply_ms=1 write_ms=8 advance_ms=2")
+    // a flip names the units it rewrote and carried
+    assert(SparqlServer.updateLine(1, 4, Some(TripleStore.WriteBack(
+        "flipped", Seq(15), Some(1), Some(3), 12, 6,
+        Some(TripleStore.Flip(3, 2, 10))))) ==
+      "[sparql] update ops=1 delta_rows=1 seqs=15 version=3 store=flipped " +
+        "apply_ms=4 write_ms=12 advance_ms=6 rewrote=2 carried=10")
   }
 
   test("the query log line names every field, and a served read logs one") {
@@ -3488,7 +3494,8 @@ class BgpSpec extends AnyFunSuite {
     // dataset (every slice, the quads) and both must answer like a
     // naive model of the ops. Ops 5-7 run under a 1-byte broadcast
     // threshold, where the log cannot be held and every update loads;
-    // the string store's 16th batch is a compaction flip.
+    // every 16th batch is a compaction flip: two on the string store,
+    // one each on the hash and sequential stores.
     val key = "spark.sql.autoBroadcastJoinThreshold"
     val saved = spark.conf.getOption(key)
     def restore(): Unit = saved match {
@@ -3510,12 +3517,15 @@ class BgpSpec extends AnyFunSuite {
       rows(BgpPlanner.query(st, q).select("s", "p", "o"))
     import org.apache.spark.sql.functions.{col, lit}
     val stores = Seq[(String, TripleStore => TripleStore, Int)](
-      ("string", st => st, 18),
-      ("hash", TripleStore.encode(_), 9),
-      ("sequential", TripleStore.encodeSequential(_, bands = 8), 9))
+      ("string", st => st, 2 * TripleStore.CompactDeltaBatches),
+      ("hash", TripleStore.encode(_), TripleStore.CompactDeltaBatches),
+      ("sequential", TripleStore.encodeSequential(_, bands = 8),
+        TripleStore.CompactDeltaBatches))
     try for ((kind, make, nOps) <- stores) {
       val dir = java.nio.file.Files.createTempDirectory(s"graft-adv-$kind").toString
-      val seed = (("e:0", "a", "v1") +: Seq.fill(8)(triple())).distinct
+      // a sentinel slice no op touches: every flip carries it
+      val seed = (("e:0", "a", "v1") +: ("e:5", "d", "v2") +:
+        Seq.fill(8)(triple())).distinct
       var model = seed.toSet
       var quadModel = Set.empty[(String, String, String, String)]
       TripleStore.writeDatasetVersioned(
@@ -3538,9 +3548,10 @@ class BgpSpec extends AnyFunSuite {
               model ++= ts
               s"INSERT DATA { ${text(ts)} }"
             case 2 =>
+              val live = model.filter(_._2 != "d").toSeq
               val ts = Seq.fill(1 + rnd.nextInt(2))(
-                if (model.nonEmpty && rnd.nextBoolean())
-                  model.toSeq(rnd.nextInt(model.size))
+                if (live.nonEmpty && rnd.nextBoolean())
+                  live(rnd.nextInt(live.size))
                 else triple())
               model --= ts
               s"DELETE DATA { ${text(ts)} }"
@@ -3569,10 +3580,13 @@ class BgpSpec extends AnyFunSuite {
         val (c, body) = http("POST", h.endpoint, "application/sparql-update", op)
         assert(c == 204, s"$kind op $i: $body")
         val want =
-          if (i == TripleStore.CompactDeltaBatches - 1) "flipped"
+          if ((i + 1) % TripleStore.CompactDeltaBatches == 0) "flipped"
           else if (i >= 5 && i <= 8) "loaded" else "advanced"
         assert(h.lastUpdate.exists(_.contains(s"store=$want")),
           s"$kind op $i ($op): ${h.lastUpdate}")
+        if (want == "flipped")
+          assert(h.lastUpdate.exists(_.matches(".* carried=[1-9]\\d*$")),
+            s"$kind op $i: the sentinel slice must be carried: ${h.lastUpdate}")
         val live = h.store
         val cold = TripleStore.fromDatasetParquet(spark, dir)
         val ctx = s"$kind op $i ($op)"
@@ -3648,6 +3662,118 @@ class BgpSpec extends AnyFunSuite {
         "select ?s ?v where { ?s val ?v }").count() ==
         TripleStore.CompactDeltaBatches + 2)
     } finally h.stop()
+  }
+
+  /** Files under `f` with their bytes, skipping the hidden and
+    * underscore-prefixed ones (checksums, `_SUCCESS`), keyed by their
+    * path relative to `f`.
+    */
+  private def dataFiles(f: java.io.File): Map[String, Long] = {
+    def walk(d: java.io.File, rel: String): Seq[(String, Long)] =
+      Option(d.listFiles()).toSeq.flatten
+        .filterNot(c => c.getName.startsWith(".") || c.getName.startsWith("_"))
+        .flatMap { c =>
+          val r = if (rel.isEmpty) c.getName else s"$rel/${c.getName}"
+          if (c.isDirectory) walk(c, r) else Seq(r -> c.length)
+        }
+    walk(f, "").toMap
+  }
+
+  /** Run [[TripleStore.CompactDeltaBatches]] row-grain write-backs on
+    * `cur`, each touching only predicate `p`, up to and including the
+    * compaction flip; returns the store now standing and the flip.
+    */
+  private def compactOn(cur0: TripleStore, dir: String, p: String,
+      tag: String): (TripleStore, TripleStore.Flip) = {
+    var cur = cur0
+    var flip: Option[TripleStore.Flip] = None
+    val first = TripleStore.currentVersion(spark, dir).get
+    for (i <- 0 until TripleStore.CompactDeltaBatches) {
+      val (next, d) = SparqlUpdate.applyAllWithDelta(spark, cur,
+        s"""INSERT DATA { <$tag:$i> <$p> "$tag-$i" }""")
+      cur = TripleStore.writeBackDelta(cur, next, dir, d, wb => flip = wb.flip)
+    }
+    assert(TripleStore.currentVersion(spark, dir).contains(first + 1))
+    (cur, flip.getOrElse(fail("the last batch must flip")))
+  }
+
+  test("a compaction writes only the slice its log touched; a manifest carries the rest") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-wb-carry").toString
+    val preds = Seq("a", "b", "c", "d")
+    val seed = for (p <- preds; i <- 0 until 50) yield (s"t:$i", p, s"$p-$i")
+    assert(TripleStore.writeDatasetVersioned(TripleStore.fromTriples(
+      seed.toDF("s", "p", "o")), dir) == TripleStore.Flip(0, 4, 0))
+    val (st, flip) = compactOn(TripleStore.fromDatasetParquet(spark, dir),
+      dir, "b", "n")
+    assert(flip == TripleStore.Flip(1, 1, 3))
+    // the new version holds the touched partition and the manifest only
+    val v1 = new java.io.File(s"$dir/v1")
+    val written = dataFiles(v1)
+    assert(written.keySet.map(_.split('/').init.mkString("/")) ==
+      Set("", "default/p=b"), written.keySet)
+    assert(written.keySet.contains("MANIFEST"))
+    assert(written.values.sum <=
+      dataFiles(new java.io.File(s"$dir/v1/default/p=b")).values.sum +
+        new java.io.File(s"$dir/v1/MANIFEST").length)
+    assert(written.values.sum <
+      dataFiles(new java.io.File(s"$dir/v0/default")).values.sum,
+      "a compaction of one slice of four wrote as much as the whole base")
+    // the flip's store and a cold load answer alike: base plus the log
+    val want = (seed ++ (0 until TripleStore.CompactDeltaBatches)
+      .map(i => (s"n:$i", "b", s"n-$i")))
+      .map { case (s, p, o) => s"$s|$p|$o" }.sorted
+    def all(x: TripleStore): Seq[String] = BgpPlanner.query(x,
+      "select ?s ?p ?o where { ?s ?p ?o }").select("s", "p", "o")
+      .collect().map(_.mkString("|")).sorted.toSeq
+    assert(all(st) == want)
+    assert(all(TripleStore.fromDatasetParquet(spark, dir)) == want)
+    // a carried slice keeps its pruned scan of the holder's directory
+    val plan = TripleStore.fromDatasetParquet(spark, dir).slices("c")
+      .queryExecution.executedPlan.toString
+    assert(plan.contains("PartitionFilters") && plan.contains("/v0/default"), plan)
+  }
+
+  test("two compactions on different slices: GC keeps named partitions, strips the rest") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-wb-holder").toString
+    val seed = for (p <- Seq("a", "b", "c"); i <- 0 until 20)
+      yield (s"t:$i", p, s"$p-$i")
+    TripleStore.writeDatasetVersioned(TripleStore.fromTriples(
+      seed.toDF("s", "p", "o")), dir)
+    def counts(st: TripleStore): Map[String, Long] = BgpPlanner.query(st,
+      "select ?s ?p ?o where { ?s ?p ?o }").groupBy("p").count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val n = TripleStore.CompactDeltaBatches
+    val (afterA, f1) = compactOn(TripleStore.fromDatasetParquet(spark, dir),
+      dir, "a", "x")
+    assert(f1 == TripleStore.Flip(1, 1, 2))
+    // a reader pinned to v1 before the second compaction
+    val pinned = TripleStore.fromDatasetParquet(spark, dir)
+    val (afterB, f2) = compactOn(afterA, dir, "b", "y")
+    assert(f2 == TripleStore.Flip(2, 1, 2))
+    val want = Map("a" -> (20L + n), "b" -> (20L + n), "c" -> 20L)
+    assert(counts(afterB) == want)
+    // v0 is a holder of the partitions v1's and v2's manifests name (b
+    // and c); its stale `a` partition and its delta log are gone
+    def dirs(v: Int): Set[String] =
+      dataFiles(new java.io.File(s"$dir/v$v")).keySet.filter(_.contains("/"))
+        .map(_.split('/').init.mkString("/"))
+    assert(dirs(0) == Set("default/p=b", "default/p=c"), dirs(0))
+    assert(TripleStore.listVersions(spark, dir) == Seq(1, 2))
+    assert(intercept[IllegalArgumentException](
+      TripleStore.fromDatasetParquet(spark, dir, 0)).getMessage
+      .contains("not retained"))
+    // the pinned reader and a time-travel read of v1 still answer
+    val atV1 = Map("a" -> (20L + n), "b" -> 20L, "c" -> 20L)
+    assert(counts(pinned) == atV1)
+    assert(counts(TripleStore.fromDatasetParquet(spark, dir, 1, Some(0))) == atV1)
+    // a third compaction expires v1 too: each holder keeps only what
+    // the retained manifests still name
+    val (afterC, f3) = compactOn(afterB, dir, "c", "z")
+    assert(f3 == TripleStore.Flip(3, 1, 2))
+    assert(dirs(0) == Set("default/p=c") && dirs(1) == Set("default/p=a"))
+    assert(TripleStore.listVersions(spark, dir) == Seq(2, 3))
+    assert(counts(afterC) == want.updated("c", 20L + n))
+    assert(counts(TripleStore.fromDatasetParquet(spark, dir, 2, Some(0))) == want)
   }
 
   test("snapshot isolation: a reader pinned to the old version survives churn") {

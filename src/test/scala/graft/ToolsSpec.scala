@@ -36,6 +36,16 @@ class ToolsSpec extends AnyFunSuite {
       _.split(':').last) == Seq("1", "2"))
   }
 
+  test("the versioned-root audit also flags a MANIFEST path built outside VersionedRoot") {
+    assert(graft.tools.PlanAudit.rawVersionedRootIo().isEmpty)
+    val dir = java.nio.file.Files.createTempDirectory("audit_manifest")
+    java.nio.file.Files.write(dir.resolve("Carrier.scala"), Seq(
+      "val mp = new Path(s\"$root/MANIFEST\")",
+      "val units = readManifest(fs, root)").mkString("\n").getBytes)
+    assert(graft.tools.PlanAudit.rawVersionedRootIo(dir.toString).map(
+      _.split(':').last) == Seq("1"))
+  }
+
   test("no stray build dirs inside the source WORKTREE (hygiene audit)") {
     val stray = graft.tools.PlanAudit.strayBuildDirs()
     assert(stray.isEmpty,
@@ -157,6 +167,53 @@ class ToolsSpec extends AnyFunSuite {
     assert(!Files.exists(delta.resolve("seq=7.lock")))
     assert(!Files.exists(delta.resolve("default/.tmp-2")))
     assert(answers == before)
+  }
+
+  test("RootVacuum labels a stripped holder, never reaps it, and reaps an orphan's units") {
+    import java.nio.file.{Files, Paths}
+    import graft.bgp.{BgpPlanner, SparqlUpdate, TripleStore}
+    import graft.scale.VersionedRoot
+    import graft.tools.RootVacuum
+    val spark = GraftSession.local("2")
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-vac-holder").toString
+    TripleStore.writeDatasetVersioned(TripleStore.fromTriples(Seq(
+      ("t:1", "name", "one"), ("t:1", "size", "s1")).toDF("s", "p", "o")), dir)
+    // two flips that each rewrite only `size`: v2 still carries v0's
+    // `name`, so v0 expires into a holder of that one partition
+    for (v <- Seq("s2", "s3")) {
+      val cur = TripleStore.fromDatasetParquet(spark, dir)
+      TripleStore.writeDatasetVersioned(SparqlUpdate.applyAll(spark, cur,
+        s"""INSERT DATA { <t:2> <size> "$v" }"""), dir)
+    }
+    def entries = RootVacuum.inspectEntries(spark, dir)
+      .map(e => (e.kind, e.name, e.status))
+    val holder = RootVacuum.inspectEntries(spark, dir).filter(_.kind == "holder")
+    val named = Paths.get(dir, "v0", "default", "p=name")
+    assert(holder.map(e => (e.name, e.status)) == Seq(("v0", "held")))
+    // the bytes of the named partition (its data files, and at most the
+    // checksums and the holder mark beside them)
+    def bytes(p: java.nio.file.Path, hidden: Boolean): Long = Files.walk(p)
+      .filter(f => Files.isRegularFile(f) &&
+        (hidden || !f.getFileName.toString.startsWith(".")))
+      .mapToLong(Files.size(_)).sum
+    assert(holder.head.bytes >= bytes(named, hidden = false) &&
+      holder.head.bytes <= bytes(Paths.get(dir, "v0"), hidden = true))
+    assert(!Files.exists(Paths.get(dir, "v0", "default", "p=size")))
+    // a version written but never flipped, with units of its own
+    VersionedRoot.claimVersion(spark, dir, 3)
+    TripleStore.writeDataset(TripleStore.fromTriples(
+      Seq(("t:9", "name", "nine")).toDF("s", "p", "o")), s"$dir/v3")
+    assert(entries.contains(("version", "v3", "orphaned")))
+    val reaped = RootVacuum.reap(spark, dir, olderThanMs = 0)
+      .map(p => new org.apache.hadoop.fs.Path(p).getName)
+    assert(reaped.sorted == Seq("v3", "v3.claim"))
+    assert(!Files.exists(Paths.get(dir, "v3")) && Files.isDirectory(named))
+    assert(entries.filter(_._1 != "claim").toSet == Set(("version", "v1", "retained"),
+      ("version", "v2", "current"), ("holder", "v0", "held")))
+    assert(BgpPlanner.query(TripleStore.fromDatasetParquet(spark, dir),
+      "select ?s ?v where { ?s name ?v }").collect().map(_.getString(0)).toSeq ==
+      Seq("t:1"))
   }
 
   test("RootVacuum's age guard keeps a young dangling lock and a young orphaned claim") {
