@@ -25,11 +25,9 @@ object GraftSession {
     * every key in executor heap (fine locally and for the spec
     * fixtures); `SPARK_GRAFT_STATESTORE=rocksdb` switches to the
     * RocksDB provider, whose off-heap + disk-backed state is the
-    * 100 TB deployment choice for the stateful streams (CDC upsert,
-    * sessionizer, dedup) whose live-key set outgrows the heap.
-    * Config-only by design — StreamSpec runs the stateful suites
-    * against BOTH providers to prove no operator depends on the
-    * provider's semantics.
+    * deployment choice for stateful streams whose live-key set
+    * outgrows the heap. Config-only by design: no operator depends on
+    * the provider's semantics.
     */
   val RocksDbProvider: String =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"

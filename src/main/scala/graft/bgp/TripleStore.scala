@@ -653,6 +653,10 @@ object TripleStore {
     * [[CompactDeltaBatches]] batches the write-back compacts `next`
     * into a fresh version ([[writeDatasetVersioned]]: the slices the
     * log touched are rewritten, the rest carried) and the log resets.
+    * `next` is compacted only when it holds the whole log (`prev`
+    * stood at the walk's first slot and no claim skipped a slot);
+    * otherwise another writer's batch is in the log, and the dataset
+    * loaded from disk is compacted instead.
     *
     * The returned store is `prev` ADVANCED by the appended batches when
     * `prev` is what stood on disk before them (it carries the
@@ -695,8 +699,9 @@ object TripleStore {
     val (fs, _) = VersionedRoot.fsOf(spark, path)
     val t0 = System.nanoTime()
     def ms(from: Long): Long = (System.nanoTime() - from) / 1000000
-    def flipped(seqs: Seq[Int], rows: Option[Long]): TripleStore = {
-      val flip = writeDatasetVersioned(next, path)
+    def flipped(onDisk: TripleStore, seqs: Seq[Int],
+        rows: Option[Long]): TripleStore = {
+      val flip = writeDatasetVersioned(onDisk, path)
       val t1 = System.nanoTime()
       val st = fromDatasetParquet(spark, path)
       report(WriteBack("flipped", seqs, rows, Some(flip.version),
@@ -706,14 +711,17 @@ object TripleStore {
     val hasLayout = currentVersion(spark, path).isDefined ||
       fs.exists(new org.apache.hadoop.fs.Path(s"$path/default"))
     // bootstrap, or a structural op: checkpoint a full new version
-    if (!hasLayout || deltas.exists(_.structural)) return flipped(Nil, None)
+    if (!hasLayout || deltas.exists(_.structural))
+      return flipped(next, Nil, None)
     val root = datasetRoot(spark, path)
     val thr = GuardedBroadcast.threshold(spark)
     var seq = DeltaLog.slots(fs, root).next
-    // the log to advance: prev's own, when prev stands on this version
-    // root with no batch appended since its last merged one
-    var log = prev.stands
-      .filter(s => thr > 0 && s.root == root && s.nextSeq == seq).map(_.log)
+    // prev holds the whole log on disk: it stands on this version root
+    // with no batch appended since its last merged one, and no claim
+    // below walks past another writer's slot
+    var whole = prev.stands.exists(s => s.root == root && s.nextSeq == seq)
+    // the log to advance: prev's own, while it is whole
+    var log = prev.stands.filter(_ => thr > 0 && whole).map(_.log)
     var touched = Touched()
     val claimed = mutable.ArrayBuffer.empty[Int]
     var rows: Option[Long] = Some(0L)
@@ -727,7 +735,7 @@ object TripleStore {
         // no longer the one held, so the store is loaded
         val expected = seq
         seq = DeltaLog.claimSlot(fs, root, seq, None)
-        if (seq != expected) log = None
+        if (seq != expected) { log = None; whole = false }
         claimed += seq
         parts.foreach { case (part, r) =>
           val held = part.held(r, lit(seq))
@@ -753,7 +761,11 @@ object TripleStore {
         seq += 1
       }
     }
-    if (seq >= CompactDeltaBatches) return flipped(claimed.toSeq, rows)
+    // not whole: another writer's batch is in the log, so the flip
+    // compacts what is on disk
+    if (seq >= CompactDeltaBatches)
+      return flipped(if (whole) next else fromDatasetParquet(spark, path),
+        claimed.toSeq, rows)
     val t1 = System.nanoTime()
     val (st, outcome) = (log, prev.stands) match {
       case (Some(l), Some(s)) =>
@@ -1266,41 +1278,6 @@ object TripleStore {
         else Some(t.select(col("s"), xxhash64(col("p")).as("p"), col("o"))))
   }
 
-  /** Persist the s-bucketed secondary layout (the SOP-index analog):
-    * one parquet table of all triples, hash-bucketed and sorted by
-    * subject. A `?s`-constant variable-predicate pattern then reads one
-    * bucket (`SelectedBucketsCount: 1 out of N` in the scan), and a
-    * join on `s` against another s-bucketed relation needs no
-    * exchange. Bucketing metadata lives in the session catalog, so the
-    * table is (re-)registered via DDL against the same files on each
-    * new session — see [[registerSBucketed]].
-    */
-  def writeSBucketed(store: TripleStore, path: String, table: String,
-      buckets: Int = 16): Unit = {
-    val spark = store.slices.values.head.sparkSession
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    store.unionView.write.mode("overwrite")
-      .bucketBy(buckets, "s").sortBy("s")
-      .option("path", path)
-      .format("parquet")
-      .saveAsTable(table)
-  }
-
-  /** Re-register an existing s-bucketed layout in this session's
-    * catalog (bucket metadata is catalog state, not file state) and
-    * return the bucket-aware DataFrame.
-    */
-  def registerSBucketed(spark: SparkSession, path: String, table: String,
-      buckets: Int = 16): DataFrame = {
-    if (!spark.catalog.tableExists(table))
-      spark.sql(
-        s"""CREATE TABLE $table (s STRING, p STRING, o STRING)
-           |USING parquet
-           |CLUSTERED BY (s) SORTED BY (s) INTO $buckets BUCKETS
-           |LOCATION '$path'""".stripMargin)
-    spark.table(table)
-  }
-
   /** Persist the dictionary as an id-bucketed, id-sorted parquet table
     * (SCALE.md: the single-pass unpivot decode joins on `id`; when the
     * result side is too large to broadcast, the dict side is already
@@ -1406,6 +1383,18 @@ object TripleStore {
   private[graft] def hashDictDelta(standing: DataFrame,
       values: DataFrame): DataFrame = hashDictDeltaCounted(standing, values)._1
 
+  /** Drop the blocks of every local checkpoint in `df`'s plan — for a
+    * caller that has written a [[hashDictDelta]] result and reads it
+    * no more. Until then the blocks stay until the driver's GC finds
+    * the plan unreachable, which on a long stream is never soon.
+    */
+  private[graft] def releaseCheckpoints(df: DataFrame): Unit =
+    df.queryExecution.logical.foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        r.rdd.unpersist(blocking = false)
+      case _ => ()
+    }
+
   /** [[hashDictDelta]] plus the new-row count, for callers that would
     * otherwise pay a separate `isEmpty`/`count` action on the delta.
     *
@@ -1502,49 +1491,6 @@ object TripleStore {
     !r.isNullAt(0) && r.getLong(0) == 1L && r.getLong(1) == r.getLong(2)
   }
 
-  /** [[encode]], falling back to the SEQUENTIAL dictionary when the
-    * hash ids hit their birthday bound: the collision audit that
-    * previously dead-ended a >10⁹-term corpus now selects the
-    * supported escape automatically. `term2id` stays injectable so
-    * tests can force the collision.
-    */
-  def encodeAuto(
-      store: TripleStore,
-      term2id: Column => Column = xxhash64(_)): TripleStore =
-    try encode(store, term2id)
-    catch {
-      case e: IllegalStateException if e.getMessage.contains("collision") =>
-        encodeSequential(store)
-    }
-
-  /** Dictionary-encode with DENSE SEQUENTIAL ids — the RDF-3X-style
-    * build (`Proxy.c:211-224`) for the regime past xxhash64's birthday
-    * bound (~10⁹ distinct terms), where hash ids would silently alias
-    * terms. Collision-free by construction, so there is no audit.
-    *
-    * Id assignment is the q205 banded two-phase prefix sum — nothing
-    * data-sized ever reaches the driver and no single-partition
-    * zipWithIndex/global sort appears: terms hash into `bands`
-    * sub-vocabularies, the band histogram (≤ `bands` rows,
-    * schema-sized) prefix-sums into band offsets on the driver, and
-    * each band assigns `offset + row_number` under a PARTITIONED
-    * window (per-band sort ≈ |vocab|/bands rows). Slices then encode
-    * through two value→id joins — the one-time dictionary-build
-    * shuffle every dense-id store pays at load.
-    *
-    * The price of dense ids is the planner's constant shortcut: a
-    * query constant's id is no longer derivable by hashing, so
-    * BgpPlanner resolves each constant with one bounded dict probe at
-    * plan time (schema-sized; cached per plan). Column-level
-    * re-encodes (subquery exports, federation, inline VALUES tables)
-    * would each need a value→id join instead of an expression — those
-    * surfaces stay on the hash-id store and fail loudly here.
-    *
-    * Persist/reload: the slices and dict write through the same
-    * [[writePartitioned]]/[[writeDict]] layouts as the hash
-    * store; on reattach, derive the `sequential` flag with
-    * [[isSequentialDict]] — it is session state, not file state.
-    */
   /** Assign DENSE ids `startAt+1 .. startAt+N` to the distinct `value`
     * column of `vocab0` via the banded two-phase prefix sum (see
     * [[encodeSequential]]): nothing data-sized reaches the driver (the
@@ -1620,6 +1566,34 @@ object TripleStore {
     (assignDenseIds(fresh, bands, maxId), nNew)
   }
 
+  /** Dictionary-encode with DENSE SEQUENTIAL ids — the RDF-3X-style
+    * build (`Proxy.c:211-224`) for the regime past xxhash64's birthday
+    * bound (~10⁹ distinct terms), where hash ids would silently alias
+    * terms. Collision-free by construction, so there is no audit.
+    *
+    * Id assignment is the q205 banded two-phase prefix sum — nothing
+    * data-sized ever reaches the driver and no single-partition
+    * zipWithIndex/global sort appears: terms hash into `bands`
+    * sub-vocabularies, the band histogram (≤ `bands` rows,
+    * schema-sized) prefix-sums into band offsets on the driver, and
+    * each band assigns `offset + row_number` under a PARTITIONED
+    * window (per-band sort ≈ |vocab|/bands rows). Slices then encode
+    * through two value→id joins — the one-time dictionary-build
+    * shuffle every dense-id store pays at load.
+    *
+    * The price of dense ids is the planner's constant shortcut: a
+    * query constant's id is no longer derivable by hashing, so
+    * BgpPlanner resolves each constant with one bounded dict probe at
+    * plan time (schema-sized; cached per plan). Column-level
+    * re-encodes (subquery exports, federation, inline VALUES tables)
+    * would each need a value→id join instead of an expression — those
+    * surfaces stay on the hash-id store and fail loudly here.
+    *
+    * Persist/reload: the slices and dict write through the same
+    * [[writePartitioned]]/[[writeDict]] layouts as the hash
+    * store; on reattach, derive the `sequential` flag with
+    * [[isSequentialDict]] — it is session state, not file state.
+    */
   def encodeSequential(store: TripleStore, bands: Int = 256): TripleStore = {
     val spark = store.slices.values.head.sparkSession
     import spark.implicits._

@@ -9,8 +9,8 @@ import OracleNum.dsum
 /** Event-stream operators, batch-verified (SURVEY.md §2.9: the
   * reference is batch-only; these are the streaming-shaped extensions,
   * kept DuckDB-verifiable by running over the `events` table as a
-  * batch). The same transformations run under Structured Streaming via
-  * graft.streaming.StreamOps.
+  * batch). q135's interval join is graft.streaming.StreamOps's, which
+  * also runs it under Structured Streaming.
   *
   * All time arithmetic is done in epoch microseconds (bigint) so both
   * engines compute on exact integers.
@@ -293,10 +293,10 @@ object EventQueries {
              |WHERE s.event_type = 'signup'
              |GROUP BY 1, 2""".stripMargin)),
 
-    // native session_window sessionization (the declarative/streaming
-    // path — same operator StreamOps.sessionAggs runs under Structured
-    // Streaming; Spark merges sessions while consecutive events are
-    // strictly less than the 30-min gap apart)
+    // native session_window sessionization (the declarative path,
+    // which also runs under Structured Streaming; Spark merges sessions
+    // while consecutive events are strictly less than the 30-min gap
+    // apart)
     GQuery(
       "q50_session_window",
       (s, dir) => {
@@ -1090,7 +1090,6 @@ object EventQueries {
     // 4x row expansion happens map-side inside the scan stage, then one
     // shuffle on (window, type) with map-side partial aggregates —
     // identical shape to the tumbling case, just 4x the aggregate input.
-    // The streaming twin is StreamOps.slidingCounts (StreamSpec).
     GQuery(
       "q222_sliding_window",
       (s, dir) => {

@@ -1218,9 +1218,8 @@ object SimilarityQueries {
     // units (per-member floor(cos·10⁶) is IEEE-deterministic, the
     // aggregation after it is integer — so the report replays
     // bit-identically from the raw embeddings). nlist-row output: the
-    // report that triggers VectorIndex.recluster when a growing corpus
-    // skews cells (VectorIndexSpec pins the skew→recluster→rebalance
-    // arc); a frozen ANN layout degrades silently without it.
+    // report that shows a growing corpus skewing cells; a frozen ANN
+    // layout degrades silently without it.
     GQuery(
       "q393_vector_index_occupancy",
       (s, dir) => {

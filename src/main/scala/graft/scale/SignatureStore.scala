@@ -4,8 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Persisted dedup signature index — the "standing index" the
-  * incremental dedup contract (q162/q369, `StreamOps.
-  * nearDupCandidateStream`) promises: the corpus-side MinHash
+  * incremental dedup contract (q162/q369) promises: the corpus-side MinHash
   * signatures, SimHash fingerprints, df-capped shingle bands, and
   * exact-dup fingerprints live as a versioned parquet artifact that a
   * daily ingest batch PROBES, instead of recomputing O(corpus)

@@ -1,15 +1,14 @@
 package graft.scale
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Skew- and shuffle-management utilities for 100 TB operation.
+/** Skew management for joins.
   *
   * AQE's skew-join splitting (on in GraftSession) handles most skew at
-  * runtime; these are the explicit tools for the cases AQE can't see:
-  * a skewed AGGREGATION key (AQE only splits join partitions) and a
-  * join whose skew is known ahead of time and must not wait for a
-  * runtime re-plan (e.g. a null-heavy or power-law foreign key).
+  * runtime; these are the explicit tools for a join whose skew is
+  * known ahead of time and must not wait for a runtime re-plan (e.g. a
+  * power-law foreign key).
   */
 object SkewOps {
 
@@ -27,24 +26,6 @@ object SkewOps {
     val exploded = right.withColumn("__salt",
       explode(sequence(lit(0), lit(buckets - 1))))
     salted.join(exploded, Seq(key, "__salt")).drop("__salt")
-  }
-
-  /** Null-safe fast-path join: null/sentinel FK rows never match an
-    * inner join but still shuffle into one giant partition. Split them
-    * out before the shuffle and union the (left-join-shaped) result
-    * back if requested.
-    */
-  def nullSkewJoin(left: DataFrame, right: DataFrame, key: String,
-      keepUnmatched: Boolean): DataFrame = {
-    val matched = left.filter(col(key).isNotNull).join(right, Seq(key))
-    if (!keepUnmatched) matched
-    else {
-      val nullRows = left.filter(col(key).isNull)
-      val rightCols = right.columns.filterNot(_ == key)
-      val padded = rightCols.foldLeft(nullRows)((df, c) =>
-        df.withColumn(c, lit(null).cast(right.schema(c).dataType)))
-      matched.unionByName(padded.select(matched.columns.map(col).toIndexedSeq: _*))
-    }
   }
 
   /** Hot/cold split join — the production skew pattern when the right
@@ -71,20 +52,4 @@ object SkewOps {
     lCold.join(rCold, Seq(key))
       .unionByName(saltedJoin(lHot, rHot, key, salts))
   }
-
-  /** Pre-aggregate a skewed groupBy: partial aggregation on
-    * (key, salt), then final on key. Spark's hash aggregate already
-    * does map-side partials, but when one grouping key dominates, the
-    * FINAL aggregation of that key still lands on one reducer with
-    * all its partials; two-level salting bounds that fan-in.
-    * `merge` must be associative over the partial column.
-    */
-  def saltedAgg(df: DataFrame, key: String, valueCol: String,
-      partial: Column => Column, merge: Column => Column,
-      buckets: Int): DataFrame =
-    df.withColumn("__salt", (rand(seed = 42) * buckets).cast("int"))
-      .groupBy(col(key), col("__salt"))
-      .agg(partial(col(valueCol)).as("__partial"))
-      .groupBy(col(key))
-      .agg(merge(col("__partial")).as(valueCol))
 }

@@ -46,10 +46,8 @@ import org.apache.spark.sql.functions._
   *  - scoring joins the pruned assignments scan against the
   *    guarded-broadcast query set; the only shuffle is the
   *    top-k-per-query rank over candidate rows.
-  *  - [[occupancy]] + [[recluster]] are the maintenance story: a
-  *    per-cell balance/drift report at nlist-row grain, and a
-  *    deterministic re-clustering (hash-balanced init + Lloyd rounds
-  *    over the INDEX, never raw embeddings) when cells skew — the
+  *  - [[occupancy]] is the maintenance report: per-cell balance and
+  *    drift at nlist-row grain, which shows when cells skew — the
   *    guaranteed failure mode of a frozen ANN layout under growth.
   *
   * Exactness: vectors quantize with the SimilarityQueries spelling
@@ -375,8 +373,8 @@ object VectorIndex {
     * and mean member→own-centroid cosine in exact micro units
     * (per-member floor(cos·10⁶) — IEEE-deterministic per row, integer
     * aggregation after, so the report replays bit-identically in an
-    * oracle). A growing corpus skews cells silently; this report is
-    * the trigger surface for [[recluster]].
+    * oracle). A growing corpus skews cells silently; this report
+    * shows it.
     */
   def occupancy(spark: SparkSession, path: String): DataFrame = {
     val root = VersionedRoot.root(spark, path, "vector index")
@@ -397,45 +395,5 @@ object VectorIndex {
       .select(col("label"), col("n_members"),
         expr("n_members * 1000 div n_total").as("share_permille"),
         expr("sum_cos_micro div n_members").as("avg_cos_micro"))
-  }
-
-  /** Re-cluster the index into a fresh version when cells have skewed:
-    * deterministic hash-balanced initialization (pmod(xxhash64(vec_id),
-    * nlist) — no global sort, no data-sized collect) refined by
-    * `rounds` Lloyd iterations, every step over the INDEX (vectors are
-    * never re-read from the corpus). Centroid sides stay broadcast
-    * metadata; each round is one scan + one (label, i) aggregate. The
-    * new version keeps the cell COUNT, rewrites assignments
-    * partitioned by the new labels, and supersedes the old root via
-    * the normal pointer flip (pinned readers finish on the retained
-    * version).
-    */
-  def recluster(spark: SparkSession, path: String, rounds: Int = 2)
-      : Unit = {
-    val root = VersionedRoot.root(spark, path, "vector index")
-    val (fs, _) = VersionedRoot.fsOf(spark, path)
-    val seqs = DeltaLog.completeSeqs(fs, root, Families)
-    val vecs = loadAssignments(spark, root, seqs)
-      .select(col("vec_id"), col("v"), col("nrm"))
-    val nlist = mergedCentroids(spark, root, seqs)
-      .select(col("label")).distinct().count().toInt.max(1)
-    var cur = vecs.withColumn("label",
-      pmod(xxhash64(col("vec_id")), lit(nlist)).cast("int"))
-    (1 to rounds).foreach { _ =>
-      val cArr = centroidArrays(centroidSums(cur))
-      val w = Window.partitionBy(col("vec_id"))
-        .orderBy(col("score").desc, col("label").asc)
-      cur = vecs.crossJoin(GuardedBroadcast.maybe(cArr))
-        .select(col("vec_id"), col("v"), col("nrm"), col("label"),
-          (expr("dot_i64(v, cv)").cast("double") /
-            (sqrt(col("nrm").cast("double")) *
-              sqrt(col("cnrm").cast("double")))).as("score"))
-        .withColumn("r", row_number().over(w)).filter(col("r") === 1)
-        .select(col("vec_id"), col("v"), col("nrm"), col("label"))
-    }
-    val n = DeltaLog.verOf(root) + 1
-    VersionedRoot.claimVersion(spark, path, n)
-    writeVersion(fs, cur, centroidSums(cur), s"$path/v$n")
-    VersionedRoot.flipPointer(spark, path, n, KeepVersions)
   }
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Hadoop's record reader must stream one whole file on ONE task, so a
   * 100 GB dump read directly through `spark.read.text` silently loses
   * every splittability property the statement-delimited readers
-  * ([[TurtleIO.turtleAudit]], [[RdfIO.ntriplesAudit]]) are built on —
+  * ([[TurtleIO.turtleAudit]], [[RdfIO.ntriplesDF]]) are built on —
   * one straggler task, executor-memory pressure, no parse fan-out.
   *
   * This step makes the cost explicit and pays it ONCE, in parallel

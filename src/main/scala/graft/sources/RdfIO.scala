@@ -14,8 +14,7 @@ import org.apache.spark.sql.functions._
   *  - S5 result sink (Proxy.c:71-85,166-177,237-255): [[writeResult]]
   *    materializes a result DataFrame as text with the reference's
   *    `<empty result>` sentinel for the 0-row case (golden file
-  *    Result-Q2:1); [[writeTable]] is the parquet path a warehouse
-  *    actually uses.
+  *    Result-Q2:1).
   */
 object RdfIO {
 
@@ -49,39 +48,6 @@ object RdfIO {
       .filter(l => l.trim.nonEmpty && !l.trim.startsWith("#"))
       .flatMap(parseNtLine _)
       .toDF("s", "p", "o")
-  }
-
-  /** STREAMING N-Triples ingest: dump files landing in `path` parse
-    * incrementally — the same per-line parser as [[ntriplesDF]], lifted
-    * over `readStream`. Compose with a `p`-partitioned parquet sink for
-    * streaming load into the store's vertical layout (see
-    * [[TurtleIO.turtleStream]] for the pattern).
-    */
-  def ntriplesStream(spark: SparkSession, path: String)
-      : org.apache.spark.sql.DataFrame = {
-    import spark.implicits._
-    spark.readStream.text(path).as[String]
-      .filter(l => l.trim.nonEmpty && !l.trim.startsWith("#"))
-      .flatMap(parseNtLine _)
-      .toDF("s", "p", "o")
-  }
-
-  /** Audited N-Triples parse — the [[DocIO]]-style `(s, p, o, bad)`
-    * relation: good lines carry `bad = null`, malformed lines carry
-    * one quarantine row with the (bounded) offending line. At corpus
-    * scale a silent drop rate is a data-quality incident; this is the
-    * loud twin of [[ntriplesDF]].
-    */
-  def ntriplesAudit(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    spark.read.textFile(path)
-      .filter(l => l.trim.nonEmpty && !l.trim.startsWith("#"))
-      .map(l => parseNtLine(l) match {
-        case Some((s, p, o)) => (s, p, o, null: String)
-        case None =>
-          (null: String, null: String, null: String, l.take(200))
-      })
-      .toDF("s", "p", "o", "bad")
   }
 
   /** N-Quads line: the three N-Triples terms plus an optional fourth
@@ -124,21 +90,6 @@ object RdfIO {
     // dumps) collapse — the same distinct fromTriples applies per slice
     st.copy(quads = Some(q.where(col("g").isNotNull)
       .select("g", "s", "p", "o").distinct()))
-  }
-
-  /** STREAMING N-Quads ingest — the dataset-grain twin of
-    * [[ntriplesStream]]: quad files landing in `path` parse
-    * incrementally into `(g, s, p, o)` rows (null `g` = default
-    * graph); compose with a `(g, p)`-partitioned parquet sink for
-    * streaming load into the dataset layout
-    * ([[graft.bgp.TripleStore.fromDatasetParquet]]'s quads shape).
-    */
-  def nquadsStream(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    spark.readStream.text(path).as[String]
-      .filter(l => l.trim.nonEmpty && !l.trim.startsWith("#"))
-      .flatMap(parseNqLine _)
-      .toDF("g", "s", "p", "o")
   }
 
   /** One N-Quads line → (g | null, s, p, o); None when malformed. */
@@ -430,15 +381,6 @@ object RdfIO {
       }, path, codec)
   }
 
-  /** Export a store's DEFAULT graph as prefix-compacted Turtle — the
-    * batch-export twin of [[TurtleIO.readTurtle]] (named graphs need
-    * the quad-grain [[exportTrig]]/[[exportNQuads]]).
-    */
-  def exportTurtle(store: TripleStore, path: String,
-      maxPrefixes: Int = 16): Unit =
-    writeTurtle(graft.bgp.BgpPlanner.query(store,
-      "select ?s ?p ?o where { ?s ?p ?o }"), path, maxPrefixes)
-
   /** S1: read a SPARQL query file (driver-side — query text is tiny). */
   def readQuery(path: String): String =
     new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
@@ -461,11 +403,5 @@ object RdfIO {
         .write.mode(SaveMode.Overwrite).text(path)
     }
     n
-  }
-
-  /** The warehouse-native sink: parquet, optionally partitioned. */
-  def writeTable(df: DataFrame, path: String, partitionBy: Seq[String] = Nil): Unit = {
-    val w = df.write.mode(SaveMode.Overwrite)
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(path)
   }
 }

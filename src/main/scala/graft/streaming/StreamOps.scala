@@ -1,28 +1,21 @@
 package graft.streaming
 
-import graft.scale.GuardedBroadcast
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Structured Streaming surface for the event pipeline.
+/** Structured Streaming surface: the operators the registry runs that
+  * also run unchanged under `readStream`.
   *
   * The reference is strictly batch request/response (SURVEY.md §2.9,
-  * Main.c:44-194); these are the streaming-shaped extensions. Every
-  * transform here is source-agnostic: it takes the event DataFrame
-  * (from `readStream` in production, a MemoryStream in tests, or a
-  * batch scan — the same code compiles to either engine), so the batch
-  * GQuery surface (EventQueries q34/q35/q50) and the streaming path
-  * stay one implementation.
-  *
-  * Scale notes: watermarks bound state (late data beyond the watermark
-  * is dropped, so state never grows unboundedly); the stateful
-  * sessionizer keys state by user_id — state size is O(active users),
-  * not O(events).
+  * Main.c:44-194). Each transform here takes a DataFrame from either
+  * engine (`readStream`, a MemoryStream in tests, or a batch scan), so
+  * the registry query that runs it over the batch table (q135 for
+  * [[attributionJoin]], q355 for [[encodedIngestSink]]) and the
+  * streaming path stay one implementation.
   */
 object StreamOps {
 
-  /** Input shape for the typed stateful ops (matches events.parquet
+  /** Input shape of the event stream (matches events.parquet
     * post-normalization).
     */
   final case class Event(
@@ -32,244 +25,10 @@ object StreamOps {
       event_type: String,
       value: Double)
 
-  /** A closed user session (emitted by the stateful sessionizer). */
-  final case class Session(
-      user_id: Long,
-      sess_start: java.sql.Timestamp,
-      sess_end: java.sql.Timestamp,
-      n_events: Long)
-
-  // public: Catalyst's generated code must reach the accessors
-  final case class SessState(startUs: Long, lastUs: Long, n: Long)
-
-  /** One CDC change record (the streaming input of a MERGE). */
-  final case class CdcChange(k: Long, op: String, value: Long, seq: Long)
-
-  /** Materialized upsert view row: the net state of a key after the
-    * latest-wins collapse (`deleted` = tombstone).
-    */
-  final case class CdcUpsert(k: Long, deleted: Boolean, value: Long, seq: Long)
-
-  final case class CdcState(seq: Long, op: String, value: Long)
-
-  /** Tumbling event-time window counts/sums. With a streaming source,
-    * the watermark lets Spark finalize and drop window state `allowed`
-    * behind the max seen event time.
-    */
-  def tumblingCounts(events: DataFrame, width: String = "1 hour",
-      allowed: String = "1 hour"): DataFrame =
-    events
-      .withWatermark("ts", allowed)
-      .groupBy(window(col("ts"), width).getField("start").as("win_start"),
-        col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("total_value"))
-
-  /** Sliding (hopping) event-time windows: `width`-long windows every
-    * `slide`. Each event enters width/slide windows — the expansion is
-    * a generate inside the window() expression, map-side, and the
-    * watermark drops a window's state once it is `allowed` behind the
-    * max event time, exactly as for tumbling windows (the state is
-    * width/slide times larger, the algorithmic minimum for overlap).
-    * Batch twin with DuckDB oracle: q222_sliding_window.
-    */
-  def slidingCounts(events: DataFrame, width: String = "1 hour",
-      slide: String = "15 minutes", allowed: String = "1 hour"): DataFrame =
-    events
-      .withWatermark("ts", allowed)
-      .groupBy(window(col("ts"), width, slide).getField("start").as("win_start"),
-        col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("total_value"))
-
-  /** Daily OHLC bars per event type (open/high/low/close), streaming:
-    * min_by/max_by over the unique (epoch-us, event_id) key are plain
-    * declarative aggregates, so the window state is ONE candidate row
-    * per (type, day) — the watermark finalizes a day's bar `allowed`
-    * behind the max event time, identical state discipline to
-    * tumblingCounts. Batch twin with DuckDB oracle: q232_event_ohlc.
-    */
-  def ohlcBars(events: DataFrame, allowed: String = "1 hour"): DataFrame =
-    events
-      .withWatermark("ts", allowed)
-      .groupBy(window(col("ts"), "1 day").getField("start").as("day_start"),
-        col("event_type"))
-      .agg(
-        min_by(col("value"),
-          struct(unix_micros(col("ts")), col("event_id"))).as("open"),
-        max(col("value")).as("high"),
-        min(col("value")).as("low"),
-        max_by(col("value"),
-          struct(unix_micros(col("ts")), col("event_id"))).as("close"),
-        count(lit(1)).as("n"))
-
-  /** Declarative sessionization via the native session_window operator:
-    * a session extends while consecutive events are < gap apart. This
-    * is the preferred (codegen'd, state-store-backed) path; the
-    * stateful variant below exists for custom-state semantics the
-    * built-in can't express.
-    */
-  def sessionAggs(events: DataFrame, gap: String = "30 minutes",
-      allowed: String = "1 hour"): DataFrame =
-    events
-      .withWatermark("ts", allowed)
-      .groupBy(session_window(col("ts"), gap), col("user_id"))
-      .agg(count(lit(1)).as("n_events"), sum(col("value")).as("total_value"))
-      .select(col("user_id"),
-        col("session_window.start").as("sess_start"),
-        col("session_window.end").as("sess_end"),
-        col("n_events"), col("total_value"))
-
-  /** Stream-stream interval join: clicks joined to the purchases of
-    * the same user within the following hour. Both sides carry
-    * watermarks and the join condition bounds event-time distance, so
-    * each side's state is droppable once the other side's watermark
-    * passes the interval — the canonical bounded-state two-stream
-    * join.
-    */
-  def clickToPurchase(clicks: DataFrame, purchases: DataFrame,
-      allowed: String = "1 hour"): DataFrame = {
-    val c = clicks.withWatermark("ts", allowed)
-      .select(col("event_id").as("click_id"), col("user_id"), col("ts").as("click_ts"))
-    val p = purchases.withWatermark("ts", allowed)
-      .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
-        col("ts").as("purchase_ts"), col("value"))
-    c.join(p,
-      col("user_id") === col("p_user") &&
-        col("purchase_ts") >= col("click_ts") &&
-        col("purchase_ts") <= col("click_ts") + expr("INTERVAL 1 HOUR"))
-      .select(col("click_id"), col("user_id"), col("purchase_id"),
-        col("purchase_ts"), col("value"))
-  }
-
-  /** Streaming exact dedup: first occurrence of each key wins;
-    * dropDuplicatesWithinWatermark bounds the dedup state to the
-    * watermark horizon (without it, streaming dedup state grows
-    * forever — the difference between a demo and a pipeline that
-    * survives week-long runs). This is the streaming arm of the batch
-    * dedup family (DedupQueries q43).
-    */
-  def dedupStream(events: DataFrame, keyCols: Seq[String],
-      allowed: String = "1 hour"): DataFrame =
-    events
-      .withWatermark("ts", allowed)
-      .dropDuplicatesWithinWatermark(keyCols)
-
-  /** Streaming arm of the composed training pipeline (batch q58): a
-    * document stream is quality-filtered FIRST (a stateless predicate
-    * — at 100 TB/day most rows die here without touching state), then
-    * exact-deduped on the content fingerprint within the watermark
-    * horizon, then folded into per-language tumbling-window corpus
-    * stats. Two stateful operators (dedup + windowed agg), both
-    * watermark-bounded, chained in append mode — the shape a
-    * continuously-ingesting curation pipeline runs for weeks.
-    */
-  def trainingPipelineStream(docs: DataFrame, width: String = "1 hour",
-      allowed: String = "1 hour"): DataFrame =
-    docs
-      .withColumn("w", split(col("text"), " "))
-      .withColumn("quality",
-        size(array_distinct(col("w"))) * lit(1.0) / size(col("w")))
-      .filter(col("quality") >= 0.3)
-      .withColumn("fp", md5(col("text").cast("binary")))
-      .withWatermark("ts", allowed)
-      .dropDuplicatesWithinWatermark(Seq("fp"))
-      .groupBy(window(col("ts"), width), col("lang"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(size(col("w"))).cast("long").as("total_tokens"))
-      .select(col("window.start").as("win_start"), col("lang"),
-        col("n_docs"), col("total_tokens"))
-
-  /** Stream–static enrichment join (the one join shape the pipeline
-    * ops above don't cover): a streaming document feed joined to a
-    * STATIC, periodically-recomputed reference relation — here the
-    * boilerplate chunk set of batch q113 — then chunk-filtered and
-    * window-counted. The static side is broadcast to every micro-batch
-    * (no state store involvement at all), which is how a 100 TB/day
-    * stream consults a curation dictionary without shuffling it.
-    * `boilerplate` must be a batch (non-streaming) DataFrame with a
-    * `chunk` column.
-    */
-  def boilerplateFilterStream(docs: DataFrame, boilerplate: DataFrame,
-      width: String = "1 hour", allowed: String = "1 hour"): DataFrame = {
-    val chunks = docs
-      .withColumn("w", split(col("text"), " "))
-      .filter(size(col("w")) >= 2)
-      .select(col("ts"), col("doc_id"), explode(expr(
-        "transform(sequence(1, size(w) div 2), i -> " +
-          "concat_ws(' ', element_at(w, CAST((i-1)*2+1 AS INT)), " +
-          "element_at(w, CAST(i*2 AS INT))))"))
-        .as("chunk"))
-    chunks
-      .join(GuardedBroadcast.maybe(boilerplate.select(col("chunk"), lit(1).as("__b"))),
-        Seq("chunk"), "left_outer")
-      .filter(col("__b").isNull)
-      .withWatermark("ts", allowed)
-      .groupBy(window(col("ts"), width), col("doc_id"))
-      .agg(count(lit(1)).as("kept_chunks"))
-      .select(col("window.start").as("win_start"), col("doc_id"),
-        col("kept_chunks"))
-  }
-
-  /** Streaming arm of the batch PII scrub (q147): redact emails and
-    * phone numbers in-flight with the same codegen'd regexes, then
-    * fold PII incidence into per-source tumbling-window stats — the
-    * "is some feed suddenly leaking contact data" monitor a
-    * continuously-ingesting pipeline alarms on. The redaction itself
-    * is STATELESS (most rows pay only a regex scan, no state store
-    * touch); the only stateful operator is the watermark-bounded
-    * window aggregate, keyed (window, source) — state is
-    * O(sources × open windows), never O(stream).
-    */
-  def piiRedactStream(docs: DataFrame, width: String = "1 hour",
-      allowed: String = "1 hour"): DataFrame = {
-    val emailRe = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
-    val phoneRe = "\\d{3}-\\d{3}-\\d{4}"
-    docs
-      .withColumn("ne", regexp_count(col("text"), lit(emailRe)))
-      .withColumn("np", regexp_count(col("text"), lit(phoneRe)))
-      .withColumn("clean", regexp_replace(
-        regexp_replace(col("text"), emailRe, "<EMAIL>"), phoneRe, "<PHONE>"))
-      .withWatermark("ts", allowed)
-      .groupBy(window(col("ts"), width), col("source"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(when(col("ne") + col("np") > 0, 1L).otherwise(0L))
-          .as("docs_with_pii"),
-        sum(col("ne") + col("np")).cast("long").as("n_redactions"),
-        sum(length(col("text")) - length(col("clean"))).cast("long")
-          .as("chars_delta"))
-      .select(col("window.start").as("win_start"), col("source"),
-        col("n_docs"), col("docs_with_pii"), col("n_redactions"),
-        col("chars_delta"))
-  }
-
-  /** Streaming arm of the q381/q382 trained quality classifier: score
-    * in-flight documents with a LEARNED weight vector (trained batch-
-    * side, shipped here as three longs — the train-batch/serve-stream
-    * split every production quality filter runs) and keep docs scoring
-    * ≥ 500‰. Stateless per row: the exact fixed-point scoring
-    * discipline of the batch arm (clamp(500 + (w·x) div 4000)), so a
-    * document gets the SAME verdict in the stream as in the batch
-    * backfill — no train/serve skew by construction. Expects columns
-    * `text`, `n_chars`; emits the inputs plus `score_milli`/`keep`.
-    */
-  def qualityScoreStream(docs: DataFrame,
-      w: (Long, Long, Long)): DataFrame =
-    docs
-      .withColumn("uniq", expr(
-        """cast(size(array_distinct(split(text, ' '))) as bigint) * 1000
-          |  div cast(size(split(text, ' ')) as bigint)""".stripMargin))
-      .withColumn("z", expr(
-        s"${w._1}L * 100L + ${w._2}L * (least(cast(n_chars as bigint), " +
-          s"1000L) - 500L) + ${w._3}L * (500L - uniq)"))
-      .withColumn("score_milli", expr(
-        "greatest(0L, least(1000L, 500L + z div 4000))"))
-      .withColumn("keep", col("score_milli") >= 500)
-      .drop("uniq", "z")
-
   /** Stream-STREAM interval join (click attribution): each view joins
     * the clicks of the same user landing in `(vts, vts + window]` —
     * both sides are unbounded streams, so this exercises Spark's
-    * symmetric-hash-join state store, not the broadcast path of the
-    * stream-static join above. The watermarks plus the time-range
+    * symmetric-hash-join state store. The watermarks plus the time-range
     * conjunct give the state store an eviction bound on BOTH sides: a
     * buffered view can be dropped once the click watermark passes
     * `vts + window`, a buffered click once the view watermark passes
@@ -297,292 +56,6 @@ object StreamOps {
         col("click_id"), col("cts"))
   }
 
-  /** Per-user funnel state: current stage (1 = viewed, 2 = clicked)
-    * and its timestamps. Public — private case classes break the
-    * generated encoder constructors.
-    */
-  final case class FunnelState(stage: Int, viewUs: Long, stageUs: Long)
-  /** One completed view→click→purchase funnel. */
-  final case class FunnelHit(user_id: Long, view_us: Long, purchase_us: Long)
-
-  /** Streaming funnel detector (the stateful arm of batch q122): a
-    * per-user stage machine over view → click → purchase, each step
-    * strictly after and within `windowUs` of the previous. State is
-    * ONE fixed-size record per user — not a buffer of events — so
-    * memory is user-count bounded; events are applied in event-time
-    * order within each micro-batch, and an event-time timeout clears
-    * users whose funnel went stale past the window.
-    *
-    * Matches q122's earliest-successor semantics: once at stage 2 a
-    * later click does NOT extend the purchase window (the earliest
-    * click per view wins, as in q122's min-aggregate). The one
-    * documented divergence is OVERLAPPING funnels: batch counts per
-    * view (a purchase can complete several views' funnels), while the
-    * single-record state machine counts sequential non-overlapping
-    * funnels — the streaming-native choice, since tracking every open
-    * view would make state per-user-event-sized. StreamSpec's
-    * differential pins the equivalence on non-overlapping fixtures.
-    */
-  def funnelStream(events: Dataset[Event],
-      windowUs: Long = 24L * 3600L * 1000000L): Dataset[FunnelHit] = {
-    import events.sparkSession.implicits._
-    def us(t: java.sql.Timestamp): Long = t.getTime * 1000L
-
-    events
-      .withWatermark("ts", "1 hour")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[FunnelState, FunnelHit](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (userId: Long, it: Iterator[Event], state: GroupState[FunnelState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val sorted = it.toSeq.sortBy(e => (us(e.ts), e.event_id))
-            var cur = state.getOption
-            val hits = Seq.newBuilder[FunnelHit]
-            for (e <- sorted) {
-              val t = us(e.ts)
-              // a stale stage never advances: drop it before matching
-              if (cur.exists(s => t - s.stageUs > windowUs)) cur = None
-              e.event_type match {
-                case "view" => cur = Some(FunnelState(1, t, t))
-                case "click" =>
-                  // advances 1 → 2 only: at stage 2 the EARLIEST click
-                  // keeps the purchase window (q122's min-aggregate)
-                  cur = cur.collect {
-                    case s if s.stage == 1 && t > s.stageUs =>
-                      FunnelState(2, s.viewUs, t)
-                  }.orElse(cur)
-                case "purchase" =>
-                  cur.filter(s => s.stage == 2 && t > s.stageUs).foreach { s =>
-                    hits += FunnelHit(userId, s.viewUs, t)
-                    cur = None
-                  }
-                case _ => ()
-              }
-            }
-            cur match {
-              case Some(s) =>
-                state.update(s)
-                state.setTimeoutTimestamp(s.stageUs / 1000L + windowUs / 1000L)
-              case None => if (state.exists) state.remove()
-            }
-            hits.result().iterator
-          }
-      }
-  }
-
-  /** Custom-state sessionizer: flatMapGroupsWithState keyed by user,
-    * emitting a [[Session]] when the 30-min gap elapses (event-time
-    * timeout) or a later event implies the previous session closed.
-    * State is one [[SessState]] per active user.
-    */
-  def sessionizeStateful(events: Dataset[Event],
-      gapMinutes: Long = 30): Dataset[Session] = {
-    import events.sparkSession.implicits._
-    val gapUs = gapMinutes * 60L * 1000000L
-
-    def us(t: java.sql.Timestamp): Long = t.getTime * 1000L
-    def ts(u: Long): java.sql.Timestamp = new java.sql.Timestamp(u / 1000L)
-
-    events
-      .withWatermark("ts", s"$gapMinutes minutes")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessState, Session](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (userId: Long, it: Iterator[Event], state: GroupState[SessState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator(Session(userId, ts(s.startUs), ts(s.lastUs), s.n))
-          } else {
-            val sorted = it.toSeq.sortBy(e => (us(e.ts), e.event_id))
-            var cur = state.getOption
-            val closed = Seq.newBuilder[Session]
-            for (e <- sorted) {
-              val t = us(e.ts)
-              cur match {
-                case Some(s) if t - s.lastUs < gapUs =>
-                  cur = Some(s.copy(lastUs = t, n = s.n + 1))
-                case Some(s) =>
-                  closed += Session(userId, ts(s.startUs), ts(s.lastUs), s.n)
-                  cur = Some(SessState(t, t, 1))
-                case None =>
-                  cur = Some(SessState(t, t, 1))
-              }
-            }
-            cur.foreach { s =>
-              state.update(s)
-              state.setTimeoutTimestamp(s.lastUs / 1000L + gapMinutes * 60000L)
-            }
-            closed.result().iterator
-          }
-      }
-  }
-
-  /** Streaming CDC upsert — the streaming arm of q202's batch MERGE.
-    *
-    * Maintains one latest-wins record per key via
-    * flatMapGroupsWithState: a change only applies if its `seq` is
-    * newer than the stored one, so out-of-order and replayed ops are
-    * ignored (idempotent by sequence number, the Debezium/Kafka
-    * compaction contract). Emits the key's NET row (value or
-    * tombstone) once per micro-batch in which it actually changed —
-    * downstream sees an upsert changelog it can apply blindly.
-    *
-    * Scale: state is one fixed-size record per LIVE key — the
-    * materialized table itself, which is the algorithmic minimum for
-    * a streaming MERGE view; at cluster scale this lives in the
-    * RocksDB state store, partitioned by key, and each micro-batch
-    * touches only arriving keys. Update output mode: emissions are
-    * per-key replacements, not append rows, matching upsert sinks.
-    */
-  def cdcUpsertStream(changes: Dataset[CdcChange]): Dataset[CdcUpsert] = {
-    import changes.sparkSession.implicits._
-    changes
-      .groupByKey(_.k)
-      .flatMapGroupsWithState[CdcState, CdcUpsert](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (key: Long, it: Iterator[CdcChange], state: GroupState[CdcState]) =>
-          val newest = it.foldLeft(state.getOption) { (cur, c) =>
-            if (cur.forall(_.seq < c.seq)) Some(CdcState(c.seq, c.op, c.value))
-            else cur
-          }
-          newest match {
-            case Some(s) if !state.getOption.contains(s) =>
-              state.update(s)
-              Iterator(CdcUpsert(key, s.op == "D", if (s.op == "D") 0L else s.value, s.seq))
-            case _ => Iterator.empty // only stale (or no) arrivals
-          }
-      }
-  }
-
-  final case class DocText(doc_id: Long, text: String)
-
-  /** A near-dup CANDIDATE from the streaming LSH band state:
-    * `doc_id` landed in a (band, bucket) that `first_id` — the
-    * earliest-retained document — claimed before it.
-    */
-  final case class NearDupCandidate(band: Int, bucket: Long,
-      first_id: Long, doc_id: Long)
-
-  /** First 8 md5 hex chars of the UTF-8 bytes as an unsigned 32-bit
-    * value — the JVM spelling of the batch queries' `h32` column
-    * (DedupQueries), bit-identical so the stream and batch LSH agree.
-    */
-  private def h32jvm(s: String): Long = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) |
-      ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
-  }
-
-  /** Streaming MinHash-LSH near-dup detection — the streaming arm of
-    * q45's batch LSH and q162's incremental batch-vs-corpus dedup.
-    * Each doc maps (statelessly, in the scan) to `perms` (band,
-    * min-hash) bucket keys over its distinct 5-token shingles — the
-    * exact q45 convention (`h32(j + ":" + shingle)`), so stream and
-    * batch candidates are bit-comparable. The keyed state holds ONE
-    * long per live bucket: the first document to claim it. Every
-    * later arrival in the bucket emits a candidate against that
-    * retained first — the star-shaped incremental-dedup contract
-    * (new-vs-corpus, never all-pairs; a doc already flagged against
-    * the retained one needs no pair with its fellow duplicates).
-    * Within a micro-batch, docs process in doc_id order, so the
-    * claimant is deterministic. State is live-bucket bounded (one
-    * int64 per bucket, ~perms per retained distinct doc); production
-    * deployments bound it further with a state TTL, like the
-    * sessionizer's timeout.
-    */
-  def nearDupCandidateStream(docs: Dataset[DocText],
-      perms: Int = 16): Dataset[NearDupCandidate] = {
-    import docs.sparkSession.implicits._
-    val banded = docs.flatMap { d =>
-      val w = d.text.split(" ")
-      if (w.length < 5) Iterator.empty
-      else {
-        val shs = w.sliding(5).map(_.mkString(" ")).toSet
-        (0 until perms).iterator.map { j =>
-          (j, shs.iterator.map(s => h32jvm(s"$j:$s")).min, d.doc_id)
-        }
-      }
-    }
-    banded
-      .groupByKey { case (band, bucket, _) => (band, bucket) }
-      .flatMapGroupsWithState[Long, NearDupCandidate](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        case ((band, bucket), it, state) =>
-          val ids = it.map(_._3).toArray.sorted
-          val (first, rest) = state.getOption match {
-            case Some(f) => (f, ids.toSeq)
-            case None =>
-              state.update(ids.head)
-              (ids.head, ids.toSeq.tail)
-          }
-          rest.iterator.filter(_ != first)
-            .map(id => NearDupCandidate(band, bucket, first, id))
-      }
-  }
-
-  /** An anomaly alert: an event whose value deviated more than
-    * `sigmas` from its type's running mean at the moment it arrived.
-    */
-  final case class Anomaly(event_id: Long, event_type: String,
-      value: Double, mean_before: Double, n_before: Long)
-
-  final case class RunStats(n: Long, sum: Double, sumSq: Double)
-
-  /** Streaming anomaly detector: per-type running mean/variance kept
-    * in state (Welford-style via the three power sums), each event
-    * judged against the statistics BEFORE its own batch — the online
-    * z-score monitor that the batch twins (q168's integer z-test,
-    * q248's median/MAD) snapshot after the fact. Events inside one
-    * micro-batch are processed in the deterministic (ts, event_id)
-    * order. State per type is three numbers — the algorithmic minimum
-    * for a running second moment; no window buffer, no event
-    * retention. The first `warmup` events of a type only train.
-    */
-  def anomalyStream(events: Dataset[Event], sigmas: Double = 3.0,
-      warmup: Long = 30): Dataset[Anomaly] = {
-    import events.sparkSession.implicits._
-    def us(t: java.sql.Timestamp): Long = t.getTime * 1000L
-    events
-      .withWatermark("ts", "1 hour")
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[RunStats, Anomaly](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (etype: String, it: Iterator[Event], state: GroupState[RunStats]) =>
-          var st = state.getOption.getOrElse(RunStats(0L, 0.0, 0.0))
-          val out = Seq.newBuilder[Anomaly]
-          for (e <- it.toSeq.sortBy(x => (us(x.ts), x.event_id))) {
-            if (st.n >= warmup) {
-              val mean = st.sum / st.n
-              val variance = math.max(0.0, st.sumSq / st.n - mean * mean)
-              val dev = math.abs(e.value - mean)
-              if (dev * dev > variance * sigmas * sigmas)
-                out += Anomaly(e.event_id, etype, e.value, mean, st.n)
-            }
-            st = RunStats(st.n + 1, st.sum + e.value,
-              st.sumSq + e.value * e.value)
-          }
-          state.update(st)
-          out.result().iterator
-      }
-  }
-
-  /** Idempotent micro-batch parquet sink for `foreachBatch`.
-    *
-    * Structured Streaming's foreachBatch gives at-least-once batch
-    * delivery: a crash between the write and the checkpoint commit
-    * replays the SAME batchId after restart. Keying the output layout
-    * by `batch_id=<id>` and writing with DYNAMIC partition overwrite
-    * makes the replay overwrite its own partition instead of appending
-    * a duplicate copy — effectively-once output on a plain
-    * non-transactional store, the standard recipe when no table format
-    * with atomic commits is available. Only partitions present in the
-    * incoming batch are touched, so concurrent history is preserved.
-    */
   /** Streaming load into the ENCODED store layout — the >10⁹-term
     * regime's ingest path, closing the gap where a streaming Turtle /
     * N-Triples load landed only the string-form layout and an encoded
@@ -598,11 +71,14 @@ object StreamOps {
     *  2. the hash-encoded rows append to `<root>/triples` partitioned
     *     by `(p, batch_id)` — the store's vertical layout, with the
     *     batch_id sub-partition + dynamic partition overwrite making
-    *     replays overwrite themselves (effectively-once, the
-    *     [[idempotentParquetSink]] recipe). The dict append is
+    *     replays overwrite themselves (effectively-once). The dict append is
     *     likewise batch_id-partitioned: a replayed batch's new-term
     *     set recomputes as empty (its terms already stand), so no
     *     partition is touched and no duplicate dict rows land.
+    *
+    * Each batch's dictionary delta is checkpointed once (for its audit
+    * and its write) and released after the write, so a long-running
+    * stream keeps no checkpoint blocks behind it.
     *
     * Compose with `foreachBatch`; load the result with
     * [[graft.bgp.TripleStore.fromEncodedIngest]]. Batches apply
@@ -633,13 +109,16 @@ object StreamOps {
         .unionByName(batch.select(col("o").as("value")))
         .unionByName(batch.select(col("p").as("value")))
       val delta = graft.bgp.TripleStore.hashDictDelta(standing, vocab)
-        .withColumn("batch_id", lit(batchId))
       // dict: APPEND (overwrite would conflict with its own standing
       // read) — replay-safe because a replayed batch's anti-join vs
-      // the standing dict recomputes its delta as empty
-      delta.write.mode("append").partitionBy("batch_id").parquet(dictPath)
+      // the standing dict recomputes its delta as empty. The delta's
+      // checkpoint blocks go once it is written, so a long stream
+      // holds none of them.
+      try delta.withColumn("batch_id", lit(batchId))
+        .write.mode("append").partitionBy("batch_id").parquet(dictPath)
+      finally graft.bgp.TripleStore.releaseCheckpoints(delta)
       // triples: dynamic overwrite of this batch's own (p, batch_id)
-      // sub-partitions — the idempotentParquetSink replay recipe
+      // sub-partitions, so a replayed batch overwrites itself
       val prev = spark.conf
         .getOption("spark.sql.sources.partitionOverwriteMode")
       spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -655,78 +134,6 @@ object StreamOps {
         case Some(v) => spark.conf
           .set("spark.sql.sources.partitionOverwriteMode", v)
         case None => spark.conf
-          .unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    }
-
-  /** foreachBatch sink GROWING the standing dedup signature index
-    * ([[graft.scale.SignatureStore]]) — the incremental arm the
-    * batch-vs-corpus probes (q162/q369/q383) read: each micro-batch's
-    * MinHash/SimHash/band/fingerprint signatures append as delta-grain
-    * `seq=` batches keyed by an idempotency token (`stream-<batchId>`),
-    * so Structured Streaming's at-least-once replay OVERWRITES its own
-    * slot instead of duplicating rows — effectively-once on the index,
-    * the [[encodedIngestSink]] discipline. Bootstraps an empty v0 when
-    * the index is absent; compaction past
-    * [[graft.scale.SignatureStore.CompactAppends]] pending batches
-    * rides along (from the index, never from raw text). Batches apply
-    * serially (Structured Streaming's contract), so every append sees
-    * the prior state. Expects (doc_id, text) micro-batches.
-    */
-  def signatureIndexSink(path: String): (DataFrame, Long) => Unit =
-    (batch, batchId) => {
-      val spark = batch.sparkSession
-      if (graft.scale.SignatureStore.currentVersion(spark, path).isEmpty)
-        graft.scale.SignatureStore.write(
-          batch.select(col("doc_id"), col("text")).limit(0), path)
-      graft.scale.SignatureStore.append(
-        batch.select(col("doc_id"), col("text")), path,
-        token = Some(s"stream-$batchId"))
-    }
-
-  /** foreachBatch sink GROWING the persisted IVF vector index
-    * ([[graft.scale.VectorIndex]]) — the [[signatureIndexSink]]
-    * discipline on the similarity artifact: each micro-batch's
-    * cell-partitioned assignment rows + partial centroid sums append
-    * as delta-grain `seq=` batches keyed by an idempotency token
-    * (`stream-<batchId>`), so at-least-once replay OVERWRITES its own
-    * slot — effectively-once on the index. Batches WITHOUT a label
-    * column are labeled against the persisted centroids first
-    * ([[graft.scale.VectorIndex.assign]]); bootstraps an empty v0 when
-    * the index is absent (an unlabeled first batch on an empty index
-    * has no centroids to assign against and fails loudly). Compaction
-    * past CompactAppends pending batches rides along. Expects
-    * (vec_id, embedding[, label]) micro-batches.
-    */
-  def vectorIndexSink(path: String): (DataFrame, Long) => Unit =
-    (batch, batchId) => {
-      val spark = batch.sparkSession
-      if (graft.scale.VectorIndex.currentVersion(spark, path).isEmpty)
-        graft.scale.VectorIndex.write(
-          batch.select(col("vec_id"), col("embedding"),
-            (if (batch.columns.contains("label")) col("label")
-             else lit(0)).cast("int").as("label")).limit(0), path)
-      val labeled =
-        if (batch.columns.contains("label"))
-          batch.select(col("vec_id"), col("embedding"), col("label"))
-        else graft.scale.VectorIndex.assign(spark, path,
-          batch.select(col("vec_id"), col("embedding")))
-      graft.scale.VectorIndex.append(labeled, path,
-        token = Some(s"stream-$batchId"))
-    }
-
-  def idempotentParquetSink(path: String): (DataFrame, Long) => Unit =
-    (batch, batchId) => {
-      val prev = batch.sparkSession.conf
-        .getOption("spark.sql.sources.partitionOverwriteMode")
-      batch.sparkSession.conf
-        .set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try batch.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite").partitionBy("batch_id").parquet(path)
-      finally prev match {
-        case Some(v) => batch.sparkSession.conf
-          .set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => batch.sparkSession.conf
           .unset("spark.sql.sources.partitionOverwriteMode")
       }
     }

@@ -1,31 +1,42 @@
 package graft.tools
 
-/** Ad-hoc audit: which registry queries plan a native RangeJoin/AsOfJoin,
-  * plus a source-level scan for raw `broadcast(` hints — every
-  * broadcast in query code must route through GuardedBroadcast.maybe
+/** Source audits over the main tree, plus an ad-hoc plan audit of which
+  * registry queries plan a native RangeJoin/AsOfJoin.
+  *
+  * Each source audit returns the offending `file:line` list (empty =
+  * clean); ToolsSpec pins every one of them empty, and [[main]] runs
+  * them all and exits 1 on any hit. [[rawBroadcastHints]], for one,
+  * keeps every broadcast in query code behind GuardedBroadcast.maybe,
   * so a broken "this is small" assumption degrades to a shuffle join
-  * instead of an executor OOM. [[rawBroadcastHints]] returns the
-  * offending file:line list (empty = clean); ToolsSpec pins it, and
-  * the other source audits here, empty.
+  * instead of an executor OOM.
   */
 object PlanAudit {
 
-  /** `file:line` for every line `hit` flags in the main sources under
-    * `root`, outside the files named in `exempt` and this auditor (its
-    * docs name every pattern).
+  /** The `.scala` files under `root`, outside the files named in
+    * `exempt` and this auditor (its docs and allowlist name every
+    * pattern).
     */
-  private def scan(root: String, exempt: String*)(
-      hit: String => Boolean): Seq[String] = {
+  private def sources(root: String,
+      exempt: String*): Seq[java.nio.file.Path] = {
     import scala.jdk.CollectionConverters._
     val skip = exempt.toSet + "PlanAudit.scala"
     java.nio.file.Files.walk(java.nio.file.Paths.get(root)).iterator().asScala
       .filter(p => p.toString.endsWith(".scala") &&
         !skip(p.getFileName.toString))
-      .flatMap { p =>
-        java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
-          case (line, i) if hit(line) => s"$p:${i + 1}"
-        }
-      }.toSeq
+      .toSeq
+  }
+
+  /** `file:line` for every line `hit` flags in the main sources under
+    * `root`, outside the files named in `exempt` and this auditor.
+    */
+  private def scan(root: String, exempt: String*)(
+      hit: String => Boolean): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    sources(root, exempt: _*).flatMap { p =>
+      java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
+        case (line, i) if hit(line) => s"$p:${i + 1}"
+      }
+    }
   }
 
   /** `file:line` for every raw broadcast( hint in main sources outside
@@ -76,25 +87,144 @@ object PlanAudit {
       .map(_.toString).toSeq
   }
 
-  def main(args: Array[String]): Unit = {
-    val hints = rawBroadcastHints()
-    if (hints.nonEmpty)
-      println(s"[audit] RAW broadcast( hints (route through " +
-        s"GuardedBroadcast.maybe): ${hints.mkString(", ")}")
-    else println("[audit] no raw broadcast( hints outside GuardedBroadcast")
-    val spark = graft.GraftSession.local("8")
-    val dir = "/root/testdata/sf0.001"
-    graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      try {
-        val plan = fn(spark, dir).queryExecution.executedPlan.toString
-        val tags = Seq(
-          if (plan.contains("RangeJoin")) Some("RangeJoin") else None,
-          if (plan.contains("AsOfJoin")) Some("AsOfJoin") else None).flatten
-        if (tags.nonEmpty) println(s"[audit] $name: ${tags.mkString(",")}")
-      } catch { case e: Throwable =>
-        println(s"[audit] $name: ERROR ${e.getMessage.take(80)}")
-      }
+  /** Public defs in main that tests use as support APIs, though no main
+    * line calls them, each with the reason it stays.
+    */
+  val UncalledAllowed: Map[String, String] = Map(
+    "SparkEntry.entry" -> "the driver's smoke entry point (EntrySpec)",
+    "BgpPlanner.analyze" ->
+      "the query graph BgpSpec and LubmSpec assert join shapes on",
+    "CatalogStats.registerAndAnalyze" ->
+      "registers and analyzes the fixture tables CostStatsSpec reads",
+    "TripleStore.invalidateSourceCache" ->
+      "clears the fromTriples source memo; ScaleSpec's reload pin",
+    "GraftShim.waitListeners" ->
+      "drains the listener bus before a test reads its job counts")
+
+  /** `file:line Object.name` for every public `def` declared directly
+    * in an `object` under `root` whose name no main line uses, outside
+    * comments and outside `allowed` (keyed `Object.name`). A use is the
+    * name as a word on any line of `root` or `callers` (the benchmark
+    * harness is an entry point) that does not define it. `main`,
+    * `apply` and `unapply` are entry points or called implicitly;
+    * `override`s are called through their parent. Code that only its
+    * own spec calls cannot build up unnoticed.
+    */
+  def uncalledPublicDefs(root: String = "src/main/scala",
+      callers: Seq[String] = Seq("perfbench/src"),
+      allowed: Map[String, String] = UncalledAllowed): Seq[String] = {
+    val template = ("""\s*(?:(?:private(?:\[\w+\])?|protected(?:\[\w+\])?""" +
+      """|final|sealed|abstract|case|implicit)\s+)*(object|class|trait)\s+(\w+).*""").r
+    val definition = ("""\s*((?:(?:private(?:\[\w+\])?|protected(?:\[\w+\])?""" +
+      """|final|override|implicit|@\w+)\s+)*)def\s+(\w+).*""").r
+    val definedName = """\bdef\s+\w+""".r
+    val word = """[A-Za-z_]\w*""".r
+    val uses = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+    val candidates = Seq.newBuilder[(String, String, String)]
+    (root +: callers).flatMap(r => sources(r).map(r -> _)).foreach {
+      case (r, p) =>
+        val lines = codeLines(p)
+        lines.foreach { case (code, _) =>
+          word.findAllIn(definedName.replaceAllIn(code, "")).foreach(uses(_) += 1)
+        }
+        // (indent, kind, name) of the templates open here, innermost first
+        var open = List.empty[(Int, String, String)]
+        if (r == root) lines.zipWithIndex.foreach {
+          case ((code, continued), i) if !continued && code.trim.nonEmpty =>
+            val indent = code.indexWhere(!_.isWhitespace)
+            if (!code.trim.startsWith(".") && !code.trim.startsWith(")"))
+              open = open.dropWhile(_._1 >= indent)
+            code match {
+              case template(kind, name) => open = (indent, kind, name) :: open
+              case definition(mods, name) if open.headOption.exists {
+                  case (at, kind, _) => kind == "object" && at == indent - 2 } &&
+                  !Seq("private", "protected", "override").exists(mods.contains) &&
+                  !Set("main", "apply", "unapply")(name) =>
+                candidates += ((s"$p:${i + 1}", open.head._3, name))
+              case _ => ()
+            }
+          case _ => ()
+        }
     }
-    spark.stop()
+    candidates.result().collect {
+      case (at, obj, name) if uses(name) == 0 && !allowed.contains(s"$obj.$name") =>
+        s"$at $obj.$name"
+    }
+  }
+
+  /** Each line of `p` with its comments removed, paired with whether
+    * it starts inside a triple-quoted string or a block comment. String
+    * contents stay: a name spelled in a string is a use.
+    */
+  private def codeLines(p: java.nio.file.Path): Seq[(String, Boolean)] = {
+    import scala.jdk.CollectionConverters._
+    val tq = "\"\"\""
+    var inBlock = false
+    var inTq = false
+    java.nio.file.Files.readAllLines(p).asScala.toSeq.map { line =>
+      val continued = inBlock || inTq
+      val out = new StringBuilder
+      var inQ = false
+      var j = 0
+      while (j < line.length) {
+        if (inBlock) {
+          val k = line.indexOf("*/", j)
+          if (k < 0) j = line.length else { inBlock = false; j = k + 2 }
+        } else if (inTq) {
+          val k = line.indexOf(tq, j)
+          val end = if (k < 0) line.length else k + 3
+          out ++= line.substring(j, end)
+          inTq = k < 0
+          j = end
+        } else if (inQ) {
+          val c = line(j)
+          val step = if (c == '\\') 2 else 1
+          out ++= line.substring(j, math.min(j + step, line.length))
+          inQ = c != '"'
+          j += step
+        } else if (line.startsWith(tq, j)) {
+          out ++= tq; inTq = true; j += 3
+        } else if (line.startsWith("'\"'", j)) {
+          out ++= "'\"'"; j += 3
+        } else if (line(j) == '"') {
+          out += '"'; inQ = true; j += 1
+        } else if (line.startsWith("//", j)) j = line.length
+        else if (line.startsWith("/*", j)) { inBlock = true; j += 2 }
+        else { out += line(j); j += 1 }
+      }
+      (out.result(), continued)
+    }
+  }
+
+  /** Runs every source audit and prints its hits, then, given a corpus
+    * directory (e.g. an sf0.001 testdata dir), lists which registry
+    * queries plan a native RangeJoin/AsOfJoin over it. Exits 1 when any
+    * source audit has a hit.
+    */
+  def main(args: Array[String]): Unit = {
+    val audits = Seq(
+      "rawBroadcastHints" -> rawBroadcastHints(),
+      "rawGlobalWindows" -> rawGlobalWindows(),
+      "rawVersionedRootIo" -> rawVersionedRootIo(),
+      "strayBuildDirs" -> strayBuildDirs(),
+      "uncalledPublicDefs" -> uncalledPublicDefs())
+    audits.foreach {
+      case (name, Seq()) => println(s"[audit] $name: clean")
+      case (name, hits) => hits.foreach(h => println(s"[audit] $name: $h"))
+    }
+    args.headOption.foreach { dir =>
+      val spark = graft.GraftSession.local("8")
+      graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+        try {
+          val plan = fn(spark, dir).queryExecution.executedPlan.toString
+          val tags = Seq("RangeJoin", "AsOfJoin").filter(plan.contains)
+          if (tags.nonEmpty) println(s"[audit] $name: ${tags.mkString(",")}")
+        } catch { case e: Throwable =>
+          println(s"[audit] $name: ERROR ${e.getMessage.take(80)}")
+        }
+      }
+      spark.stop()
+    }
+    if (audits.exists(_._2.nonEmpty)) sys.exit(1)
   }
 }

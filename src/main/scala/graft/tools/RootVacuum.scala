@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import graft.scale.{DeltaLog, VersionedRoot}
 
 /** Vacuum / inspect for the versioned artifact roots (TripleStore
@@ -99,11 +99,6 @@ object RootVacuum {
       batches ++ tmps ++ locks
     }
     vEntries ++ hEntries ++ cEntries ++ deltaEntries
-  }
-
-  def inspect(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    inspectEntries(spark, path).toDF()
   }
 
   /** Reap crashed-writer debris older than `olderThanMs`: orphaned

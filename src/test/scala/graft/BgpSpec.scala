@@ -203,20 +203,6 @@ class BgpSpec extends AnyFunSuite {
       BgpPlanner.query(tinyStore, q).collect().map(_.toSeq).toSet)
   }
 
-  test("encodeAuto escapes to the sequential dictionary on hash collision") {
-    import org.apache.spark.sql.functions.{lit, pmod, xxhash64}
-    // the colliding hash that makes encode() throw now selects the
-    // sequential build instead of dead-ending
-    val st = TripleStore.encodeAuto(tinyStore,
-      v => pmod(xxhash64(v), lit(2L)))
-    assert(st.sequential, "expected the sequential fallback")
-    val q = "select ?n where { prof:0 name ?n }"
-    assert(BgpPlanner.query(st, q).collect().map(_.getString(0)).toSet ==
-      Set("FullProfessor0"))
-    // and with the production hash encodeAuto stays on hash ids
-    assert(!TripleStore.encodeAuto(tinyStore).sequential)
-  }
-
   test("SPARQL Update: INSERT DATA is set-semantic and creates new slices") {
     val st0 = tinyStore
     val upd = SparqlUpdate.applyAll(spark, st0,
@@ -3262,6 +3248,32 @@ class BgpSpec extends AnyFunSuite {
       assert(names == Set(("t:2", "two"), ("t:3", "three"), ("t:9", "nine"),
         ("t:4", "four"), ("t:5", "five")))
     } finally h.stop()
+  }
+
+  test("a batch another writer appends inside the log survives the compaction flip") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-foreign-flip").toString
+    TripleStore.writeDatasetVersioned(TripleStore.fromTriples(Seq(
+      ("t:0", "name", "zero")).toDF("s", "p", "o")), dir)
+    def insert(st: TripleStore, s: String,
+        report: TripleStore.WriteBack => Unit = _ => ()): TripleStore = {
+      val (n, d) = graft.bgp.SparqlUpdate.applyAllWithDelta(spark, st,
+        s"""INSERT DATA { <$s> <name> "$s" }""")
+      TripleStore.writeBackDelta(st, n, dir, d, report)
+    }
+    // writer A fills seqs 0..13, writer B appends seq 14 behind its back
+    var a = TripleStore.fromDatasetParquet(spark, dir)
+    val aSubjects = (0 until TripleStore.CompactDeltaBatches - 2).map(i => s"a:$i")
+    aSubjects.foreach(x => a = insert(a, x))
+    insert(TripleStore.fromDatasetParquet(spark, dir), "b:1")
+    // A's next batch walks past B's slot to seq 15, the 16th: the flip
+    var wb: Option[TripleStore.WriteBack] = None
+    insert(a, "a:last", r => wb = Some(r))
+    assert(wb.exists(r => r.outcome == "flipped" && r.version.contains(1) &&
+      r.seqs == Seq(TripleStore.CompactDeltaBatches - 1)), wb)
+    val names = BgpPlanner.query(TripleStore.fromDatasetParquet(spark, dir),
+      "select ?s where { ?s name ?v }").collect().map(_.getString(0)).toSet
+    assert(names == (aSubjects ++ Seq("t:0", "b:1", "a:last")).toSet,
+      "the flip must keep the other writer's batch")
   }
 
   test("the update log line names every field, with or without a persist directory") {

@@ -116,18 +116,6 @@ class ScaleSpec extends AnyFunSuite {
     assert(salted == plain)
   }
 
-  test("nullSkewJoin preserves left-join semantics for null FKs") {
-    import spark.implicits._
-    val left = Seq((Some(1L), "a"), (None, "b"), (None, "c"))
-      .toDF("k", "lv")
-    val right = Seq((1L, "r1")).toDF("k", "rv")
-    val inner = SkewOps.nullSkewJoin(left, right, "k", keepUnmatched = false)
-    assert(inner.count() == 1)
-    val outer = SkewOps.nullSkewJoin(left, right, "k", keepUnmatched = true)
-    val rows = outer.collect().map(r => (r.getAs[Any]("lv"), r.getAs[Any]("rv"))).toSet
-    assert(rows == Set(("a", "r1"), ("b", null), ("c", null)))
-  }
-
   test("skewSplitJoin equals plain join with both hot and cold paths populated") {
     import spark.implicits._
     // key 1 is hot (5k rows), keys 2..51 are cold (20 rows each)
@@ -166,17 +154,6 @@ class ScaleSpec extends AnyFunSuite {
     assert(sizes._2 == 16L, s"expected 16 salt groups, got ${sizes._2}")
     assert(sizes._1 <= 6000L,
       s"hot key not spread: max (key,salt) group = ${sizes._1}")
-  }
-
-  test("saltedAgg equals plain aggregation") {
-    import spark.implicits._
-    val df = spark.range(10000)
-      .select(($"id" % 3).as("k"), ($"id" % 7).cast("double").as("v"))
-    val plain = df.groupBy($"k").agg(sum($"v").as("v"))
-      .as[(Long, Double)].collect().toMap
-    val salted = SkewOps.saltedAgg(df, "k", "v", sum, sum, buckets = 16)
-      .as[(Long, Double)].collect().toMap
-    assert(salted == plain)
   }
 
   test("bucketed tables join without an exchange (co-located join)") {
@@ -244,35 +221,6 @@ class ScaleSpec extends AnyFunSuite {
     val a = BgpPlanner.query(st, q).collect().map(_.toSeq).toSet
     val b = BgpPlanner.query(onDisk, q).collect().map(_.toSeq).toSet
     assert(a == b && a.nonEmpty)
-  }
-
-  test("s-bucketed secondary layout prunes variable-predicate scans to one bucket") {
-    import graft.bgp.{BgpPlanner, TripleStore}
-    val st = TripleStore.fromStarSchema(spark, "/root/testdata/sf0.001")
-    val wh = java.nio.file.Files.createTempDirectory("graft-sb").toString
-    TripleStore.writeSBucketed(st, s"$wh/spo_s", "graft_spo_spec_s", buckets = 8)
-
-    // a new session shares the catalog, so this reuses the entry the
-    // write made; the DDL re-registration path is not exercised here
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-    val bucketed = TripleStore.registerSBucketed(s2, s"$wh/spo_s", "graft_spo_spec_s", buckets = 8)
-    // slices stay unused by this pattern — only the secondary layout is
-    // scanned
-    val withSecondary = TripleStore(st.slices, None, sBucketed = Some(bucketed))
-
-    // constant-subject variable-predicate pattern: the scan reads ONE
-    // bucket of the secondary layout, not a union of every slice
-    val out = BgpPlanner.query(withSecondary,
-      "select ?p ?o where { <customer:17> ?p ?o }")
-    val plan = out.queryExecution.executedPlan.toString
-    assert("SelectedBucketsCount: 1 out of 8".r.findFirstIn(plan).isDefined,
-      s"expected bucket-pruned scan, got:\n$plan")
-    // and the rows match the union-view answer
-    val expected = BgpPlanner.query(st,
-      "select ?p ?o where { <customer:17> ?p ?o }")
-      .collect().map(_.toSeq).toSet
-    assert(out.collect().map(_.toSeq).toSet == expected && expected.nonEmpty)
   }
 
   test("v4 primary layout: subject joins run exchange-free AND sort-free, " +

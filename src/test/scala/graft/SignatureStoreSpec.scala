@@ -102,11 +102,17 @@ class SignatureStoreSpec extends AnyFunSuite {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val pathS = tmpDir("stream")
     val pathM = tmpDir("streamMono")
-    // two micro-batches over MemoryStream → signatureIndexSink
+    // a foreachBatch sink keyed by the micro-batch id: at-least-once
+    // replay reclaims the batch's own slot
+    val sink: (org.apache.spark.sql.DataFrame, Long) => Unit =
+      (batch, batchId) =>
+        SignatureStore.append(batch, pathS, token = Some(s"stream-$batchId"))
+    SignatureStore.write(corpus(1L to 15L, "s doc").limit(0), pathS)
+    // two micro-batches over MemoryStream
     val src = MemoryStream[(Long, String)]
     val q = src.toDF().toDF("doc_id", "text")
       .writeStream
-      .foreachBatch(graft.streaming.StreamOps.signatureIndexSink(pathS))
+      .foreachBatch(sink)
       .start()
     try {
       src.addData((1L to 10L).map(i =>
@@ -132,10 +138,9 @@ class SignatureStoreSpec extends AnyFunSuite {
     // replay: re-running a committed micro-batch must overwrite its own
     // slot, not duplicate rows (the at-least-once → effectively-once pin)
     val before = SignatureStore.load(spark, pathS).fps.count()
-    graft.streaming.StreamOps.signatureIndexSink(pathS)(
-      (11L to 15L).map(i =>
-        (i, s"s doc number $i alpha beta gamma delta epsilon zeta"))
-        .toDF("doc_id", "text"), 1L)
+    sink((11L to 15L).map(i =>
+      (i, s"s doc number $i alpha beta gamma delta epsilon zeta"))
+      .toDF("doc_id", "text"), 1L)
     assert(SignatureStore.load(spark, pathS).fps.count() == before,
       "a replayed batch duplicated signature rows")
   }

@@ -1,340 +1,26 @@
 package graft
 
 import graft.streaming.StreamOps
-import graft.streaming.StreamOps.{Event, Session}
+import graft.streaming.StreamOps.Event
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Structured Streaming specs: the same StreamOps transforms that back
-  * the batch GQueries, driven through MemoryStream micro-batches with
-  * watermark advancement, so state handling (not just the expression
-  * logic) is exercised.
+/** Structured Streaming specs: the StreamOps transforms the registry
+  * also runs over batch tables, driven through MemoryStream and file
+  * micro-batches with watermark advancement, so state handling (not
+  * just the expression logic) is exercised.
   */
 class StreamSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = GraftSession.local("4")
-
-  /** Same context, RocksDB state store — the stateful suites run
-    * against BOTH providers to prove the operators are config-only
-    * portable to the 100 TB deployment choice (GraftSession scaladoc).
-    */
-  lazy val rocksSpark: SparkSession = {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      GraftSession.RocksDbProvider)
-    s
-  }
 
   private def ts(s: String): java.sql.Timestamp =
     java.sql.Timestamp.valueOf(s)
 
   private def ev(id: Long, t: String, user: Long, typ: String = "click",
       v: Double = 1.0): Event = Event(id, ts(t), user, typ, v)
-
-  test("tumblingCounts over a memory stream matches batch semantics") {
-    import spark.implicits._
-    implicit val sql = spark.sqlContext
-    val src = MemoryStream[Event]
-    val q = StreamOps.tumblingCounts(src.toDF())
-      .writeStream.format("memory").queryName("tumbling")
-      .outputMode("complete").start()
-    try {
-      src.addData(
-        ev(1, "2024-01-01 10:05:00", 1), ev(2, "2024-01-01 10:55:00", 1, v = 2.0),
-        ev(3, "2024-01-01 11:05:00", 2), ev(4, "2024-01-01 10:10:00", 2, "buy"))
-      q.processAllAvailable()
-      val rows = spark.table("tumbling")
-        .select($"win_start".cast("string"), $"event_type", $"n", $"total_value")
-        .as[(String, String, Long, Double)].collect().toSet
-      assert(rows == Set(
-        ("2024-01-01 10:00:00", "click", 2L, 3.0),
-        ("2024-01-01 10:00:00", "buy", 1L, 1.0),
-        ("2024-01-01 11:00:00", "click", 1L, 1.0)))
-    } finally q.stop()
-  }
-
-  test("slidingCounts assigns each event to width/slide hopping windows") {
-    import spark.implicits._
-    implicit val sql = spark.sqlContext
-    val src = MemoryStream[Event]
-    val q = StreamOps.slidingCounts(src.toDF(), "1 hour", "30 minutes")
-      .writeStream.format("memory").queryName("sliding")
-      .outputMode("complete").start()
-    try {
-      src.addData(
-        ev(1, "2024-01-01 10:05:00", 1),  // windows 09:30 and 10:00
-        ev(2, "2024-01-01 10:40:00", 1))  // windows 10:00 and 10:30
-      q.processAllAvailable()
-      val rows = spark.table("sliding")
-        .select($"win_start".cast("string"), $"event_type", $"n")
-        .as[(String, String, Long)].collect().toSet
-      assert(rows == Set(
-        ("2024-01-01 09:30:00", "click", 1L),
-        ("2024-01-01 10:00:00", "click", 2L),
-        ("2024-01-01 10:30:00", "click", 1L)))
-      // the streaming result must agree with the batch twin's engine
-      // (same window() expression drives q222_sliding_window)
-      val batch = Seq(
-        (java.sql.Timestamp.valueOf("2024-01-01 10:05:00"), "click"),
-        (java.sql.Timestamp.valueOf("2024-01-01 10:40:00"), "click"))
-        .toDF("ts", "event_type")
-        .groupBy(window($"ts", "1 hour", "30 minutes").getField("start")
-          .as("win_start"), $"event_type")
-        .agg(count(lit(1)).as("n"))
-        .select($"win_start".cast("string"), $"event_type", $"n")
-        .as[(String, String, Long)].collect().toSet
-      assert(batch == rows)
-    } finally q.stop()
-  }
-
-  test("ohlcBars picks open/close by arrival order within the day bar") {
-    import spark.implicits._
-    implicit val sql = spark.sqlContext
-    val src = MemoryStream[Event]
-    val q = StreamOps.ohlcBars(src.toDF())
-      .writeStream.format("memory").queryName("ohlc")
-      .outputMode("complete").start()
-    try {
-      // out-of-order arrival: the 09:00 event arrives LAST but is the
-      // day's open; the 23:00 event is the close despite low value
-      src.addData(
-        ev(2, "2024-01-01 12:00:00", 1, v = 9.0),
-        ev(3, "2024-01-01 23:00:00", 1, v = 2.0),
-        ev(1, "2024-01-01 09:00:00", 1, v = 5.0))
-      q.processAllAvailable()
-      val rows = spark.table("ohlc")
-        .select($"day_start".cast("string"), $"event_type",
-          $"open", $"high", $"low", $"close", $"n")
-        .as[(String, String, Double, Double, Double, Double, Long)]
-        .collect().toSet
-      assert(rows == Set(
-        ("2024-01-01 00:00:00", "click", 5.0, 9.0, 2.0, 2.0, 3L)))
-      // same-timestamp tie falls to event_id: id=4 < id=5 so 4 opens
-      src.addData(
-        ev(5, "2024-01-02 08:00:00", 1, v = 7.0),
-        ev(4, "2024-01-02 08:00:00", 1, v = 3.0))
-      q.processAllAvailable()
-      val d2 = spark.table("ohlc")
-        .filter($"day_start".cast("string").startsWith("2024-01-02"))
-        .select($"open", $"close").as[(Double, Double)].collect().toSet
-      assert(d2 == Set((3.0, 7.0)))
-    } finally q.stop()
-  }
-
-  test("streaming training pipeline filters, dedups, and windows documents") {
-    import spark.implicits._
-    implicit val sql = spark.sqlContext
-    val src = MemoryStream[(Long, java.sql.Timestamp, String, String)]
-    val docs = src.toDF().toDF("doc_id", "ts", "lang", "text")
-    val q = StreamOps.trainingPipelineStream(docs)
-      .writeStream.format("memory").queryName("trainstream")
-      .outputMode("append").start()
-    try {
-      src.addData(
-        (1L, ts("2024-01-01 10:05:00"), "en", "the quick brown fox jumps"),
-        (2L, ts("2024-01-01 10:10:00"), "en", "the quick brown fox jumps"), // dup
-        (3L, ts("2024-01-01 10:20:00"), "en", "a a a a a a a a"), // low quality
-        (4L, ts("2024-01-01 10:30:00"), "de", "der schnelle braune fuchs"),
-        (5L, ts("2024-01-01 11:10:00"), "en", "an entirely different doc"))
-      q.processAllAvailable()
-      // advance the watermark far enough to close both windows
-      src.addData((6L, ts("2024-01-01 14:00:00"), "en", "late closer doc"))
-      q.processAllAvailable()
-      val rows = spark.table("trainstream")
-        .select($"win_start".cast("string"), $"lang", $"n_docs", $"total_tokens")
-        .as[(String, String, Long, Long)].collect().toSet
-      // dup 2 dropped by fingerprint, low-quality 3 dropped pre-state
-      assert(rows == Set(
-        ("2024-01-01 10:00:00", "en", 1L, 5L),
-        ("2024-01-01 10:00:00", "de", 1L, 4L),
-        ("2024-01-01 11:00:00", "en", 1L, 4L)))
-    } finally q.stop()
-  }
-
-  test("piiRedactStream redacts in-flight and windows PII incidence per source") {
-    import spark.implicits._
-    implicit val sql = spark.sqlContext
-    val src = MemoryStream[(Long, java.sql.Timestamp, String, String)]
-    val docs = src.toDF().toDF("doc_id", "ts", "source", "text")
-    val q = StreamOps.piiRedactStream(docs)
-      .writeStream.format("memory").queryName("piistream")
-      .outputMode("append").start()
-    try {
-      src.addData(
-        (1L, ts("2024-01-01 10:05:00"), "web", "reach me at bob@mail.example.com ok"),
-        (2L, ts("2024-01-01 10:10:00"), "web", "call 555-867-5309 or 555-867-5310"),
-        (3L, ts("2024-01-01 10:20:00"), "web", "nothing sensitive here"),
-        (4L, ts("2024-01-01 10:30:00"), "books", "clean prose all the way"))
-      q.processAllAvailable()
-      src.addData((5L, ts("2024-01-01 14:00:00"), "web", "late closer"))
-      q.processAllAvailable()
-      val rows = spark.table("piistream")
-        .select($"win_start".cast("string"), $"source", $"n_docs",
-          $"docs_with_pii", $"n_redactions", $"chars_delta")
-        .as[(String, String, Long, Long, Long, Long)].collect().toSet
-      // doc1: one email (20 chars -> <EMAIL> 7, delta 13); doc2: two
-      // phones (12 chars -> <PHONE> 7, delta 5 each); docs 3/4 clean
-      assert(rows == Set(
-        ("2024-01-01 10:00:00", "web", 3L, 2L, 3L, 23L),
-        ("2024-01-01 10:00:00", "books", 1L, 0L, 0L, 0L)))
-    } finally q.stop()
-  }
-
-  test("qualityScoreStream scores in-flight docs exactly like the batch arm") {
-    import spark.implicits._
-    implicit val sql = spark.sqlContext
-    val src = MemoryStream[(Long, String, Long)]
-    val docs = src.toDF().toDF("doc_id", "text", "n_chars")
-    // weights in the shape q381 learns (negative bias, negative
-    // duplication weight): high-uniqueness short docs keep
-    val w = (-100L, 10L, -300L)
-    val q = StreamOps.qualityScoreStream(docs, w)
-      .writeStream.format("memory").queryName("qscore")
-      .outputMode("append").start()
-    val fixture = Seq(
-      (1L, "a b c d e f g h", 15L),       // uniq 1000 -> strong keep
-      (2L, "a a a a a a a a", 15L),        // uniq 125  -> drop
-      (3L, "x y x y x y", 11L),            // uniq 333
-      (4L, "p q r s p q r s", 15L))        // uniq 500
-    try {
-      src.addData(fixture: _*)
-      q.processAllAvailable()
-      val streamed = spark.table("qscore")
-        .select($"doc_id", $"score_milli", $"keep")
-        .as[(Long, Long, Boolean)].collect().toSet
-      // batch twin: the same expression chain over a static frame
-      val batch = StreamOps.qualityScoreStream(
-          fixture.toDF("doc_id", "text", "n_chars"), w)
-        .select($"doc_id", $"score_milli", $"keep")
-        .as[(Long, Long, Boolean)].collect().toSet
-      assert(streamed == batch,
-        s"stream vs batch verdicts diverged: $streamed vs $batch")
-      // the verdicts separate: full-unique keeps, degenerate drops
-      val keeps = streamed.filter(_._3).map(_._1)
-      assert(keeps.contains(1L) && !keeps.contains(2L),
-        s"expected doc 1 kept and doc 2 dropped, got keeps=$keeps")
-    } finally q.stop()
-  }
-
-  test("stream-static boilerplate join filters chunks against the batch set") {
-    import spark.implicits._
-    implicit val sql = spark.sqlContext
-    val src = MemoryStream[(Long, java.sql.Timestamp, String)]
-    val docs = src.toDF().toDF("doc_id", "ts", "text")
-    val boiler = Seq("b b", "c c").toDF("chunk") // static reference set
-    val q = StreamOps.boilerplateFilterStream(docs, boiler)
-      .writeStream.format("memory").queryName("boilstream")
-      .outputMode("append").start()
-    try {
-      src.addData(
-        (1L, ts("2024-01-01 10:05:00"), "a a b b d d"), // drops "b b"
-        (2L, ts("2024-01-01 10:10:00"), "c c c c"),     // all boilerplate
-        (3L, ts("2024-01-01 10:20:00"), "x y z w"))
-      q.processAllAvailable()
-      src.addData((4L, ts("2024-01-01 14:00:00"), "late closer")) // close window
-      q.processAllAvailable()
-      val rows = spark.table("boilstream")
-        .select($"win_start".cast("string"), $"doc_id", $"kept_chunks")
-        .as[(String, Long, Long)].collect().toSet
-      // doc 2 vanishes entirely (every chunk boilerplate)
-      assert(rows == Set(
-        ("2024-01-01 10:00:00", 1L, 2L),
-        ("2024-01-01 10:00:00", 3L, 2L)))
-    } finally q.stop()
-  }
-
-  private def runFunnelSuite(s: SparkSession, sink: String): Unit = {
-    import s.implicits._
-    implicit val sql = s.sqlContext
-    val src = MemoryStream[Event]
-    val q = StreamOps.funnelStream(src.toDS(),
-        windowUs = 3600L * 1000000L) // 1h steps for the test
-      .writeStream.format("memory").queryName(sink)
-      .outputMode("append").start()
-    try {
-      src.addData(
-        // user 1: full funnel inside the window → one hit
-        ev(1, "2024-01-01 10:00:00", 1, "view"),
-        ev(2, "2024-01-01 10:20:00", 1, "click"),
-        ev(3, "2024-01-01 10:40:00", 1, "purchase"),
-        // user 2: no click stage → no hit
-        ev(4, "2024-01-01 10:00:00", 2, "view"),
-        ev(5, "2024-01-01 10:30:00", 2, "purchase"))
-      q.processAllAvailable()
-      src.addData(
-        // user 1 again: click arrives past the window → stage dropped
-        ev(6, "2024-01-01 12:00:00", 1, "view"),
-        ev(7, "2024-01-01 13:30:00", 1, "click"),
-        ev(8, "2024-01-01 13:40:00", 1, "purchase"))
-      q.processAllAvailable()
-      val rows = s.table(sink)
-        .as[StreamOps.FunnelHit].collect().toSet
-      assert(rows == Set(StreamOps.FunnelHit(1L,
-        ts("2024-01-01 10:00:00").getTime * 1000L,
-        ts("2024-01-01 10:40:00").getTime * 1000L)))
-    } finally q.stop()
-  }
-
-  test("funnelStream emits completed view-click-purchase funnels only") {
-    runFunnelSuite(spark, "funnels")
-  }
-
-  test("funnelStream state survives the RocksDB provider unchanged") {
-    runFunnelSuite(rocksSpark, "funnels_rocks")
-  }
-
-  test("funnelStream matches batch q122 counts on a shared fixture") {
-    import spark.implicits._
-    implicit val sql = spark.sqlContext
-    // 24h window (q122's) with non-overlapping funnels — the regime
-    // where the per-view batch count and the single-state-machine
-    // stream count provably coincide
-    val evs = Seq(
-      // user 1: two complete sequential funnels
-      ev(1, "2024-01-01 08:00:00", 1, "view"),
-      ev(2, "2024-01-01 09:00:00", 1, "click"),
-      ev(3, "2024-01-01 10:00:00", 1, "purchase"),
-      ev(4, "2024-01-03 08:00:00", 1, "view"),
-      ev(5, "2024-01-03 12:00:00", 1, "click"),
-      ev(6, "2024-01-04 06:00:00", 1, "purchase"),
-      // user 2: view with no click → no funnel
-      ev(7, "2024-01-01 08:00:00", 2, "view"),
-      ev(8, "2024-01-01 09:00:00", 2, "purchase"),
-      // user 3: the earliest-click tie-breaker — a SECOND click must
-      // NOT extend the purchase window (old overwrite semantics would
-      // count this; q122's min-aggregate does not: the purchase lands
-      // 28h after the first click)
-      ev(9, "2024-01-01 00:00:00", 3, "view"),
-      ev(10, "2024-01-01 01:00:00", 3, "click"),
-      ev(11, "2024-01-01 20:00:00", 3, "click"),
-      ev(12, "2024-01-02 05:00:00", 3, "purchase"),
-      // user 4: click past the 24h view window → stage never advances
-      ev(13, "2024-01-01 00:00:00", 4, "view"),
-      ev(14, "2024-01-02 01:00:00", 4, "click"),
-      ev(15, "2024-01-02 02:00:00", 4, "purchase"))
-
-    val dir = java.nio.file.Files.createTempDirectory("graft-funnel").toString
-    evs.toDS().write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val batch = SparkEntry.queries("q122_event_funnel")(spark, dir)
-      .select($"user_id", $"n_funnels").as[(Long, Long)].collect().toMap
-
-    val src = MemoryStream[Event]
-    val q = StreamOps.funnelStream(src.toDS())
-      .writeStream.format("memory").queryName("funnels_diff")
-      .outputMode("append").start()
-    try {
-      src.addData(evs: _*)
-      q.processAllAvailable()
-      val streamed = spark.table("funnels_diff")
-        .groupBy($"user_id").agg(count(lit(1)).as("n"))
-        .as[(Long, Long)].collect().toMap
-      assert(streamed == batch,
-        s"stream $streamed diverged from batch $batch")
-      assert(batch == Map(1L -> 2L)) // and the fixture is non-trivial
-    } finally q.stop()
-  }
 
   test("attributionJoin joins two streams within the interval (symmetric state)") {
     import spark.implicits._
@@ -388,70 +74,6 @@ class StreamSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("sessionAggs (native session_window) merges events under the gap") {
-    import spark.implicits._
-    implicit val sql = spark.sqlContext
-    val src = MemoryStream[Event]
-    val q = StreamOps.sessionAggs(src.toDF())
-      .writeStream.format("memory").queryName("sessions")
-      .outputMode("complete").start()
-    try {
-      // user 1: two events 10 min apart (one session), then 40-min gap
-      // (second session); user 2: single event
-      src.addData(
-        ev(1, "2024-01-01 09:00:00", 1), ev(2, "2024-01-01 09:10:00", 1),
-        ev(3, "2024-01-01 09:50:00", 1), ev(4, "2024-01-01 09:00:00", 2))
-      q.processAllAvailable()
-      val rows = spark.table("sessions")
-        .select($"user_id", $"sess_start".cast("string"), $"n_events")
-        .as[(Long, String, Long)].collect().toSet
-      assert(rows == Set(
-        (1L, "2024-01-01 09:00:00", 2L),
-        (1L, "2024-01-01 09:50:00", 1L),
-        (2L, "2024-01-01 09:00:00", 1L)))
-    } finally q.stop()
-  }
-
-  test("stateful sessionizer emits closed sessions as watermark advances") {
-    import spark.implicits._
-    implicit val sql = spark.sqlContext
-    val src = MemoryStream[Event]
-    val q = StreamOps.sessionizeStateful(src.toDS())
-      .writeStream.format("memory").queryName("closed_sessions")
-      .outputMode("append").start()
-    try {
-      src.addData(ev(1, "2024-01-01 09:00:00", 1), ev(2, "2024-01-01 09:10:00", 1))
-      q.processAllAvailable()
-      // a much later event closes user 1's first session in-batch and
-      // advances the watermark
-      src.addData(ev(3, "2024-01-01 12:00:00", 1))
-      q.processAllAvailable()
-      val sessions = spark.table("closed_sessions").as[Session]
-        .collect().map(s => (s.user_id, s.sess_start.toString, s.n_events)).toSet
-      assert(sessions.contains((1L, "2024-01-01 09:00:00.0", 2L)))
-    } finally q.stop()
-  }
-
-  test("dedupStream keeps first occurrence, bounded by watermark") {
-    import spark.implicits._
-    implicit val sql = spark.sqlContext
-    val src = MemoryStream[Event]
-    val q = StreamOps.dedupStream(src.toDF(), Seq("event_id"))
-      .writeStream.format("memory").queryName("deduped")
-      .outputMode("append").start()
-    try {
-      src.addData(
-        ev(1, "2024-01-01 09:00:00", 1), ev(1, "2024-01-01 09:00:00", 1),
-        ev(2, "2024-01-01 09:01:00", 1))
-      q.processAllAvailable()
-      src.addData(ev(1, "2024-01-01 09:02:00", 1)) // dup within watermark
-      q.processAllAvailable()
-      val ids = spark.table("deduped").select($"event_id")
-        .as[Long].collect().sorted.toSeq
-      assert(ids == Seq(1L, 2L))
-    } finally q.stop()
-  }
-
   test("file-source stream end-to-end equals the batch window aggregate") {
     import spark.implicits._
     val dir = "/root/testdata/sf0.001"
@@ -467,7 +89,14 @@ class StreamSpec extends AnyFunSuite {
     val stream = graft.Tables.normalizeEvents(
       spark.readStream.schema(rawSchema).format("parquet")
         .load(stageDir.toString))
-    val q = StreamOps.tumblingCounts(stream)
+    // hourly counts per event type; the watermark lets the stream
+    // finalize windows and is a no-op over the batch table
+    def hourly(events: org.apache.spark.sql.DataFrame) = events
+      .withWatermark("ts", "1 hour")
+      .groupBy(window($"ts", "1 hour").getField("start").as("win_start"),
+        $"event_type")
+      .agg(count(lit(1)).as("n"))
+    val q = hourly(stream)
       .writeStream.format("memory").queryName("file_windows")
       .outputMode("complete")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -477,41 +106,11 @@ class StreamSpec extends AnyFunSuite {
       val streamed = spark.table("file_windows")
         .select($"win_start".cast("string"), $"event_type", $"n")
         .as[(String, String, Long)].collect().toSet
-      val batch = StreamOps.tumblingCounts(batchDf)
+      val batch = hourly(batchDf)
         .select($"win_start".cast("string"), $"event_type", $"n")
         .as[(String, String, Long)].collect().toSet
       assert(streamed == batch)
     } finally q.stop()
-  }
-
-  test("stream-stream interval join matches within the hour window") {
-    import spark.implicits._
-    implicit val sql = spark.sqlContext
-    val clicks = MemoryStream[Event]
-    val purchases = MemoryStream[Event]
-    val q = StreamOps.clickToPurchase(clicks.toDF(), purchases.toDF())
-      .writeStream.format("memory").queryName("attrib")
-      .outputMode("append").start()
-    try {
-      clicks.addData(
-        ev(1, "2024-01-01 09:00:00", 1), ev(2, "2024-01-01 12:00:00", 1))
-      purchases.addData(
-        ev(10, "2024-01-01 09:30:00", 1, "purchase", 42.0), // within 1h of click 1
-        ev(11, "2024-01-01 11:00:00", 1, "purchase", 7.0))  // matches no click
-      q.processAllAvailable()
-      val rows = spark.table("attrib")
-        .select($"click_id", $"purchase_id").as[(Long, Long)].collect().toSet
-      assert(rows == Set((1L, 10L)))
-    } finally q.stop()
-  }
-
-  test("batch and streaming session_window agree on the events fixture") {
-    import spark.implicits._
-    val batch = graft.Tables.t(spark, "/root/testdata/sf0.001", "events")
-    val out = StreamOps.sessionAggs(batch) // watermark is a no-op in batch
-    val viaQuery = SparkEntry.queries("q50_session_window")(
-      spark, "/root/testdata/sf0.001")
-    assert(out.count() == viaQuery.count())
   }
 
   test("encodedIngestSink: streaming turtle feeds an encoded store " +
@@ -526,6 +125,7 @@ class StreamSpec extends AnyFunSuite {
       java.nio.file.Paths.get(s"$tmp/in/a.ttl"),
       "ex:a ex:knows ex:b .\nex:b ex:name \"B\" .\n".getBytes("UTF-8"))
     val pmap = Map("ex" -> "http://x.org/")
+    val persisted0 = spark.sparkContext.getPersistentRDDs.size
     def runOnce(): Unit = {
       val q = graft.sources.TurtleIO.turtleStream(spark, s"$tmp/in", pmap)
         .writeStream
@@ -541,6 +141,9 @@ class StreamSpec extends AnyFunSuite {
       java.nio.file.Paths.get(s"$tmp/in/b.ttl"),
       "ex:c ex:knows ex:b .\nex:b ex:age 4 .\n".getBytes("UTF-8"))
     runOnce()
+    // each batch released its dictionary-delta checkpoint once written
+    assert(spark.sparkContext.getPersistentRDDs.size <= persisted0,
+      "a micro-batch left checkpoint blocks behind")
     val st = TripleStore.fromEncodedIngest(spark, s"$tmp/store")
     assert(st.encoded && !st.sequential)
     // the loaded encoded store decodes query results exactly like the
@@ -571,250 +174,5 @@ class StreamSpec extends AnyFunSuite {
       graft.bgp.TripleStore.hashDictDelta(standingForged,
         Seq("termB").toDF("value")))
     assert(e.getMessage.contains("collision"))
-  }
-
-  test("idempotentParquetSink: a replayed batch overwrites, never duplicates") {
-    import spark.implicits._
-    implicit val sql = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft-sink").toString
-    val path = s"$dir/out"
-    val sink = StreamOps.idempotentParquetSink(path)
-
-    // drive it through a real foreachBatch query first (plumbing)
-    val src = MemoryStream[Event]
-    val q = src.toDF().writeStream.foreachBatch(sink)
-      .option("checkpointLocation", s"$dir/ckpt").start()
-    try {
-      src.addData(ev(1, "2024-01-01 10:05:00", 1), ev(2, "2024-01-01 10:06:00", 2))
-      q.processAllAvailable()
-      src.addData(ev(3, "2024-01-01 10:07:00", 3))
-      q.processAllAvailable()
-    } finally q.stop()
-    val afterRun = spark.read.parquet(path)
-    assert(afterRun.count() == 3)
-    assert(afterRun.select("batch_id").distinct().as[Long].collect().toSet
-      == Set(0L, 1L))
-
-    // simulate the at-least-once replay: batch 1 delivered again
-    // (same id, same rows) — the partition is overwritten in place
-    sink(Seq(ev(3, "2024-01-01 10:07:00", 3)).toDF(), 1L)
-    val afterReplay = spark.read.parquet(path)
-    assert(afterReplay.count() == 3)
-    // and batch 0's history was untouched by the replay
-    assert(afterReplay.filter($"batch_id" === 0L).count() == 2)
-  }
-
-  private def runCdcUpsertSuite(s: SparkSession, sink: String): Unit = {
-    import s.implicits._
-    import StreamOps.{CdcChange, CdcUpsert}
-    implicit val sql = s.sqlContext
-    val src = MemoryStream[CdcChange]
-    val q = StreamOps.cdcUpsertStream(src.toDS())
-      .writeStream.format("memory").queryName(sink)
-      .outputMode("update").start()
-    try {
-      src.addData(
-        CdcChange(1, "I", 100, 1), CdcChange(2, "I", 200, 1), CdcChange(3, "I", 300, 1))
-      q.processAllAvailable()
-      val b1 = s.table(sink).as[CdcUpsert].collect().toSet
-      assert(b1 == Set(
-        CdcUpsert(1, deleted = false, 100, 1),
-        CdcUpsert(2, deleted = false, 200, 1),
-        CdcUpsert(3, deleted = false, 300, 1)))
-
-      // one batch carrying: an out-of-order D/U conflict on k=1 (the
-      // higher-seq U must win), a tombstone for k=2, a STALE update
-      // for k=3 (seq 0 < stored 1 → no emission), and an upsert of a
-      // never-seen key k=4
-      src.addData(
-        CdcChange(1, "D", 0, 2), CdcChange(1, "U", 150, 3),
-        CdcChange(2, "D", 0, 2),
-        CdcChange(3, "U", 999, 0),
-        CdcChange(4, "U", 400, 5))
-      q.processAllAvailable()
-      val b2 = s.table(sink).as[CdcUpsert].collect().toSet -- b1
-      assert(b2 == Set(
-        CdcUpsert(1, deleted = false, 150, 3),
-        CdcUpsert(2, deleted = true, 0, 2),
-        CdcUpsert(4, deleted = false, 400, 5)))
-
-      // exact replay of an already-applied change: state unchanged,
-      // nothing emitted
-      val before = s.table(sink).count()
-      src.addData(CdcChange(1, "U", 150, 3))
-      q.processAllAvailable()
-      assert(s.table(sink).count() == before)
-    } finally q.stop()
-  }
-
-  test("cdcUpsertStream applies latest-wins ops, drops stale ones, and is replay-idempotent") {
-    runCdcUpsertSuite(spark, "cdc_upserts")
-  }
-
-  test("cdcUpsertStream semantics survive the RocksDB provider unchanged") {
-    // config-only portability claim: same ops, same emissions, with
-    // the state in RocksDB instead of the executor heap
-    assert(rocksSpark.conf.get("spark.sql.streaming.stateStore.providerClass")
-      .contains("RocksDB"))
-    runCdcUpsertSuite(rocksSpark, "cdc_upserts_rocks")
-  }
-
-  test("cdcUpsertStream holds 100k live keys under RocksDB (state-scale pin)") {
-    // the r6-verdict load pin for the config-only portability claim:
-    // drive state well past the HDFS provider's in-heap comfort zone
-    // and check the latest-wins semantics stay exact — one fixed-size
-    // record per live key in RocksDB, every key still individually
-    // addressable by a later micro-batch.
-    import rocksSpark.implicits._
-    import StreamOps.{CdcChange, CdcUpsert}
-    implicit val sql = rocksSpark.sqlContext
-    val n = 100000
-    val src = MemoryStream[CdcChange]
-    val q = StreamOps.cdcUpsertStream(src.toDS())
-      .writeStream.format("memory").queryName("cdc_scale_rocks")
-      .outputMode("update").start()
-    try {
-      // batch 1: n inserts → n live keys in the store
-      src.addData((1 to n).map(k => CdcChange(k, "I", k * 10L, 1)))
-      q.processAllAvailable()
-      assert(rocksSpark.table("cdc_scale_rocks").count() == n)
-      // batch 2 against the full live state: every 10th key updated at
-      // a higher seq, one stale replay (must not emit), one tombstone
-      src.addData((10 to n by 10).map(k => CdcChange(k, "U", k * 10L + 1, 2))
-        ++ Seq(CdcChange(1, "I", 999, 0), CdcChange(2, "D", 0, 2)))
-      q.processAllAvailable()
-      val out = rocksSpark.table("cdc_scale_rocks").as[CdcUpsert]
-      // emissions: n inserts + n/10 updates + 1 delete, nothing stale
-      assert(out.count() == n + n / 10 + 1)
-      // latest-wins content survives at scale: spot-check the three
-      // change classes against the full changelog
-      val latest = out.groupByKey(_.k)
-        .reduceGroups((a, b) => if (a.seq >= b.seq) a else b)
-        .map(_._2).collect().map(u => u.k -> u).toMap
-      assert(latest(10L) == CdcUpsert(10, deleted = false, 101, 2))
-      assert(latest(1L) == CdcUpsert(1, deleted = false, 10, 1))
-      assert(latest(2L) == CdcUpsert(2, deleted = true, 0, 2))
-      assert(latest.size == n)
-    } finally q.stop()
-  }
-
-  test("anomalyStream flags deviants against pre-batch state only") {
-    import spark.implicits._
-    implicit val sql = spark.sqlContext
-    val src = MemoryStream[Event]
-    // warmup=4: the first four events of a type only train the stats
-    val q = StreamOps.anomalyStream(src.toDS(), sigmas = 3.0, warmup = 4)
-      .writeStream.format("memory").queryName("anomalies")
-      .outputMode("append").start()
-    try {
-      // batch 1: four calm training events (mean 10, tight variance)
-      src.addData(
-        ev(1, "2024-01-01 10:00:00", 1, "m", 10.0),
-        ev(2, "2024-01-01 10:01:00", 1, "m", 10.2),
-        ev(3, "2024-01-01 10:02:00", 1, "m", 9.8),
-        ev(4, "2024-01-01 10:03:00", 1, "m", 10.0))
-      q.processAllAvailable()
-      assert(spark.table("anomalies").count() == 0, "warmup only trains")
-      // batch 2: a wild spike, then a calm event AFTER it in the same
-      // batch — the spike must flag; the calm one must not, and the
-      // spike must already be inside the stats the calm event sees
-      src.addData(
-        ev(5, "2024-01-01 10:04:00", 1, "m", 500.0),
-        ev(6, "2024-01-01 10:05:00", 1, "m", 10.1))
-      q.processAllAvailable()
-      val flagged = spark.table("anomalies")
-        .select($"event_id", $"n_before").as[(Long, Long)].collect().toSet
-      assert(flagged == Set((5L, 4L)), "only the spike, judged on n=4 state")
-      // batch 3: after the spike inflated the variance, a moderate
-      // deviation no longer flags — state really carried across batches
-      src.addData(ev(7, "2024-01-01 10:06:00", 1, "m", 60.0))
-      q.processAllAvailable()
-      assert(spark.table("anomalies").count() == 1,
-        "variance inflated by the spike absorbs the moderate deviation")
-    } finally q.stop()
-  }
-
-  test("streaming near-dup candidates match the batch LSH star pairs") {
-    import spark.implicits._
-    implicit val sql = spark.sqlContext
-    val docs = Seq(
-      (1L, "a b c d e f g h"),   // base
-      (2L, "a b c d e f g h"),   // exact dup of 1: every bucket collides
-      (3L, "a b c d e f g X"),   // near dup: shares most shingles with 1
-      (4L, "p q r s t u v w"),   // unrelated vocabulary
-      (5L, "p q r s t u v w y"), // near dup of 4
-      (6L, "z y2 z3 z4"))        // <5 tokens: no shingles, never a candidate
-    val src = MemoryStream[StreamOps.DocText]
-    val q = StreamOps.nearDupCandidateStream(src.toDS())
-      .writeStream.format("memory").queryName("neardup")
-      .outputMode("append").start()
-    try {
-      // corpus docs arrive first and claim their buckets...
-      src.addData(StreamOps.DocText(1, docs(0)._2), StreamOps.DocText(4, docs(3)._2))
-      q.processAllAvailable()
-      // ...later batches collide against the RETAINED firsts
-      src.addData(StreamOps.DocText(2, docs(1)._2), StreamOps.DocText(3, docs(2)._2),
-        StreamOps.DocText(5, docs(4)._2), StreamOps.DocText(6, docs(5)._2))
-      q.processAllAvailable()
-      val got = spark.table("neardup")
-        .as[StreamOps.NearDupCandidate].collect()
-        .map(c => (c.band, c.bucket, c.first_id, c.doc_id)).toSet
-      // batch twin: the q45 signature convention over the whole corpus,
-      // star pairs around the min doc of every (band, bucket)
-      val toks = docs.toDF("doc_id", "text").withColumn("w", split($"text", " "))
-        .filter(size($"w") >= 5)
-      val sh = toks.select($"doc_id", explode(expr(
-        "transform(sequence(1, size(w) - 4), i -> array_join(slice(w, i, 5), ' '))"))
-        .as("s")).distinct()
-      val mh = sh
-        .select($"doc_id", explode(sequence(lit(0), lit(15))).as("band"), $"s")
-        .select($"doc_id", $"band",
-          conv(substring(md5(concat($"band".cast("string"), lit(":"), $"s")
-            .cast("binary")), 1, 8), 16, 10).cast("long").as("h"))
-        .groupBy($"doc_id", $"band").agg(min($"h").as("bucket"))
-      val want = mh.groupBy($"band", $"bucket")
-        .agg(min($"doc_id").as("first_id"), collect_set($"doc_id").as("ids"))
-        .select($"band", $"bucket", $"first_id", explode($"ids").as("doc_id"))
-        .filter($"doc_id" =!= $"first_id")
-        .as[(Int, Long, Long, Long)].collect().toSet
-      assert(got == want, "stream star pairs must equal the batch LSH star pairs")
-      // the exact dup collides with its retained first; unrelated
-      // vocabularies never pair
-      assert(got.exists(c => c._3 == 1L && c._4 == 2L))
-      assert(!got.exists(c => Set(c._3, c._4) == Set(1L, 4L)))
-    } finally q.stop()
-  }
-
-  test("nearDupCandidateStream holds 20k docs x 16 bands under RocksDB (state-scale pin)") {
-    // 320k live (band, bucket) state entries - one retained long each -
-    // then a dup wave against the FULL standing state: every dup must
-    // collide with its retained original in all 16 bands, and fresh
-    // docs must claim fresh buckets silently.
-    import rocksSpark.implicits._
-    implicit val sql = rocksSpark.sqlContext
-    val n = 20000
-    def text(i: Int) = s"w${i}a w${i}b w${i}c w${i}d w${i}e" // 1 shingle
-    val src = MemoryStream[StreamOps.DocText]
-    val q = StreamOps.nearDupCandidateStream(src.toDS())
-      .writeStream.format("memory").queryName("neardup_rocks")
-      .outputMode("append").start()
-    try {
-      src.addData((1 to n).map(i => StreamOps.DocText(i.toLong, text(i))))
-      q.processAllAvailable()
-      assert(rocksSpark.table("neardup_rocks").count() == 0,
-        "distinct-vocabulary docs must claim buckets without colliding")
-      // wave 2: every 10th doc duplicated, plus one fresh doc
-      src.addData((10 to n by 10).map(i =>
-        StreamOps.DocText((n + i).toLong, text(i)))
-        ++ Seq(StreamOps.DocText(900001L, text(900001))))
-      q.processAllAvailable()
-      val cand = rocksSpark.table("neardup_rocks")
-        .as[StreamOps.NearDupCandidate].collect()
-      assert(cand.length == (n / 10) * 16,
-        "each dup collides in all 16 bands, the fresh doc in none")
-      assert(cand.forall(c => c.doc_id == c.first_id + n),
-        "every candidate pairs a dup with its retained original")
-      assert(cand.map(_.band).distinct.sorted.toSeq == (0 until 16))
-    } finally q.stop()
   }
 }

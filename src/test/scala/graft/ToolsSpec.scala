@@ -46,6 +46,36 @@ class ToolsSpec extends AnyFunSuite {
       _.split(':').last) == Seq("1"))
   }
 
+  test("no public def in main that only its own spec calls (caller audit)") {
+    val hits = graft.tools.PlanAudit.uncalledPublicDefs()
+    assert(hits.isEmpty,
+      "delete these with the tests that cover only them, give them a " +
+        "main caller, or allowlist them with a reason in " +
+        s"PlanAudit.UncalledAllowed: ${hits.mkString(", ")}")
+  }
+
+  test("the caller audit flags an uncalled def, not a called or allowlisted one") {
+    val dir = java.nio.file.Files.createTempDirectory("audit_callers")
+    java.nio.file.Files.write(dir.resolve("Rogue.scala"), Seq(
+      "object Rogue {",
+      "  /** names orphan and kept, but comments are no use */",
+      "  def orphan(x: Int): Int = x + 1",
+      "  def used(x: Int): Int = x * 2 // orphan",
+      "  def kept(): Unit = ()",
+      "  private def hidden(): Int = used(1)",
+      "  def main(args: Array[String]): Unit = ()",
+      "}",
+      "class Host {",
+      "  def inClass(): Int = 0",
+      "  def nested(): Int = { def inner = 1; inner }",
+      "}").mkString("\n").getBytes)
+    def audit(allowed: Map[String, String]): Seq[String] =
+      graft.tools.PlanAudit.uncalledPublicDefs(dir.toString, Nil, allowed)
+        .map(_.split(' ').last)
+    assert(audit(Map("Rogue.kept" -> "a support API")) == Seq("Rogue.orphan"))
+    assert(audit(Map.empty) == Seq("Rogue.orphan", "Rogue.kept"))
+  }
+
   test("no stray build dirs inside the source WORKTREE (hygiene audit)") {
     val stray = graft.tools.PlanAudit.strayBuildDirs()
     assert(stray.isEmpty,

@@ -708,17 +708,6 @@ class TurtleIOSpec extends AnyFunSuite {
     val back = TurtleIO.turtleDF(spark, out).collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
     assert(back == rows.toSet)
-    // exportTurtle: store in, identical default graph back out
-    val st = graft.bgp.TripleStore.fromTriples(Seq(
-      ("http://g/x", "http://g/p", "http://g/y"),
-      ("http://g/x", "http://g/q", "v")).toDF("s", "p", "o"))
-    val out2 = java.nio.file.Files.createTempDirectory("graft-ttle").toString
-    RdfIO.exportTurtle(st, out2)
-    val back2 = TurtleIO.turtleDF(spark, out2).collect()
-      .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
-    assert(back2 == Set(
-      ("http://g/x", "http://g/p", "http://g/y"),
-      ("http://g/x", "http://g/q", "v")))
   }
 
   test("streaming turtle ingest equals the batch parse of the same dump") {
@@ -741,25 +730,6 @@ class TurtleIOSpec extends AnyFunSuite {
         write("g.ttl", "@prefix ex: <http://x.org/> .\n" + ttl))
       .collect().map(_.toSeq).toSet
     assert(got == expected && got.size == 3)
-  }
-
-  test("streaming n-triples ingest equals the batch parse") {
-    val nt =
-      """<http://x.org/s> <http://x.org/p> "v"@en .
-        |# comment
-        |<http://x.org/t> <http://x.org/p> <http://x.org/o> .
-        |""".stripMargin
-    val dir = java.nio.file.Files.createTempDirectory("graft-nt-s")
-    java.nio.file.Files.write(dir.resolve("d.nt"), nt.getBytes("UTF-8"))
-    val q = RdfIO.ntriplesStream(spark, dir.toString)
-      .writeStream.format("memory").queryName("nt_stream")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val got = spark.table("nt_stream").collect().map(_.toSeq).toSet
-    val expected = RdfIO.ntriplesDF(spark, write("h.nt", nt))
-      .collect().map(_.toSeq).toSet
-    assert(got == expected && got.size == 2)
   }
 
   test("round-trip: randomized grouped serialization parses back exactly") {
