@@ -202,41 +202,15 @@ object TripleStore {
     * operation — the same assumption vertical partitioning always
     * makes, enforced by [[MaxPredicates]]: the collect is limit-bounded
     * and over-cap input is an error, never an unbounded driver set.
-    */
-  /** Persisted-source memo for [[fromTriples]]. Every WITH/USING
-    * update op rebuilds a scoped store, and registry/server/test
-    * stores route through fromTriples too — an unconditional persist
-    * would pin one cache block per call for the session lifetime.
-    * Keyed by the canonicalized source plan plus output column names
-    * (the [[graft.scale.GuardedBroadcast]] discipline: canonicalization
-    * normalizes aliases away, and two renamings of the same relation
-    * must not share a handle), so rebuilding the same scoped view
-    * reuses the persisted handle and LRU eviction unpersists the
-    * displaced one instead of leaking it.
     *
-    * Same-path reload semantics: a FILE-BACKED plan's canonicalized
-    * form snapshots the file listing at read time, so re-reading a
-    * path after its files were overwritten produces a NEW key and a
-    * fresh scan (ScaleSpec pins this — no stale serve). Staleness is
-    * only possible when the caller re-submits the IDENTICAL plan
-    * (same DataFrame / same file snapshot), where returning the
-    * persisted rows is the memo working as designed. For explicit
-    * lifecycle control (long sessions, bulk unpersist),
-    * [[invalidateSourceCache]] drops the whole memo.
+    * The source is persisted once per distinct plan by
+    * [[GuardedBroadcast.pin]]: rebuilding the same view (every WITH/USING
+    * update op scopes one) reuses the handle, and eviction unpersists.
+    * A file-backed plan snapshots its file listing, so a path re-read
+    * after an overwrite is a new key and a fresh scan.
     */
-  private val sourceMemo = new graft.tools.BoundedMemo[
-      (SparkSession, Seq[String],
-        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan),
-      DataFrame](16, _.unpersist())
-
-  /** Invalidate every memoized [[fromTriples]] source persist — the
-    * refresh hook for same-path reloads (files overwritten behind a
-    * previously loaded plan). Unpersists each displaced handle.
-    */
-  def invalidateSourceCache(): Unit = sourceMemo.clear()
-
   def fromTriples(df0: DataFrame): TripleStore = {
-    // persist the source ONCE per distinct plan (via [[sourceMemo]]):
+    // persist the source ONCE per distinct plan (GuardedBroadcast.pin):
     // every slice below derives by filter+distinct from it, so without
     // the cache a k-slice query re-scans (and for an N-Triples load,
     // re-parses) the raw relation k times per action. MEMORY_AND_DISK —
@@ -244,10 +218,7 @@ object TripleStore {
     // Stores past fixture/load scale belong on the persisted layouts
     // ([[writePartitioned]] / [[fromPartitionedParquet]]), where slice
     // dispatch is partition pruning and nothing needs executor memory.
-    val df = sourceMemo.getOrElseUpdate(
-      (df0.sparkSession, df0.columns.toIndexedSeq,
-        df0.queryExecution.analyzed.canonicalized),
-      df0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val df = GuardedBroadcast.pin(df0)
     val preds = df.select(col("p")).distinct().limit(MaxPredicates + 1)
       .collect().map(_.getString(0))
     require(preds.length <= MaxPredicates,

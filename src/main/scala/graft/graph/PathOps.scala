@@ -256,10 +256,12 @@ object PathOps {
     * (checkpointed-once) edge set against the removed vertices plus
     * one vertex-grain aggregate and join. Per-round shuffled bytes
     * drop from edge-grain to vertex-grain, and the edge relation is
-    * never rewritten. The removed set is guarded-broadcast
-    * (GuardedBroadcast.maybe): batch-sized in typical rounds, and the
-    * guard degrades to a shuffle join when a pathological round
-    * removes a data-sized set — never an OOM. Fixpoint, round count
+    * never rewritten. The removed set lives for one round only, so it
+    * takes no memo entry: within the broadcast threshold it is
+    * collected to the driver (GuardedBroadcast.collectBounded) and
+    * joined as a broadcast `LocalRelation`; a pathological round that
+    * removes a data-sized set takes a plain shuffle join — never an
+    * OOM. Fixpoint, round count
     * and the returned vertex set are identical to the bulk peel (the
     * same vertices fall below k in the same rounds; both implement
     * the unique k-core fixpoint). Reaching maxIter rounds with
@@ -285,27 +287,30 @@ object PathOps {
         .localCheckpoint(eager = false)
       (cp, cp.filter(col("d") < k).count())
     }
+    val spark = edges.sparkSession
+    val budget = GuardedBroadcast.threshold(spark)
     var iter = 0
     while (pending > 0 && iter < maxIter) {
-      val removed = deg.filter(col("d") < k).select(col("src"))
+      val removed = deg.filter(col("d") < k).select(col("src").as("dst"))
+      val held = GuardedBroadcast.rowBytes(removed.schema).filter(_ => budget > 0)
+        .flatMap(GuardedBroadcast.collectBounded(removed, _, budget))
+        .map(rows => GuardedBroadcast.maybe(
+          spark.createDataFrame(rows.map(_._1).asJava, removed.schema)))
       // edges lost by surviving vertices: every edge whose dst was
       // just removed decrements its (still-alive) src by one. Each
       // edge's dst is removed in at most one round, so no edge is
       // ever double-counted; edges whose src died earlier drop out
       // because the join below is against the alive degree relation.
-      val lost = ed
-        .join(graft.scale.GuardedBroadcast.maybe(
-          removed.withColumnRenamed("src", "dst")), Seq("dst"))
+      val lost = ed.join(held.getOrElse(removed), Seq("dst"))
         .groupBy(col("src")).agg(count(lit(1)).as("_lost"))
       val next = deg.filter(col("d") >= k)
         .join(lost, Seq("src"), "left_outer")
         .select(col("src"),
           (col("d") - coalesce(col("_lost"), lit(0L))).as("d"))
         .localCheckpoint(eager = false)
-      // two jobs per round: the guard's measuring job over the
-      // removed set, then the fixpoint probe (how many alive vertices
-      // fell below k), which materializes the round's vertex-grain
-      // checkpoint.
+      // two jobs per round: the bounded collect of the removed set,
+      // then the fixpoint probe (how many alive vertices fell below
+      // k), which materializes the round's vertex-grain checkpoint.
       pending = next.filter(col("d") < k).count()
       deg = next
       iter += 1

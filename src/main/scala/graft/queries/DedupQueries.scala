@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{GQuery, Tables}
+import graft.scale.Derived
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -68,15 +69,12 @@ object DedupQueries {
     *    anti-join (skew-safe; see [[shingleBand]]);
     *  - all (q45): doc_id, s string shingles — MinHash needs lexical
     *    shingles to hash per permutation.
+    *
+    * This one: doc_id + distinct 5-token shingles (guarded to docs with
+    * ≥5 tokens).
     */
-  private val bandMemo =
-    new graft.tools.BoundedMemo[(SparkSession, String), DataFrame](4, _.unpersist())
-  private val allMemo =
-    new graft.tools.BoundedMemo[(SparkSession, String), DataFrame](4, _.unpersist())
-
-  /** doc_id + distinct 5-token shingles (guarded to docs with ≥5 tokens). */
   private def shingles(s: SparkSession, dir: String): DataFrame =
-    allMemo.getOrElseUpdate((s, dir),
+    Derived(s, Derived.Dataset, ("shingles", dir))(
       shingleRows(s, dir).distinct()
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
@@ -96,7 +94,7 @@ object DedupQueries {
     * ScaleSpec pins the plan shape (no Window node, broadcast anti).
     */
   private def shingleBand(s: SparkSession, dir: String): DataFrame =
-    bandMemo.getOrElseUpdate((s, dir), {
+    Derived(s, Derived.Dataset, ("shingleBand", dir)) {
       import s.implicits._
       val rows = shingleRows(s, dir)
         .select($"doc_id", xxhash64($"s").as("k"))
@@ -107,7 +105,7 @@ object DedupQueries {
       rows.join(graft.scale.GuardedBroadcast.maybe(overCap), Seq("k"), "left_anti")
         .select($"doc_id", $"k")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
   /** First 8 md5 hex chars of `e` as an unsigned 32-bit value in a Long. */
   private def h32(e: org.apache.spark.sql.Column): org.apache.spark.sql.Column =

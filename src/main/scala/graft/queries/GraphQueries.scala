@@ -3,6 +3,7 @@ package graft.queries
 import graft.GQuery
 import graft.bgp.TripleStore
 import graft.graph.RdfGraph
+import graft.scale.Derived
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -22,14 +23,9 @@ object GraphQueries {
   // analytics queries share one construction, and the iterative
   // algorithms (Pregel) re-visit the edge RDD every superstep — caching
   // it is the difference between O(iters) and O(iters × rebuild) scans.
-  private val graphCache =
-    new graft.tools.BoundedMemo[(SparkSession, String, Seq[String]),
-      org.apache.spark.graphx.Graph[String, String]](4,
-      g => { g.unpersistVertices(blocking = false); g.edges.unpersist(blocking = false) })
-
   private def graph(s: SparkSession, dir: String,
       preds: Seq[String] = entityPreds) =
-    graphCache.getOrElseUpdate((s, dir, preds),
+    Derived(s, Derived.Dataset, ("graph", dir, preds))(
       RdfGraph.fromStore(TripleStore.fromStarSchema(s, dir), preds).cache())
 
   /** The same edge list, relationally, for the oracle. */
@@ -102,7 +98,7 @@ object GraphQueries {
         // per-(session, dataset) persisted pair: vertices and the
         // degree-joined edges feed every unrolled iteration — memoized
         // with unpersist-on-evict, not leaked per invocation
-        val (vertices, withDeg) = prMemo.getOrElseUpdate((s, dir), {
+        val (vertices, withDeg) = Derived(s, Derived.Dataset, ("pagerank", dir)) {
           val store = TripleStore.fromStarSchema(s, dir)
           val edges = entityPreds.map(store.slices(_))
             .reduce(_ unionByName _).toDF("src", "dst")
@@ -110,7 +106,7 @@ object GraphQueries {
             .unionByName(edges.select($"dst".as("v"))).distinct().cache()
           val deg = edges.groupBy($"src").agg(count(lit(1)).as("deg"))
           (v, edges.join(deg, "src").cache())
-        })
+        }
         var ranks = vertices.select($"v", lit(10000000000L).as("rank"))
         for (_ <- 1 to 3) {
           val sums = withDeg
@@ -185,7 +181,7 @@ object GraphQueries {
       "q194_triangle_count",
       (s, dir) => {
         import s.implicits._
-        val (ornt, wedges) = triMemo.getOrElseUpdate((s, dir), {
+        val (ornt, wedges) = Derived(s, Derived.Dataset, ("triangles", dir)) {
           val store = TripleStore.fromStarSchema(s, dir)
           val ed = entityPreds.flatMap(store.slices.get)
             .map(_.select($"s", $"o"))
@@ -222,7 +218,7 @@ object GraphQueries {
             .select(col("e1.b").as("x"), col("e2.b").as("y"))
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           (o, w)
-        })
+        }
         val tri = wedges.join(ornt,
           $"x" === $"a" && $"y" === $"b", "left_semi")
         wedges.agg(count(lit(1)).as("n_wedges"))
@@ -451,46 +447,24 @@ object GraphQueries {
   /** The q53 edge list as a DataFrame (relational mirror of
     * [[edgesSql]], shared by the driver-gated iterative queries).
     */
-  // memoized + persisted like [[graphCache]]: the iterative queries
+  // memoized + persisted like [[graph]]: the iterative queries
   // (LPA's 2 rounds, HITS' 4 passes, the two-hop projection) each
   // re-visit the edge relation several times per run — without the
   // cache every visit re-pays the 7-way distinct-union build.
-  // q55's persisted (vertices, degree-joined edges) pair, one per
-  // (session, dataset): eviction unpersists both handles
-  private val prMemo = new graft.tools.BoundedMemo[
-      (SparkSession, String),
-      (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)](
-    2, { case (a, b) => a.unpersist(); b.unpersist() })
-
-  // q194's persisted (ornt, wedges) pair, one per (session, dataset):
-  // eviction unpersists both handles
-  private val triMemo = new graft.tools.BoundedMemo[
-      (SparkSession, String),
-      (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)](
-    2, { case (a, b) => a.unpersist(); b.unpersist() })
-
-  private val edgesDfCache =
-    new graft.tools.BoundedMemo[(SparkSession, String), DataFrame](
-      4, _.unpersist(blocking = false))
-
   private def edgesDf(s: SparkSession, dir: String): DataFrame =
-    edgesDfCache.getOrElseUpdate((s, dir), buildEdgesDf(s, dir).persist())
+    Derived(s, Derived.Dataset, ("edges", dir))(buildEdgesDf(s, dir).persist())
 
   /** Memoized symmetrized edge relation — the per-round probe side of
     * the label-propagation iterations.
     */
-  private val undCache =
-    new graft.tools.BoundedMemo[(SparkSession, String), DataFrame](
-      4, _.unpersist(blocking = false))
-
   private def undirectedDf(s: SparkSession, dir: String): DataFrame =
-    undCache.getOrElseUpdate((s, dir), {
+    Derived(s, Derived.Dataset, ("undirected", dir)) {
       import s.implicits._
       val edges = edgesDf(s, dir)
       edges.select($"s".as("v"), $"o".as("w"))
         .unionByName(edges.select($"o".as("v"), $"s".as("w")))
         .distinct().persist()
-    })
+    }
 
   private def buildEdgesDf(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.scale.GuardedBroadcast
+import graft.scale.{Derived, GuardedBroadcast}
 import graft.{GQuery, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -31,11 +31,6 @@ import org.apache.spark.sql.functions._
   */
 object SimilarityQueries {
 
-  // q81's persisted long-format embedding relation, one per
-  // (session, dataset): eviction unpersists
-  private val kmeansLongMemo = new graft.tools.BoundedMemo[
-      (org.apache.spark.sql.SparkSession, String),
-      org.apache.spark.sql.DataFrame](2, _.unpersist())
   import Tables.t
 
   /** Embeddings with 4-decimal integer quantization + integer norm. */
@@ -440,7 +435,7 @@ object SimilarityQueries {
         // the long-format quantized relation feeds every k-means
         // iteration — memoized per (session, dataset) with
         // unpersist-on-evict, not leaked per invocation
-        val q = kmeansLongMemo.getOrElseUpdate((s, dir),
+        val q = Derived(s, Derived.Dataset, ("kmeansLong", dir))(
           t(s, dir, "embeddings")
             .select($"vec_id", posexplode($"embedding").as(Seq("d", "e")))
             .select($"vec_id", $"d",

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.scale.{BoundedWindow, ExactRank, GuardedBroadcast}
+import graft.scale.{BoundedWindow, Derived, ExactRank, GuardedBroadcast}
 import graft.{GQuery, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -23,12 +23,6 @@ object TextQueries {
     * AGAIN (the part iteration one can't exercise).
     */
   val BpeMerges = 6
-
-  // learned merge table per (session, dataset) — training runs once,
-  // tokenize-apply (q377) reuses q376's result
-  private val bpeMemo = new graft.tools.BoundedMemo[
-      (org.apache.spark.sql.SparkSession, String),
-      Seq[(String, String, Long)]](4)
 
   /** Word relation for BPE: lowercased ASCII-alpha runs, ≥2 chars —
     * the ONE corpus-sized pass (map-side combine into a
@@ -67,15 +61,16 @@ object TextQueries {
     * folds the merge into the segmentation expression (a literal
     * replace — embarrassingly parallel, no shuffle). Ties break
     * (count DESC, a, b) so Spark and the unrolled-CTE oracle pick
-    * identical merges.
+    * identical merges. Memoized per (session, dataset): training runs
+    * once, and tokenize-apply (q377) reuses q376's merge table.
     */
   private def bpeTrain(s: org.apache.spark.sql.SparkSession, dir: String,
       k: Int): Seq[(String, String, Long)] =
-    bpeMemo.getOrElseUpdate((s, dir), {
+    Derived(s, Derived.Dataset, ("bpe", dir)) {
       val words = bpeWords(s, dir).cache()
       try bpeTrainLoop(words, k)
       finally { words.unpersist(); () }
-    })
+    }
 
   /** The training loop over a (word, freq) relation, INCREMENTALLY
     * materialized: the segmented relation carries each round's state,
@@ -196,13 +191,6 @@ object TextQueries {
       }.toDF("source", "word", "freq", "ntok")
   }
 
-  // q381's trained model (per-step weights + accuracy) per
-  // (session, dataset) — training runs once; the apply arm (q382) and
-  // the streaming scorer reuse the learned weights
-  private val clfMemo = new graft.tools.BoundedMemo[
-      (org.apache.spark.sql.SparkSession, String),
-      Seq[(Long, Long, Long, Long, Long)]](4)
-
   /** q381/q382's feature relation: exact fixed-point document
     * features + the distillation label (unique-token ratio ≥ 600‰).
     */
@@ -234,7 +222,7 @@ object TextQueries {
     */
   private def clfTrain(s: org.apache.spark.sql.SparkSession,
       dir: String): Seq[(Long, Long, Long, Long, Long)] =
-    clfMemo.getOrElseUpdate((s, dir), {
+    Derived(s, Derived.Dataset, ("clf", dir)) {
       val feat = clfFeatures(s, dir).cache()
       try {
         var w = Array(0L, 0L, 0L)
@@ -264,7 +252,7 @@ object TextQueries {
         rows += ((7L, w(0), w(1), w(2), ncFinal))
         rows.result()
       } finally { feat.unpersist(); () }
-    })
+    }
 
   /** Unrolled DuckDB mirror of one training iteration: pair counts
     * over s{i-1}, top-1 by (count DESC, a, b), literal-replace into

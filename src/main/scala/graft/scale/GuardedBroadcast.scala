@@ -1,9 +1,8 @@
 package graft.scale
 
-import graft.tools.BoundedMemo
 import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
@@ -26,22 +25,22 @@ import scala.collection.mutable
   * computes (and that stays persisted for the actual join), so the
   * guard costs one cheap job — none for a driver-local relation, which
   * is measured on the driver — and only once per distinct plan: the
-  * persisted handle and its measured size live in a [[BoundedMemo]]
-  * keyed by the canonicalized logical plan, so re-registering the same
-  * query (a bench rerun, a long-lived service) reuses the cached copy,
-  * and eviction from the capped memo unpersists it instead of leaking
-  * one cache entry per invocation for the session lifetime.
+  * persisted handle and its measured size live in [[Derived]]'s guard
+  * kind, keyed by the canonicalized logical plan, so re-registering the
+  * same query (a bench rerun, a long-lived service) reuses the cached
+  * copy, and eviction from the capped kind unpersists it instead of
+  * leaking one cache entry per invocation for the session lifetime.
   */
 object GuardedBroadcast {
 
-  // planner-sized: a handful of persisted guard relations; LRU
-  // eviction unpersists the displaced handle. The key carries the
-  // output column NAMES alongside the canonicalized plan —
-  // canonicalization normalizes aliases away, and two renamings of
-  // the same relation must not share a cached handle.
-  private val memo =
-    new BoundedMemo[(SparkSession, Seq[String], LogicalPlan), (DataFrame, Long)](
-      32, { case (df, _) => df.unpersist() })
+  /** `df`'s guard-kind memo entry: persisted handle and measured size.
+    * The key carries the output column NAMES beside the canonicalized
+    * plan, which normalizes aliases away: two renamings of the same
+    * relation must not share a cached handle.
+    */
+  private def memo(df: DataFrame)(build: => (DataFrame, Long)): (DataFrame, Long) =
+    Derived(df.sparkSession, Derived.Guard,
+      (df.schema.fieldNames.toSeq, df.queryExecution.analyzed.canonicalized))(build)
 
   /** Fixed on-heap width for types whose payload the schema fully
     * determines; None for variable or nested types.
@@ -153,9 +152,7 @@ object GuardedBroadcast {
         val measured = df.select(bytesExpr).collect().iterator.map(_.getLong(0)).sum
         if (measured <= thresholdBytes) broadcast(df) else df
       case Some(bytesExpr) =>
-        val key = (df.sparkSession, df.schema.fieldNames.toSeq,
-          df.queryExecution.analyzed.canonicalized)
-        val (cached, measured) = memo.getOrElseUpdate(key, {
+        val (cached, measured) = memo(df) {
           val c = df.persist(StorageLevel.MEMORY_AND_DISK)
           val m = c.select(sum(bytesExpr).as("b"))
             .head.getAs[Any]("b") match {
@@ -163,7 +160,7 @@ object GuardedBroadcast {
               case b: Long => b
             }
           (c, m)
-        })
+        }
         if (measured <= thresholdBytes) broadcast(cached) else cached
     }
   }
@@ -181,21 +178,19 @@ object GuardedBroadcast {
     * several times in one plan family (ExactRank's percentile probe,
     * histogram aggregates, and final joins all scan the same ranked
     * input — unpinned, each pass would recompute the whole upstream
-    * chain). Shares the same bounded memo (so eviction unpersists),
-    * keyed by the same canonicalized plan; the sentinel size keeps a
-    * later [[maybe]] on the identical plan from ever broadcasting the
-    * pinned copy — conservative, never wrong.
+    * chain), and for `TripleStore.fromTriples`' source, which every
+    * slice derives from. Shares the same guard-kind memo (so eviction
+    * unpersists), keyed by the same canonicalized plan; the sentinel
+    * size keeps a later [[maybe]] on the identical plan from ever
+    * broadcasting the pinned copy — conservative, never wrong.
     */
-  def pin(df: DataFrame): DataFrame = {
-    val key = (df.sparkSession, df.schema.fieldNames.toSeq,
-      df.queryExecution.analyzed.canonicalized)
-    val (cached, _) = memo.getOrElseUpdate(key,
-      (df.persist(StorageLevel.MEMORY_AND_DISK), Long.MaxValue))
-    cached
-  }
+  def pin(df: DataFrame): DataFrame =
+    memo(df)((df.persist(StorageLevel.MEMORY_AND_DISK), Long.MaxValue))._1
 
-  /** Visible for tests: current number of memoized guard relations. */
-  def memoSize: Int = memo.size
+  /** Current number of memoized guard relations ([[Derived.Guard]]
+    * entries).
+    */
+  def memoSize: Int = Derived.size(Derived.Guard)
 
   /** TorrentBroadcast a BOUNDED driver-side VALUE (a directive table,
     * a prefix map — things a schema-sized collect already capped) —

@@ -96,8 +96,6 @@ object PlanAudit {
       "the query graph BgpSpec and LubmSpec assert join shapes on",
     "CatalogStats.registerAndAnalyze" ->
       "registers and analyzes the fixture tables CostStatsSpec reads",
-    "TripleStore.invalidateSourceCache" ->
-      "clears the fromTriples source memo; ScaleSpec's reload pin",
     "GraftShim.waitListeners" ->
       "drains the listener bus before a test reads its job counts")
 
@@ -113,42 +111,81 @@ object PlanAudit {
   def uncalledPublicDefs(root: String = "src/main/scala",
       callers: Seq[String] = Seq("perfbench/src"),
       allowed: Map[String, String] = UncalledAllowed): Seq[String] = {
-    val template = ("""\s*(?:(?:private(?:\[\w+\])?|protected(?:\[\w+\])?""" +
-      """|final|sealed|abstract|case|implicit)\s+)*(object|class|trait)\s+(\w+).*""").r
     val definition = ("""\s*((?:(?:private(?:\[\w+\])?|protected(?:\[\w+\])?""" +
       """|final|override|implicit|@\w+)\s+)*)def\s+(\w+).*""").r
     val definedName = """\bdef\s+\w+""".r
     val word = """[A-Za-z_]\w*""".r
     val uses = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
-    val candidates = Seq.newBuilder[(String, String, String)]
-    (root +: callers).flatMap(r => sources(r).map(r -> _)).foreach {
-      case (r, p) =>
-        val lines = codeLines(p)
-        lines.foreach { case (code, _) =>
-          word.findAllIn(definedName.replaceAllIn(code, "")).foreach(uses(_) += 1)
-        }
-        // (indent, kind, name) of the templates open here, innermost first
-        var open = List.empty[(Int, String, String)]
-        if (r == root) lines.zipWithIndex.foreach {
-          case ((code, continued), i) if !continued && code.trim.nonEmpty =>
-            val indent = code.indexWhere(!_.isWhitespace)
-            if (!code.trim.startsWith(".") && !code.trim.startsWith(")"))
-              open = open.dropWhile(_._1 >= indent)
-            code match {
-              case template(kind, name) => open = (indent, kind, name) :: open
-              case definition(mods, name) if open.headOption.exists {
-                  case (at, kind, _) => kind == "object" && at == indent - 2 } &&
-                  !Seq("private", "protected", "override").exists(mods.contains) &&
-                  !Set("main", "apply", "unapply")(name) =>
-                candidates += ((s"$p:${i + 1}", open.head._3, name))
-              case _ => ()
-            }
-          case _ => ()
-        }
-    }
-    candidates.result().collect {
-      case (at, obj, name) if uses(name) == 0 && !allowed.contains(s"$obj.$name") =>
+    (root +: callers).flatMap(sources(_)).foreach(p => codeLines(p).foreach {
+      case (code, _) =>
+        word.findAllIn(definedName.replaceAllIn(code, "")).foreach(uses(_) += 1)
+    })
+    members(root).collect {
+      case Member(at, "object", obj, definition(mods, name), _)
+          if !Seq("private", "protected", "override").exists(mods.contains) &&
+            !Set("main", "apply", "unapply")(name) && uses(name) == 0 &&
+            !allowed.contains(s"$obj.$name") =>
         s"$at $obj.$name"
+    }
+  }
+
+  /** Module-level caches outside `scale/Derived`, each with the reason it stays. */
+  val ModuleCachesAllowed: Map[String, String] = Map(
+    "ServiceRegistry.stores" ->
+      "user registrations, not derived state: evicting one would break resolve")
+
+  /** `file:line Object.name` for every `val` declared directly in an
+    * `object` under `root` whose initializer builds a mutable map or
+    * memo (`ConcurrentHashMap`, `TrieMap`, `mutable.*Map`,
+    * `BoundedMemo`), outside `scale/Derived` (the one memo for derived
+    * state) and `allowed`. Class members are per-instance state.
+    */
+  def moduleCaches(root: String = "src/main/scala",
+      allowed: Map[String, String] = ModuleCachesAllowed): Seq[String] = {
+    val value = ("""\s*(?:(?:private(?:\[\w+\])?|protected(?:\[\w+\])?""" +
+      """|final|override|implicit|lazy|@\w+)\s+)*val\s+(\w+)[^=]*=(.*)""").r
+    val cache = ("""\s*(?:new\s+)?[\w.]*\b""" +
+      """(?:BoundedMemo|ConcurrentHashMap|TrieMap|mutable\.\w*Map)\b.*""").r
+    members(root, "Derived.scala").collect {
+      case Member(at, "object", obj, value(name, init), next)
+          if cache.matches(if (init.trim.isEmpty) next else init) &&
+            !allowed.contains(s"$obj.$name") =>
+        s"$at $obj.$name"
+    }
+  }
+
+  /** A line one indent step (two spaces) inside a template (`object`,
+    * `class` or `trait`): `file:line`, the template's kind and name, and
+    * the line's code and next non-blank code line, comments removed.
+    */
+  private final case class Member(at: String, kind: String, owner: String,
+      code: String, next: String)
+
+  /** Every [[Member]] in the sources under `root`, outside `exempt`. */
+  private def members(root: String, exempt: String*): Seq[Member] = {
+    val template = ("""\s*(?:(?:private(?:\[\w+\])?|protected(?:\[\w+\])?""" +
+      """|final|sealed|abstract|case|implicit)\s+)*(object|class|trait)\s+(\w+).*""").r
+    sources(root, exempt: _*).flatMap { p =>
+      val lines = codeLines(p)
+      // (indent, kind, name) of the templates open here, innermost first
+      var open = List.empty[(Int, String, String)]
+      lines.zipWithIndex.flatMap {
+        case ((code, continued), i) if !continued && code.trim.nonEmpty =>
+          val indent = code.indexWhere(!_.isWhitespace)
+          if (!code.trim.startsWith(".") && !code.trim.startsWith(")"))
+            open = open.dropWhile(_._1 >= indent)
+          val member = open.headOption.collect {
+            case (at, kind, owner) if at == indent - 2 =>
+              Member(s"$p:${i + 1}", kind, owner, code, lines.iterator.drop(i + 1)
+                .map(_._1).find(_.trim.nonEmpty).getOrElse(""))
+          }
+          code match {
+            case template(kind, name) => open = (indent, kind, name) :: open
+            case _ => ()
+          }
+          member
+        case _ => None
+      }
     }
   }
 
@@ -207,7 +244,8 @@ object PlanAudit {
       "rawGlobalWindows" -> rawGlobalWindows(),
       "rawVersionedRootIo" -> rawVersionedRootIo(),
       "strayBuildDirs" -> strayBuildDirs(),
-      "uncalledPublicDefs" -> uncalledPublicDefs())
+      "uncalledPublicDefs" -> uncalledPublicDefs(),
+      "moduleCaches" -> moduleCaches())
     audits.foreach {
       case (name, Seq()) => println(s"[audit] $name: clean")
       case (name, hits) => hits.foreach(h => println(s"[audit] $name: $h"))

@@ -323,4 +323,55 @@ class GraphSpec extends AnyFunSuite {
     assert(PathOps.kCore(one.toDF("src", "dst"), 2).as[String].collect().toSet ==
       Set("a", "b", "c", "d"))
   }
+
+  /** The k-core by the textbook peel: drop one vertex under degree k
+    * at a time (degree over distinct undirected neighbors) until none
+    * is left.
+    */
+  private def naiveCore(edges: Seq[(String, String)], k: Int): Set[String] = {
+    var adj = edges.flatMap { case (a, b) => Seq(a -> b, b -> a) }
+      .groupBy(_._1).map { case (v, es) => v -> es.map(_._2).toSet }
+    var low = adj.find(_._2.size < k)
+    while (low.isDefined) {
+      val v = low.get._1
+      adj = (adj - v).map { case (u, ns) => u -> (ns - v) }
+      low = adj.find(_._2.size < k)
+    }
+    adj.keySet
+  }
+
+  test("kCore matches a naive peel on random directed and symmetric graphs") {
+    import graft.graph.PathOps
+    // its own session: the 1-byte threshold must not race other suites
+    val s2 = spark.newSession()
+    import s2.implicits._
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    for (seed <- 1 to 3) {
+      val rnd = new scala.util.Random(seed)
+      val n = 10 + rnd.nextInt(8)
+      val directed = Seq.fill(2 * n)((s"v${rnd.nextInt(n)}", s"v${rnd.nextInt(n)}"))
+        .filter { case (a, b) => a != b }
+      val symmetric = directed ++ directed.map(_.swap)
+      for ((shape, edges) <- Seq("directed" -> directed, "symmetric" -> symmetric);
+          threshold <- Seq("10MB", "1"); k <- 2 to 3) {
+        // 10MB: each round's removed set is held on the driver and
+        // broadcast; 1 byte: it is over budget and joins as a shuffle
+        s2.conf.set(key, threshold)
+        assert(PathOps.kCore(edges.toDF("src", "dst"), k).as[String].collect().toSet ==
+          naiveCore(edges, k), s"seed=$seed $shape threshold=$threshold k=$k")
+      }
+    }
+  }
+
+  test("kCore's per-round removed set takes no guard-memo entry") {
+    import spark.implicits._
+    import graft.graph.PathOps
+    import graft.scale.GuardedBroadcast
+    // a 16-edge chain peels its two ends a round: 9 rounds at k = 2
+    val chain = (0 until 16).map(i => s"v$i" -> s"v${i + 1}").toDF("src", "dst")
+    val before = GuardedBroadcast.memoSize
+    assert(PathOps.kCore(chain, 2).count() == 0)
+    assert(GuardedBroadcast.memoSize == before,
+      "each kCore round took a guard-memo slot (and may evict another query's)")
+  }
 }

@@ -725,20 +725,22 @@ class ScaleSpec extends AnyFunSuite {
     assert(afterSame - before <= 1,
       s"identical fromTriples sources must share one persisted handle, " +
         s"grew by ${afterSame - before}")
-    // 24 DISTINCT plans -> the memo cap (16) bounds the pinned blocks;
-    // eviction unpersists, so growth stays at/below the cap
-    (1 to 24).foreach { i =>
+    // more DISTINCT plans than the guard kind holds -> its cap bounds
+    // the pinned blocks; eviction unpersists, so growth stays at/below
+    // the cap
+    val cap = graft.scale.Derived.Guard.cap
+    (1 to cap + 8).foreach { i =>
       val d = spark.createDataFrame(Seq((s"s$i", "p", s"o$i")))
         .toDF("s", "p", "o")
       TripleStore.fromTriples(d)
     }
     val afterMany = spark.sparkContext.getPersistentRDDs.size
-    assert(afterMany - before <= 17,
+    assert(afterMany - before <= cap + 1,
       s"fromTriples persists must stay memo-bounded, grew by " +
         s"${afterMany - before}")
   }
 
-  test("same-path reload after overwrite re-scans; invalidate hook " +
+  test("same-path reload after overwrite re-scans; Derived.clear " +
       "unpersists memo handles") {
     import graft.bgp.{BgpPlanner, TripleStore}
     val dir = java.nio.file.Files.createTempDirectory("graft-reload")
@@ -758,14 +760,26 @@ class ScaleSpec extends AnyFunSuite {
     writeRows(Seq(("x:1", "name", "new")))
     assert(names(TripleStore.fromTriples(spark.read.parquet(dir))) ==
       Set("new"))
-    // the explicit invalidation hook drops (and unpersists) every
-    // memoized source handle — lifecycle control for long sessions
+    // the memo's clear hook drops (and unpersists) every memoized
+    // source handle — lifecycle control for long sessions
     val before = spark.sparkContext.getPersistentRDDs.size
-    TripleStore.invalidateSourceCache()
+    graft.scale.Derived.clear()
     assert(spark.sparkContext.getPersistentRDDs.size < before ||
       before == 0)
     // and the next load after invalidation still answers correctly
     assert(names(TripleStore.fromTriples(spark.read.parquet(dir))) ==
       Set("new"))
+  }
+
+  test("Tables.t lists a table rewritten in place again, in the same session") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-tables").toString
+    def write(keys: Seq[Long]): Unit = keys.toDF("o_orderkey").coalesce(1)
+      .write.mode("overwrite").parquet(s"$dir/orders.parquet")
+    def keys: Set[Long] = Tables.t(spark, dir, "orders").as[Long].collect().toSet
+    write(Seq(1L, 2L))
+    assert(keys == Set(1L, 2L))
+    write(Seq(3L))
+    assert(keys == Set(3L), "a memoized plan served the old file listing")
   }
 }

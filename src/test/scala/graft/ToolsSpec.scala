@@ -1,10 +1,11 @@
 package graft
 
-import graft.tools.BoundedMemo
+import graft.scale.Derived
+import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Driver-side cache plumbing: LRU order, eviction callbacks, and
-  * fatal-error transparency.
+/** Source audits, and the derived-state memo's plumbing: LRU order
+  * per kind, release on eviction, and fatal-error transparency.
   */
 class ToolsSpec extends AnyFunSuite {
 
@@ -84,16 +85,75 @@ class ToolsSpec extends AnyFunSuite {
         s"whatever created them: ${stray.mkString(", ")}")
   }
 
-  test("BoundedMemo evicts least-recently-USED, not first-inserted") {
-    val evicted = scala.collection.mutable.ArrayBuffer.empty[String]
-    val memo = new BoundedMemo[Int, String](2, evicted += _)
-    memo.getOrElseUpdate(1, "a")
-    memo.getOrElseUpdate(2, "b")
-    memo.getOrElseUpdate(1, fail("hit must not rebuild")) // refresh 1
-    memo.getOrElseUpdate(3, "c") // cap 2: evict 2 (LRU), keep hot 1
+  test("no module-level mutable caches outside scale/Derived (source audit)") {
+    val hits = graft.tools.PlanAudit.moduleCaches()
+    assert(hits.isEmpty,
+      "keep derived state in scale/Derived under one of its kinds, or " +
+        "allowlist the map with a reason in PlanAudit.ModuleCachesAllowed: " +
+        hits.mkString(", "))
+  }
+
+  test("the module-cache audit flags object maps only, outside its allowlist and Derived") {
+    val dir = java.nio.file.Files.createTempDirectory("audit_caches")
+    java.nio.file.Files.write(dir.resolve("Rogue.scala"), Seq(
+      "object Rogue {",
+      "  private val memo =",
+      "    new graft.tools.BoundedMemo[String, Int](4)",
+      "  val seen = scala.collection.mutable.LinkedHashMap.empty[String, Int]",
+      "  private[graft] val byName: TrieMap[String, Int] = TrieMap.empty",
+      "  val kept = new java.util.concurrent.ConcurrentHashMap[String, Int]()",
+      "  val names = Map(\"a\" -> 1) // mutable.Map",
+      "  def local(): Int = { val m = mutable.Map.empty[Int, Int]; m.size }",
+      "}",
+      "class Host {",
+      "  private val perInstance = new java.util.concurrent.ConcurrentHashMap[String, Int]()",
+      "}").mkString("\n").getBytes)
+    java.nio.file.Files.write(dir.resolve("Derived.scala"), Seq(
+      "object Derived {",
+      "  private val entries = scala.collection.mutable.LinkedHashMap.empty[Any, Any]",
+      "}").mkString("\n").getBytes)
+    def audit(allowed: Map[String, String]): Seq[String] =
+      graft.tools.PlanAudit.moduleCaches(dir.toString, allowed).map(_.split(' ').last)
+    assert(audit(Map("Rogue.kept" -> "a registration table")) ==
+      Seq("Rogue.memo", "Rogue.seen", "Rogue.byName"))
+    assert(audit(Map.empty) == Seq("Rogue.memo", "Rogue.seen", "Rogue.byName", "Rogue.kept"))
+  }
+
+  /** A private memo over one session: every kind capped at `cap`, each
+    * released value recorded by `release`.
+    */
+  private def memo(cap: Int)(onRelease: Any => Unit): (Derived, SparkSession) =
+    (new Derived(_ => cap) { override def release(v: Any): Unit = onRelease(v) },
+      GraftSession.local("2"))
+
+  test("Derived evicts a kind's least-recently-USED entry, not its first-inserted") {
+    val evicted = scala.collection.mutable.ArrayBuffer.empty[Any]
+    val (m, s) = memo(2)(evicted += _)
+    val k = Derived.Dataset
+    m(s, k, 1)("a")
+    m(s, k, 2)("b")
+    m[String](s, k, 1)(fail("hit must not rebuild")) // refresh 1
+    m(s, k, 3)("c") // cap 2: evict 2 (LRU), keep hot 1
     assert(evicted.toSeq == Seq("b"))
-    assert(memo.getOrElseUpdate(1, fail("1 must survive")) == "a")
-    assert(memo.size == 2)
+    assert(m[String](s, k, 1)(fail("1 must survive")) == "a")
+    assert(m.size(k) == 2)
+  }
+
+  test("Derived: churn in one kind never evicts another kind's entry") {
+    val evicted = scala.collection.mutable.ArrayBuffer.empty[Any]
+    val (m, s) = memo(2)(evicted += _)
+    m(s, Derived.Plan, "orders")("plan")
+    m(s, Derived.Guard, "pinned")("guard")
+    (1 to 10).foreach(i => m(s, Derived.Dataset, i)(s"d$i"))
+    assert(evicted.toSeq == (1 to 8).map(i => s"d$i"))
+    assert(m[String](s, Derived.Plan, "orders")(fail("plan entry evicted")) == "plan")
+    assert(m[String](s, Derived.Guard, "pinned")(fail("guard entry evicted")) == "guard")
+    assert(Seq(Derived.Plan, Derived.Guard, Derived.Dataset).map(m.size) == Seq(1, 1, 2))
+    // the same key under another kind is another entry
+    assert(m(s, Derived.Plan, 10)("plan10") == "plan10")
+    m.clear()
+    assert(Seq(Derived.Plan, Derived.Guard, Derived.Dataset).map(m.size) == Seq(0, 0, 0))
+    assert(evicted.toSet == (1 to 10).map(i => s"d$i").toSet ++ Set("plan", "guard", "plan10"))
   }
 
   test("invalidateStale wipes only exact-tag entries, including the stats cache") {
@@ -136,16 +196,17 @@ class ToolsSpec extends AnyFunSuite {
     assert(java.nio.file.Files.exists(out.resolve("q01_pricing_summary_t.txt")))
   }
 
-  test("BoundedMemo eviction swallows NonFatal but not fatal errors") {
-    val memo = new BoundedMemo[Int, String](1,
-      v => if (v == "boom") throw new RuntimeException("nonfatal")
+  test("Derived eviction swallows NonFatal but not fatal errors") {
+    val (m, s) = memo(1)(v =>
+      if (v == "boom") throw new RuntimeException("nonfatal")
       else if (v == "oom") throw new OutOfMemoryError("fatal"))
-    memo.getOrElseUpdate(1, "boom")
-    memo.getOrElseUpdate(2, "ok") // evicts "boom": swallowed
-    assert(memo.size == 1)
-    memo.getOrElseUpdate(3, "oom")
+    val k = Derived.Dataset
+    m(s, k, 1)("boom")
+    m(s, k, 2)("ok") // evicts "boom": swallowed
+    assert(m.size(k) == 1)
+    m(s, k, 3)("oom")
     intercept[OutOfMemoryError] {
-      memo.getOrElseUpdate(4, "next") // evicting "oom" must propagate
+      m(s, k, 4)("next") // evicting "oom" must propagate
     }
   }
 
