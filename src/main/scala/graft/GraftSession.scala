@@ -38,7 +38,26 @@ object GraftSession {
       case other => other // a full provider class name passes through
     }
 
+  /** The JDK `HttpServer` switch that sets TCP_NODELAY on every socket
+    * it accepts.
+    */
+  val NoDelayProperty = "sun.net.httpserver.nodelay"
+
+  /** Turn on TCP_NODELAY for the JVM's `HttpServer`s, unless the JVM
+    * already carries an explicit value (a deployer's `-D` wins). The
+    * JDK reads the property once, when the first `HttpServer` of the
+    * JVM starts, so this must run before that: [[local]] calls it, and
+    * every entry point builds its session there before serving
+    * anything. Without it a served read's body waits for the client's
+    * delayed ACK of the headers (Nagle), about 40 ms a response; see
+    * `bgp.SparqlServer.serve`.
+    */
+  def tcpNoDelay(): Unit =
+    if (System.getProperty(NoDelayProperty) == null)
+      System.setProperty(NoDelayProperty, "true")
+
   def local(nCpus: String = cpus): SparkSession = {
+    tcpNoDelay()
     val builder0 = SparkSession.builder()
       .master(s"local[$nCpus]")
       .appName("graft")

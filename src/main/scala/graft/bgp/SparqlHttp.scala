@@ -84,6 +84,14 @@ object SparqlHttp {
     */
   val MaxResponseBytes: Long = 64L * 1024 * 1024
 
+  /** The one client every fetch sends through. It pools keep-alive
+    * connections per endpoint, and its one selector thread lives as
+    * long as the JVM; a client per request would open a fresh
+    * connection each time and leave a selector thread running until GC.
+    */
+  private lazy val client = java.net.http.HttpClient.newBuilder()
+    .connectTimeout(java.time.Duration.ofSeconds(10)).build()
+
   private[graft] def fetch(endpoint: String, query: String,
       maxBytes: Long = MaxResponseBytes,
       accept: String = "application/sparql-results+json"): String = {
@@ -100,9 +108,8 @@ object SparqlHttp {
     val req = builder
       .header("Accept", accept)
       .timeout(java.time.Duration.ofSeconds(30)).build()
-    val resp = java.net.http.HttpClient.newBuilder()
-      .connectTimeout(java.time.Duration.ofSeconds(10)).build()
-      .send(req, java.net.http.HttpResponse.BodyHandlers.ofInputStream())
+    val resp = client.send(req,
+      java.net.http.HttpResponse.BodyHandlers.ofInputStream())
     val in = resp.body()
     try {
       if (resp.statusCode() != 200) throw new java.io.IOException(

@@ -469,17 +469,34 @@ object SparqlServer {
   }
 
   /** The structured line the endpoint logs for one query request: a
-    * hash of its text, the rows it answered (1 for ASK), the
-    * milliseconds spent evaluating and rendering it, and where the store
-    * it read stands — the dataset version and the delta slot after the
-    * last batch merged into it (`-` for a store that stands on no
-    * versioned dataset; a version-pinned read names its version and
-    * its `maxOps` bound).
+    * hash of its text, the rows it answered (1 for ASK), the bytes of
+    * the response body, the milliseconds spent evaluating and rendering
+    * it, and where the store it read stands — the dataset version and
+    * the delta slot after the last batch merged into it (`-` for a
+    * store that stands on no versioned dataset; a version-pinned read
+    * names its version and its `maxOps` bound).
     */
-  private[graft] def queryLine(hash: String, rows: Int, evalMs: Long,
-      version: Option[Int], slot: Option[Int]): String =
-    s"[sparql] query hash=$hash rows=$rows eval_ms=$evalMs " +
+  private[graft] def queryLine(hash: String, rows: Int, bytes: Int,
+      evalMs: Long, version: Option[Int], slot: Option[Int]): String =
+    s"[sparql] query hash=$hash rows=$rows bytes=$bytes eval_ms=$evalMs " +
       s"version=${version.fold("-")(_.toString)} slot=${slot.fold("-")(_.toString)}"
+
+  /** Send one response: 204 with no body, any other code with `body`
+    * as UTF-8 bytes of type `ctype`.
+    */
+  private def respond(ex: HttpExchange, code: Int, body: Array[Byte],
+      ctype: String): Unit = {
+    if (code == 204) ex.sendResponseHeaders(204, -1)
+    else {
+      ex.getResponseHeaders.add("Content-Type", ctype)
+      ex.sendResponseHeaders(code, body.length)
+      ex.getResponseBody.write(body)
+    }
+    ex.close()
+  }
+
+  private def utf8(s: String): Array[Byte] =
+    s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
 
   /** Start serving `store` at `http://localhost:<port><path>`; port 0
     * picks an ephemeral port. The handler evaluates each request on
@@ -491,6 +508,16 @@ object SparqlServer {
     * resumes from the `VERSION` pointer. Each update logs one
     * [[updateLine]] to stderr and each query one [[queryLine]];
     * [[Handle.lastUpdate]] and [[Handle.lastQuery]] hold the latest.
+    *
+    * Transport: the accepted sockets run with TCP_NODELAY
+    * ([[graft.GraftSession.tcpNoDelay]]). A response goes out as two
+    * writes, the headers and then the body; with Nagle's algorithm on,
+    * the body waits until the client ACKs the headers, and a keep-alive
+    * client delays that ACK by about 40 ms, most of a light read's
+    * latency. The JDK reads the switch once per JVM, when its
+    * first `HttpServer` starts, so it is set where every entry point
+    * builds its session, `GraftSession.local`, before anything serves.
+    * A `-Dsun.net.httpserver.nodelay` given to the JVM wins.
     */
   def serve(store: TripleStore, port: Int = 0, path: String = "/sparql",
       maxRows: Int = MaxResponseRows,
@@ -585,7 +612,7 @@ object SparqlServer {
                   val spark = cur.slices.values.head.sparkSession
                   ref.set(boundedOps(spark, cur, SparqlUpdate.parse(text)))
                 }
-                (204, "", "text/plain")
+                (204, Array.emptyByteArray, "text/plain")
               case QueryReq(text, version, maxOps) =>
                 val accept = Option(
                   ex.getRequestHeaders.getFirst("Accept")).getOrElse("")
@@ -607,39 +634,32 @@ object SparqlServer {
                     TripleStore.fromDatasetParquet(spark, dir, v, maxOps)
                 }
                 val (b, ct, rows) = answerNegotiated(st, text, maxRows, accept)
+                val bytes = utf8(b)
                 val at: Option[(Option[Int], Option[Int])] =
                   version.fold(st.stands.map(s =>
                     (TripleStore.versionOf(s.root), Option(s.nextSeq))))(v =>
                     Some((Some(v), maxOps)))
                 val line = queryLine(
                   f"${scala.util.hashing.MurmurHash3.stringHash(text)}%08x", rows,
-                  (System.nanoTime() - t0) / 1000000, at.flatMap(_._1),
-                  at.flatMap(_._2))
+                  bytes.length, (System.nanoTime() - t0) / 1000000,
+                  at.flatMap(_._1), at.flatMap(_._2))
                 lastRead.set(line)
                 System.err.println(line)
-                (200, b, ct)
+                (200, bytes, ct)
               case DescribeService =>
                 // SPARQL 1.1 Service Description: a bare GET answers
                 // with the discovery graph — endpoint capabilities in
                 // Turtle, the spec's conneg-free default
-                (200, serviceDescription(advertised,
-                  timeTravel = persistDir.isDefined), "text/turtle")
+                (200, utf8(serviceDescription(advertised,
+                  timeTravel = persistDir.isDefined)), "text/turtle")
             }
           } catch {
             case e: IllegalArgumentException =>
-              (400, s"bad request: ${e.getMessage}", "text/plain")
+              (400, utf8(s"bad request: ${e.getMessage}"), "text/plain")
             case scala.util.control.NonFatal(e) =>
-              (500, s"request failed: ${e.getMessage}", "text/plain")
+              (500, utf8(s"request failed: ${e.getMessage}"), "text/plain")
           }
-        if (code == 204) {
-          ex.sendResponseHeaders(204, -1)
-        } else {
-          val bytes = body.getBytes("UTF-8")
-          ex.getResponseHeaders.add("Content-Type", ctype)
-          ex.sendResponseHeaders(code, bytes.length)
-          ex.getResponseBody.write(bytes)
-        }
-        ex.close()
+        respond(ex, code, body, ctype)
       }
     })
     // SPARQL 1.1 Graph Store HTTP Protocol (§5) at `<path>/graphs`:
@@ -728,15 +748,7 @@ object SparqlServer {
             case scala.util.control.NonFatal(e) =>
               (500, s"request failed: ${e.getMessage}", "text/plain")
           }
-        if (code == 204) {
-          ex.sendResponseHeaders(204, -1)
-        } else {
-          val bytes = body.getBytes("UTF-8")
-          ex.getResponseHeaders.add("Content-Type", ctype)
-          ex.sendResponseHeaders(code, bytes.length)
-          ex.getResponseBody.write(bytes)
-        }
-        ex.close()
+        respond(ex, code, utf8(body), ctype)
       }
     })
     server.start()

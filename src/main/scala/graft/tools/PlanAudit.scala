@@ -69,6 +69,20 @@ object PlanAudit {
       line.matches(".*[/\"](VERSION|MANIFEST)\".*") ||
         line.matches(".*\\bcreate\\(.*,\\s*false\\s*\\).*"))
 
+  /** `file:line` for every raw HTTP transport built in main sources
+    * outside its one home: an `HttpServer.create(` outside
+    * `bgp/SparqlServer`, or an `HttpClient.newBuilder(` /
+    * `HttpClient.newHttpClient(` outside `bgp/SparqlHttp`. The server
+    * there runs with TCP_NODELAY and the client there is one pooled
+    * instance; a second server or a client per call would bring back
+    * the delayed-ACK stall or a selector thread per request.
+    */
+  def rawHttpTransport(root: String = "src/main/scala/graft"): Seq[String] =
+    scan(root, "SparqlServer.scala")(_.contains("HttpServer.create(")) ++
+      scan(root, "SparqlHttp.scala")(line =>
+        line.contains("HttpClient.newBuilder(") ||
+          line.contains("HttpClient.newHttpClient("))
+
   /** Build-artifact / scratch directories sitting inside the SOURCE
     * tree (an sbt run with the wrong cwd drops `target/` + a
     * `project/` cache next to the code — untracked, so git-based leak
@@ -243,6 +257,7 @@ object PlanAudit {
       "rawBroadcastHints" -> rawBroadcastHints(),
       "rawGlobalWindows" -> rawGlobalWindows(),
       "rawVersionedRootIo" -> rawVersionedRootIo(),
+      "rawHttpTransport" -> rawHttpTransport(),
       "strayBuildDirs" -> strayBuildDirs(),
       "uncalledPublicDefs" -> uncalledPublicDefs(),
       "moduleCaches" -> moduleCaches())

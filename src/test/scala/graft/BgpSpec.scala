@@ -494,36 +494,47 @@ class BgpSpec extends AnyFunSuite {
     }
   }
 
+  /** A raw JDK `HttpServer` on an ephemeral port whose `/sparql`
+    * context answers every request with `handler`, and its endpoint
+    * URL. It turns TCP_NODELAY on first, as the engine's session does:
+    * the JDK reads the switch once per JVM, at its first `HttpServer`,
+    * so a mock started before any session would leave every later
+    * server in this JVM stalling on delayed ACKs.
+    */
+  private def mockEndpoint(handler: com.sun.net.httpserver.HttpExchange => Unit)
+      : (com.sun.net.httpserver.HttpServer, String) = {
+    GraftSession.tcpNoDelay()
+    val server = com.sun.net.httpserver.HttpServer.create(
+      new java.net.InetSocketAddress(0), 0)
+    server.createContext("/sparql", ex => handler(ex))
+    server.start()
+    (server, s"http://localhost:${server.getAddress.getPort}/sparql")
+  }
+
   test("SERVICE over HTTP speaks the SPARQL protocol with VALUES bound-join injection") {
-    import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
     val received = new java.util.concurrent.atomic.AtomicReference[String]("")
     val method = new java.util.concurrent.atomic.AtomicReference[String]("")
-    val server = HttpServer.create(new java.net.InetSocketAddress(0), 0)
-    server.createContext("/sparql", new HttpHandler {
-      def handle(ex: HttpExchange): Unit = {
-        method.set(ex.getRequestMethod)
-        val raw =
-          if (ex.getRequestMethod == "POST")
-            new String(ex.getRequestBody.readAllBytes(), "UTF-8")
-          else ex.getRequestURI.getRawQuery
-        received.set(java.net.URLDecoder.decode(
-          raw.stripPrefix("query="), "UTF-8"))
-        val json =
-          """{"head":{"vars":["d","dn"]},"results":{"bindings":[
-            |{"d":{"type":"uri","value":"dept:0"},
-            | "dn":{"type":"literal","value":"Mathematics"}},
-            |{"d":{"type":"uri","value":"dept:1"},
-            | "dn":{"type":"literal","value":"Physics"}}]}}""".stripMargin
-        val b = json.getBytes("UTF-8")
-        ex.getResponseHeaders.add("Content-Type",
-          "application/sparql-results+json")
-        ex.sendResponseHeaders(200, b.length)
-        ex.getResponseBody.write(b)
-        ex.close()
-      }
-    })
-    server.start()
-    val ep = s"http://localhost:${server.getAddress.getPort}/sparql"
+    val (server, ep) = mockEndpoint { ex =>
+      method.set(ex.getRequestMethod)
+      val raw =
+        if (ex.getRequestMethod == "POST")
+          new String(ex.getRequestBody.readAllBytes(), "UTF-8")
+        else ex.getRequestURI.getRawQuery
+      received.set(java.net.URLDecoder.decode(
+        raw.stripPrefix("query="), "UTF-8"))
+      val json =
+        """{"head":{"vars":["d","dn"]},"results":{"bindings":[
+          |{"d":{"type":"uri","value":"dept:0"},
+          | "dn":{"type":"literal","value":"Mathematics"}},
+          |{"d":{"type":"uri","value":"dept:1"},
+          | "dn":{"type":"literal","value":"Physics"}}]}}""".stripMargin
+      val b = json.getBytes("UTF-8")
+      ex.getResponseHeaders.add("Content-Type",
+        "application/sparql-results+json")
+      ex.sendResponseHeaders(200, b.length)
+      ex.getResponseBody.write(b)
+      ex.close()
+    }
     try {
       for (st <- Seq(tinyStore, TripleStore.encode(tinyStore))) {
         val rows = BgpPlanner.query(st,
@@ -2516,7 +2527,6 @@ class BgpSpec extends AnyFunSuite {
   }
 
   test("federation responses are bounded: oversized bodies fail loudly, never buffer") {
-    import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
     // server-side row cap: the protocol's materialization point refuses
     // past maxRows instead of buffering an unbounded response
     intercept[IllegalStateException](
@@ -2524,21 +2534,16 @@ class BgpSpec extends AnyFunSuite {
         "select ?s ?o where { ?s worksFor ?o }", maxRows = 1))
     // client-side byte cap: a mock endpoint streaming more than the cap
     // trips the loud IOException mid-stream
-    val server = HttpServer.create(new java.net.InetSocketAddress(0), 0)
-    server.createContext("/sparql", new HttpHandler {
-      def handle(ex: HttpExchange): Unit = {
-        val big = ("{\"head\":{\"vars\":[\"x\"]},\"results\":{\"bindings\":[" +
-          "{\"x\":{\"type\":\"literal\",\"value\":\"" + "y" * 4000 +
-          "\"}}]}}").getBytes("UTF-8")
-        ex.getResponseHeaders.add("Content-Type",
-          "application/sparql-results+json")
-        ex.sendResponseHeaders(200, big.length)
-        ex.getResponseBody.write(big)
-        ex.close()
-      }
-    })
-    server.start()
-    val ep = s"http://localhost:${server.getAddress.getPort}/sparql"
+    val (server, ep) = mockEndpoint { ex =>
+      val big = ("{\"head\":{\"vars\":[\"x\"]},\"results\":{\"bindings\":[" +
+        "{\"x\":{\"type\":\"literal\",\"value\":\"" + "y" * 4000 +
+        "\"}}]}}").getBytes("UTF-8")
+      ex.getResponseHeaders.add("Content-Type",
+        "application/sparql-results+json")
+      ex.sendResponseHeaders(200, big.length)
+      ex.getResponseBody.write(big)
+      ex.close()
+    }
     try {
       val e = intercept[java.io.IOException](
         SparqlHttp.fetch(ep, "select ?x where { ?x p ?y }",
@@ -3296,24 +3301,26 @@ class BgpSpec extends AnyFunSuite {
   }
 
   test("the query log line names every field, and a served read logs one") {
-    assert(SparqlServer.queryLine("0badcafe", 3, 12, Some(2), Some(5)) ==
-      "[sparql] query hash=0badcafe rows=3 eval_ms=12 version=2 slot=5")
-    assert(SparqlServer.queryLine("00000001", 0, 4, None, None) ==
-      "[sparql] query hash=00000001 rows=0 eval_ms=4 version=- slot=-")
+    assert(SparqlServer.queryLine("0badcafe", 3, 240, 12, Some(2), Some(5)) ==
+      "[sparql] query hash=0badcafe rows=3 bytes=240 eval_ms=12 version=2 slot=5")
+    assert(SparqlServer.queryLine("00000001", 0, 44, 4, None, None) ==
+      "[sparql] query hash=00000001 rows=0 bytes=44 eval_ms=4 version=- slot=-")
     val dir = java.nio.file.Files.createTempDirectory("graft-qline").toString
     TripleStore.writeDatasetVersioned(TripleStore.fromTriples(Seq(
       ("t:1", "name", "one"), ("t:2", "name", "two")).toDF("s", "p", "o")), dir)
     val h = SparqlServer.serve(TripleStore.fromDatasetParquet(spark, dir),
       persistDir = Some(dir))
-    val line = "^\\[sparql\\] query hash=[0-9a-f]{8} rows=(\\d+) eval_ms=\\d+ " +
-      "version=(\\S+) slot=(\\S+)$"
+    val line = "^\\[sparql\\] query hash=[0-9a-f]{8} rows=(\\d+) bytes=(\\d+) " +
+      "eval_ms=\\d+ version=(\\S+) slot=(\\S+)$"
     def read(q: String): (String, String, String) = {
       val (c, body) = http("GET", h.endpoint + "?query=" +
         java.net.URLEncoder.encode(q, "UTF-8"))
       assert(c == 200, body)
       val m = line.r.findFirstMatchIn(h.lastQuery.get).getOrElse(
         fail(s"unexpected query line: ${h.lastQuery}"))
-      (m.group(1), m.group(2), m.group(3))
+      // bytes counts the UTF-8 response body the client received
+      assert(m.group(2).toInt == body.getBytes("UTF-8").length, h.lastQuery)
+      (m.group(1), m.group(3), m.group(4))
     }
     try {
       assert(h.lastQuery.isEmpty)
@@ -3324,6 +3331,67 @@ class BgpSpec extends AnyFunSuite {
       // the advanced store stands one slot further
       assert(read("select ?s where { ?s name ?v }") == ("3", "0", "1"))
       assert(read("ask where { <t:3> name ?v }") == ("1", "0", "1"))
+    } finally h.stop()
+  }
+
+  test("served reads do not wait on the client's delayed ACK (TCP_NODELAY)") {
+    // twenty sequential reads over one keep-alive connection: the
+    // client's latency minus the handler's eval_ms is the transport's
+    // share; with Nagle on, each body would wait ~40 ms for the ACK of
+    // its headers
+    val h = SparqlServer.serve(tinyStore)
+    val client = java.net.http.HttpClient.newBuilder()
+      .version(java.net.http.HttpClient.Version.HTTP_1_1).build()
+    val evalMs = " eval_ms=(\\d+) ".r
+    val req = java.net.http.HttpRequest.newBuilder(java.net.URI.create(
+      h.endpoint + "?query=" + java.net.URLEncoder.encode(
+        "select ?p ?d where { ?p worksFor ?d }", "UTF-8"))).GET().build()
+    try {
+      val overheadMs = (1 to 20).map { _ =>
+        val t0 = System.nanoTime()
+        val resp = client.send(req,
+          java.net.http.HttpResponse.BodyHandlers.ofString())
+        val ms = (System.nanoTime() - t0) / 1e6
+        assert(resp.statusCode == 200, resp.body)
+        ms - evalMs.findFirstMatchIn(h.lastQuery.get).get.group(1).toDouble
+      }.sorted
+      val median = (overheadMs(9) + overheadMs(10)) / 2
+      assert(median < 20.0, f"transport overhead median $median%.1f ms " +
+        s"(sorted: ${overheadMs.map(m => f"$m%.1f").mkString(" ")}); " +
+        s"${GraftSession.NoDelayProperty}=" +
+        System.getProperty(GraftSession.NoDelayProperty))
+    } finally h.stop()
+  }
+
+  test("SERVICE over HTTP sends every request through one client") {
+    import scala.jdk.CollectionConverters._
+    // each java.net.http client runs its own selector thread, named
+    // after the client's sequence number, until it is collected: a
+    // client per request would open a connection and a thread per fetch
+    val selectorName = "HttpClient-(\\d+)-SelectorManager".r
+    def selectors: Seq[Long] = Thread.getAllStackTraces.keySet.asScala.toSeq
+      .map(_.getName).collect { case selectorName(n) => n.toLong }
+    // the sequence number of a client built now: the newest live thread
+    def nextClient(): Long = {
+      val probe = java.net.http.HttpClient.newHttpClient()
+      val n = selectors.max
+      java.lang.ref.Reference.reachabilityFence(probe)
+      n
+    }
+    val h = SparqlServer.serve(TripleStore.fromTriples(Seq(
+      ("dept:0", "deptname", "Mathematics"),
+      ("dept:1", "deptname", "Physics")).toDF("s", "p", "o")))
+    try {
+      val live = selectors.size
+      val first = nextClient()
+      for (_ <- 1 to 10) assert(BgpPlanner.query(tinyStore,
+        s"select ?p ?dn where { ?p worksFor ?d . " +
+          s"SERVICE <${h.endpoint}> { ?d deptname ?dn } }").count() == 3)
+      val built = nextClient() - first - 1
+      assert(built <= 1, s"ten SERVICE evaluations built $built HTTP clients")
+      // the two probes' threads included
+      assert(selectors.size <= live + 3, s"$live selector threads before, " +
+        s"${selectors.size} after ten SERVICE evaluations")
     } finally h.stop()
   }
 

@@ -47,6 +47,32 @@ class ToolsSpec extends AnyFunSuite {
       _.split(':').last) == Seq("1"))
   }
 
+  test("no raw HTTP server or client outside SparqlServer and SparqlHttp (source audit)") {
+    val hits = graft.tools.PlanAudit.rawHttpTransport()
+    assert(hits.isEmpty,
+      "serve through bgp/SparqlServer and fetch through bgp/SparqlHttp: " +
+        hits.mkString(", "))
+    // each home is exempt for its own kind only
+    val dir = java.nio.file.Files.createTempDirectory("audit_http")
+    def write(name: String, lines: String*): Unit =
+      java.nio.file.Files.write(dir.resolve(name), lines.mkString("\n").getBytes)
+    write("Rogue.scala",
+      "val s = HttpServer.create(new InetSocketAddress(0), 0)",
+      "val c = java.net.http.HttpClient.newBuilder().build()",
+      "val d = HttpClient.newHttpClient()",
+      "val r = HttpRequest.newBuilder(uri)")
+    write("SparqlServer.scala",
+      "val server = HttpServer.create(addr, 0)",
+      "val c = HttpClient.newBuilder().build()")
+    write("SparqlHttp.scala",
+      "private lazy val client = HttpClient.newBuilder().build()",
+      "val s = HttpServer.create(addr, 0)")
+    assert(graft.tools.PlanAudit.rawHttpTransport(dir.toString)
+      .map(h => h.split('/').last).sorted ==
+      Seq("Rogue.scala:1", "Rogue.scala:2", "Rogue.scala:3",
+        "SparqlHttp.scala:2", "SparqlServer.scala:2"))
+  }
+
   test("no public def in main that only its own spec calls (caller audit)") {
     val hits = graft.tools.PlanAudit.uncalledPublicDefs()
     assert(hits.isEmpty,
