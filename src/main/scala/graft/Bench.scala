@@ -128,13 +128,16 @@ object Bench {
     // doesn't absorb one-time session costs, and a one-time store load
     // (persisted triple layouts are a database-load cost, not a query
     // cost).
-    try graft.queries.BgpQueries.prewarm(spark, sfDir)
-    catch { case _: Throwable => () }
-    try graft.queries.DedupQueries.prewarm(spark, sfDir)
-    catch { case _: Throwable => () }
-    headline.headOption.foreach { q =>
-      try materialize(q.fn(spark, sfDir)) catch { case _: Throwable => () }
-    }
+    // A failed step is reported, not thrown: its cost then lands in the
+    // first timed query, and the line says why.
+    def warm(step: String)(f: => Unit): Unit =
+      try f catch { case e: Throwable =>
+        System.err.println(s"[bench] warm-up $step failed: " +
+          e.toString.linesIterator.nextOption().getOrElse(""))
+      }
+    warm("BgpQueries.prewarm")(graft.queries.BgpQueries.prewarm(spark, sfDir))
+    warm("DedupQueries.prewarm")(graft.queries.DedupQueries.prewarm(spark, sfDir))
+    headline.headOption.foreach(q => warm(q.name)(materialize(q.fn(spark, sfDir))))
     // min-of-N protocol: single-shot numbers on a shared box swing
     // ±45% with co-tenant load (round-4 postmortem) — the min over
     // reps in one warm JVM is the reproducible engine cost, and the

@@ -191,10 +191,6 @@ object BgpQueries {
       | ?s supplies ?p .
       | ?o status "F" }""".stripMargin
 
-  /** Scratch-only A/B: the triangle through the encoded store. */
-  def triangleEncoded: (SparkSession, String) => DataFrame =
-    bgp(triangleQuery, encoded = true)
-
   val starQuery: String =
     """select ?c ?seg ?nm where {
       | ?c rdf:type "Customer" .

@@ -1,7 +1,6 @@
 package graft.tools
 
-/** Source audits over the main tree, plus an ad-hoc plan audit of which
-  * registry queries plan a native RangeJoin/AsOfJoin.
+/** Source audits over the main tree.
   *
   * Each source audit returns the offending `file:line` list (empty =
   * clean); ToolsSpec pins every one of them empty, and [[main]] runs
@@ -83,6 +82,21 @@ object PlanAudit {
         line.contains("HttpClient.newBuilder(") ||
           line.contains("HttpClient.newHttpClient("))
 
+  /** `file:line` for every Spark listener registered under `root`
+    * outside `tools/Profile` — an `addSparkListener(` or a
+    * `listenerManager.register(` in code, not in comments or string
+    * literals. How many jobs, stages and shuffle bytes a run took has
+    * one answer, [[Profile.of]]; ToolsSpec pins this empty over the
+    * main and the test sources.
+    */
+  def rawSparkListeners(root: String = "src/main/scala/graft"): Seq[String] =
+    sources(root, "Profile.scala").flatMap { p =>
+      codeLines(p, strings = false).zipWithIndex.collect {
+        case ((code, _), i) if code.contains("addSparkListener(") ||
+            code.contains("listenerManager.register(") => s"$p:${i + 1}"
+      }
+    }
+
   /** Build-artifact / scratch directories sitting inside the SOURCE
     * tree (an sbt run with the wrong cwd drops `target/` + a
     * `project/` cache next to the code — untracked, so git-based leak
@@ -109,9 +123,7 @@ object PlanAudit {
     "BgpPlanner.analyze" ->
       "the query graph BgpSpec and LubmSpec assert join shapes on",
     "CatalogStats.registerAndAnalyze" ->
-      "registers and analyzes the fixture tables CostStatsSpec reads",
-    "GraftShim.waitListeners" ->
-      "drains the listener bus before a test reads its job counts")
+      "registers and analyzes the fixture tables CostStatsSpec reads")
 
   /** `file:line Object.name` for every public `def` declared directly
     * in an `object` under `root` whose name no main line uses, outside
@@ -205,9 +217,11 @@ object PlanAudit {
 
   /** Each line of `p` with its comments removed, paired with whether
     * it starts inside a triple-quoted string or a block comment. String
-    * contents stay: a name spelled in a string is a use.
+    * contents stay unless `strings` is false (the quotes always stay): a
+    * name spelled in a string is a use.
     */
-  private def codeLines(p: java.nio.file.Path): Seq[(String, Boolean)] = {
+  private def codeLines(p: java.nio.file.Path,
+      strings: Boolean = true): Seq[(String, Boolean)] = {
     import scala.jdk.CollectionConverters._
     val tq = "\"\"\""
     var inBlock = false
@@ -224,13 +238,13 @@ object PlanAudit {
         } else if (inTq) {
           val k = line.indexOf(tq, j)
           val end = if (k < 0) line.length else k + 3
-          out ++= line.substring(j, end)
+          if (strings) out ++= line.substring(j, end) else if (k >= 0) out ++= tq
           inTq = k < 0
           j = end
         } else if (inQ) {
           val c = line(j)
           val step = if (c == '\\') 2 else 1
-          out ++= line.substring(j, math.min(j + step, line.length))
+          if (strings || c == '"') out ++= line.substring(j, math.min(j + step, line.length))
           inQ = c != '"'
           j += step
         } else if (line.startsWith(tq, j)) {
@@ -247,10 +261,8 @@ object PlanAudit {
     }
   }
 
-  /** Runs every source audit and prints its hits, then, given a corpus
-    * directory (e.g. an sf0.001 testdata dir), lists which registry
-    * queries plan a native RangeJoin/AsOfJoin over it. Exits 1 when any
-    * source audit has a hit.
+  /** Runs every source audit and prints its hits. Exits 1 when any
+    * audit has a hit.
     */
   def main(args: Array[String]): Unit = {
     val audits = Seq(
@@ -258,25 +270,13 @@ object PlanAudit {
       "rawGlobalWindows" -> rawGlobalWindows(),
       "rawVersionedRootIo" -> rawVersionedRootIo(),
       "rawHttpTransport" -> rawHttpTransport(),
+      "rawSparkListeners" -> rawSparkListeners(),
       "strayBuildDirs" -> strayBuildDirs(),
       "uncalledPublicDefs" -> uncalledPublicDefs(),
       "moduleCaches" -> moduleCaches())
     audits.foreach {
       case (name, Seq()) => println(s"[audit] $name: clean")
       case (name, hits) => hits.foreach(h => println(s"[audit] $name: $h"))
-    }
-    args.headOption.foreach { dir =>
-      val spark = graft.GraftSession.local("8")
-      graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-        try {
-          val plan = fn(spark, dir).queryExecution.executedPlan.toString
-          val tags = Seq("RangeJoin", "AsOfJoin").filter(plan.contains)
-          if (tags.nonEmpty) println(s"[audit] $name: ${tags.mkString(",")}")
-        } catch { case e: Throwable =>
-          println(s"[audit] $name: ERROR ${e.getMessage.take(80)}")
-        }
-      }
-      spark.stop()
     }
     if (audits.exists(_._2.nonEmpty)) sys.exit(1)
   }

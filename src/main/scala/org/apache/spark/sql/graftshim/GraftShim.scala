@@ -21,8 +21,9 @@ object GraftShim {
       : org.apache.spark.sql.Column =
     org.apache.spark.sql.classic.ExpressionUtils.column(e)
 
-  /** Drain the listener bus (`private[spark]`) — lets tests assert on
-    * listener-observed metrics deterministically instead of sleeping.
+  /** Drain the listener bus (`private[spark]`) — lets `tools/Profile`
+    * read listener-observed figures deterministically instead of
+    * sleeping.
     */
   def waitListeners(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()

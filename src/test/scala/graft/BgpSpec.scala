@@ -2,6 +2,7 @@ package graft
 
 import graft.bgp._
 import graft.bgp.Sparql._
+import graft.tools.Profile
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -84,19 +85,8 @@ class BgpSpec extends AnyFunSuite {
       val seq = TripleStore.encodeSequential(tinyStore, bands = 8)
       seq.dict.get.count() // materialize the store outside the count
       seq.slices.values.foreach(_.count())
-      val jobs = new java.util.concurrent.atomic.AtomicLong(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-      }
-      org.apache.spark.sql.graftshim.GraftShim.waitListeners(spark)
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        val d = BgpPlanner.query(seq, mkq(n))
-        org.apache.spark.sql.graftshim.GraftShim.waitListeners(spark)
-        (jobs.get(), d)
-      } finally spark.sparkContext.removeSparkListener(listener)
+      val (d, p) = Profile.of(spark)(BgpPlanner.query(seq, mkq(n)))
+      (p.jobs, d)
     }
     val (base, _) = planJobs(2)
     val (wide, df) = planJobs(100)
@@ -3193,23 +3183,6 @@ class BgpSpec extends AnyFunSuite {
     assert(got == Set(("t:1", "one"), ("t:3", "three")))
   }
 
-  /** Spark jobs started while `body` runs. */
-  private def jobsOf[T](body: => T): (T, Long) = {
-    val jobs = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.sql.graftshim.GraftShim.waitListeners(spark)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val r = body
-      org.apache.spark.sql.graftshim.GraftShim.waitListeners(spark)
-      (r, jobs.get())
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   test("a batch another writer appends between two endpoint updates shows up after the next one") {
     val dir = java.nio.file.Files.createTempDirectory("graft-foreign").toString
     TripleStore.writeDatasetVersioned(TripleStore.fromTriples(Seq(
@@ -3403,10 +3376,10 @@ class BgpSpec extends AnyFunSuite {
       persistDir = Some(dir))
     try {
       for (i <- 2 to 4) {
-        val ((c, body), jobs) = jobsOf(http("POST", h.endpoint,
+        val ((c, body), p) = Profile.of(spark)(http("POST", h.endpoint,
           "application/sparql-update", s"""INSERT DATA { <t:$i> <name> "n$i" }"""))
         assert(c == 204, body)
-        assert(jobs == 0, s"update $i ran $jobs jobs")
+        assert(p.jobs == 0, s"update $i ran ${p.jobs} jobs")
         assert(h.lastUpdate.get.contains(
           s"ops=1 delta_rows=1 seqs=${i - 2} version=0 store=advanced"),
           h.lastUpdate)
@@ -3432,10 +3405,10 @@ class BgpSpec extends AnyFunSuite {
       persistDir = Some(dir))
     try {
       for ((t, n) <- Seq("t:1" -> "one", "t:2" -> "two")) {
-        val ((c, body), jobs) = jobsOf(http("POST", h.endpoint,
+        val ((c, body), p) = Profile.of(spark)(http("POST", h.endpoint,
           "application/sparql-update", s"""DELETE DATA { <$t> <name> "$n" }"""))
         assert(c == 204, body)
-        assert(jobs == 0, s"DELETE DATA of $t ran $jobs jobs")
+        assert(p.jobs == 0, s"DELETE DATA of $t ran ${p.jobs} jobs")
         assert(h.lastUpdate.get.contains("delta_rows=1") &&
           h.lastUpdate.get.contains("store=advanced"), h.lastUpdate)
       }
@@ -3457,14 +3430,14 @@ class BgpSpec extends AnyFunSuite {
       for (v <- Seq("v1", "v2", "v3")) {
         val before = h.store
         val where = Sparql.parse("select * where { <t:1> <size> ?x }")
-        val (_, whereJobs) = jobsOf(BgpPlanner.plan(before, where).collect())
-        val ((c, body), jobs) = jobsOf(http("POST", h.endpoint,
+        val whereJobs = Profile.of(spark)(BgpPlanner.plan(before, where).collect())._2.jobs
+        val ((c, body), p) = Profile.of(spark)(http("POST", h.endpoint,
           "application/sparql-update",
           s"""DELETE { <t:1> <size> ?x } INSERT { <t:1> <size> "$v" } """ +
             "WHERE { <t:1> <size> ?x }"))
         assert(c == 204, body)
-        assert(jobs == whereJobs,
-          s"update to $v ran $jobs jobs; collecting its WHERE runs $whereJobs")
+        assert(p.jobs == whereJobs,
+          s"update to $v ran ${p.jobs} jobs; collecting its WHERE runs $whereJobs")
         assert(h.lastUpdate.get.contains("delta_rows=2") &&
           h.lastUpdate.get.contains("store=advanced"), h.lastUpdate)
         assert(BgpPlanner.query(h.store, "select ?s ?x where { ?s size ?x }")

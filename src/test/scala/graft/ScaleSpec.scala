@@ -188,23 +188,10 @@ class ScaleSpec extends AnyFunSuite {
 
     // the inventory must be metadata-only: the directory listing, not
     // a data scan — count records read by any task during the load
-    val records = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          records.addAndGet(t.taskMetrics.inputMetrics.recordsRead)
-    }
-    org.apache.spark.sql.graftshim.GraftShim.waitListeners(spark)
-    spark.sparkContext.addSparkListener(listener)
-    val onDisk =
-      try {
-        val s = TripleStore.fromPartitionedParquet(spark, dir)
-        org.apache.spark.sql.graftshim.GraftShim.waitListeners(spark)
-        s
-      } finally spark.sparkContext.removeSparkListener(listener)
-    assert(records.get() == 0,
-      s"predicate inventory read ${records.get()} data records — " +
+    val (onDisk, load) = graft.tools.Profile.of(spark)(
+      TripleStore.fromPartitionedParquet(spark, dir))
+    assert(load.inputRecords == 0,
+      s"predicate inventory read ${load.inputRecords} data records — " +
         "expected a pure directory-listing load")
     // slice-set equality also proves path-name unescaping (rdf:type
     // round-trips through p=rdf%3Atype)
@@ -582,26 +569,11 @@ class ScaleSpec extends AnyFunSuite {
       df.queryExecution.analyzed.collectFirst {
         case h: ResolvedHint => h.hints.strategy
       }.contains(Some(BROADCAST))
-    def jobsOf[T](body: => T): (T, Long) = {
-      val jobs = new java.util.concurrent.atomic.AtomicLong(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-      }
-      org.apache.spark.sql.graftshim.GraftShim.waitListeners(s2)
-      s2.sparkContext.addSparkListener(listener)
-      try {
-        val r = body
-        org.apache.spark.sql.graftshim.GraftShim.waitListeners(s2)
-        (r, jobs.get())
-      } finally s2.sparkContext.removeSparkListener(listener)
-    }
     s2.conf.set(key, "10MB")
     val memo = GuardedBroadcast.memoSize
-    val (guarded, jobs) = jobsOf(GuardedBroadcast.maybe(dim))
+    val (guarded, measured) = graft.tools.Profile.of(s2)(GuardedBroadcast.maybe(dim))
     assert(hinted(guarded), "expected the broadcast hint under 10MB")
-    assert(jobs == 0, s"measuring a LocalRelation ran $jobs jobs")
+    assert(measured.jobs == 0, s"measuring a LocalRelation ran ${measured.jobs} jobs")
     assert(GuardedBroadcast.memoSize == memo, "a LocalRelation took a memo entry")
     val wide = fact.join(guarded, Seq("k"))
     // 1-byte threshold: the same relation measures over it, no hint

@@ -73,6 +73,25 @@ class ToolsSpec extends AnyFunSuite {
         "SparqlHttp.scala:2", "SparqlServer.scala:2"))
   }
 
+  test("no Spark listener registered outside tools/Profile (source audit)") {
+    val hits = Seq("src/main/scala/graft", "src/test/scala/graft")
+      .flatMap(graft.tools.PlanAudit.rawSparkListeners)
+    assert(hits.isEmpty, s"measure through graft.tools.Profile.of: ${hits.mkString(", ")}")
+    // code only: a comment or a string literal naming the call is no hit
+    val dir = java.nio.file.Files.createTempDirectory("audit_listeners")
+    def write(name: String, lines: String*): Unit =
+      java.nio.file.Files.write(dir.resolve(name), lines.mkString("\n").getBytes)
+    write("Rogue.scala",
+      "spark.sparkContext.addSparkListener(listener)",
+      "s2.listenerManager.register(executions)",
+      "// spark.sparkContext.addSparkListener(listener)",
+      "val doc = \"addSparkListener(\" + s\"listenerManager.register($x)\"",
+      "spark.sparkContext.removeSparkListener(listener)")
+    write("Profile.scala", "spark.sparkContext.addSparkListener(listener)")
+    assert(graft.tools.PlanAudit.rawSparkListeners(dir.toString)
+      .map(h => h.split('/').last) == Seq("Rogue.scala:1", "Rogue.scala:2"))
+  }
+
   test("no public def in main that only its own spec calls (caller audit)") {
     val hits = graft.tools.PlanAudit.uncalledPublicDefs()
     assert(hits.isEmpty,
@@ -212,14 +231,27 @@ class ToolsSpec extends AnyFunSuite {
     assert(Files.exists(Paths.get(root, "data_sf1")))
   }
 
-  test("PlanCapture reports every failed capture (main exits non-zero on them)") {
+  test("Profile reports every failed query (main exits non-zero on them)") {
     val spark = GraftSession.local("2")
     val out = java.nio.file.Files.createTempDirectory("plans_test")
-    val failed = graft.tools.PlanCapture.capture(spark,
-      "/root/testdata/sf0.001", out.toString, "t",
-      Seq("no_such_query", "q01_pricing_summary"))
+    val failed = graft.tools.Profile.run(spark, "/root/testdata/sf0.001",
+      Seq("no_such_query", "q01_pricing_summary"), reps = 1, Some(out.toString))
     assert(failed == Seq("no_such_query"))
-    assert(java.nio.file.Files.exists(out.resolve("q01_pricing_summary_t.txt")))
+    val plan = java.nio.file.Files.readString(out.resolve("q01_pricing_summary.txt"))
+    assert(plan.contains("== Final Plan ==") && plan.contains("isFinalPlan=true"), plan)
+    assert(!java.nio.file.Files.exists(out.resolve("no_such_query.txt")))
+  }
+
+  test("Profile counts jobs, stages, shuffle bytes and the last execution") {
+    import graft.tools.Profile
+    val spark = GraftSession.local("2")
+    val (rows, one) = Profile.of(spark)(spark.range(10).collect())
+    assert(rows.length == 10 && one.jobs == 1, s"jobs ${one.jobs}")
+    assert(one.executed.isDefined)
+    val (n, shuffled) = Profile.of(spark)(spark.range(100).repartition(4).count())
+    assert(n == 100)
+    assert(shuffled.stages >= 2 && shuffled.shuffleWriteBytes > 0,
+      s"stages ${shuffled.stages}, shuffle bytes ${shuffled.shuffleWriteBytes}")
   }
 
   test("Derived eviction swallows NonFatal but not fatal errors") {
